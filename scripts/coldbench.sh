@@ -4,7 +4,7 @@
 # Uses the same module opens / heap / codecache as build.sbt javaOptions.
 # Assumes `sbt compile` is current. Writes the bench artifact to <out.json>.
 set -e
-OUT="$1"; GATES="$2"; CPUS="${3:-32}"; shift 3 || true
+OUT="$1"; shift; GATES="$1"; shift; CPUS="${1:-32}"; [ $# -gt 0 ] && shift
 CP="target/scala-2.13/classes:$(ls -d /opt/spark/jars/*.jar | tr '\n' ':')"
 OPENS="java.base/java.lang java.base/java.lang.invoke java.base/java.lang.reflect \
 java.base/java.io java.base/java.net java.base/java.nio java.base/java.util \

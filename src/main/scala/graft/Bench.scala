@@ -144,8 +144,8 @@ object Bench {
       // Checkpoints.pinPartitioned) REMOVED round 17: it changed AQE
       // behavior for EVERY cached frame in the engine and shipped
       // inside the harness file, and the driver's cold bench flagged
-      // the gates it served as regressed. pinPartitioned now sizes its
-      // partition count explicitly, which needs no session conf.
+      // the gates it served as regressed. The pinPartitioned helper it
+      // served was removed with it (see Checkpoints.scala).
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // warm-up: scheduler + codegen + parquet reader init, excluded

@@ -24,9 +24,9 @@ object Explain {
       // dedup state (~200 B/entry; 256k entries ~= 50 MB/task)
       .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
         "262144")
-      // (canChangeCachedPlanOutputPartitioning removed round 17 —
-      // pinPartitioned sizes its partition count explicitly; keep this
-      // session conf-identical to Bench)
+      // (canChangeCachedPlanOutputPartitioning removed round 17 along
+      // with the pinPartitioned helper it served — see Checkpoints.scala;
+      // keep this session conf-identical to Bench)
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { name =>

@@ -13,8 +13,8 @@ import graft.schemas.Schemas
   * (HIST:13-27) is replaced by Spark's native multi-file directory scan:
   * one `FileScan csv` with as many partitions as the cluster wants —
   * at 100 TB the scan parallelizes across executors instead of
-  * serializing through a driver loop. Pure projections + three
-  * broadcast joins; zero shuffles. */
+  * serializing through a driver loop. Pure projections + one
+  * broadcast join; zero shuffles. */
 object HistoricalJob {
 
   def readRaw(spark: SparkSession, dir: String): DataFrame =
@@ -22,50 +22,42 @@ object HistoricalJob {
       .option("header", "true").csv(dir)
       .select(Schemas.historicalRaw.fieldNames.map(col).toIndexedSeq: _*)
 
-  def transform(raw: DataFrame, districtCode: DataFrame,
-                districtRegion: DataFrame,
-                townDistrict: DataFrame): DataFrame = {
+  /** Staged wide projections, as in [[PropnexJob.transform]].
+    * Output: [[Schemas.historicalCols]]. */
+  def transform(raw: DataFrame, dims: Pipeline.Dims): DataFrame = {
     val cleaned = raw
-      // title-casing (HIST:29-32)
-      .withColumn("general_location", initcap(col("town")))
-      .withColumn("street_name", initcap(col("street_name")))
-      .withColumn("property_type", initcap(col("flat_type")))
       // renames (HIST:34-37)
       .withColumnsRenamed(Map("flat_model" -> "model",
         "resale_price" -> "price", "lease_commence_date" -> "top"))
-      // flat-type label fixes (HIST:39-42)
-      .withColumn("property_type",
-        Cleaning.fixFlatTypeLabels(col("property_type")))
-      // sqm → sqft (HIST:44-46)
-      .withColumn("total_floor_area",
-        Cleaning.sqmToSqft(col("floor_area_sqm").try_cast(DoubleType)))
-      // date assembly + parts (HIST:48-51); try_to_date: pre-ANSI null
-      // behavior on malformed months
-      .withColumn("date_of_sale",
-        try_to_date(concat_ws("-", col("month"), lit("01")),
-          "yyyy-MM-dd"))
-      .withColumn("year", year(col("date_of_sale")))
-      .withColumn("month", month(col("date_of_sale")))
-      // remaining lease (HIST:53-54)
-      .withColumn("remaining_lease",
-        lit(99) - (col("year") - col("top").try_cast(IntegerType)))
+      .withColumns(Map(
+        // title-casing (HIST:29-32) + flat-type label fixes (HIST:39-42)
+        "general_location" -> initcap(col("town")),
+        "street_name" -> initcap(col("street_name")),
+        "property_type" ->
+          Cleaning.fixFlatTypeLabels(initcap(col("flat_type"))),
+        // sqm → sqft (HIST:44-46)
+        "total_floor_area" ->
+          Cleaning.sqmToSqft(col("floor_area_sqm").try_cast(DoubleType)),
+        // date assembly (HIST:48-49); try_to_date: pre-ANSI null
+        // behavior on malformed months
+        "date_of_sale" ->
+          try_to_date(concat_ws("-", col("month"), lit("01")), "yyyy-MM-dd")))
+      .withColumns(Map(
+        // date parts (HIST:50-51) + remaining lease (HIST:53-54)
+        "year" -> year(col("date_of_sale")),
+        "month" -> month(col("date_of_sale")),
+        "remaining_lease" -> (lit(99) -
+          (year(col("date_of_sale")) - col("top").try_cast(IntegerType)))))
 
-    // J1: case-insensitive town→district enrich with initcap restore +
-    // the '/w'→'/W' fix-up (HIST:59-63)
-    val withTown = Joins.normalizedEnrich(cleaned, townDistrict,
+    // case-insensitive town → district/zone/region enrich with initcap
+    // restore + the '/w'→'/W' fix-up (HIST:59-63, 103-104)
+    val enriched = Joins.normalizedEnrich(cleaned, dims.townLookup,
       "general_location",
       c => regexp_replace(initcap(c), "/w", "/W"))
-    // J2: distinct the 81-row sector table down to district grain first
-    // (HIST:103); J3: region (HIST:104)
-    val withZone = Joins.distinctDimEnrich(withTown, districtCode,
-      Seq("district", "zone"), "district")
-    val enriched = Joins.broadcastEnrich(withZone, districtRegion,
-      Seq("district"))
 
-    val shaped = Cleaning.castColumnsLenient(
-      enriched.drop("town", "flat_type"),
+    Cleaning.castColumnsLenient(
+      enriched.select(Schemas.historicalCols.map(col): _*),
       Map("district" -> IntegerType, "floor_area_sqm" -> IntegerType,
         "top" -> IntegerType, "price" -> IntegerType))
-    shaped.select(Schemas.historicalCols.map(col): _*)
   }
 }

@@ -11,7 +11,7 @@ import graft.schemas.Schemas
   * reference's one Python UDF (bedrooms, SRX:68-83) is replaced by the
   * codegen'd built-in expression [[Parsers.bedroomCount]], deleting the
   * per-batch JVM↔Python `BatchEvalPython` boundary — this job is a
-  * single unbroken codegen stage plus three broadcast joins; zero
+  * single unbroken codegen stage plus two broadcast joins; zero
   * shuffles at any input size. */
 object SrxJob {
 
@@ -19,81 +19,73 @@ object SrxJob {
     spark.read.schema(Schemas.srxRaw)
       .option("multiLine", "true").json(path)
 
-  def transform(raw: DataFrame, districtCode: DataFrame,
-                districtRegion: DataFrame, agencyId: DataFrame,
+  /** Staged wide projections, as in [[PropnexJob.transform]].
+    * Output: [[Schemas.listingCols]]. */
+  def transform(raw: DataFrame, dims: Pipeline.Dims,
                 runDate: java.time.LocalDate): DataFrame = {
-    val stripped = Cleaning.normalizeNulls(raw)
-
-    val cleaned = stripped
-      // CEA registration numbers embedded in agent_id free text
-      // (SRX:13-17); agency id MUST be extracted before agent_id is
-      // overwritten
-      .withColumn("agency_id", Parsers.agencyRegNo(col("agent_id")))
-      .withColumn("agent_id", Parsers.agentRegNo(col("agent_id")))
-      .withColumn("agent_phone_num",
-        split(col("agent_phone_num"), ":").getItem(1).try_cast(IntegerType))
-      .withColumn("agent_name",
-        trim(Cleaning.stripNonAscii(col("agent_name"))))
-      // postcode + location out of the address (SRX:19-21)
-      .withColumn("post_code", Parsers.postcodeFromAddress(col("address")))
-      .withColumn("location", split(col("address"), " \\(").getItem(0))
-      // location rebuild (SRX:23-31)
-      .withColumn("location", Parsers.rebuildLocation(col("location")))
-      // description scrub (SRX:33-35)
-      .withColumn("description",
-        trim(Cleaning.stripEmoji(col("description"))))
-      // facilities count (SRX:37-39)
-      .withColumn("facilities_num", Parsers.facilitiesCount(col("facilities")))
-      // furnishing (SRX:41-45; srx spells it "not furnished")
-      .withColumn("furnish",
-        Cleaning.normalizeFurnishing(col("furnish"), "not furnished"))
-      // price + psf (SRX:47-49)
-      .withColumn("price", Cleaning.parseMoney(col("price")))
-      .withColumn("price_psf", Parsers.pricePsf(col("psf")))
-      // floor areas (SRX:51-54)
-      .withColumn("floor_area_sqm",
-        trim(split(col("size"), "sqm").getItem(0)).try_cast(IntegerType))
-      .withColumn("total_floor_area",
-        Cleaning.sqmToSqft(col("floor_area_sqm")))
-      // property type / floor level (SRX:56-60)
-      .withColumn("property_type",
-        trim(split(col("property_type"), "HDB").getItem(1)))
-      .withColumn("floor", Cleaning.normalizeFloorLevel(col("floor_level")))
+    val cleaned = Cleaning.normalizeNulls(raw)
       // renames (SRX:62-66)
       .withColumnsRenamed(Map("built_year" -> "top",
         "property_name" -> "street_name", "hdb_town" -> "general_location"))
-      .withColumn("street_name", initcap(col("street_name")))
-      // bedrooms parser — the UDF replacement (SRX:68-83)
-      .withColumn("bedrooms", Parsers.bedroomCount(col("bedrooms")))
-      // remaining lease from injected run date (SRX:85-86)
-      .withColumn("remaining_lease",
-        lit(99) - (lit(runDate.getYear) - col("top").try_cast(IntegerType)))
-      // postal sector (SRX:88-89)
-      .withColumn("postal_sector", Parsers.postalSector(col("post_code")))
-      // leftover free text packed as JSON (SRX:94-106)
-      .withColumn("additional_information", to_json(struct(
-        coalesce(col("facilities"), lit("N/A")).as("facilities"),
-        coalesce(col("schools"), lit("N/A")).as("schools"),
-        coalesce(col("shopping_mall/markets"), lit("N/A"))
-          .as("shopping_malls/markets"),
-        coalesce(col("train_stations"), lit("N/A")).as("train_stations"),
-        coalesce(col("description"), lit("N/A")).as("description"))))
+      .withColumns(Map(
+        // CEA registration numbers embedded in agent_id free text
+        // (SRX:13-17); both read the raw agent_id
+        "agency_id" -> Parsers.agencyRegNo(col("agent_id")),
+        "agent_id" -> Parsers.agentRegNo(col("agent_id")),
+        "agent_phone_num" ->
+          split(col("agent_phone_num"), ":").getItem(1).try_cast(IntegerType),
+        "agent_name" -> trim(Cleaning.stripNonAscii(col("agent_name"))),
+        // postcode + location out of the address, location rebuilt
+        // (SRX:19-31)
+        "post_code" -> Parsers.postcodeFromAddress(col("address")),
+        "location" -> Parsers.rebuildLocation(
+          split(col("address"), " \\(").getItem(0)),
+        // description scrub (SRX:33-35)
+        "description" -> trim(Cleaning.stripEmoji(col("description"))),
+        // facilities count (SRX:37-39)
+        "facilities_num" -> Parsers.facilitiesCount(col("facilities")),
+        // furnishing (SRX:41-45; srx spells it "not furnished")
+        "furnish" ->
+          Cleaning.normalizeFurnishing(col("furnish"), "not furnished"),
+        // price + psf (SRX:47-49)
+        "price" -> Cleaning.parseMoney(col("price")),
+        "price_psf" -> Parsers.pricePsf(col("psf")),
+        // floor area sqm (SRX:51-52)
+        "floor_area_sqm" ->
+          trim(split(col("size"), "sqm").getItem(0)).try_cast(IntegerType),
+        // property type / floor level (SRX:56-60)
+        "property_type" ->
+          trim(split(col("property_type"), "HDB").getItem(1)),
+        "floor" -> Cleaning.normalizeFloorLevel(col("floor_level")),
+        "street_name" -> initcap(col("street_name")),
+        // bedrooms parser — the UDF replacement (SRX:68-83)
+        "bedrooms" -> Parsers.bedroomCount(col("bedrooms")),
+        // remaining lease from injected run date (SRX:85-86)
+        "remaining_lease" -> (lit(99) -
+          (lit(runDate.getYear) - col("top").try_cast(IntegerType)))))
+      .withColumns(Map(
+        // sqft from the parsed sqm (SRX:53-54)
+        "total_floor_area" -> Cleaning.sqmToSqft(col("floor_area_sqm")),
+        // postal sector (SRX:88-89)
+        "postal_sector" -> Parsers.postalSector(col("post_code")),
+        // leftover free text packed as JSON (SRX:94-106)
+        "additional_information" -> to_json(struct(
+          coalesce(col("facilities"), lit("N/A")).as("facilities"),
+          coalesce(col("schools"), lit("N/A")).as("schools"),
+          coalesce(col("shopping_mall/markets"), lit("N/A"))
+            .as("shopping_malls/markets"),
+          coalesce(col("train_stations"), lit("N/A")).as("train_stations"),
+          coalesce(col("description"), lit("N/A")).as("description")))))
 
-    // three broadcast enriches (SRX:146-148)
+    // district/zone/region via postal sector, agency via its id
+    // (SRX:146-148)
     val enriched = Joins.broadcastEnrich(
-      Joins.broadcastEnrich(
-        Joins.broadcastEnrich(cleaned, districtCode, Seq("postal_sector")),
-        districtRegion, Seq("district")),
-      agencyId, Seq("agency_id"))
-
-    val shaped = enriched.drop("asking", "date_listed", "developer",
-      "tenancy_status", "tenure", "psf", "floor_level", "floor_size_psf",
-      "address", "size", "num_bedroom", "num_bathroom", "facilities",
-      "schools", "shopping_mall/markets", "train_stations",
-      "postal_sector", "description")
+      Joins.broadcastEnrich(cleaned, dims.sectorLookup, Seq("postal_sector")),
+      dims.agency, Seq("agency_id"))
 
     Cleaning.castColumnsLenient(
-      Cleaning.normalizeNulls(shaped),
+      Cleaning.normalizeNulls(
+        enriched.select(Schemas.listingCols.map(col): _*)),
       Map("bathrooms" -> IntegerType, "top" -> IntegerType))
   }
 }

@@ -85,9 +85,14 @@ object Checkpoints {
     * is empty (callers' downstream is empty anyway). Results are
     * bit-identical to the two-job shape: the same long max feeds the
     * same integer expression, now as a literal (pinned by
-    * CheckpointWithMaxSpec and the exact-value fit specs). */
+    * CheckpointWithMaxSpec and the exact-value fit specs). `c` must be
+    * a LongType column; any other type is rejected up front. */
   def checkpointWithMax(df: DataFrame, c: String)
       : (DataFrame, Option[Long]) = {
+    val t = df.schema(c).dataType
+    require(t == org.apache.spark.sql.types.LongType,
+      s"checkpointWithMax: column '$c' is $t, not LongType — the " +
+        "observed max is read as a long; cast the column first")
     val row = checkpointObserving(df, s"graft_ckpt_max_$c",
       org.apache.spark.sql.functions.max(
         org.apache.spark.sql.functions.col(c)))

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
-import graft.jobs.{MergeDedupJob, PropnexJob, SrxJob}
+import graft.jobs.{MergeDedupJob, Pipeline, PropnexJob, SrxJob}
 import graft.schemas.Schemas
 import graft.sources.Audited
 import java.time.LocalDate
@@ -58,12 +58,14 @@ object JobQueries {
 
   private def dims(s: SparkSession) = {
     import s.implicits._
-    (Seq((19, "53", "Hougang"), (20, "56", "Bishan"))
-       .toDF("district", "postal_sector", "zone"),
-     Seq((19, "North-East Region"), (20, "Central Region"))
-       .toDF("district", "region"),
-     Seq(("ERA REALTY NETWORK PTE LTD", "L1234567A"))
-       .toDF("agency", "agency_id"))
+    Pipeline.Dims(
+      Seq((19, "53", "Hougang"), (20, "56", "Bishan"))
+        .toDF("district", "postal_sector", "zone"),
+      Seq((19, "North-East Region"), (20, "Central Region"))
+        .toDF("district", "region"),
+      Seq.empty[(String, Long)].toDF("general_location", "district"),
+      Seq(("ERA REALTY NETWORK PTE LTD", "L1234567A"))
+        .toDF("agency", "agency_id"))
   }
 
   /** Deterministic planted feed for the quarantine gate: 2 of 4 JSON
@@ -147,9 +149,9 @@ object JobQueries {
 
     Q("q_job_pipeline_merged",
       (s, _) => {
-        val (dc, dr, ag) = dims(s)
-        val pn = PropnexJob.transform(pnFixture(s), dc, dr, runDate)
-        val srx = SrxJob.transform(srxFixture(s), dc, dr, ag, runDate)
+        val d = dims(s)
+        val pn = PropnexJob.transform(pnFixture(s), d, runDate)
+        val srx = SrxJob.transform(srxFixture(s), d, runDate)
         MergeDedupJob.transform(pn, srx, runDate).orderBy("url")
       },
       // Golden VALUES oracle: the fixtures and the injected runDate make

@@ -60,15 +60,18 @@ object Schemas {
     StructField("agency", StringType),
     StructField("agency_id", StringType)))
 
-  /** Conformed scraped-listing output: 28 columns, merge order. */
-  val scrapedCols: Seq[String] = Seq(
+  /** Conformed listing from either scrape source: 27 columns, merge
+    * order. */
+  val listingCols: Seq[String] = Seq(
     "location", "price", "price_psf", "top", "remaining_lease",
     "bathrooms", "bedrooms", "total_floor_area", "property_type", "model",
     "floor", "general_location", "district", "zone", "region",
     "street_name", "post_code", "furnish", "floor_area_sqm",
     "facilities_num", "agent_id", "agent_name", "agent_phone_num",
-    "agency", "agency_id", "url", "additional_information",
-    "transformed_date")
+    "agency", "agency_id", "url", "additional_information")
+
+  /** Conformed scraped-listing output: 28 columns, merge order. */
+  val scrapedCols: Seq[String] = listingCols :+ "transformed_date"
 
   /** Conformed historical output: 17 columns. */
   val historicalCols: Seq[String] = Seq(

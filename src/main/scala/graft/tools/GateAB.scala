@@ -28,9 +28,9 @@ object GateAB {
       .config("spark.ui.enabled", "false")
       .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
         "262144")
-      // (canChangeCachedPlanOutputPartitioning removed round 17 —
-      // pinPartitioned sizes its partition count explicitly; keep this
-      // session conf-identical to Bench)
+      // (canChangeCachedPlanOutputPartitioning removed round 17 along
+      // with the pinPartitioned helper it served — see Checkpoints.scala;
+      // keep this session conf-identical to Bench)
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     // same untimed warm-up + store-prepare pass as Bench.main

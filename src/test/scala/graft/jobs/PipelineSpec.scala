@@ -28,6 +28,8 @@ class PipelineSpec extends SparkSpec {
   private def agencyId = Seq(
     ("ERA REALTY NETWORK PTE LTD", "L1234567A")
   ).toDF("agency", "agency_id")
+  private def dims = Pipeline.Dims(districtCode, districtRegion,
+    townDistrict, agencyId)
 
   // -- raw fixtures ----------------------------------------------------
   private def propnexRawJson: String =
@@ -113,10 +115,10 @@ class PipelineSpec extends SparkSpec {
 
   private lazy val pnOut: DataFrame = PropnexJob.transform(
     PropnexJob.readRaw(spark, writeTemp("pn.json", propnexRawJson)),
-    districtCode, districtRegion, runDate)
+    dims, runDate)
   private lazy val srxOut: DataFrame = SrxJob.transform(
     SrxJob.readRaw(spark, writeTemp("srx.json", srxRawJson)),
-    districtCode, districtRegion, agencyId, runDate)
+    dims, runDate)
 
   test("propnex: golden row 1") {
     val r = pnOut.filter($"url" === "https://example.com/listing/1")
@@ -248,6 +250,129 @@ class PipelineSpec extends SparkSpec {
     assert(spark.read.parquet(s"$outDir/scraped").count() == 3)
   }
 
+  private def marker(outDir: String, step: String) =
+    new java.io.File(outDir, s"_graft_done_$step")
+
+  test("ordered markers: a death in historical's hook keeps the scraped " +
+      "marker, and the rerun runs only historical") {
+    val outDir = Files.createTempDirectory("graft-order").toString
+    val pnPath = writeTemp("pn.json", propnexRawJson)
+    val srxPath = writeTemp("srx.json", srxRawJson)
+    val histDir = writeTemp("hist.csv", histCsv)
+    val hooks = scala.collection.mutable.Buffer[(String, Thread)]()
+    val boom = intercept[RuntimeException] {
+      Pipeline.runResumable(spark, pnPath, srxPath, histDir, dims,
+        runDate, outDir, onStepWritten = n => {
+          hooks += n -> Thread.currentThread()
+          if (n == "historical") throw new RuntimeException("simulated death")
+        })
+    }
+    assert(boom.getMessage == "simulated death")
+    // hooks run in step order, on the caller's thread
+    assert(hooks.map(_._1) == Seq("scraped", "historical"))
+    assert(hooks.forall(_._2 eq Thread.currentThread()))
+    assert(marker(outDir, "scraped").exists())
+    assert(!marker(outDir, "historical").exists())
+
+    val ran = Pipeline.runResumable(spark, pnPath, srxPath, histDir, dims,
+      runDate, outDir)
+    assert(ran == Seq("historical"))
+    assert(marker(outDir, "historical").exists())
+    assert(spark.read.parquet(s"$outDir/scraped").count() == 3)
+    assert(spark.read.parquet(s"$outDir/historical").count() == 2)
+  }
+
+  test("ordered markers: when scraped dies, the concurrent historical " +
+      "write has finished by the time the call throws, unmarked") {
+    val outDir = Files.createTempDirectory("graft-order").toString
+    val boom = intercept[RuntimeException] {
+      Pipeline.runResumable(spark, writeTemp("pn.json", propnexRawJson),
+        writeTemp("srx.json", srxRawJson), writeTemp("hist.csv", histCsv),
+        dims, runDate, outDir, onStepWritten = n =>
+          if (n == "scraped") throw new RuntimeException("simulated death"))
+    }
+    assert(boom.getMessage == "simulated death")
+    val hist = new java.io.File(outDir, "historical")
+    assert(hist.list().sorted.toSeq ==
+      Seq("date_of_sale=2017-03-01", "date_of_sale=2017-04-01"),
+      "both partitions landed and no staging dir is left")
+    assert(spark.read.parquet(hist.getPath).count() == 2)
+    assert(!marker(outDir, "scraped").exists())
+    assert(!marker(outDir, "historical").exists())
+  }
+
+  test("dim lookups keep left-join semantics: an unmatched region is " +
+      "null and a duplicated dim key fans out") {
+    // sector 53 maps to two districts (fan-out); district 22 (sector
+    // 56) and district 12 have no region; district 12 has two zones
+    val fanDims = Pipeline.Dims(
+      Seq((19, "53", "Hougang"), (21, "53", "Serangoon"),
+        (22, "56", "Bishan"), (12, "33", "Kallang"), (12, "34", "Whampoa"))
+        .toDF("district", "postal_sector", "zone"),
+      Seq((19, "North-East Region"), (21, "North Region"))
+        .toDF("district", "region"),
+      townDistrict, agencyId)
+    def rows(df: DataFrame, cols: String*): Seq[Seq[Any]] =
+      df.select(cols.map(org.apache.spark.sql.functions.col): _*)
+        .collect().map(_.toSeq).toSeq.sortBy(_.mkString("|"))
+    val pn = PropnexJob.transform(
+      PropnexJob.readRaw(spark, writeTemp("pn.json", propnexRawJson)),
+      fanDims, runDate)
+    assert(rows(pn, "url", "district", "zone", "region") == Seq(
+      Seq("https://example.com/listing/1", 19, "Hougang",
+        "North-East Region"),
+      Seq("https://example.com/listing/1", 21, "Serangoon",
+        "North Region"),
+      Seq("https://example.com/listing/2", 22, "Bishan", null)))
+    val srx = SrxJob.transform(
+      SrxJob.readRaw(spark, writeTemp("srx.json", srxRawJson)),
+      fanDims, runDate)
+    assert(rows(srx, "url", "district", "zone", "region", "agency") == Seq(
+      Seq("https://example.com/srx/9", 19, "Hougang", "North-East Region",
+        "ERA REALTY NETWORK PTE LTD"),
+      Seq("https://example.com/srx/9", 21, "Serangoon", "North Region",
+        "ERA REALTY NETWORK PTE LTD")))
+    val hist = HistoricalJob.transform(
+      HistoricalJob.readRaw(spark, writeTemp("hist.csv", histCsv)),
+      fanDims)
+    assert(rows(hist, "block", "general_location", "district", "zone",
+        "region") == Seq(
+      Seq("123A", "Hougang", 19, "Hougang", "North-East Region"),
+      Seq("9", "Kallang/Whampoa", 12, "Kallang", null),
+      Seq("9", "Kallang/Whampoa", 12, "Whampoa", null)))
+  }
+
+  test("writePartitionedIdempotent: concurrent writers under a STATIC " +
+      "session mode keep other days' partitions and leave the conf as is") {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.concurrent.duration.Duration
+    val key = "spark.sql.sources.partitionOverwriteMode"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "static")
+    try {
+      val paths = Seq.fill(2)(
+        Files.createTempDirectory("graft-concurrent").toString)
+      paths.foreach(p => Pipeline.writePartitionedIdempotent(
+        Seq((1L, "2024-11-01")).toDF("k", "day"), p, "day"))
+      // each round lands a new day in both sinks at the same time
+      for (d <- 2 to 4) {
+        val writes = paths.map(p => Future(
+          Pipeline.writePartitionedIdempotent(
+            Seq((d.toLong, f"2024-11-$d%02d")).toDF("k", "day"), p, "day")))
+        writes.foreach(Await.result(_, Duration.Inf))
+      }
+      paths.foreach { p =>
+        assert(spark.read.parquet(p).select("k").as[Long].collect().sorted
+          .toSeq == Seq(1L, 2L, 3L, 4L), p)
+      }
+      assert(spark.conf.get(key) == "static")
+    } finally prev match {
+      case Some(v) => spark.conf.set(key, v)
+      case None    => spark.conf.unset(key)
+    }
+  }
+
   test("writePartitionedIdempotent: a replayed day's load is a no-op; " +
       "other days' partitions survive") {
     import org.apache.spark.sql.functions._
@@ -306,7 +431,7 @@ class PipelineSpec extends SparkSpec {
     val out = HistoricalJob.transform(
       spark.read.schema(Schemas.historicalRaw).option("header", "true")
         .csv(writeTemp("hist.csv", histCsv)),
-      districtCode, districtRegion, townDistrict)
+      dims)
     assert(out.columns.toSeq == Schemas.historicalCols)
     val r = out.filter($"block" === "123A").collect().head
     def g[T](c: String): T = r.getAs[T](c)

@@ -34,6 +34,14 @@ class CheckpointWithMaxSpec extends SparkSpec {
     } finally Checkpoints.free(ck)
   }
 
+  test("a non-long metric column is rejected with a clear message") {
+    val df = spark.range(10).select(col("id"), col("id").cast("int").as("sr"))
+    val e = intercept[IllegalArgumentException] {
+      Checkpoints.checkpointWithMax(df, "sr")
+    }
+    assert(e.getMessage.contains("'sr' is IntegerType, not LongType"))
+  }
+
   test("BradleyTerry fit identical to the unfused reference shape") {
     val duels = (0L until 600L)
       .map(i => (i % 23, (i * 7 + 1) % 19 + 23, i % 3 != 0))

@@ -237,7 +237,10 @@ class HtmlListingSpec extends SparkSpec {
       .toDF("district", "postal_sector", "zone")
     val dr = Seq((19, "North-East Region"), (20, "Central Region"))
       .toDF("district", "region")
-    val out = graft.jobs.PropnexJob.transform(raw, dc, dr,
+    val dims = graft.jobs.Pipeline.Dims(dc, dr,
+      Seq.empty[(String, Long)].toDF("general_location", "district"),
+      Seq.empty[(String, String)].toDF("agency", "agency_id"))
+    val out = graft.jobs.PropnexJob.transform(raw, dims,
       java.time.LocalDate.of(2024, 11, 1)).collect().head
     def g[T](c: String): T = out.getAs[T](c)
     assert(g[String]("location") === "123A Upper Serangoon Rd")

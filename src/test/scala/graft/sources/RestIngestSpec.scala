@@ -143,8 +143,10 @@ class RestIngestSpec extends AnyFunSuite {
       val td = Seq(("Hougang", 19L), ("Kallang/Whampoa", 12L))
         .toDF("general_location", "district")
       // S1 multi-file scan straight over the ingested directory
+      val dims = graft.jobs.Pipeline.Dims(dc, dr, td,
+        Seq.empty[(String, String)].toDF("agency", "agency_id"))
       val res = graft.jobs.HistoricalJob.transform(
-        graft.jobs.HistoricalJob.readRaw(spark, out), dc, dr, td)
+        graft.jobs.HistoricalJob.readRaw(spark, out), dims)
       assert(res.count() === 2)
       val r = res.filter($"block" === "123A").collect().head
       assert(r.getAs[Int]("price") === 550000)
