@@ -1,6 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
-import java.nio.file.{Files, Paths}
+import java.nio.file.Paths
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -11,26 +10,10 @@ object Verify {
       case Array(s, o)    => (s, o, None)
       case Array(s, o, q) => (s, o, Some(q.split(",").toSet))
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // ObjectHashAggregate (min_by_obj dedup) falls back to
-      // sort-based at 128 map entries by default — sized for
-      // percentile-class buffers, far too small for one-row-per-key
-      // dedup state (~200 B/entry; 256k entries ~= 50 MB/task)
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        "262144")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
     new java.io.File(outDir).mkdirs()
-    // same inter-gate hygiene as Bench: gate-local localCheckpoint
-    // blocks would otherwise accumulate in the block manager across
-    // all 246 gates (cross-gate sharing is content-addressed tables
-    // on disk, never in-memory blocks, so freeing them is safe)
-    val baselineRdds = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    // same inter-gate hygiene as Bench (Harness.freeGateBlocks)
+    val baselineRdds = Harness.gateBaseline(spark)
     // CONCURRENT dump (r14 verdict item 1/6: the driver's correctness
     // record was empty because the round's gate window ran out of
     // wall; each gate is an independent small Spark job that underuses
@@ -61,27 +44,20 @@ object Verify {
       }
       pool.shutdown()
       pool.awaitTermination(2, java.util.concurrent.TimeUnit.HOURS)
-      spark.sparkContext.getPersistentRDDs.foreach { case (id, rdd) =>
-        if (!baselineRdds.contains(id))
-          try rdd.unpersist(blocking = false)
-          catch { case _: Throwable => () }
-      }
+      Harness.freeGateBlocks(spark, baselineRdds, blocking = false)
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    writeOracleSql(outDir, SparkEntry.oracleSql)
     spark.stop()
+  }
+
+  /** `<outDir>/oracle_sql.json`: gate name -> DuckDB SQL, one JSON
+    * object. Written by Jackson — a tab or CR in builder-authored SQL
+    * once risked making the driver's json.load fail and silently
+    * zeroing the round's correctness record. */
+  private[graft] def writeOracleSql(outDir: String,
+                                    sql: Map[String, String]): Unit = {
+    import scala.jdk.CollectionConverters._
+    new com.fasterxml.jackson.databind.ObjectMapper().writeValue(
+      Paths.get(outDir, "oracle_sql.json").toFile, sql.asJava)
   }
 }

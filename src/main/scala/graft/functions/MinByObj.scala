@@ -37,7 +37,7 @@ import org.apache.spark.sql.types.DataType
   * every column, exactly as [[graft.ops.Dedup.keepMostCompleteAgg]]
   * does). Empty/all-null input yields null.
   *
-  * Performance history (measured, [[graft.tools.DedupAB]] at sf0.1):
+  * Performance history (measured at sf0.1):
   * the round-3 version used the INTERPRETED struct ordering and two
   * copyValue calls per improving row, and lost to the declarative
   * min_by it replaced (q_dedup_agg 4.6→6.7 s). Two fixes reversed

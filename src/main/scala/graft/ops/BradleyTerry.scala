@@ -50,9 +50,8 @@ object BradleyTerry {
     * (columns `i`, `j` long entity ids with i ≠ j, `awin` boolean —
     * one row per comparison, no ties). Entity set = all ids appearing
     * in a duel. `bt` is in micro units, max entity = 1,000,000. */
-  def fit(duels: DataFrame, iters: Int,
-          checkpointEvery: Int = 5): DataFrame =
-    fitFromPairs(pairStats(duels), iters, checkpointEvery)
+  def fit(duels: DataFrame, iters: Int): DataFrame =
+    fitFromPairs(pairStats(duels), iters)
 
   /** Duel stream → per-pair sufficient statistics `(i, j, n, wi)` —
     * the ONLY pass over the raw comparisons, and the quantity an
@@ -78,24 +77,22 @@ object BradleyTerry {
       .groupBy("i", "j")
       .agg(sum(col("n")).as("n"), sum(col("wi")).as("wi"))
 
-  /** [[fit]] from a (possibly merged) pair-statistics table.
-    *
-    * `checkpointEvery` is the materialization cadence of the score
-    * vector: 1 checkpoints every iteration; k fuses k MM steps into
-    * one lazy plan before cutting lineage (the raw update inside each
-    * iteration stays checkpointed — it feeds both the max anchor and
-    * the re-anchor, so leaving it lazy doubles the den aggregate, and
-    * it is ALSO what bounds lineage depth under fusion: the lazy sv
-    * is always one crossJoin off the last raw checkpoint). Results
-    * are BIT-IDENTICAL for any cadence (exact integer recurrence).
-    * Default 5 = the measured winner at the gates' iters=5 (A/B in
-    * BASELINE.md round 12: 3.61 → 3.32 s median; KCore's peel keeps
-    * cadence 1 — there fusion LOSES because the degree vector feeds
-    * two consumers per round). */
-  def fitFromPairs(pairStats: DataFrame, iters: Int,
-                   checkpointEvery: Int = 5): DataFrame = {
+  /** Materialization cadence of the score vector: 5 fuses five MM
+    * steps into one lazy plan before cutting lineage (the raw update
+    * inside each iteration stays checkpointed — it feeds both the max
+    * anchor and the re-anchor, so leaving it lazy doubles the den
+    * aggregate, and it is ALSO what bounds lineage depth under
+    * fusion: the lazy sv is always one crossJoin off the last raw
+    * checkpoint). Results are BIT-IDENTICAL for any cadence (exact
+    * integer recurrence). 5 = the measured winner at the gates'
+    * iters=5 (A/B in BASELINE.md round 12: 3.61 → 3.32 s median;
+    * KCore's peel keeps cadence 1 — there fusion LOSES because the
+    * degree vector feeds two consumers per round). */
+  private val CheckpointEvery = 5
+
+  /** [[fit]] from a (possibly merged) pair-statistics table. */
+  def fitFromPairs(pairStats: DataFrame, iters: Int): DataFrame = {
     require(iters >= 1, "bradleyTerry needs at least one iteration")
-    require(checkpointEvery >= 1, "cadence must be >= 1")
     val pairs = pairStats
       .select(col("i"), col("j"), col("n").cast("long"),
         col("wi").cast("long"))
@@ -143,7 +140,7 @@ object BradleyTerry {
       val mx = mxOpt.getOrElse(1L) // None only when raw is empty
       sv = raw.select(col("id"),
         greatest(lit(1L), expr(s"sr * 1000000L div ${mx}L")).as("s"))
-      if (it % checkpointEvery == 0 || it == iters)
+      if (it % CheckpointEvery == 0 || it == iters)
         sv = sv.localCheckpoint()
     }
     sv.select(col("id"), col("s").as("bt"))

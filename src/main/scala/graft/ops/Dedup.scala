@@ -14,7 +14,7 @@ import org.apache.spark.sql.functions._
   * `InferWindowGroupLimit` adds a PARTIAL `WindowGroupLimit` below the
   * exchange — each map task ships one candidate per key, i.e. the
   * map-side combine the aggregate form was assumed to monopolize.
-  * Measured A/B ([[graft.tools.DedupAB]], sf0.1, local[32], medians):
+  * Measured A/B (sf0.1, local[32], medians):
   * at ~2.6 rows/key window 2.1 s vs min_by_obj 3.1 s; at ~50 rows/key
   * min_by_obj 0.99 s vs window 1.6 s. Crossover ≈ 10 rows/key — use
   * [[keepMostComplete]] for lightly-duplicated data and
@@ -139,25 +139,6 @@ object Dedup {
                             tiebreak: Seq[String]): DataFrame =
     incrementalExactDedupByFp(contentFingerprints(corpus, contentCols),
       batch, contentCols, tiebreak)
-
-  /** The declarative-`min_by` twin of [[keepMostCompleteAgg]] — kept as
-    * a measured A/B alternative. Its struct aggregation buffer is not
-    * HashAggregate-mutable, so the plan runs as `SortAggregateExec`
-    * (radix sorts on both sides of the shuffle). Measured at sf0.1
-    * (~2.6 rows/key) this was FASTER than the round-3 interpreted
-    * min_by_obj and is the bar the typed-imperative form must beat;
-    * see [[graft.functions.MinByObj]] for the current numbers. */
-  def keepMostCompleteAggDecl(df: DataFrame, keys: Seq[String],
-                              tiebreak: Seq[String]): DataFrame = {
-    val counted = df.columns.toIndexedSeq
-    val ord = struct(
-      (nullCount(counted.map(col)).as("nc") +: tiebreak.map(col)): _*)
-    df.withColumn("__ord", ord)
-      .withColumn("__packed", struct(counted.map(col): _*))
-      .groupBy(keys.map(col): _*)
-      .agg(min_by(col("__packed"), col("__ord")).as("__row"))
-      .select(counted.map(c => col(s"__row.$c").as(c)): _*)
-  }
 
   /** Exact duplicate removal at content granularity: group on a
     * fingerprint of `contentCols`, keep the row with the smallest

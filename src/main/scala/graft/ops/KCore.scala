@@ -32,10 +32,8 @@ object KCore {
     * `dst`; self-loops dropped, duplicates deduped, direction
     * ignored). `removed_round` is the 1-based round a node peeled,
     * NULL for survivors (the k-core approximant). */
-  def peel(edges: DataFrame, k: Int, rounds: Int,
-           checkpointEvery: Int = 1): DataFrame = {
+  def peel(edges: DataFrame, k: Int, rounds: Int): DataFrame = {
     require(k >= 1 && rounds >= 1, "need k >= 1 and rounds >= 1")
-    require(checkpointEvery >= 1, "cadence must be >= 1")
     // canonicalize BEFORE dedup: a reversed duplicate (b, a) of
     // (a, b) survives a directed distinct and double-counts degree
     val e = edges
@@ -88,12 +86,10 @@ object KCore {
         .join(delta, Seq("id"), "left")
         .select(col("id"),
           (col("deg") - coalesce(col("minus"), lit(0L))).as("deg"))
-      // degree-vector cadence: k > 1 fuses k peel rounds into one
-      // lazy plan before cutting lineage (rm stays checkpointed —
-      // three consumers). Bit-identical for any cadence; measured
-      // A/B in BASELINE.md round 12.
-      if (r % checkpointEvery == 0 || r == rounds)
-        deg = deg.localCheckpoint()
+      // degree vector checkpointed EVERY round: fusing several peel
+      // rounds into one lazy plan measured slower (A/B in BASELINE.md
+      // round 12) — the degree vector feeds two consumers per round
+      deg = deg.localCheckpoint()
     }
     deg.select(col("id"), lit(null).cast("int").as("removed_round"))
       .unionByName(removed)

@@ -39,18 +39,21 @@ import org.apache.spark.sql.functions._
   * driver-collected. */
 object RankCentrality {
 
+  /** Score-vector materialization cadence: 5 = the measured winner
+    * at the gates' iters=5 (BASELINE.md round 12: 4.31 → 4.19 s). */
+  private val CheckpointEvery = 5
+
   /** (id, rc) after exactly `iters` iterations over `duels`
     * (columns `i`, `j` long entity ids with i ≠ j canonical per pair,
     * `awin` boolean — one row per comparison, no ties). `rc` is in
     * micro units, max entity = 1,000,000. */
-  def fit(duels: DataFrame, iters: Int,
-          checkpointEvery: Int = 5): DataFrame = {
+  def fit(duels: DataFrame, iters: Int): DataFrame = {
     val d = duels.select(col("i").cast("long"), col("j").cast("long"),
       col("awin").cast("boolean"))
     fitFromPairs(d.groupBy("i", "j")
       .agg(count(lit(1)).as("n"),
         sum(when(col("awin"), 1L).otherwise(0L)).as("wi")),
-      iters, checkpointEvery)
+      iters)
   }
 
   /** [[fit]] from a precomputed `(i, j, n, wi)` pair-statistics table
@@ -59,10 +62,8 @@ object RankCentrality {
     * per-pair counts and wins, so a store that already paid the one
     * duel-stream shuffle can fit both models from it without a second
     * pass. Bit-identical to [[fit]] on the originating duels. */
-  def fitFromPairs(pairStats: DataFrame, iters: Int,
-                   checkpointEvery: Int = 5): DataFrame = {
+  def fitFromPairs(pairStats: DataFrame, iters: Int): DataFrame = {
     require(iters >= 1, "rankCentrality needs at least one iteration")
-    require(checkpointEvery >= 1, "cadence must be >= 1")
     val pairs = pairStats
       .select(col("i").cast("long"), col("j").cast("long"),
         col("n").cast("long"), col("wi").cast("long"))
@@ -100,10 +101,10 @@ object RankCentrality {
       .select(col("id"), coalesce(col("r"), lit(0L)).as("r"),
         lit(1000000L).as("s"))
       .localCheckpoint()
-    // score-vector materialization cadence: k > 1 fuses k update
-    // steps into one lazy plan before cutting lineage; the raw update
-    // stays checkpointed (max anchor + re-anchor both consume it).
-    // Bit-identical for any cadence — a pure plan experiment
+    // score-vector materialization cadence (CheckpointEvery) fuses
+    // that many update steps into one lazy plan before cutting
+    // lineage; the raw update stays checkpointed (max anchor +
+    // re-anchor both consume it). Bit-identical for any cadence
     // (measured A/B in BASELINE.md round 12).
     for (it <- 1 to iters) {
       val inflow = sv.select(col("id").as("src"), col("s"))
@@ -124,7 +125,7 @@ object RankCentrality {
       val mx = mxOpt.getOrElse(1L) // None only when raw is empty
       sv = raw.select(col("id"), col("r"),
         expr(s"raw * 1000000L div ${mx}L").as("s"))
-      if (it % checkpointEvery == 0 || it == iters)
+      if (it % CheckpointEvery == 0 || it == iters)
         sv = sv.localCheckpoint()
     }
     sv.select(col("id"), col("s").as("rc"))

@@ -238,13 +238,10 @@ object Similarity {
     // complete (sizes n and positions below all come from the
     // coarsened arrays, keeping the filter arithmetic internally
     // consistent). False extras die in the exact string-array verify
-    // as before. -Dgraft.hashtok.disable=1 is the dev A/B toggle.
-    val toks =
-      if (System.getProperty("graft.hashtok.disable", "") == "1")
-        mat.select(col("id"), explode(col("shingles")).as("t"))
-      else mat.select(col("id"),
-        explode(array_distinct(
-          transform(col("shingles"), s => xxhash64(s)))).as("t"))
+    // as before.
+    val toks = mat.select(col("id"),
+      explode(array_distinct(
+        transform(col("shingles"), s => xxhash64(s)))).as("t"))
     val freq = toks.groupBy("t").agg(count(lit(1)).as("f"))
     // prefix extraction via per-doc array sort (hash aggregate +
     // local array sort) — measured FASTER than the two-window
@@ -350,13 +347,10 @@ object Similarity {
     // the coarsened arrays, which they do below. The hashed array is
     // computed ONCE into the checkpoint (hashing per consumer measured
     // away the narrow-key win — 3.45 vs 3.13 s A/B).
-    val hashTok = System.getProperty("graft.hashtok.disable", "") != "1"
     val mat = docs.select(col("id"),
         array_distinct(col("shingles")).as("shingles"))
       .withColumn("h",
-        if (hashTok)
-          array_distinct(transform(col("shingles"), s => xxhash64(s)))
-        else col("shingles"))
+        array_distinct(transform(col("shingles"), s => xxhash64(s))))
       .transform(Checkpoints.spill)
     val toks = mat.select(col("id"), explode(col("h")).as("t"))
     val freq = toks.groupBy("t").agg(count(lit(1)).as("f"))

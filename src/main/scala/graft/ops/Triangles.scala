@@ -77,15 +77,13 @@ object Triangles {
     // edge list), so a single primitive merge walk replaces
     // array_intersect's per-row OpenHashSet build+probe — the top
     // executor frame of the round-16 profile. Same result by the
-    // kernel's precondition contract (pinned in SortedIntersectSpec;
-    // -Dgraft.native.intersect.disable=1 is the dev A/B toggle).
+    // kernel's precondition contract (pinned in SortedIntersectSpec).
+    // The kernel is long-only: other id types take array_intersect.
     graft.functions.GraftFunctions.ensureRegistered(canonEdges.sparkSession)
     val dstIsLong = oriented.schema("dst").dataType ==
       org.apache.spark.sql.types.LongType
     val inter =
-      if (!dstIsLong ||
-          System.getProperty("graft.native.intersect.disable", "") == "1")
-        array_intersect(col("u_nbrs"), col("v_nbrs"))
+      if (!dstIsLong) array_intersect(col("u_nbrs"), col("v_nbrs"))
       else graft.functions.GraftFunctions
         .sortedIntersectLongs(col("u_nbrs"), col("v_nbrs"))
     // inner joins: u always has out-edges; a v with no out-edges

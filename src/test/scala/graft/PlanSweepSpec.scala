@@ -134,17 +134,10 @@ class PlanSweepSpec extends SparkSpec {
     "ops/Classify.scala" -> 1,    // |labels|-row trained centroid model
     "queries/TextQueries.scala" -> 1, // ≤ 26+rounds BPE symbol set
     "queries/JobQueries.scala" -> 1,  // nation dim render: 25 rows at every SF
-    "Bench.scala" -> 2,           // warm-up scalar (sum over range);
+    "Harness.scala" -> 2          // warm-up scalar (sum over range);
                                   // catalog table LIST for the untimed
                                   // store warm pass (store-count-sized,
                                   // ~30 names)
-    "tools/DedupAB.scala" -> 1,   // warm-up scalar (A/B harness main)
-    "tools/FitCadenceAB.scala" -> 2, // entity-sized fitted score vectors
-                                  // (≤ |suppliers| / |parts| rows) for
-                                  // the cadence bit-identity check
-    "tools/GateAB.scala" -> 2     // warm-up scalar + catalog table LIST
-                                  // (store-count-sized, ~30 names) —
-                                  // same bounds as Bench.scala's pair
   )
 
   test("every main-source collect() is allowlisted with a documented " +
@@ -326,17 +319,13 @@ class PlanSweepSpec extends SparkSpec {
                                    // bounded snapshots + narrow pair
                                    // matrices + the (p, fp-md5, n)
                                    // prefix index (audited r14)
-    "tools/SetSimAB.scala" -> 3,   // A/B harness mirroring the
-                                   // measured op's exact shape
     "queries/StreamQueries.scala" -> 1,   // ≤bins histogram snapshot
     "queries/AnalyticsQueries.scala" -> 4, // pair matrices (4 longs)
     "queries/TextQueries.scala" -> 1, // lang×pred confusion grid
-    "ops/Checkpoints.scala" -> 1,  // checkpointWithMax's own eager
+    "ops/Checkpoints.scala" -> 1   // checkpointWithMax's own eager
                                    // checkpoint (narrow frames by the
                                    // callers' contract, same as a
                                    // bare-site caller)
-    "tools/PlanPeek.scala" -> 4    // scratch plan inspector: synthetic
-                                   // narrow long frames (dev tool)
   )
 
   test("bare localCheckpoint() only on narrow bounded-or-linear " +

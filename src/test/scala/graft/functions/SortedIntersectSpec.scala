@@ -40,13 +40,14 @@ class SortedIntersectSpec extends SparkSpec {
     val edges = (0L until 300L)
       .map(i => (i % 23, (i * 11 + 5) % 29))
       .toDF("id_a", "id_b")
-    System.clearProperty("graft.native.intersect.disable")
     val nat = graft.ops.Triangles.perNode(edges)
       .orderBy("node").collect().toSeq
-    System.setProperty("graft.native.intersect.disable", "1")
-    val ref = try graft.ops.Triangles.perNode(edges)
+    // integer-typed ids take the built-in array_intersect branch
+    val intEdges = edges.select(col("id_a").cast("int").as("id_a"),
+      col("id_b").cast("int").as("id_b"))
+    val ref = graft.ops.Triangles.perNode(intEdges)
+      .select(col("node").cast("long").as("node"), col("triangles"))
       .orderBy("node").collect().toSeq
-    finally System.clearProperty("graft.native.intersect.disable")
     assert(nat === ref)
   }
 }

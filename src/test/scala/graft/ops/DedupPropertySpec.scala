@@ -4,9 +4,9 @@ import graft.SparkSpec
 import org.apache.spark.sql.functions._
 import scala.util.Random
 
-/** Property-style agreement tests over seeded random data: the three
+/** Property-style agreement tests over seeded random data: the two
   * keep-most-complete formulations (window row_number, typed-imperative
-  * min_by_obj, declarative min_by) must produce IDENTICAL row sets
+  * min_by_obj) must produce IDENTICAL row sets
   * whenever the tiebreak is total — the invariant the optimizer rule
   * and the 100 TB path both rest on. Seeded, so failures reproduce. */
 @org.scalatest.tags.Slow
@@ -23,7 +23,7 @@ class DedupPropertySpec extends SparkSpec {
     }.toDF("k", "a", "b", "v", "row_id")
   }
 
-  test("window / min_by_obj / declarative dedup agree on random data") {
+  test("window / min_by_obj dedup agree on random data") {
     for (seed <- Seq(1L, 2L, 42L)) {
       val df = randomFrame(seed, rows = 500, keys = 60)
       // row_id makes the tiebreak total
@@ -33,9 +33,7 @@ class DedupPropertySpec extends SparkSpec {
           .sort("k", "row_id").collect().toSeq
       val w = norm(Dedup.keepMostComplete(df, Seq("k"), tiebreak))
       val o = norm(Dedup.keepMostCompleteAgg(df, Seq("k"), tiebreak))
-      val d = norm(Dedup.keepMostCompleteAggDecl(df, Seq("k"), tiebreak))
       assert(w == o, s"window vs min_by_obj diverged (seed=$seed)")
-      assert(w == d, s"window vs declarative diverged (seed=$seed)")
       assert(w.map(_.getLong(0)).distinct.size == w.size,
         s"keys must be unique after dedup (seed=$seed)")
     }
