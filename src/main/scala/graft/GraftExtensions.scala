@@ -15,18 +15,16 @@ import graft.plans.DedupWindowToAggregate
   *   SparkSession.builder().withExtensions(new GraftExtensions) ...
   * }}}
   *
-  * Injects every native expression (cosine_milli, minhash_sig,
-  * simhash_pack, dot_double, char_codes, rolling_hash, cdc_bounds) and
-  * the DedupWindowToAggregate optimizer rule into each new session.
-  * [[graft.functions.GraftFunctions.ensureRegistered]] remains the
-  * runtime fallback for sessions built without extensions (tests, the
-  * driver harness); both paths register the same builders. */
+  * Injects every native expression under its SQL name
+  * ([[graft.functions.GraftFunctions.natives]]: cosine_milli,
+  * minhash_sig, min_by_obj, bloom_agg, ...) and the
+  * DedupWindowToAggregate optimizer rule into each new session. Only
+  * `spark.sql` text needs the names: DataFrame code builds the same
+  * expressions through the GraftFunctions Column builders, which
+  * resolve in any session. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
   override def apply(ext: SparkSessionExtensions): Unit = {
-    // one registration table — GraftFunctions.natives — feeds both this
-    // path and the runtime ensureRegistered fallback, so a kernel added
-    // there can never resolve in tests but miss production
     GraftFunctions.natives.foreach { case (name, cls, builder) =>
       ext.injectFunction((FunctionIdentifier(name),
         new ExpressionInfo(cls.getName, name), builder))

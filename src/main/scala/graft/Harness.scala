@@ -136,7 +136,7 @@ object Harness {
         try rdd.unpersist(blocking) catch { case _: Throwable => () }
     }
 
-  private def attempt(name: String)(body: => Unit): Option[Failure] =
+  private[graft] def attempt(name: String)(body: => Unit): Option[Failure] =
     try { body; None }
     catch { case e: Throwable =>
       Some(Failure(name, Option(e.getMessage).getOrElse(e.getClass.getName)))

@@ -1,12 +1,12 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
+import org.apache.spark.sql.catalyst.expressions.aggregate.AggregateFunction
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.call_function
+import org.apache.spark.sql.functions.{array, lit}
+import org.apache.spark.sql.graft.Internals
 import org.apache.spark.sql.types.{DataType, LongType}
 
 /** Native codegen'd cosine similarity in floor-rounded milli-units over
@@ -91,14 +91,14 @@ case class CosineMilli(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
-/** Session registration for graft's native expressions — the runtime
-  * equivalent of wiring them through SparkSessionExtensions'
-  * injectFunction. */
+/** graft's native expressions, in two spellings. The Column builders
+  * construct each Catalyst expression directly, so DataFrame code
+  * resolves in any session with no registration step. [[natives]] is
+  * the SQL spelling, injected by [[graft.GraftExtensions]] for
+  * `spark.sql` users; GraftFunctionsSpec pins both spellings to the
+  * same expression. */
 object GraftFunctions {
-  /** Single source of truth for every native expression — consumed by
-    * both [[ensureRegistered]] (runtime fallback) and
-    * [[graft.GraftExtensions]] (spark.sql.extensions deployment), so a
-    * kernel added here is registered on BOTH paths. */
+  /** Every native expression under its SQL function name. */
   val natives: Seq[(String, Class[_], Seq[Expression] => Expression)] =
     Seq(
       ("cosine_milli", classOf[CosineMilli],
@@ -130,7 +130,8 @@ object GraftFunctions {
       ("subword_stats", classOf[SubwordStats],
         es => SubwordStats(es.head, es(1))),
       // aggregates: the analyzer wraps a bare AggregateFunction returned
-      // by a registry builder into an AggregateExpression
+      // by a registry builder into an AggregateExpression, as [[agg]]
+      // does for the Column builders
       ("min_by_obj", classOf[MinByObj],
         es => MinByObj(es.head, es(1))),
       ("max_by_obj", classOf[MinByObj],
@@ -140,52 +141,47 @@ object GraftFunctions {
       ("bloom_might_contain", classOf[BloomMightContain],
         es => BloomMightContain(es.head, es(1))))
 
-  def ensureRegistered(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    natives.foreach { case (name, cls, builder) =>
-      val ident = FunctionIdentifier(name)
-      if (!reg.functionExists(ident)) {
-        reg.registerFunction(ident,
-          new ExpressionInfo(cls.getName, name), builder)
-      }
-    }
-  }
+  private def ex(c: Column): Expression = Internals.expression(c)
+  private def native(e: Expression): Column = Internals.column(e)
+  private def agg(f: AggregateFunction): Column =
+    Internals.column(f.toAggregateExpression())
 
-  /** Column forms; require [[ensureRegistered]] on the active session. */
   def cosineMilli(a: Column, b: Column): Column =
-    call_function("cosine_milli", a, b)
+    native(CosineMilli(ex(a), ex(b)))
   def minHashSig(hashes: Column, k: Int): Column =
-    call_function("minhash_sig", hashes,
-      org.apache.spark.sql.functions.lit(k))
+    native(MinHashSig(ex(hashes), ex(lit(k))))
   def simhashPack(hashes: Column): Column =
-    call_function("simhash_pack", hashes)
+    native(SimHashPack(ex(hashes)))
   def dotDouble(a: Column, b: Column): Column =
-    call_function("dot_double", a, b)
+    native(DotDouble(ex(a), ex(b)))
   def jaccardMilli(a: Column, b: Column): Column =
-    call_function("jaccard_milli", a, b)
+    native(JaccardMilli(ex(a), ex(b)))
   def sortedIntersectLongs(a: Column, b: Column): Column =
-    call_function("sorted_intersect_longs", a, b)
+    native(SortedIntersectLongs(ex(a), ex(b)))
   def containmentMilli(a: Column, b: Column): Column =
-    call_function("containment_milli", a, b)
+    native(ContainmentMilli(ex(a), ex(b)))
   def nearestCentroidMilli(qv: Column, centsFlat: Array[Long],
                            cids: Array[Long], dim: Int): Column =
-    call_function("nearest_centroid_milli", qv,
-      org.apache.spark.sql.functions.lit(centsFlat),
-      org.apache.spark.sql.functions.lit(cids),
-      org.apache.spark.sql.functions.lit(dim))
+    native(NearestCentroidMilli(ex(qv), ex(lit(centsFlat)),
+      ex(lit(cids)), ex(lit(dim))))
   def charCodes(c: Column): Column =
-    call_function("char_codes", c)
+    native(CharCodes(ex(c)))
   def seleniumText(c: Column): Column =
-    call_function("selenium_text", c)
+    native(SeleniumText(ex(c)))
   def rollingHash(codes: Column): Column =
-    call_function("rolling_hash", codes)
+    native(RollingHash(ex(codes)))
   def cdcBounds(codes: Column, mask: Int = 64): Column =
-    call_function("cdc_bounds", codes,
-      org.apache.spark.sql.functions.lit(mask))
+    native(CdcBounds(ex(codes), ex(lit(mask))))
   def unicodeNfc(c: Column): Column =
-    call_function("unicode_nfc", c)
+    native(UnicodeNfc(ex(c)))
   def subwordStats(text: Column, vocab: Seq[String]): Column =
-    call_function("subword_stats", text,
-      org.apache.spark.sql.functions.array(
-        vocab.map(org.apache.spark.sql.functions.lit): _*))
+    native(SubwordStats(ex(text), ex(array(vocab.map(lit): _*))))
+  def minByObj(value: Column, ord: Column): Column =
+    agg(MinByObj(ex(value), ex(ord)))
+  def maxByObj(value: Column, ord: Column): Column =
+    agg(MinByObj(ex(value), ex(ord), asc = false))
+  def bloomAgg(key: Column, numBits: Int, numHashes: Int): Column =
+    agg(BloomAgg(ex(key), ex(lit(numBits)), ex(lit(numHashes))))
+  def bloomMightContain(bloom: Column, key: Column): Column =
+    native(BloomMightContain(ex(bloom), ex(key)))
 }

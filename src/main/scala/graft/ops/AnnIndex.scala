@@ -125,7 +125,6 @@ object AnnIndex {
                codebook: DataFrame, table: String,
                overwrite: Boolean = false): Unit = {
     val s = corpus.sparkSession
-    graft.functions.GraftFunctions.ensureRegistered(s)
     // BOTH tables must exist to skip: a run that died between the
     // codebook and list writes must rebuild (same contract as
     // InvertedIndexStore.build)
@@ -148,7 +147,6 @@ object AnnIndex {
   def appendIvf(batch: DataFrame, idCol: String, vecCol: String,
                 table: String): Unit = {
     val s = batch.sparkSession
-    graft.functions.GraftFunctions.ensureRegistered(s)
     assignCluster(batch, idCol, vecCol, s.table(codebookTable(table)))
       .write.partitionBy("cluster")
       .format("parquet").mode("append").saveAsTable(table)
@@ -162,7 +160,6 @@ object AnnIndex {
   def probeIvfTopK(s: SparkSession, table: String, queries: DataFrame,
                    idCol: String, vecCol: String, nprobe: Int,
                    k: Int): DataFrame = {
-    graft.functions.GraftFunctions.ensureRegistered(s)
     val cb = s.table(codebookTable(table))
     val wProbe = org.apache.spark.sql.expressions.Window
       .partitionBy("q_id")
@@ -210,7 +207,6 @@ object AnnIndex {
                 idCol: String, vecCol: String, hyper: DataFrame,
                 rowsPerBand: Int, k: Int, multiprobe: Int = 0,
                 retracted: Boolean = false): DataFrame = {
-    graft.functions.GraftFunctions.ensureRegistered(s)
     require(multiprobe >= 0 && multiprobe <= rowsPerBand,
       "multiprobe flips at most rowsPerBand sign bits")
     val qb0 = Similarity.signLshBuckets(

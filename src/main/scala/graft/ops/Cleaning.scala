@@ -21,8 +21,7 @@ object Cleaning {
     * Collation contract (the oracle twin must spell the same chain):
     * DuckDB `lower(nfc_normalize(x))` — both engines implement UAX #15
     * canonical composition and Unicode simple lowercase, so the chain
-    * is byte-identical across engines. Requires
-    * [[graft.functions.GraftFunctions.ensureRegistered]]. */
+    * is byte-identical across engines. */
   def canonicalUnicode(c: Column): Column =
     lower(graft.functions.GraftFunctions.unicodeNfc(c))
 

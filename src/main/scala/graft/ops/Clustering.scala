@@ -78,7 +78,6 @@ object Clustering {
     * codebook itself — e.g. as a trained PQ/IVF seed). */
   private def lloyd(in: DataFrame, k: Int,
                     iters: Int): Seq[(Long, Seq[Long])] = {
-    graft.functions.GraftFunctions.ensureRegistered(in.sparkSession)
     // seed codebook: rows with id < k (KB-sized collect, k·dim longs)
     var cents: Seq[(Long, Seq[Long])] = in.filter(col("id") < k)
       .collect().map(r =>
@@ -226,10 +225,6 @@ object Clustering {
   def kCenterAssign(df: DataFrame, idCol: String, qvCol: String,
                     k: Int): DataFrame = {
     require(k >= 1, "kCenterAssign needs k >= 1")
-    // assignCol resolves the session-registered nearest_centroid_milli
-    // function — register here (like lloyd does) so a fresh session
-    // whose first clustering call is k-center doesn't fail analysis
-    graft.functions.GraftFunctions.ensureRegistered(df.sparkSession)
     val in = df.select(col(idCol).cast("long").as("id"),
       col(qvCol).as("qv"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)

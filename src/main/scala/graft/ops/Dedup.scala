@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.functions.GraftFunctions.minByObj
 
 /** Completeness-based entity dedup — the reference's flagship semantics
   * (jobs/spark/merge_dedup.py:14-29): rows agreeing on a business key
@@ -60,7 +61,6 @@ object Dedup {
     * (obj 3.09/0.99 s vs decl 3.27/1.55 s — low/high dup). */
   def keepMostCompleteAgg(df: DataFrame, keys: Seq[String],
                           tiebreak: Seq[String]): DataFrame = {
-    graft.functions.GraftFunctions.ensureRegistered(df.sparkSession)
     val counted = df.columns.toIndexedSeq
     val ord = struct(
       (nullCount(counted.map(col)).as("__nc") +: tiebreak.map(col)): _*)
@@ -78,7 +78,7 @@ object Dedup {
       // determinism demands a total tiebreak, which means full-row.
       df.withColumn("__ord", ord)
         .groupBy(keys.map(col): _*)
-        .agg(call_function("min_by_obj", col("__ord"), col("__ord"))
+        .agg(minByObj(col("__ord"), col("__ord"))
           .as("__row"))
         .select(counted.map { c =>
           if (tiebreak.contains(c)) col(s"__row.$c").as(c) else col(c)
@@ -87,7 +87,7 @@ object Dedup {
       val packed = struct(counted.map(col): _*)
       df.withColumn("__ord", ord).withColumn("__packed", packed)
         .groupBy(keys.map(col): _*)
-        .agg(call_function("min_by_obj", col("__packed"), col("__ord"))
+        .agg(minByObj(col("__packed"), col("__ord"))
           .as("__row"))
         .select(counted.map(c => col(s"__row.$c").as(c)): _*)
     }
@@ -116,7 +116,6 @@ object Dedup {
   def incrementalExactDedupByFp(corpusFp: DataFrame, batch: DataFrame,
                                 contentCols: Seq[String],
                                 tiebreak: Seq[String]): DataFrame = {
-    graft.functions.GraftFunctions.ensureRegistered(batch.sparkSession)
     val counted = batch.columns.toIndexedSeq
     batch
       .withColumn("__fp",
@@ -124,7 +123,7 @@ object Dedup {
       .withColumn("__ord", struct(tiebreak.map(col): _*))
       .withColumn("__packed", struct(counted.map(col): _*))
       .groupBy(col("__fp"))
-      .agg(call_function("min_by_obj", col("__packed"), col("__ord"))
+      .agg(minByObj(col("__packed"), col("__ord"))
         .as("__row"))
       .join(corpusFp, Seq("__fp"), "left_anti")
       .select(counted.map(c => col(s"__row.$c").as(c)): _*)
@@ -146,7 +145,6 @@ object Dedup {
     * pipeline; one shuffle, partial-aggregable. */
   def exactDedup(df: DataFrame, contentCols: Seq[String],
                  tiebreak: Seq[String]): DataFrame = {
-    graft.functions.GraftFunctions.ensureRegistered(df.sparkSession)
     // hash an UNAMBIGUOUS encoding: concat_ws skips NULLs (NULL vs ''
     // collide) - to_json(struct) preserves column boundaries, quoting,
     // and null-vs-empty distinctions
@@ -162,7 +160,7 @@ object Dedup {
       .groupBy(col("__fp"))
       // min_by_obj, not min_by: ObjectHashAggregate vs SortAggregate
       // (see keepMostCompleteAgg)
-      .agg(call_function("min_by_obj", col("__packed"), col("__ord"))
+      .agg(minByObj(col("__packed"), col("__ord"))
         .as("__row"))
       .select(counted.map(c => col(s"__row.$c").as(c)): _*)
   }
@@ -176,14 +174,13 @@ object Dedup {
     * the count rides the existing aggregate for free. */
   def exactDedupWeighted(df: DataFrame, contentCols: Seq[String],
                          tiebreak: Seq[String]): DataFrame = {
-    graft.functions.GraftFunctions.ensureRegistered(df.sparkSession)
     val fp = sha2(to_json(struct(contentCols.map(col): _*)), 256)
     val counted = df.columns.toIndexedSeq
     df.withColumn("__fp", fp)
       .withColumn("__packed", struct(counted.map(col): _*))
       .withColumn("__ord", struct(tiebreak.map(col): _*))
       .groupBy(col("__fp"))
-      .agg(call_function("min_by_obj", col("__packed"), col("__ord"))
+      .agg(minByObj(col("__packed"), col("__ord"))
         .as("__row"),
         count(lit(1)).as("weight"))
       .select(counted.map(c => col(s"__row.$c").as(c)) :+

@@ -152,7 +152,6 @@ object HtmlListing {
     * `jobs/PropnexJob.transform` exactly like the fixture JSON does.
     * Input columns are replaced by the 25 extracted columns. */
   def parsePropnex(df: DataFrame, urlCol: String, htmlCol: String): DataFrame = {
-    graft.functions.GraftFunctions.ensureRegistered(df.sparkSession)
     val html = col(htmlCol)
     // stage 1: every full-page scan exactly once
     val staged = df.select(col(urlCol).as("url"),
@@ -232,7 +231,6 @@ object HtmlListing {
     * conventions, so the output feeds `jobs/SrxJob.transform` exactly
     * like the A2 fixture JSON (FIXTURES.md). */
   def parseSrx(df: DataFrame, urlCol: String, htmlCol: String): DataFrame = {
-    graft.functions.GraftFunctions.ensureRegistered(df.sparkSession)
     val html = col(htmlCol)
     def desc(parentTag: String, parentCls: String, childPat: String): String =
       s"""(?s)<$parentTag[^>]*${classTok(parentCls)}[^>]*>.*?$childPat"""

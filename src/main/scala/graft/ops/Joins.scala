@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.functions.GraftFunctions.{bloomAgg, bloomMightContain}
 
 /** Broadcast dimension-enrichment joins — §2.4 of SURVEY.md. Every join
   * in the reference is a broadcast-hinted left equi-join of a fact
@@ -229,14 +230,12 @@ object Joins {
                       numHashes: Int): DataFrame = {
     requireSupersetSafe(how, "bloomPrunedJoin")
     requireSameKeyTypes(fact, dim, keys, "bloomPrunedJoin")
-    graft.functions.GraftFunctions.ensureRegistered(fact.sparkSession)
     val sketch = dim
-      .agg(call_function("bloom_agg", xxhash64(keys.map(col): _*),
-        lit(numBits), lit(numHashes)).as("b"))
+      .agg(bloomAgg(xxhash64(keys.map(col): _*), numBits, numHashes)
+        .as("b"))
       .head().getAs[Array[Byte]](0)
     val pruned = fact.filter(
-      call_function("bloom_might_contain", lit(sketch),
-        xxhash64(keys.map(col): _*)))
+      bloomMightContain(lit(sketch), xxhash64(keys.map(col): _*)))
     pruned.join(dim, keys, how)
   }
 

@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.functions.GraftFunctions.maxByObj
 
 /** Incremental-maintenance operators: upsert, CDC merge-apply, and
   * SCD type-2 history — the "MERGE INTO" family an ETL engine needs
@@ -50,7 +51,6 @@ object Merge {
     * the snapshot is ever read. */
   def applyCdc(snapshot: DataFrame, changes: DataFrame, keys: Seq[String],
                ordCols: Seq[String], opCol: String): DataFrame = {
-    graft.functions.GraftFunctions.ensureRegistered(snapshot.sparkSession)
     val payloadCols = snapshot.columns.toIndexedSeq
     require((payloadCols :+ opCol).toSet.subsetOf(changes.columns.toSet),
       "changes must carry the snapshot schema plus the op column")
@@ -61,7 +61,7 @@ object Merge {
         struct((payloadCols :+ opCol).map(col): _*))
       .withColumn("__ord", struct(ordCols.map(col): _*))
       .groupBy(keys.map(col): _*)
-      .agg(call_function("max_by_obj", col("__packed"), col("__ord"))
+      .agg(maxByObj(col("__packed"), col("__ord"))
         .as("__last"))
       .select(col("__last.*"))
     val upserts = compacted.filter(col(opCol) =!= "D")

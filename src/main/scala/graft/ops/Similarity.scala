@@ -103,7 +103,6 @@ object Similarity {
     * output is the artifact to STORE for the corpus side (refresh via
     * [[graft.ops.Merge.upsert]] as batches land). */
   def bucketize(df: DataFrame, k: Int, bands: Int): DataFrame = {
-    graft.functions.GraftFunctions.ensureRegistered(df.sparkSession)
     val r = k / bands
     val n = barrierPartitions(df)
     val hashed = df
@@ -145,8 +144,7 @@ object Similarity {
     * (functions.JaccardMilli): counts the intersection in one loop
     * instead of materializing `array_intersect`'s result array just to
     * take its size — bit-identical milli values (equivalence pinned in
-    * SimilaritySpec). Requires GraftFunctions.ensureRegistered on the
-    * active session. */
+    * SimilaritySpec). */
   def jaccardMilliFast(a: Column, b: Column): Column =
     graft.functions.GraftFunctions.jaccardMilli(a, b)
 
@@ -208,7 +206,6 @@ object Similarity {
     * would inflate the length filter and silently drop true pairs). */
   def setSimilarityPairsExact(docs: DataFrame,
                               thresholdMilli: Int): DataFrame = {
-    graft.functions.GraftFunctions.ensureRegistered(docs.sparkSession)
     val n0 = barrierPartitions(docs)
     // EAGER materialization (localCheckpoint), not just an exchange
     // barrier: this plan fans out — the prefix table feeds BOTH
@@ -332,7 +329,6 @@ object Similarity {
     * Sets are `array_distinct`ed defensively (duplicate elements
     * would inflate |a| and silently drop true containments). */
   def containmentPairs(docs: DataFrame, thresholdMilli: Int): DataFrame = {
-    graft.functions.GraftFunctions.ensureRegistered(docs.sparkSession)
     // EAGER materialization here, unlike [[nearDupPairs]] (measured
     // lazy-wins there): this plan reads the distinct-shingle table
     // FIVE ways — freq/packed/prefixes chain, the container-side
@@ -405,7 +401,6 @@ object Similarity {
                                corpusShingles: DataFrame,
                                corpusFreq: DataFrame,
                                thresholdMilli: Int): DataFrame = {
-    graft.functions.GraftFunctions.ensureRegistered(batch.sparkSession)
     // the batch shingle table feeds the prefix chain AND the verify
     // payload side; the upstream tokenize→shingle projection costs
     // more than materializing the batch-sized (by definition small)
@@ -520,8 +515,7 @@ object Similarity {
     * (one xxhash64 per token), then `simhash_pack`
     * (functions.SimHashPack) does the 64-counter vote and MSB-first
     * packing in a single codegen loop — bit-identical signatures,
-    * without 64 interpreted array traversals per row. Requires
-    * GraftFunctions.ensureRegistered on the active session. */
+    * without 64 interpreted array traversals per row. */
   def simhash64Fast(text: Column): Column =
     graft.functions.GraftFunctions.simhashPack(
       transform(TextOps.tokens(text), t => xxhash64(t)))
@@ -546,7 +540,6 @@ object Similarity {
     * broadcast hyperplane set + one partial-aggregable groupBy. */
   def signLshBuckets(df: DataFrame, idCol: String, vecCol: String,
                      hyper: DataFrame, rowsPerBand: Int): DataFrame = {
-    graft.functions.GraftFunctions.ensureRegistered(df.sparkSession)
     df.crossJoin(broadcast(hyper))
       .select(col(idCol),
         expr(s"h_id div $rowsPerBand").as("band"),

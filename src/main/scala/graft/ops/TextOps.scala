@@ -504,7 +504,6 @@ object TextOps {
     val s = docs.sparkSession
     val nPart = s.sessionState.conf.numShufflePartitions
     import graft.functions.GraftFunctions
-    GraftFunctions.ensureRegistered(s)
     val coded = docs
       .select(col(idCol).as("id"), col(textCol).as("text"),
         GraftFunctions.charCodes(col(textCol)).as("codes"))

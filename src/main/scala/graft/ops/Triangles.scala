@@ -79,7 +79,6 @@ object Triangles {
     // executor frame of the round-16 profile. Same result by the
     // kernel's precondition contract (pinned in SortedIntersectSpec).
     // The kernel is long-only: other id types take array_intersect.
-    graft.functions.GraftFunctions.ensureRegistered(canonEdges.sparkSession)
     val dstIsLong = oriented.schema("dst").dataType ==
       org.apache.spark.sql.types.LongType
     val inter =

@@ -99,7 +99,6 @@ object ClusterQueries {
         })
 
   private def pqTopK(s: SparkSession, d: String): DataFrame = {
-    GraftFunctions.ensureRegistered(s)
     val base = embeddings(s, d).select(col("vec_id"), col("embedding"))
       .withColumn("qv", Clustering.quantizeMilli(col("embedding")))
     val codebooks = trainedCodebooks(d, base)
@@ -191,7 +190,6 @@ object ClusterQueries {
     val tbl = "ann_ivfpq_codes_" +
       Sinks.contentKey(d, "embeddings.parquet", "ivfpq8x16i2|v1")
     Sinks.buildOnce(s, tbl) {
-      GraftFunctions.ensureRegistered(s)
       graft.ops.Compaction.dropManagedTable(s, tbl)
       val base = embeddings(s, d).select(col("vec_id"), col("embedding"))
         .withColumn("qv", Clustering.quantizeMilli(col("embedding")))
@@ -223,7 +221,6 @@ object ClusterQueries {
     * stored codebook, so build ∪ append ≡ rebuild — the
     * q_ann_ivf_persisted contract). Corpus-refresh cost, untimed. */
   private def semAnnIvfTable(s: SparkSession, d: String): String = {
-    GraftFunctions.ensureRegistered(s)
     val k = semDedupK(2L * embeddings(s, d).count())
     val tbl = "semdedup_ivf_" +
       Sinks.contentKey(d, "embeddings.parquet", s"semivf$k|v1")
@@ -254,7 +251,6 @@ object ClusterQueries {
     * exact cosine re-ranks 10. Nothing corpus-sized shuffles at probe
     * time: the index was laid out at build. */
   private def ivfPqTopK(s: SparkSession, d: String): DataFrame = {
-    GraftFunctions.ensureRegistered(s)
     val tbl = ivfPqCodesTable(s, d)
     val base = embeddings(s, d).select(col("vec_id"), col("embedding"))
       .withColumn("qv", Clustering.quantizeMilli(col("embedding")))
@@ -400,7 +396,6 @@ object ClusterQueries {
     // + pairing end-to-end.
     Q("q_semdedup",
       (s, d) => {
-        GraftFunctions.ensureRegistered(s)
         val corp = semCorpus(s, d)
         // n WITHOUT re-evaluating the union+perturbation pipeline: the
         // corpus is by construction exactly 2x the base embeddings
@@ -465,7 +460,6 @@ object ClusterQueries {
     // (shared semDedupK), the agreement join is one id-keyed merge.
     Q("q_semdedup_ann",
       (s, d) => {
-        GraftFunctions.ensureRegistered(s)
         val corp = semCorpus(s, d)
         val k = semDedupK(2L * embeddings(s, d).count())
         // exact path: k-means on quantized vectors (q_semdedup's body)
@@ -581,7 +575,6 @@ object ClusterQueries {
     // recall number itself is hash-pinned, not asserted.
     Q("q_ann_pq_recall",
       (s, d) => {
-        GraftFunctions.ensureRegistered(s)
         val base = embeddings(s, d).select(col("vec_id"), col("embedding"))
         val q = base.filter(col("vec_id") >= 20 && col("vec_id") < 25)
           .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
@@ -677,7 +670,6 @@ object ClusterQueries {
     // measured together, the number an index rollout is judged by.
     Q("q_ann_ivfpq_recall",
       (s, d) => {
-        GraftFunctions.ensureRegistered(s)
         val base = embeddings(s, d).select(col("vec_id"), col("embedding"))
         val q = base.filter(col("vec_id") >= 20 && col("vec_id") < 25)
           .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))

@@ -92,7 +92,6 @@ object CorpusQueries {
         .select(col("vec_id").as("h_id"), col("embedding").as("hv"))
       graft.ops.AnnIndex.buildSignIndex(emb, "vec_id", "embedding",
         hyper, rowsPerBand = 4, table = annT, overwrite = true)
-      graft.functions.GraftFunctions.ensureRegistered(s)
       graft.ops.Multimodal.bandedPhash(
           docs.select(col("doc_id").cast("long").as("doc_id"),
             graft.functions.GraftFunctions.rollingHash(

@@ -4,6 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.Tables.documents
 import graft.ops.TextOps
+import graft.functions.GraftFunctions.bloomAgg
 
 /** Stored artifacts of the decontamination EVAL SET — in production
   * the eval suite is a fixed corpus whose derived structures (distinct
@@ -40,10 +41,8 @@ object EvalArtifacts {
   def bloomSketch(s: SparkSession, d: String): Array[Byte] = {
     val key = Sinks.contentKey(d, "documents.parquet", "eval8|v1")
     sketchMemo.computeIfAbsent(key, _ => {
-      graft.functions.GraftFunctions.ensureRegistered(s)
       s.table(evalShingleTable(s, d))
-        .agg(call_function("bloom_agg", xxhash64(col("s")),
-          lit(1 << 20), lit(7)).as("b"))
+        .agg(bloomAgg(xxhash64(col("s")), 1 << 20, 7).as("b"))
         .head().getAs[Array[Byte]](0)
     })
   }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.Tables._
 import graft.ops.{IncrementalAgg, Reconcile, TextOps}
+import graft.functions.GraftFunctions.bloomMightContain
 
 /** 100 TB operational queries: snapshot reconciliation by bucketed
   * checksums, incremental aggregate-MV maintenance, and Bloom-staged
@@ -160,7 +161,6 @@ object ScaleQueries {
     // Joins.bloomPrunedJoin. Oracle = the exact formulation.
     Q("q_decontaminate_bloom",
       (s, d) => {
-        graft.functions.GraftFunctions.ensureRegistered(s)
         val docs = documents(s, d)
         val eval_ = docs.filter(col("doc_id") % 50 === 0)
         val planted = eval_.select(
@@ -175,8 +175,7 @@ object ScaleQueries {
         corpus
           .select(col("doc_id"),
             explode(TextOps.wordShingles(col("text"), 8)).as("s"))
-          .filter(call_function("bloom_might_contain", lit(sketch),
-            xxhash64(col("s"))))
+          .filter(bloomMightContain(lit(sketch), xxhash64(col("s"))))
           .join(broadcast(evalShingles), Seq("s"), "left_semi")
           .select("doc_id").distinct()
           .orderBy("doc_id")

@@ -118,7 +118,6 @@ object SimQueries {
     * codebook + lists + append are three writes, so a partial sequence
     * must re-run. */
   private def ivfIndexTable(s: SparkSession, d: String): String = {
-    GraftFunctions.ensureRegistered(s)
     val emb = embeddings(s, d).select("vec_id", "embedding")
     val tbl = "ann_ivf_idx_" +
       Sinks.contentKey(d, "embeddings.parquet", "ivf8|v2")
@@ -323,7 +322,6 @@ object SimQueries {
     val tbl = "simhash_det_" +
       Sinks.contentKey(d, "documents.parquet", "h16|v1")
     Sinks.buildOnce(s, tbl) {
-      GraftFunctions.ensureRegistered(s)
       val nPart = s.sessionState.conf.numShufflePartitions
       // first barrier spreads per-row hash work across cores (small
       // parquet = one input split); second materializes the signature
@@ -405,7 +403,6 @@ object SimQueries {
     // oracle replays the identical chain.
     Q("q_unicode_dedup",
       (s, d) => {
-        GraftFunctions.ensureRegistered(s)
         val base = documents(s, d)
           .select(col("doc_id").as("id"),
             substring(col("text"), 1, 40).as("t"))
@@ -684,7 +681,6 @@ object SimQueries {
     // fingerprints cannot. One shuffle on fp.
     Q("q_cdc_chunk_dedup",
       (s, d) => {
-        GraftFunctions.ensureRegistered(s)
         // native kernels (functions.CharCodes/CdcBounds): fused loops,
         // bit-identical bounds — see NativeHashSpec/TextKernels.
         // charCodes → cdcBounds → posexplode is a straight projection
@@ -1239,7 +1235,6 @@ object SimQueries {
     // ---- brute-force cosine top-k (ANN baseline) ----------------------
     Q("q_ann_cosine_topk",
       (s, d) => {
-        GraftFunctions.ensureRegistered(s)
         val emb = embeddings(s, d).select("vec_id", "embedding")
         val q = emb.filter(col("vec_id") < 5)
           .select(col("vec_id").as("q_id"), col("embedding").as("qv"))
@@ -1278,7 +1273,6 @@ object SimQueries {
     // algorithm bit-for-bit.
     Q("q_embed_neardup",
       (s, d) => {
-        GraftFunctions.ensureRegistered(s)
         val emb = embeddings(s, d).select("vec_id", "embedding")
         // 0.03125 = 2^-5: binary-exact, so the float round-trip is
         // engine-identical; small enough to keep cos ≈ 1
@@ -1346,7 +1340,6 @@ object SimQueries {
     // steps on top.
     Q("q_knn_classify",
       (s, d) => {
-        GraftFunctions.ensureRegistered(s)
         val emb = embeddings(s, d).select("vec_id", "embedding", "label")
         val labeled = emb.filter(col("vec_id") >= 20)
         val q = emb.filter(col("vec_id") < 20)
@@ -1400,7 +1393,6 @@ object SimQueries {
     // materialized or shuffled.
     Q("q_hard_negatives",
       (s, d) => {
-        GraftFunctions.ensureRegistered(s)
         val emb = embeddings(s, d).select("vec_id", "embedding", "label")
         val corpus = emb.filter(col("vec_id") >= 20)
         val anchors = emb.filter(col("vec_id") < 20)
@@ -1456,7 +1448,6 @@ object SimQueries {
     // one partial-aggregable max — a single pass at any corpus size.
     Q("q_semantic_decontaminate",
       (s, d) => {
-        GraftFunctions.ensureRegistered(s)
         val emb = embeddings(s, d).select("vec_id", "embedding")
         val eval = emb.filter(col("vec_id") < 20)
           .select(col("vec_id").as("e_id"), col("embedding").as("ev"))
@@ -1501,7 +1492,6 @@ object SimQueries {
     // q_ann_ivf_recall — one definition, three gates: ivfOracleCtes.)
     Q("q_ann_ivf_topk",
       (s, d) => {
-        GraftFunctions.ensureRegistered(s)
         val emb = embeddings(s, d).select("vec_id", "embedding")
         val cents = emb.filter(col("vec_id") < 8)
           .select(col("vec_id").as("c_id"), col("embedding").as("cv"))
@@ -1549,7 +1539,6 @@ object SimQueries {
     // cluster partitions. Shares q_ann_ivf_topk's oracle verbatim.
     Q("q_ann_ivf_persisted",
       (s, d) => {
-        GraftFunctions.ensureRegistered(s)
         val emb = embeddings(s, d).select("vec_id", "embedding")
         val tbl = ivfIndexTable(s, d)
         val q = emb.filter(col("vec_id") >= 8 && col("vec_id") < 13)
@@ -1574,7 +1563,6 @@ object SimQueries {
     // recall number is hash-pinned, not asserted.
     Q("q_ann_ivf_recall",
       (s, d) => {
-        GraftFunctions.ensureRegistered(s)
         val emb = embeddings(s, d).select("vec_id", "embedding")
         val tbl = ivfIndexTable(s, d)
         val q = emb.filter(col("vec_id") >= 8 && col("vec_id") < 13)
@@ -1629,7 +1617,6 @@ object SimQueries {
     // algorithm bit-for-bit (same IEEE double dot order).
     Q("q_ann_lsh_topk",
       (s, d) => {
-        GraftFunctions.ensureRegistered(s)
         val emb = embeddings(s, d).select("vec_id", "embedding")
         // 4 bands x 4 hyperplanes: 16 buckets per band keeps real
         // occupancy at corpus scale (16-bit bands collapse to
@@ -1694,7 +1681,6 @@ object SimQueries {
     // the stored path must be bit-identical to the in-memory one.
     Q("q_ann_lsh_persisted",
       (s, d) => {
-        GraftFunctions.ensureRegistered(s)
         val emb = embeddings(s, d).select("vec_id", "embedding")
         val hyper = emb.filter(col("vec_id") < 16)
           .select(col("vec_id").as("h_id"), col("embedding").as("hv"))
@@ -1743,7 +1729,6 @@ object SimQueries {
     // otherwise identical.
     Q("q_ann_takedown",
       (s, d) => {
-        GraftFunctions.ensureRegistered(s)
         val emb = embeddings(s, d).select("vec_id", "embedding")
         val hyper = emb.filter(col("vec_id") < 16)
           .select(col("vec_id").as("h_id"), col("embedding").as("hv"))
@@ -1792,7 +1777,6 @@ object SimQueries {
     // candidate set and re-ranking are hash-checked bit-for-bit.
     Q("q_ann_lsh_multiprobe",
       (s, d) => {
-        GraftFunctions.ensureRegistered(s)
         val emb = embeddings(s, d).select("vec_id", "embedding")
         val hyper = emb.filter(col("vec_id") < 16)
           .select(col("vec_id").as("h_id"), col("embedding").as("hv"))

@@ -317,7 +317,6 @@ object TextQueries {
     // vocabulary literal, so every match-length decision is pinned.
     Q("q_text_subword_tokens",
       (s, d) => {
-        graft.functions.GraftFunctions.ensureRegistered(s)
         val stats = graft.functions.GraftFunctions.subwordStats(
           substring(col("text"), 1, 400), SubwordVocab)
         documents(s, d)
@@ -576,7 +575,6 @@ object TextQueries {
 
     Q("q_text_fingerprint",
       (s, d) => {
-        graft.functions.GraftFunctions.ensureRegistered(s)
         documents(s, d)
           .select(col("doc_id"),
             md5(col("text")).as("fp_exact"),
@@ -604,7 +602,6 @@ object TextQueries {
     // ---- content-defined chunking (windowed Rabin hash boundaries) ----
     Q("q_text_cdc_chunks",
       (s, d) => {
-        graft.functions.GraftFunctions.ensureRegistered(s)
         val nPart = s.sessionState.conf.numShufflePartitions
         // native kernels (functions.CharCodes/CdcBounds) — single fused
         // loops per row; barriers still materialize each array once so
@@ -1445,7 +1442,6 @@ object TextQueries {
     // kernel's match rule all pinned through one another.
     Q("q_text_bpe_tokenize",
       (s, d) => {
-        graft.functions.GraftFunctions.ensureRegistered(s)
         val syms = s.table(bpeVocabTable(s, d))
           .select(explode(split(trim(col("sym")), " ")).as("t"))
           .distinct().collect().map(_.getString(0)).toSeq.sorted

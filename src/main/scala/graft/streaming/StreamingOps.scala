@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.functions.GraftFunctions.maxByObj
 import org.apache.spark.sql.streaming.{ExpiredTimerInfo, GroupStateTimeout,
   ListState, OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues,
   Trigger}
@@ -205,8 +206,6 @@ object StreamingOps {
     * it; the in-session DataFrame fold is the bounded-verification
     * form of the same dataflow. */
   def streamingLatestSnapshot(events: DataFrame): DataFrame = {
-    val spark = events.sparkSession
-    graft.functions.GraftFunctions.ensureRegistered(spark)
     var snapshot: Option[DataFrame] = None
     val fold = (batch: Dataset[Row], _: Long) => {
       // ts is canonical epoch-micros (Tables.tsToMicros) — "latest"
@@ -220,7 +219,7 @@ object StreamingOps {
           struct(col("ts_us"), col("event_id"), col("value_c")))
         .withColumn("__ord", struct(col("ts_us"), col("event_id")))
         .groupBy(col("user_id"), col("event_type"))
-        .agg(call_function("max_by_obj", col("__packed"), col("__ord"))
+        .agg(maxByObj(col("__packed"), col("__ord"))
           .as("__row"))
         .select(col("user_id"), col("event_type"),
           col("__row.ts_us").as("ts_us"),

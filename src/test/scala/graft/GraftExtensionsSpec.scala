@@ -94,6 +94,17 @@ class GraftExtensionsSpec extends AnyFunSuite {
     assert(e6.getMessage.contains("minhash_sig"))
   }
 
+  test("subword_stats vocab must be foldable (no Column spelling: the " +
+      "builder takes a Seq[String])") {
+    val df = spark.range(1).selectExpr("id", "'x' AS text")
+    intercept[org.apache.spark.sql.AnalysisException] {
+      // non-foldable vocab: built from a column
+      df.select(
+        org.apache.spark.sql.functions.expr("subword_stats(text, array(text))")
+      ).collect()
+    }
+  }
+
   test("dedup window idiom is auto-rewritten to min_by aggregate") {
     import spark.implicits._
     val df = Seq((1L, 2, "a"), (1L, 1, "b"), (2L, 5, "c"))

@@ -46,4 +46,31 @@ class HarnessSpec extends SparkSpec {
       assert(back.asScala.toMap === sql)
     } finally deleteTree(dir)
   }
+
+  test("Bench reports a truncated bands file and an unparseable " +
+      "progress line instead of dropping them") {
+    val dir = Files.createTempDirectory("graft-bench-io")
+    try {
+      val bands = dir.resolve("bands.json")
+      Files.write(bands,
+        """{"bands": {"q_a": {"min": 1.0, "max"""".getBytes("UTF-8"))
+      val (node, bandsError) = Bench.readJson(bands.toString)
+      assert(node.isEmpty)
+      assert(bandsError.map(_.name) === Some(bands.toString))
+      assert(bandsError.exists(_.message.nonEmpty))
+      // an absent file is no comparison, not a failure
+      assert(Bench.readJson(dir.resolve("absent.json").toString) ===
+        (None, None))
+      val progress = dir.resolve("progress.jsonl")
+      Files.write(progress, Seq(
+        """{"gate":"q_a","sec":1.5,"gc_ms":3,"heap_mb":10.0,"load1":0.5}""",
+        """{"gate":"q_b","sec":""",
+        """{"gate":"q_c","sec":2.0,"gc_ms":4,"heap_mb":11.0}""").asJava)
+      val (gates, progressErrors) = Bench.readProgress(progress.toString)
+      assert(gates.toSeq === Seq("q_a" -> ((1.5, 3L, 10.0, 0.5)),
+        "q_c" -> ((2.0, 4L, 11.0, -1.0))))
+      assert(progressErrors.map(_.name) === Seq(s"$progress:2"))
+      assert(progressErrors.head.message.nonEmpty)
+    } finally deleteTree(dir)
+  }
 }

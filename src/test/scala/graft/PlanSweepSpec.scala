@@ -134,6 +134,10 @@ class PlanSweepSpec extends SparkSpec {
     "ops/Classify.scala" -> 1,    // |labels|-row trained centroid model
     "queries/TextQueries.scala" -> 1, // ≤ 26+rounds BPE symbol set
     "queries/JobQueries.scala" -> 1,  // nation dim render: 25 rows at every SF
+    "jobs/Pipeline.scala" -> 1, // Dims.local: the pre-joined reference
+                                // dims from data/ — at most 81
+                                // district-code, 28 region, 28 town
+                                // and 57 agency rows
     "Harness.scala" -> 2          // warm-up scalar (sum over range);
                                   // catalog table LIST for the untimed
                                   // store warm pass (store-count-sized,

@@ -6,7 +6,9 @@ import scala.jdk.CollectionConverters._
 /** Source-level regression gates over src/main/scala/graft (comment
   * lines ignored): every harness main gets its session from
   * [[Harness.session]], so the bench conf cannot drift between copies,
-  * and no code path forks on a `graft.*` JVM system property. */
+  * no code path forks on a `graft.*` JVM system property, and native
+  * kernels are built as Columns, never looked up by name in a
+  * session's function registry. */
 class SourceSweepSpec extends org.scalatest.funsuite.AnyFunSuite {
   private val root = Paths.get("src/main/scala/graft")
 
@@ -34,5 +36,15 @@ class SourceSweepSpec extends org.scalatest.funsuite.AnyFunSuite {
 
   test("no System.getProperty(\"graft.*\") forks remain") {
     assert(filesContaining("System.getProperty(\"graft.") === Set.empty)
+  }
+
+  test("no GraftFunctions.ensureRegistered call remains") {
+    assert(filesContaining("ensureRegistered") === Set.empty)
+  }
+
+  test("no call_function(\"...\") names a native kernel") {
+    val byName = graft.functions.GraftFunctions.natives.map(_._1)
+      .flatMap(n => filesContaining(s"call_function(\"$n\"").map(n -> _))
+    assert(byName === Seq.empty)
   }
 }

@@ -26,18 +26,16 @@ class BloomSpec extends SparkSpec {
   }
 
   test("bloom_agg is partitioning-independent (bitwise-OR merge)") {
-    GraftFunctions.ensureRegistered(spark)
     def sketch(parts: Int): Array[Byte] =
       (1L to 500L).toDF("k").repartition(parts)
-        .agg(call_function("bloom_agg", col("k"), lit(4096), lit(5)))
+        .agg(GraftFunctions.bloomAgg(col("k"), 4096, 5))
         .head().getAs[Array[Byte]](0)
     assert(sketch(1).toSeq == sketch(13).toSeq)
   }
 
   test("null keys are skipped, not inserted as zero") {
-    GraftFunctions.ensureRegistered(spark)
     val bytes = Seq(Some(5L), None, Some(9L)).toDF("k")
-      .agg(call_function("bloom_agg", col("k"), lit(1024), lit(5)))
+      .agg(GraftFunctions.bloomAgg(col("k"), 1024, 5))
       .head().getAs[Array[Byte]](0)
     assert(BloomKernels.mightContain(bytes, 5L))
     assert(BloomKernels.mightContain(bytes, 9L))
@@ -64,16 +62,16 @@ class BloomSpec extends SparkSpec {
   }
 
   test("misuse fails at analysis") {
-    GraftFunctions.ensureRegistered(spark)
     import org.apache.spark.sql.AnalysisException
     val e1 = intercept[AnalysisException] {
-      spark.sql("SELECT bloom_might_contain('nope', CAST(1 AS BIGINT))")
+      spark.range(1)
+        .select(GraftFunctions.bloomMightContain(lit("nope"), lit(1L)))
         .collect()
     }
     assert(e1.getMessage.contains("bloom_might_contain"))
     val e2 = intercept[AnalysisException] {
       (1L to 5L).toDF("k")
-        .agg(call_function("bloom_agg", col("k"), lit(0), lit(5)))
+        .agg(GraftFunctions.bloomAgg(col("k"), 0, 5))
         .collect()
     }
     assert(e2.getMessage.contains("bloom_agg"))

@@ -8,7 +8,6 @@ class CosineMilliSpec extends SparkSpec {
   import spark.implicits._
 
   test("native expression is bit-identical to the HOF formulation") {
-    GraftFunctions.ensureRegistered(spark)
     // pseudo-random float vectors, deterministic
     val rnd = new scala.util.Random(7)
     val rows = (0 until 200).map { i =>
@@ -27,7 +26,6 @@ class CosineMilliSpec extends SparkSpec {
   }
 
   test("identity and orthogonality") {
-    GraftFunctions.ensureRegistered(spark)
     val df = Seq(
       (Seq(1f, 0f, 0f), Seq(1f, 0f, 0f)),
       (Seq(1f, 0f, 0f), Seq(0f, 1f, 0f))
@@ -38,7 +36,6 @@ class CosineMilliSpec extends SparkSpec {
   }
 
   test("null vector yields null") {
-    GraftFunctions.ensureRegistered(spark)
     val df = Seq((Some(Seq(1f, 2f)), Option.empty[Seq[Float]]))
       .toDF("x", "y")
     val r = df.select(GraftFunctions.cosineMilli(col("x"), col("y")))

@@ -10,7 +10,6 @@ class HtmlTextKernelSpec extends SparkSpec {
   import spark.implicits._
 
   private def parity(inputs: Seq[String]): Unit = {
-    GraftFunctions.ensureRegistered(spark)
     val rows = inputs.toDF("s")
       .select(col("s"), GraftFunctions.seleniumText(col("s")).as("k"),
         graft.ops.HtmlListing.textRef(col("s")).as("r"))

@@ -19,7 +19,6 @@ class NativeHashSpec extends SparkSpec {
   ).zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("id", "text")
 
   test("minhash_sig equals the HOF minHashFromHashes, all k seeds") {
-    GraftFunctions.ensureRegistered(spark)
     val hashed = texts.select(col("id"),
       transform(split(col("text"), " "), t => xxhash64(t)).as("h"))
     val rows = hashed.select(col("id"),
@@ -33,7 +32,6 @@ class NativeHashSpec extends SparkSpec {
   }
 
   test("simhash_pack equals the HOF simhash64") {
-    GraftFunctions.ensureRegistered(spark)
     val rows = texts.select(col("id"),
         Similarity.simhash64(col("text")).as("hof"),
         Similarity.simhash64Fast(col("text")).as("native"))
@@ -45,7 +43,6 @@ class NativeHashSpec extends SparkSpec {
   }
 
   test("dot_double equals the HOF dotDouble bit-for-bit") {
-    GraftFunctions.ensureRegistered(spark)
     val vecs = Seq(
       (1L, Array(0.5f, -1.25f, 3.75f, 0.001f),
         Array(2.0f, 0.25f, -0.5f, 10.0f)),
@@ -63,7 +60,6 @@ class NativeHashSpec extends SparkSpec {
   }
 
   test("char_codes equals split+ascii HOF incl. CJK and emoji") {
-    GraftFunctions.ensureRegistered(spark)
     val docs = Seq(
       (1L, "plain ascii text"),
       (2L, "tabs\tand\nnewlines"),
@@ -82,7 +78,6 @@ class NativeHashSpec extends SparkSpec {
   }
 
   test("rolling_hash and cdc_bounds equal their HOF twins") {
-    GraftFunctions.ensureRegistered(spark)
     // include a doc engineered long enough to have several cuts, and a
     // short one below the 8-char window
     val docs = Seq(
@@ -109,20 +104,19 @@ class NativeHashSpec extends SparkSpec {
   }
 
   test("null array elements null-poison every kernel (codegen path)") {
-    GraftFunctions.ensureRegistered(spark)
     // arrays built from a column so nothing constant-folds — this
     // exercises the GENERATED code's isNullAt branch
     val r = spark.range(1).selectExpr(
         "array(id, CAST(NULL AS BIGINT)) AS hs",
         "array(CAST(id AS FLOAT), CAST(NULL AS FLOAT)) AS fa",
         "array(CAST(id AS INT), CAST(NULL AS INT)) AS codes")
-      .selectExpr(
-        "minhash_sig(hs, 4) AS ms",
-        "simhash_pack(hs) AS sp",
-        "dot_double(fa, fa) AS dd",
-        "cosine_milli(fa, fa) AS cm",
-        "rolling_hash(codes) AS rh",
-        "cdc_bounds(codes, 64) AS cb")
+      .select(
+        GraftFunctions.minHashSig(col("hs"), 4).as("ms"),
+        GraftFunctions.simhashPack(col("hs")).as("sp"),
+        GraftFunctions.dotDouble(col("fa"), col("fa")).as("dd"),
+        GraftFunctions.cosineMilli(col("fa"), col("fa")).as("cm"),
+        GraftFunctions.rollingHash(col("codes")).as("rh"),
+        GraftFunctions.cdcBounds(col("codes"), 64).as("cb"))
       .collect().head
     (0 until 6).foreach { i =>
       assert(r.isNullAt(i), s"column $i should null-poison")

@@ -10,7 +10,6 @@ import org.apache.spark.sql.functions._
 class SortedIntersectSpec extends SparkSpec {
 
   test("matches array_intersect on sorted distinct long arrays (fuzz)") {
-    GraftFunctions.ensureRegistered(spark)
     val rnd = new scala.util.Random(42)
     val rows = (1 to 300).map { _ =>
       def arr() = rnd.shuffle((0L to 60L).toList)

@@ -10,7 +10,6 @@ class SubwordStatsSpec extends SparkSpec {
     "er", "an", "at", " ") ++ ('a' to 'z').map(_.toString)
 
   private def statsOf(texts: Seq[(Long, String)]): Map[Long, Seq[Int]] = {
-    GraftFunctions.ensureRegistered(spark)
     texts.toDF("id", "text")
       .select(col("id"),
         GraftFunctions.subwordStats(col("text"), vocab).as("sw"))
@@ -84,19 +83,17 @@ class SubwordStatsSpec extends SparkSpec {
     }
   }
 
+  // the non-foldable-vocab case has no Column spelling (the builder
+  // takes a Seq[String]); GraftExtensionsSpec covers it through SQL
   test("vocab must be a foldable non-empty string array") {
-    GraftFunctions.ensureRegistered(spark)
     val df = Seq((1L, "x")).toDF("id", "text")
     intercept[org.apache.spark.sql.AnalysisException] {
-      df.select(expr("subword_stats(text, array())")).collect()
-    }
-    intercept[org.apache.spark.sql.AnalysisException] {
-      // non-foldable vocab: built from a column
-      df.select(expr("subword_stats(text, array(text))")).collect()
+      df.select(GraftFunctions.subwordStats(col("text"), Nil)).collect()
     }
     intercept[org.apache.spark.sql.AnalysisException] {
       // empty-string entry must fail ANALYSIS, not per-row mid-job
-      df.select(expr("subword_stats(text, array('a', ''))")).collect()
+      df.select(GraftFunctions.subwordStats(col("text"), Seq("a", "")))
+        .collect()
     }
   }
 }

@@ -34,7 +34,6 @@ class UnicodeNfcSpec extends SparkSpec {
 
   test("codegen path through a projection matches interpreted eval, " +
       "and canonicalUnicode collapses NFC/NFD/case variants") {
-    GraftFunctions.ensureRegistered(spark)
     import spark.implicits._
     val df = Seq(composed, decomposed, "CAFÉ", "plain").toDF("t")
     val out = df.select(GraftFunctions.unicodeNfc(col("t")).as("n"))

@@ -23,7 +23,6 @@ class AnnIndexSpec extends SparkSpec {
   // lazy fixtures so every test can run in isolation (no ordering
   // dependency between tests in this suite)
   private lazy val incrIndex: String = {
-    graft.functions.GraftFunctions.ensureRegistered(spark)
     // incremental: base without the holdout, then the holdout appended
     AnnIndex.buildSignIndex(emb.filter(pmod(col("vec_id"), lit(5)) =!= 2),
       "vec_id", "embedding", hyper, 4, "t_ann_incr", overwrite = true)
@@ -32,7 +31,6 @@ class AnnIndexSpec extends SparkSpec {
     "t_ann_incr"
   }
   private lazy val fullIndex: String = {
-    graft.functions.GraftFunctions.ensureRegistered(spark)
     // rebuild: the full corpus banded in one shot
     AnnIndex.buildSignIndex(emb, "vec_id", "embedding", hyper, 4,
       "t_ann_full", overwrite = true)
@@ -60,7 +58,6 @@ class AnnIndexSpec extends SparkSpec {
 
   test("multiprobe widens the candidate set monotonically: per-query " +
       "best cosine never drops") {
-    graft.functions.GraftFunctions.ensureRegistered(spark)
     def best(multiprobe: Int): Map[Long, Long] =
       AnnIndex.probeTopK(spark, fullIndex, queries, "vec_id",
           "embedding", hyper, 4, 10, multiprobe)
@@ -78,7 +75,6 @@ class AnnIndexSpec extends SparkSpec {
 
   test("IVF: incremental append under the stored codebook equals " +
       "rebuild; probe prunes cluster partitions") {
-    graft.functions.GraftFunctions.ensureRegistered(spark)
     val cents = emb.filter(col("vec_id") < 8)
       .select(col("vec_id").as("c_id"), col("embedding").as("cv"))
     AnnIndex.buildIvf(emb.filter(pmod(col("vec_id"), lit(5)) =!= 2),
@@ -101,7 +97,6 @@ class AnnIndexSpec extends SparkSpec {
 
   test("IVF assignment is one codegen'd projection: no Window, no " +
       "join expansion, only the write-clustering exchange") {
-    graft.functions.GraftFunctions.ensureRegistered(spark)
     val cents = emb.filter(col("vec_id") < 8)
       .select(col("vec_id").as("c_id"), col("embedding").as("cv"))
     val asg = AnnIndex.assignCluster(emb, "vec_id", "embedding", cents)

@@ -15,7 +15,6 @@ class SimilaritySpec extends SparkSpec {
 
   test("jaccardMilliFast kernel ≡ built-in form, duplicates and " +
       "empties included") {
-    graft.functions.GraftFunctions.ensureRegistered(spark)
     val rnd = new scala.util.Random(7)
     val vocab = ('a' to 'j').map(_.toString)
     val cases = Seq.fill(200)(
@@ -76,7 +75,6 @@ class SimilaritySpec extends SparkSpec {
 
   test("containmentMilli kernel ≡ built-in form, duplicates and " +
       "empties included") {
-    graft.functions.GraftFunctions.ensureRegistered(spark)
     val rnd = new scala.util.Random(11)
     val vocab = ('a' to 'j').map(_.toString)
     val cases = Seq.fill(200)(
