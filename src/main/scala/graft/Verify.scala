@@ -1,7 +1,15 @@
 package graft
+
 import java.nio.file.Paths
+import scala.collection.immutable.ListMap
+import scala.jdk.CollectionConverters._
+import com.fasterxml.jackson.databind.ObjectMapper
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.functions.{count, lit}
+
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json for the DuckDB oracle compare and
+  * verify_manifest.json (per-gate rows, seconds, error). */
 object Verify {
   def main(args: Array[String]): Unit = {
     // optional 3rd arg: comma-separated query names (fast single-query
@@ -11,43 +19,68 @@ object Verify {
       case Array(s, o, q) => (s, o, Some(q.split(",").toSet))
     }
     val spark = Harness.session()
-    new java.io.File(outDir).mkdirs()
-    // same inter-gate hygiene as Bench (Harness.freeGateBlocks)
-    val baselineRdds = Harness.gateBaseline(spark)
     // CONCURRENT dump (r14 verdict item 1/6: the driver's correctness
     // record was empty because the round's gate window ran out of
     // wall; each gate is an independent small Spark job that underuses
     // 32 cores, so a pool of 4 cuts the sweep toward its critical path
     // — same rationale as Bench's prepare pool, and same-store builds
-    // stay serialized by StoreLedger's per-key locks). Gate-local
-    // checkpoint blocks are freed at WAVE boundaries on this thread,
-    // never per-gate from pool threads: a getPersistentRDDs id-delta
-    // from one thread would unpersist a CONCURRENT gate's live
-    // checkpoints (the round-13 CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND
-    // incident, documented in ops/Checkpoints.scala). Sequential
+    // stay serialized by StoreLedger's per-key locks). Sequential
     // escape hatch: SPARK_GRAFT_VERIFY_POOL=1.
     val poolN = math.max(1,
       sys.env.get("SPARK_GRAFT_VERIFY_POOL").flatMap(_.toIntOption)
         .getOrElse(4))
     val gates = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => only.forall(_.contains(name)) }
+    dump(spark, sfDir, outDir, gates, poolN)
+    writeOracleSql(outDir, SparkEntry.oracleSql)
+    spark.stop()
+  }
+
+  /** Runs `gates` on a pool of `poolN` threads, writes each result to
+    * `<outDir>/<gate>` as one parquet file and every gate's record to
+    * `<outDir>/verify_manifest.json`: gate -> `rows` (null when the
+    * gate failed), `seconds`, `error` (null when it did not). The row
+    * count is an observation on the write itself, not a second job.
+    * Gate-local checkpoint blocks are freed at WAVE boundaries on this
+    * thread, never per-gate from pool threads: a getPersistentRDDs
+    * id-delta from one thread would unpersist a CONCURRENT gate's live
+    * checkpoints (the round-13 CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND
+    * incident, documented in ops/Checkpoints.scala). */
+  private[graft] def dump(spark: SparkSession, sfDir: String,
+      outDir: String, gates: Seq[(String, (SparkSession, String) => DataFrame)],
+      poolN: Int): Unit = {
+    new java.io.File(outDir).mkdirs()
+    // same inter-gate hygiene as Bench (Harness.freeGateBlocks)
+    val baselineRdds = Harness.gateBaseline(spark)
+    val manifest = new java.util.concurrent.ConcurrentSkipListMap[String,
+      java.util.Map[String, Any]]()
     gates.grouped(4 * poolN).foreach { wave =>
       val pool = java.util.concurrent.Executors.newFixedThreadPool(poolN)
       wave.foreach { case (name, fn) =>
         pool.execute { () =>
-          try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-            .parquet(s"$outDir/$name")
-          catch { case e: Throwable =>
-            System.err.println(s"[verify] $name failed: ${e.getMessage}")
-          }
+          val t0 = System.nanoTime()
+          val (rows, error) =
+            try {
+              val obs = Observation()
+              fn(spark, sfDir).observe(obs, count(lit(1)).as("rows"))
+                .coalesce(1).write.mode("overwrite")
+                .parquet(s"$outDir/$name")
+              (obs.get("rows"), null)
+            } catch { case e: Throwable =>
+              System.err.println(s"[verify] $name failed: ${e.getMessage}")
+              (null, Option(e.getMessage).getOrElse(e.getClass.getName))
+            }
+          val sec = math.round((System.nanoTime() - t0) / 1e6) / 1e3
+          manifest.put(name, ListMap("rows" -> rows, "seconds" -> sec,
+            "error" -> error).asJava)
         }
       }
       pool.shutdown()
       pool.awaitTermination(2, java.util.concurrent.TimeUnit.HOURS)
       Harness.freeGateBlocks(spark, baselineRdds, blocking = false)
     }
-    writeOracleSql(outDir, SparkEntry.oracleSql)
-    spark.stop()
+    new ObjectMapper().writerWithDefaultPrettyPrinter().writeValue(
+      Paths.get(outDir, "verify_manifest.json").toFile, manifest)
   }
 
   /** `<outDir>/oracle_sql.json`: gate name -> DuckDB SQL, one JSON
@@ -56,8 +89,7 @@ object Verify {
     * zeroing the round's correctness record. */
   private[graft] def writeOracleSql(outDir: String,
                                     sql: Map[String, String]): Unit = {
-    import scala.jdk.CollectionConverters._
-    new com.fasterxml.jackson.databind.ObjectMapper().writeValue(
+    new ObjectMapper().writeValue(
       Paths.get(outDir, "oracle_sql.json").toFile, sql.asJava)
   }
 }

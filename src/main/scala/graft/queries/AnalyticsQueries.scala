@@ -511,8 +511,7 @@ object AnalyticsQueries {
         val loc = s.sessionState.catalog.getTableMetadata(
           org.apache.spark.sql.catalyst.TableIdentifier(dt))
           .location.toString
-        val s2 = s.newSession()
-        s2.conf.set("spark.sql.shuffle.partitions", "4")
+        val s2 = graft.streaming.StreamingOps.session(s)
         val duelStream = s2.readStream
           .schema("ok LONG, i LONG, j LONG, awin BOOLEAN")
           .parquet(loc)

@@ -723,11 +723,7 @@ object ClusterQueries {
           Clustering.quantizeMilli(col("embedding")).as("qv"))
         val model = graft.ops.Classify.centroidModel(
           emb.filter(pmod(col("vec_id"), lit(5)) =!= 0), "label", "qv")
-        // fresh session at stream-sized shuffle width (the
-        // StreamQueries convention: micro-batches are KB-sized, 32
-        // shuffle partitions would be empty-task churn)
-        val s2 = s.newSession()
-        s2.conf.set("spark.sql.shuffle.partitions", "4")
+        val s2 = graft.streaming.StreamingOps.session(s)
         // file-stream sources monitor a DIRECTORY (the eventsStream
         // convention): glob the embeddings table out of the sf dir
         val stream = s2.readStream

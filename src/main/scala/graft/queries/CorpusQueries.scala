@@ -783,8 +783,7 @@ object CorpusQueries {
     // paths carry. Output is the full (p, fp, n) index, ordered.
     Q("q_stream_conv_prefix",
       (s, d) => {
-        val s2 = s.newSession()
-        s2.conf.set("spark.sql.shuffle.partitions", "4")
+        val s2 = graft.streaming.StreamingOps.session(s)
         // file-vs-directory fixture split: same handling as
         // StreamingOps.eventsStream (single-file fixtures at small
         // SFs, real parquet DIRECTORIES from the tiled sf>=1 layout)

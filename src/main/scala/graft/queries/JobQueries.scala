@@ -259,8 +259,7 @@ object JobQueries {
     Q("q_stream_scrape_extract",
       (s, d) => {
         val dir = propnexPagesDir(s, d)
-        val s2 = s.newSession()
-        s2.conf.set("spark.sql.shuffle.partitions", "4")
+        val s2 = graft.streaming.StreamingOps.session(s)
         val stream = s2.readStream
           .schema("url STRING, html STRING").parquet(dir)
         graft.streaming.StreamingOps.runToTable(

@@ -793,8 +793,7 @@ object MultimodalQueries {
         val loc = s.sessionState.catalog.getTableMetadata(
           org.apache.spark.sql.catalyst.TableIdentifier(tbl))
           .location.toString
-        val s2 = s.newSession()
-        s2.conf.set("spark.sql.shuffle.partitions", "4")
+        val s2 = graft.streaming.StreamingOps.session(s)
         val schema = org.apache.spark.sql.types.StructType(Seq(
           org.apache.spark.sql.types.StructField("doc_id",
             org.apache.spark.sql.types.LongType),

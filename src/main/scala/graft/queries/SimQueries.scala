@@ -807,11 +807,9 @@ object SimQueries {
     Q("q_stream_neardup",
       (s, d) => {
         val (bT, shT) = corpusLshTables(s, d)
-        // fresh session at stream-sized shuffle width (StreamQueries
-        // convention); the store tables resolve by name in the
-        // micro-batch's session — the catalog is shared state
-        val s2 = s.newSession()
-        s2.conf.set("spark.sql.shuffle.partitions", "4")
+        // the store tables resolve by name in the micro-batch's
+        // session — the catalog is shared state
+        val s2 = graft.streaming.StreamingOps.session(s)
         // directory-layout guard (the events-stream sf1 lesson): a
         // glob over the sf dir matches NOTHING when documents.parquet
         // is a real parquet DIRECTORY — monitor the table path itself

@@ -9,17 +9,6 @@ import graft.streaming.StreamingOps
   * answer, which is what the DuckDB oracle verifies. */
 object StreamQueries {
 
-  /** Fresh session with fewer shuffle/state partitions: each stateful
-    * operator keeps one state store per shuffle partition, and at this
-    * volume even 8 stores are mostly setup overhead (an unbounded
-    * deployment sizes this to cluster cores × state volume). Session-
-    * scoped so batch queries keep the global setting. */
-  private def streamSession(s: org.apache.spark.sql.SparkSession) = {
-    val s2 = s.newSession()
-    s2.conf.set("spark.sql.shuffle.partitions", "4")
-    s2
-  }
-
   def all: Seq[Q] = Seq(
 
     // Complete mode for the bounded verification run: Append would
@@ -28,7 +17,8 @@ object StreamQueries {
     // the watermark passes them.
     Q("q_stream_windowed_counts",
       (s, d) => StreamingOps.runToTable(
-          StreamingOps.windowedCounts(StreamingOps.eventsStream(streamSession(s), d)),
+          StreamingOps.windowedCounts(
+            StreamingOps.eventsStream(StreamingOps.session(s), d)),
           OutputMode.Complete())
         .orderBy("window_start_us", "event_type"),
       Some("""
@@ -41,7 +31,8 @@ object StreamQueries {
 
     Q("q_stream_dedup_counts",
       (s, d) => StreamingOps.runToTable(
-          StreamingOps.dedupUserCounts(StreamingOps.eventsStream(streamSession(s), d)),
+          StreamingOps.dedupUserCounts(
+            StreamingOps.eventsStream(StreamingOps.session(s), d)),
           OutputMode.Complete())
         .orderBy("event_type"),
       Some("""
@@ -52,7 +43,7 @@ object StreamQueries {
     Q("q_stream_stream_join",
       (s, d) => StreamingOps.runToTable(
           StreamingOps.viewClickJoin(
-            StreamingOps.eventsStream(streamSession(s), d),
+            StreamingOps.eventsStream(StreamingOps.session(s), d),
             withinUs = 1800L * 1000000L),
           OutputMode.Append())
         .orderBy("user_id", "view_id", "click_id"),
@@ -79,7 +70,7 @@ object StreamQueries {
     Q("q_stream_stream_outer",
       (s, d) => StreamingOps.runToTable(
           StreamingOps.viewClickLeftOuter(
-            StreamingOps.eventsStream(streamSession(s), d),
+            StreamingOps.eventsStream(StreamingOps.session(s), d),
             withinUs = 1800L * 1000000L),
           OutputMode.Append())
         .orderBy("user_id", "view_id", "click_id"),
@@ -143,7 +134,7 @@ object StreamQueries {
           "graft_stream_sink_" + key
         ).getAbsolutePath
         StreamingOps.streamToPartitionedParquet(
-          StreamingOps.eventsStream(streamSession(s), d), out)
+          StreamingOps.eventsStream(StreamingOps.session(s), d), out)
         s.read.parquet(out)
           .groupBy("day")
           .agg(count(lit(1)).as("cnt"),
@@ -166,7 +157,7 @@ object StreamQueries {
     // plans a BroadcastHashJoin, the same shape as the batch enrich.
     Q("q_stream_static_join",
       (s, d) => {
-        val s2 = streamSession(s)
+        val s2 = StreamingOps.session(s)
         val dim = graft.Tables.events(s2, d)
           .select(col("user_id")).distinct()
           .withColumn("cohort", pmod(col("user_id"), lit(5L)))
@@ -193,7 +184,7 @@ object StreamQueries {
     // pattern. The oracle is the batch "latest row per key" answer.
     Q("q_stream_cdc_snapshot",
       (s, d) => StreamingOps.streamingLatestSnapshot(
-          StreamingOps.eventsStream(streamSession(s), d))
+          StreamingOps.eventsStream(StreamingOps.session(s), d))
         .orderBy("user_id", "event_type"),
       Some("""
         |WITH r AS (SELECT user_id, event_type, epoch_us(ts) AS ts_us,
@@ -208,7 +199,8 @@ object StreamQueries {
 
     Q("q_stream_user_stats",
       (s, d) => StreamingOps.runToTable(
-          StreamingOps.userStats(StreamingOps.eventsStream(streamSession(s), d)).toDF(),
+          StreamingOps.userStats(
+            StreamingOps.eventsStream(StreamingOps.session(s), d)).toDF(),
           OutputMode.Update())
         .orderBy("user_id"),
       Some("""
@@ -223,7 +215,7 @@ object StreamQueries {
     // count/sum are a commutative monoid. Oracle = full recompute.
     Q("q_stream_incr_agg",
       (s, d) => StreamingOps.streamingAggMaintain(
-          StreamingOps.eventsStream(streamSession(s), d))
+          StreamingOps.eventsStream(StreamingOps.session(s), d))
         .orderBy("user_id"),
       Some("""
         |SELECT user_id, CAST(count(*) AS BIGINT) AS cnt,
@@ -245,7 +237,7 @@ object StreamQueries {
       (s, d) => {
         val counts = StreamingOps.runToTable(
           StreamingOps.driftHistogram(
-            StreamingOps.eventsStream(streamSession(s), d)),
+            StreamingOps.eventsStream(StreamingOps.session(s), d)),
           OutputMode.Complete())
           // snapshot the (tiny) histogram out of the memory sink: the
           // finalize self-joins it, and MemoryPlan leaves cannot
@@ -266,7 +258,7 @@ object StreamQueries {
     // store provider (a TWS prerequisite) — session-scoped conf.
     Q("q_stream_session_state",
       (s, d) => {
-        val s2 = streamSession(s)
+        val s2 = StreamingOps.session(s)
         s2.conf.set("spark.sql.streaming.stateStore.providerClass",
           "org.apache.spark.sql.execution.streaming.state." +
             "RocksDBStateStoreProvider")
@@ -315,7 +307,7 @@ object StreamQueries {
     Q("q_stream_quarantine",
       (s, _) => {
         val dir = JobQueries.quarantineFixtureDir()
-        val s2 = streamSession(s)
+        val s2 = StreamingOps.session(s)
         val schema = org.apache.spark.sql.types.StructType(Seq(
           org.apache.spark.sql.types.StructField("id",
             org.apache.spark.sql.types.LongType),

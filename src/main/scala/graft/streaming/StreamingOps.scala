@@ -20,10 +20,35 @@ import java.util.concurrent.atomic.AtomicLong
   * batch answer — which is exactly what the DuckDB oracle checks.
   * At scale the same code runs unbounded: watermarks bound state,
   * `dropDuplicatesWithinWatermark` state is evicted past the
-  * watermark, and the stateful map keeps one struct per key. */
+  * watermark, and the stateful map keeps one struct per key.
+  *
+  * Every streaming gate runs on [[session]]. */
 object StreamingOps {
 
   private val runId = new AtomicLong(0)
+
+  /** The session every streaming query runs on: a `newSession()` of
+    * `spark` (shared catalog and SparkContext, its own SQL confs, so
+    * batch queries keep the global settings) with
+    *  - 4 shuffle partitions: each stateful operator keeps one state
+    *    store per shuffle partition, and at stream-sized volumes even 8
+    *    stores are mostly setup overhead (an unbounded deployment sizes
+    *    this to cluster cores × state volume);
+    *  - [[LocalCheckpointFileManager]] as the checkpoint file manager:
+    *    without libhadoop Spark's default one forks `chmod` and
+    *    `readlink` for each checkpoint file it writes, about 280 forks
+    *    per pass over the streaming benchmark's six gates, mostly on
+    *    the stream execution thread. `CheckpointFileManager.create`
+    *    reads the class from the session's Hadoop conf, so it covers
+    *    the offset, commit, metadata and source logs and the
+    *    state-store files. */
+  def session(spark: SparkSession): SparkSession = {
+    val s = spark.newSession()
+    s.conf.set("spark.sql.shuffle.partitions", "4")
+    s.conf.set("spark.sql.streaming.checkpointFileManagerClass",
+      classOf[LocalCheckpointFileManager].getName)
+    s
+  }
 
   /** Events source as a bounded stream with `ts` NORMALIZED to exact
     * epoch-micros longs — the same contract as [[graft.Tables.events]].

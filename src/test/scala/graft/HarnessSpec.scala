@@ -73,4 +73,26 @@ class HarnessSpec extends SparkSpec {
       assert(progressErrors.head.message.nonEmpty)
     } finally deleteTree(dir)
   }
+
+  test("Verify's manifest records each gate's rows, seconds and the " +
+      "error of a gate over a missing fixture table") {
+    val empty = Files.createTempDirectory("graft-verify-sf")
+    val out = Files.createTempDirectory("graft-verify-out")
+    try {
+      Verify.dump(spark, empty.toString, out.toString, Seq(
+        "q_ok" -> ((s, _) => s.range(3).toDF()),
+        "q_no_orders" -> ((s, d) => Tables.orders(s, d))), poolN = 2)
+      val m = new com.fasterxml.jackson.databind.ObjectMapper()
+        .readTree(out.resolve("verify_manifest.json").toFile)
+      assert(m.fieldNames().asScala.toSeq === Seq("q_no_orders", "q_ok"))
+      assert(m.get("q_ok").get("rows").asLong === 3L)
+      assert(m.get("q_ok").get("error").isNull)
+      assert(m.get("q_ok").get("seconds").asDouble >= 0.0)
+      assert(m.get("q_no_orders").get("rows").isNull)
+      assert(m.get("q_no_orders").get("error").asText
+        .contains("orders.parquet"))
+      assert(Files.isDirectory(out.resolve("q_ok")))
+      assert(!Files.exists(out.resolve("q_no_orders")))
+    } finally { deleteTree(empty); deleteTree(out) }
+  }
 }

@@ -6,9 +6,10 @@ import scala.jdk.CollectionConverters._
 /** Source-level regression gates over src/main/scala/graft (comment
   * lines ignored): every harness main gets its session from
   * [[Harness.session]], so the bench conf cannot drift between copies,
-  * no code path forks on a `graft.*` JVM system property, and native
+  * no code path forks on a `graft.*` JVM system property, native
   * kernels are built as Columns, never looked up by name in a
-  * session's function registry. */
+  * session's function registry, and every stream session comes from
+  * [[graft.streaming.StreamingOps.session]]. */
 class SourceSweepSpec extends org.scalatest.funsuite.AnyFunSuite {
   private val root = Paths.get("src/main/scala/graft")
 
@@ -46,5 +47,13 @@ class SourceSweepSpec extends org.scalatest.funsuite.AnyFunSuite {
     val byName = graft.functions.GraftFunctions.natives.map(_._1)
       .flatMap(n => filesContaining(s"call_function(\"$n\"").map(n -> _))
     assert(byName === Seq.empty)
+  }
+
+  test("the stream-session confs are set only in " +
+      "StreamingOps.session") {
+    assert(filesContaining("\"spark.sql.shuffle.partitions\", \"4\"") ===
+      Set("streaming/StreamingOps.scala"))
+    assert(filesContaining("checkpointFileManagerClass") ===
+      Set("streaming/StreamingOps.scala"))
   }
 }
