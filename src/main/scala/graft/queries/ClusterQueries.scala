@@ -724,11 +724,10 @@ object ClusterQueries {
         val model = graft.ops.Classify.centroidModel(
           emb.filter(pmod(col("vec_id"), lit(5)) =!= 0), "label", "qv")
         val s2 = graft.streaming.StreamingOps.session(s)
-        // file-stream sources monitor a DIRECTORY (the eventsStream
-        // convention): glob the embeddings table out of the sf dir
-        val stream = s2.readStream
-          .schema("vec_id LONG, embedding ARRAY<FLOAT>, label INT")
-          .option("pathGlobFilter", "embeddings.parquet").parquet(d)
+        val stream = graft.streaming.StreamingOps.fixtureStream(
+            s2.readStream
+              .schema("vec_id LONG, embedding ARRAY<FLOAT>, label INT"),
+            d, "embeddings")
           .filter(pmod(col("vec_id"), lit(5)) === 0)
         val best = graft.ops.Classify.centroidAssignCol(model,
           Clustering.quantizeMilli(col("embedding")))

@@ -784,20 +784,9 @@ object CorpusQueries {
     Q("q_stream_conv_prefix",
       (s, d) => {
         val s2 = graft.streaming.StreamingOps.session(s)
-        // file-vs-directory fixture split: same handling as
-        // StreamingOps.eventsStream (single-file fixtures at small
-        // SFs, real parquet DIRECTORIES from the tiled sf>=1 layout)
-        val tablePath =
-          new org.apache.hadoop.fs.Path(s"$d/documents.parquet")
-        val fs = tablePath.getFileSystem(
-          s2.sparkContext.hadoopConfiguration)
-        val rs = s2.readStream.schema("doc_id LONG")
-          .option("maxFilesPerTrigger", 1)
-        val docStream =
-          if (fs.exists(tablePath) &&
-              fs.getFileStatus(tablePath).isDirectory)
-            rs.parquet(tablePath.toString)
-          else rs.option("pathGlobFilter", "documents.parquet").parquet(d)
+        val docStream = graft.streaming.StreamingOps.fixtureStream(
+          s2.readStream.schema("doc_id LONG").option("maxFilesPerTrigger", 1),
+          d, "documents")
         val id = col("doc_id")
         val convStream = docStream.select(id,
           transform(

@@ -810,21 +810,9 @@ object SimQueries {
         // the store tables resolve by name in the micro-batch's
         // session — the catalog is shared state
         val s2 = graft.streaming.StreamingOps.session(s)
-        // directory-layout guard (the events-stream sf1 lesson): a
-        // glob over the sf dir matches NOTHING when documents.parquet
-        // is a real parquet DIRECTORY — monitor the table path itself
-        val docsPath = new org.apache.hadoop.fs.Path(
-          s"$d/documents.parquet")
-        val dfs = docsPath.getFileSystem(
-          s2.sparkContext.hadoopConfiguration)
-        val rs = s2.readStream
-          .schema("doc_id LONG, text STRING, lang STRING, " +
-            "source STRING, n_chars LONG")
-        val stream =
-          if (dfs.exists(docsPath) &&
-              dfs.getFileStatus(docsPath).isDirectory)
-            rs.parquet(docsPath.toString)
-          else rs.option("pathGlobFilter", "documents.parquet").parquet(d)
+        val stream = graft.streaming.StreamingOps.fixtureStream(
+          s2.readStream.schema("doc_id LONG, text STRING, lang STRING, " +
+            "source STRING, n_chars LONG"), d, "documents")
         // in-stream derivation of the mutated-copy batch — the same
         // stateless projection as corpus()'s mut side
         val toks = TextOps.tokens(col("text"))

@@ -3,9 +3,9 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.GraftFunctions.maxByObj
-import org.apache.spark.sql.streaming.{ExpiredTimerInfo, GroupStateTimeout,
-  ListState, OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues,
-  Trigger}
+import org.apache.spark.sql.streaming.{DataStreamReader, DataStreamWriter,
+  ExpiredTimerInfo, GroupStateTimeout, ListState, OutputMode,
+  StatefulProcessor, TTLConfig, TimeMode, TimerValues, Trigger}
 import org.apache.spark.sql.types._
 import java.util.concurrent.atomic.AtomicLong
 
@@ -67,31 +67,63 @@ object StreamingOps {
     // timestamp loads as TimestampType (raw epoch-us internal value),
     // anything unrecognized throws here rather than coercing
     val schema = graft.Tables.eventsReadSchema(inferred).getOrElse(inferred)
-    // File-stream sources monitor a DIRECTORY. The fixture layout
-    // stores events as a single FILE beside the other tables, so the
-    // source monitors the sf dir with a name glob; a production table
-    // is a DIRECTORY of part files (any distributed writer's output),
-    // which the source monitors directly — the glob would match no
-    // leaf file there and the stream would silently produce zero
-    // batches (found by the sf1 full-registry probe, where the tiled
-    // fixtures land as real parquet directories).
-    val tablePath = new org.apache.hadoop.fs.Path(s"$dir/events.parquet")
-    val fs = tablePath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val rs = spark.readStream.schema(schema)
-    val src =
-      if (fs.exists(tablePath) && fs.getFileStatus(tablePath).isDirectory)
-        rs.parquet(tablePath.toString)
-      else rs.option("pathGlobFilter", "events.parquet").parquet(dir)
-    src.withColumn("ts", graft.Tables.tsToMicros(schema("ts").dataType))
+    fixtureStream(spark.readStream.schema(schema), dir, "events")
+      .withColumn("ts", graft.Tables.tsToMicros(schema("ts").dataType))
+  }
+
+  /** Bounded stream over fixture table `table` under `dir`, read
+    * through `reader` (which carries the caller's schema and options).
+    * File-stream sources monitor a DIRECTORY. The fixture layout
+    * stores a table as a single FILE beside the other tables, so the
+    * source monitors `dir` with a name glob; a production table is a
+    * DIRECTORY of part files (any distributed writer's output, and
+    * the tiled sf1/sf10 fixtures), which the source monitors
+    * directly — the glob would match no leaf file there and the
+    * stream would silently produce zero batches. */
+  private[graft] def fixtureStream(reader: DataStreamReader, dir: String,
+                                   table: String): DataFrame = {
+    val tablePath = new org.apache.hadoop.fs.Path(s"$dir/$table.parquet")
+    val fs = tablePath.getFileSystem(
+      SparkSession.active.sparkContext.hadoopConfiguration)
+    if (fs.exists(tablePath) && fs.getFileStatus(tablePath).isDirectory)
+      reader.parquet(tablePath.toString)
+    else reader.option("pathGlobFilter", s"$table.parquet").parquet(dir)
+  }
+
+  /** Start `writer` with the AvailableNow trigger and block until it has
+    * drained every input available at start. */
+  private def runAvailableNow(writer: DataStreamWriter[Row]): Unit =
+    writer.trigger(Trigger.AvailableNow()).start().awaitTermination()
+
+  /** The foreachBatch fold every streaming operator below that keeps
+    * DataFrame state is built on: each micro-batch is folded into the
+    * accumulator by `step(acc, batch)` (acc is None on the first
+    * batch) and the result returned once the stream drains.
+    *  - batchId idempotence guard: at-least-once delivery can replay a
+    *    batch id, and a replay is skipped, so a non-idempotent step
+    *    (a monoid that re-adds) never double-counts;
+    *  - `localCheckpoint` per batch bounds lineage — without it the
+    *    plan deepens by one step per batch and planning cost compounds.
+    * Throws if the stream produced no batch at all. */
+  private[streaming] def foldBatches(stream: DataFrame)(
+      step: (Option[DataFrame], Dataset[Row]) => DataFrame): DataFrame = {
+    var acc: Option[DataFrame] = None
+    val applied = scala.collection.mutable.Set.empty[Long]
+    val fold = (batch: Dataset[Row], batchId: Long) => {
+      if (applied.add(batchId)) acc = Some(step(acc, batch).localCheckpoint())
+      ()
+    }
+    runAvailableNow(stream.writeStream.foreachBatch(fold))
+    acc.getOrElse(
+      throw new IllegalStateException("stream produced no batches"))
   }
 
   /** Run a streaming transform to completion (AvailableNow) into a
     * memory sink and return the materialized result. */
   def runToTable(out: DataFrame, mode: OutputMode): DataFrame = {
     val name = s"graft_stream_${runId.incrementAndGet()}"
-    val q = out.writeStream.format("memory").queryName(name)
-      .outputMode(mode).trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
+    runAvailableNow(
+      out.writeStream.format("memory").queryName(name).outputMode(mode))
     out.sparkSession.table(name)
   }
 
@@ -205,41 +237,35 @@ object StreamingOps {
     val withDay = events
       .withColumn("event_time", timestamp_micros(col("ts")))
       .withColumn("day", to_date(col("event_time")))
-    val q = withDay.writeStream.format("parquet")
+    runAvailableNow(withDay.writeStream.format("parquet")
       .option("path", outDir)
       .option("checkpointLocation", s"$outDir/_checkpoint")
       .partitionBy("day")
-      .outputMode(OutputMode.Append())
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
+      .outputMode(OutputMode.Append()))
     outDir
   }
 
   /** Streaming CDC-to-snapshot materialization — the foreachBatch
-    * upsert pattern: every micro-batch folds into a keyed snapshot
-    * holding the LATEST row per (user_id, event_type), "latest" by
-    * (ts, event_id). The fold is `latest(snapshot ∪ batch)` — a
-    * max_by_obj compaction ([[graft.functions.MinByObj]]) — so it is
-    * ORDER-INDEPENDENT and idempotent: correct under any batching,
+    * upsert pattern ([[foldBatches]]): every micro-batch folds into a
+    * keyed snapshot holding the LATEST row per (user_id, event_type),
+    * "latest" by (ts, event_id). The fold is `latest(snapshot ∪ batch)`
+    * — a max_by_obj compaction ([[graft.functions.MinByObj]]) — so it
+    * is ORDER-INDEPENDENT and idempotent: correct under any batching,
     * replayed batches, or late data, unlike blind per-batch overwrite
-    * (which silently loses to an out-of-order batch). localCheckpoint
-    * per batch bounds lineage growth — without it the plan deepens by
-    * one aggregate per batch and planning cost compounds.
+    * (which silently loses to an out-of-order batch).
     *
     * At scale the snapshot would live in a keyed store (bucketed
     * table) and the fold becomes [[graft.ops.Merge.applyCdc]] against
     * it; the in-session DataFrame fold is the bounded-verification
     * form of the same dataflow. */
-  def streamingLatestSnapshot(events: DataFrame): DataFrame = {
-    var snapshot: Option[DataFrame] = None
-    val fold = (batch: Dataset[Row], _: Long) => {
+  def streamingLatestSnapshot(events: DataFrame): DataFrame =
+    foldBatches(events) { (snapshot, batch) =>
       // ts is canonical epoch-micros (Tables.tsToMicros) — "latest"
       // means the same thing here, in batch, and in the DuckDB oracle
       val b = batch.select(col("user_id"), col("event_type"),
         col("ts").as("ts_us"), col("event_id"),
         floor(col("value") * 100 + 0.5).cast(LongType).as("value_c"))
-      val unioned = snapshot.map(_.unionByName(b)).getOrElse(b)
-      val compacted = unioned
+      snapshot.map(_.unionByName(b)).getOrElse(b)
         .withColumn("__packed",
           struct(col("ts_us"), col("event_id"), col("value_c")))
         .withColumn("__ord", struct(col("ts_us"), col("event_id")))
@@ -250,16 +276,7 @@ object StreamingOps {
           col("__row.ts_us").as("ts_us"),
           col("__row.event_id").as("event_id"),
           col("__row.value_c").as("value_c"))
-        .localCheckpoint()
-      snapshot = Some(compacted)
-      ()
     }
-    val q = events.writeStream.foreachBatch(fold)
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    snapshot.getOrElse(
-      throw new IllegalStateException("stream produced no batches"))
-  }
 
   /** Streaming face of the incremental near-dup path
     * ([[graft.ops.Similarity.nearDupPairsAgainstBuckets]]): arriving
@@ -274,98 +291,60 @@ object StreamingOps {
     * batch by construction, which the shared brute-force oracle pins.
     * Detected pairs are per-doc facts (each incoming id appears in
     * one batch), so accumulation is a plain union — order-independent
-    * across any batching. The batchId guard keeps at-least-once
-    * replays from duplicating pairs; per-batch localCheckpoint bounds
-    * lineage growth. Store tables travel BY NAME and resolve against
-    * the micro-batch's own session (newSession shares the catalog) —
-    * capturing outer-session DataFrames would marry plans from two
-    * sessions.
+    * across any batching; the [[foldBatches]] batchId guard keeps
+    * at-least-once replays from duplicating pairs. Store tables travel
+    * BY NAME and resolve against the micro-batch's own session
+    * (newSession shares the catalog) — capturing outer-session
+    * DataFrames would marry plans from two sessions.
     *
     * At scale the union-accumulate becomes an append sink (the
     * pairs table is the pipeline's rejection log); the in-session
     * fold is the bounded-verification form of that dataflow. */
   def streamingNearDup(docs: DataFrame, bucketsTable: String,
                        shinglesTable: String, k: Int, bands: Int,
-                       thresholdMilli: Int): DataFrame = {
-    var pairs: Option[DataFrame] = None
-    val applied = scala.collection.mutable.Set.empty[Long]
-    val fold = (batch: Dataset[Row], batchId: Long) => {
-      if (applied.add(batchId)) {
-        val ss = batch.sparkSession
-        val found = graft.ops.Similarity.nearDupPairsAgainstBuckets(
-          batch, ss.table(bucketsTable), ss.table(shinglesTable),
-          k, bands, thresholdMilli)
-        pairs = Some(pairs.map(_.unionByName(found)).getOrElse(found)
-          .localCheckpoint())
-      }
-      ()
+                       thresholdMilli: Int): DataFrame =
+    foldBatches(docs) { (pairs, batch) =>
+      val ss = batch.sparkSession
+      val found = graft.ops.Similarity.nearDupPairsAgainstBuckets(
+        batch, ss.table(bucketsTable), ss.table(shinglesTable),
+        k, bands, thresholdMilli)
+      pairs.map(_.unionByName(found)).getOrElse(found)
     }
-    val q = docs.writeStream.foreachBatch(fold)
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    pairs.getOrElse(
-      throw new IllegalStateException("stream produced no batches"))
-  }
 
   /** Streaming preference ingest: duel micro-batches fold into the
     * running ADDITIVE pair matrix ([[graft.ops.BradleyTerry.pairStats]]
-    * + [[graft.ops.BradleyTerry.mergePairs]]) with a batchId
-    * idempotence guard — the online face of the incremental refresh:
+    * + [[graft.ops.BradleyTerry.mergePairs]], via [[foldBatches]]) —
+    * the online face of the incremental refresh:
     * a refit from the folded matrix is bit-identical to a batch fit
     * over the full duel history, because the pair matrix is the
     * order-insensitive sufficient statistic. Per batch the work is
     * delta-sized stats + a pair-key merge; the matrix is
-    * entity-pair-sized, checkpointed per fold. */
-  def streamingPairStats(duels: DataFrame): DataFrame = {
-    var pairs: Option[DataFrame] = None
-    val applied = scala.collection.mutable.Set.empty[Long]
-    val fold = (batch: Dataset[Row], batchId: Long) => {
-      if (applied.add(batchId)) {
-        val ps = graft.ops.BradleyTerry.pairStats(batch)
-        pairs = Some(pairs
-          .map(p => graft.ops.BradleyTerry.mergePairs(p, ps))
-          .getOrElse(ps).localCheckpoint())
-      }
-      ()
+    * entity-pair-sized. */
+  def streamingPairStats(duels: DataFrame): DataFrame =
+    foldBatches(duels) { (pairs, batch) =>
+      val ps = graft.ops.BradleyTerry.pairStats(batch)
+      pairs.map(p => graft.ops.BradleyTerry.mergePairs(p, ps)).getOrElse(ps)
     }
-    val q = duels.writeStream.foreachBatch(fold)
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    pairs.getOrElse(
-      throw new IllegalStateException("stream produced no batches"))
-  }
 
   /** Streaming conversation-prefix ingest: conversation micro-batches
     * fold into the running ADDITIVE prefix-fingerprint index
     * ([[graft.ops.TextOps.prefixIndex]]; union + re-aggregate on
-    * (p, fp)) with a batchId idempotence guard — the online face of
-    * the incremental conversation dedup, same sufficient-statistic
+    * (p, fp), via [[foldBatches]]) — the online face of the
+    * incremental conversation dedup, same sufficient-statistic
     * argument as [[streamingPairStats]]: the folded index is
     * bit-identical to a batch build over all conversations, because
     * counts are order-insensitive long sums. Per batch the work is
     * delta-sized fingerprints + one (p, fp) merge; the index is
-    * prefix-distinct-sized, checkpointed per fold (narrow: two longs
-    * + a 32-char md5 per row). */
+    * prefix-distinct-sized (narrow: two longs + a 32-char md5 per
+    * row). */
   def streamingPrefixIndex(convs: DataFrame, idCol: String,
-                           turnsCol: String): DataFrame = {
-    var idx: Option[DataFrame] = None
-    val applied = scala.collection.mutable.Set.empty[Long]
-    val fold = (batch: Dataset[Row], batchId: Long) => {
-      if (applied.add(batchId)) {
-        val bi = graft.ops.TextOps.prefixIndex(batch, idCol, turnsCol)
-        idx = Some(idx
-          .map(p => p.unionByName(bi).groupBy("p", "fp")
-            .agg(org.apache.spark.sql.functions.sum("n").as("n")))
-          .getOrElse(bi).localCheckpoint())
-      }
-      ()
+                           turnsCol: String): DataFrame =
+    foldBatches(convs) { (idx, batch) =>
+      val bi = graft.ops.TextOps.prefixIndex(batch, idCol, turnsCol)
+      idx.map(p => p.unionByName(bi).groupBy("p", "fp")
+          .agg(org.apache.spark.sql.functions.sum("n").as("n")))
+        .getOrElse(bi)
     }
-    val q = convs.writeStream.foreachBatch(fold)
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    idx.getOrElse(
-      throw new IllegalStateException("stream produced no batches"))
-  }
 
   final case class UserEvent(user_id: Long, value_c: Long)
   final case class UserState(n: Long, maxC: Long)
@@ -484,24 +463,6 @@ object StreamingOps {
         TimeMode.EventTime(), OutputMode.Append())
   }
 
-  /** Streaming incremental aggregate-MV maintenance — the streaming
-    * twin of [[graft.ops.IncrementalAgg]]: each micro-batch is reduced
-    * to its per-key (cnt, sum) partial state and MERGED into the
-    * running state table, so per-batch work is batch-size + state-
-    * cardinality, never history-size. Because count/sum form a
-    * commutative monoid the fold is ORDER-independent; it is NOT
-    * idempotent (a monoid re-adds), so REPLAY tolerance comes from
-    * keying the merge by foreachBatch's batchId — an already-applied
-    * id is skipped, which is the same idempotent-upsert discipline an
-    * at-scale deployment applies when committing (batchId, state) to
-    * its state table transactionally. localCheckpoint per batch
-    * bounds lineage (plan would deepen by one merge per batch
-    * otherwise).
-    *
-    * Returns the READ-TIME view ([[graft.ops.IncrementalAgg
-    * .finalizeView]]): per-user cnt, sum_value_c, exact milli mean.
-    * At scale the state lives in a bucketed table keyed by user_id
-    * and each fold is one co-partitioned merge — no history rescan. */
   /** The STREAMING side of the drift monitor: maintain the per-(day,
     * bin) value histogram as a single streaming aggregation — the
     * monitor's ONLY state, bounded by days×bins (a few hundred rows),
@@ -520,32 +481,32 @@ object StreamingOps {
       .groupBy("day", "bin")
       .agg(count(lit(1)).as("__c"))
 
+  /** Streaming incremental aggregate-MV maintenance — the streaming
+    * twin of [[graft.ops.IncrementalAgg]]: each micro-batch is reduced
+    * to its per-key (cnt, sum) partial state and MERGED into the
+    * running state table, so per-batch work is batch-size + state-
+    * cardinality, never history-size. Because count/sum form a
+    * commutative monoid the fold is ORDER-independent; it is NOT
+    * idempotent (a monoid re-adds), so REPLAY tolerance comes from
+    * [[foldBatches]]' batchId guard — the same idempotent-upsert
+    * discipline an at-scale deployment applies when committing
+    * (batchId, state) to its state table transactionally.
+    *
+    * Returns the READ-TIME view ([[graft.ops.IncrementalAgg
+    * .finalizeView]]): per-user cnt, sum_value_c, exact milli mean.
+    * At scale the state lives in a bucketed table keyed by user_id
+    * and each fold is one co-partitioned merge — no history rescan. */
   def streamingAggMaintain(events: DataFrame): DataFrame = {
     import graft.ops.IncrementalAgg
     val keys = Seq("user_id")
-    var state: Option[DataFrame] = None
-    val applied = scala.collection.mutable.Set.empty[Long]
-    val fold = (batch: Dataset[Row], batchId: Long) => {
-      // at-least-once delivery: a replayed batchId must not re-add
-      if (applied.add(batchId)) {
-        val b = batch.filter(col("value").isNotNull)
-          .select(col("user_id"),
-            floor(col("value") * 100 + 0.5).cast(LongType).as("value_c"))
-        val bs = IncrementalAgg.aggState(b, keys, Seq("value_c"))
-        val merged = state
-          .map(st => IncrementalAgg.mergeStates(Seq(st, bs), keys))
-          .getOrElse(bs)
-          .localCheckpoint()
-        state = Some(merged)
-      }
-      ()
+    val state = foldBatches(events) { (prev, batch) =>
+      val b = batch.filter(col("value").isNotNull)
+        .select(col("user_id"),
+          floor(col("value") * 100 + 0.5).cast(LongType).as("value_c"))
+      val bs = IncrementalAgg.aggState(b, keys, Seq("value_c"))
+      prev.map(st => IncrementalAgg.mergeStates(Seq(st, bs), keys))
+        .getOrElse(bs)
     }
-    val q = events.writeStream.foreachBatch(fold)
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    IncrementalAgg.finalizeView(
-      state.getOrElse(
-        throw new IllegalStateException("stream produced no batches")),
-      keys)
+    IncrementalAgg.finalizeView(state, keys)
   }
 }

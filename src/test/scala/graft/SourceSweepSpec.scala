@@ -8,8 +8,10 @@ import scala.jdk.CollectionConverters._
   * [[Harness.session]], so the bench conf cannot drift between copies,
   * no code path forks on a `graft.*` JVM system property, native
   * kernels are built as Columns, never looked up by name in a
-  * session's function registry, and every stream session comes from
-  * [[graft.streaming.StreamingOps.session]]. */
+  * session's function registry, every stream session comes from
+  * [[graft.streaming.StreamingOps.session]], and every streaming fold,
+  * AvailableNow run and fixture-layout dispatch goes through
+  * [[graft.streaming.StreamingOps]]. */
 class SourceSweepSpec extends org.scalatest.funsuite.AnyFunSuite {
   private val root = Paths.get("src/main/scala/graft")
 
@@ -55,5 +57,13 @@ class SourceSweepSpec extends org.scalatest.funsuite.AnyFunSuite {
       Set("streaming/StreamingOps.scala"))
     assert(filesContaining("checkpointFileManagerClass") ===
       Set("streaming/StreamingOps.scala"))
+  }
+
+  test("foreachBatch, the AvailableNow trigger and the file-or-" +
+      "directory table dispatch appear only in StreamingOps") {
+    for (needle <- Seq("foreachBatch(", "Trigger.AvailableNow()",
+        "getFileStatus("))
+      assert(filesContaining(needle) === Set("streaming/StreamingOps.scala"),
+        needle)
   }
 }

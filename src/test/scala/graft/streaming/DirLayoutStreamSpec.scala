@@ -69,4 +69,25 @@ class DirLayoutStreamSpec extends SparkSpec {
         "source shape is back")
     assert(a === b)
   }
+
+  test("q_stream_classify's embeddings stream reads a directory-layout " +
+      "fixture (same gate code, both layouts, identical rows)") {
+    // embeddings as a 3-part DIRECTORY: the gate's batch model fit and
+    // its scored stream both read the one table
+    val dir = java.nio.file.Files
+      .createTempDirectory("graft_dirlayout_emb_").toString
+    spark.read.parquet(s"$sf/embeddings.parquet").repartition(3)
+      .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
+
+    val gate = graft.queries.Registry.queries("q_stream_classify")
+    def canon(d: String): Seq[String] =
+      gate(spark, d).collect().map(_.toSeq.mkString("|")).sorted.toSeq
+    val a = canon(sf)
+    val b = canon(dir)
+    assert(a.nonEmpty, "single-file embeddings stream produced no rows")
+    assert(b.nonEmpty,
+      "directory-layout embeddings stream produced no rows — the " +
+        "glob-only source shape is back")
+    assert(a === b)
+  }
 }
