@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import scala.collection.immutable.ListMap
 import scala.collection.mutable
 object Bench {
@@ -10,63 +9,10 @@ object Bench {
   private val json = new com.fasterxml.jackson.databind.ObjectMapper()
     .registerModule(com.fasterxml.jackson.module.scala.DefaultScalaModule)
 
-  /** Sum of all collectors' accumulated STW time — per-gate deltas
-    * attribute "was this gate slow, or was the JVM collecting". */
-  private def gcMillis(): Long = {
-    import scala.jdk.CollectionConverters._
-    java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
-      .asScala.map(b => math.max(0L, b.getCollectionTime)).sum
-  }
-
   private def usedHeapMb(): Double = {
     val rt = Runtime.getRuntime
     (rt.totalMemory() - rt.freeMemory()) / 1048576.0
   }
-
-  /** GATE WATCHDOG (r14 post-mortem): the r14 sf10 full-registry sweep
-    * wedged for 4.5+ h inside ONE gate — seven executor threads
-    * spinning at 100% CPU in a codegen'd hash aggregate, the main
-    * thread blocked in AQE's stage-event wait — and the whole sweep
-    * (and the round's artifact) died with it. One pathological gate
-    * must cost its own timeout, not the sweep: when
-    * SPARK_GRAFT_GATE_TIMEOUT_SEC is set, a gate still running after
-    * that many seconds has its job group cancelled
-    * (interrupt-on-cancel), which fails the query into the existing
-    * failed[]/errors{} accounting and lets the sweep continue. Tasks
-    * that ignore interruption (a tight generated loop) are abandoned
-    * as zombies — the scheduler still fails the job, so the loop
-    * advances; the watchdog line in stderr records the abandonment.
-    * Unset (the driver contract) nothing changes. */
-  private def withGateWatchdog(spark: SparkSession, name: String,
-                               timeoutSec: Option[Int])
-                              (body: => Unit): Unit =
-    timeoutSec match {
-      case None => body
-      case Some(t) =>
-        val sc = spark.sparkContext
-        val group = s"gate:$name"
-        sc.setJobGroup(group, s"bench gate $name (watchdog ${t}s)",
-          interruptOnCancel = true)
-        val fired = new java.util.concurrent.atomic.AtomicBoolean(false)
-        val timer = new java.util.Timer(s"gate-watchdog", true)
-        timer.schedule(new java.util.TimerTask {
-          def run(): Unit = {
-            fired.set(true)
-            System.err.println(
-              s"[bench] $name WATCHDOG fired after $t s - cancelling " +
-                "job group (zombie tasks, if any, are abandoned)")
-            try sc.cancelJobGroup(group) catch { case _: Throwable => () }
-          }
-        }, t * 1000L)
-        try {
-          body
-          // completed only because the cancel raced the finish — the
-          // gate still exceeded its budget; record it as a failure,
-          // not a timing
-          if (fired.get) throw new RuntimeException(
-            s"gate exceeded ${t}s watchdog (cancelled)")
-        } finally { timer.cancel(); sc.clearJobGroup() }
-    }
 
   /** 1-minute system load average — the contention witness. Round 14's
     * "confirmed" dedup regression was host contention (a 4.2 h builder
@@ -88,6 +34,9 @@ object Bench {
   private[graft] val BaselineRatio = 1.5
   private[graft] val BandRatio = 1.25
   private[graft] val AbsSecFloor = 1.0
+
+  /** Most flagged gates re-run by the second-run adjudication. */
+  private val SecondRunCap = 12
 
   /** The close-out regression rule, IDENTICAL to
     * scripts/bench_compare.py's exit gate: a gate regressed when
@@ -132,6 +81,21 @@ object Bench {
         case _ => None
       }
     }
+
+  /** The flags of one reading: banded gates by the band-exit rule,
+    * unbanded gates by the single-baseline rule. Returns (name, ref,
+    * new, rule) sorted by name. The first reading and the second-run
+    * adjudication both go through here, so they cannot apply different
+    * margins or a different band/baseline split. */
+  private[graft] def flagged(bands: Map[String, (Double, Double)],
+                             baseQs: Map[String, Double],
+                             results: Map[String, Double])
+      : Seq[(String, Double, Double, String)] =
+    (bandRegressions(bands, results)
+       .map { case (n, hi, b) => (n, hi, b, "band") } ++
+     regressions(baseQs, results.filter { case (k, _) => !bands.contains(k) })
+       .map { case (n, a, b) => (n, a, b, "baseline") })
+      .sortBy(_._1)
 
   /** Gates recorded in a `SPARK_GRAFT_BENCH_PROGRESS` file, in file
     * order: sec, gc ms, heap MB, load1 (-1 when absent). A line that
@@ -183,7 +147,7 @@ object Bench {
     val harnessErrors = mutable.LinkedHashMap[String, Seq[Harness.Failure]](
       "warm_fixtures" -> Harness.warmFixtures(spark, sfDir),
       "prepare" -> Nil, "warm_stores" -> Nil, "progress" -> Nil,
-      "compare" -> Nil, "latest_link" -> Nil)
+      "compare" -> Nil, "second_run" -> Nil, "latest_link" -> Nil)
     // UNTIMED setup: one-time content-addressed store/index builds
     // (graph edge layouts, ANN/inverted indexes, maintained MVs).
     // With a metastore these are paid once per corpus refresh; the
@@ -277,6 +241,8 @@ object Bench {
           s"[bench] resuming past ${gates.size} recorded gate(s) from $p")
         gates
       }.getOrElse(mutable.LinkedHashMap.empty)
+    // the per-gate watchdog (Harness.runGate); unset, gates run
+    // unguarded
     val gateTimeoutSec =
       sys.env.get("SPARK_GRAFT_GATE_TIMEOUT_SEC").flatMap(_.toIntOption)
     def appendProgress(name: String, sec: Double, gc: Long,
@@ -300,31 +266,25 @@ object Bench {
         if (ld >= 0) load1(name) = ld
         Some(name -> sec)
       case (name, fn) =>
-        val gc0 = gcMillis()
-        val t0 = System.nanoTime()
-        val r = try {
-          withGateWatchdog(spark, name, gateTimeoutSec) {
-            Harness.noop(fn(spark, sfDir))
-          }
-          val sec = (System.nanoTime() - t0) / 1e9
-          // one stderr line per gate: long sweeps (hours at sf10) are
-          // otherwise unobservable until the final JSON
-          System.err.println(f"[bench] $name $sec%.2f s")
-          Some(name -> sec)
-        } catch { case e: Throwable =>
-          // a throwing query must not masquerade as a speedup: it is
-          // EXCLUDED from the timing map entirely (its time-to-fail
-          // would still read as "faster" in bench_compare.py) and
-          // surfaced in failed[] / n_failed instead
-          failed += name
-          failMsgs(name) = Option(e.getMessage).getOrElse(e.getClass.getName)
-          System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
-          None
+        val run = Harness.runGate(spark, sfDir, name, fn,
+          timeoutSec = gateTimeoutSec, baseline = Some(baselineRdds))
+        val r = run.error match {
+          case None =>
+            // one stderr line per gate: long sweeps (hours at sf10) are
+            // otherwise unobservable until the final JSON
+            System.err.println(f"[bench] $name ${run.sec}%.2f s")
+            Some(name -> run.sec)
+          case Some(msg) =>
+            // a throwing query must not masquerade as a speedup: it is
+            // EXCLUDED from the timing map entirely (its time-to-fail
+            // would still read as "faster" in bench_compare.py) and
+            // surfaced in failed[] / n_failed instead
+            failed += name
+            failMsgs(name) = msg
+            System.err.println(s"[bench] $name FAILED: $msg")
+            None
         }
-        // STW time accrued while THIS gate ran — before cleanup, so
-        // the cleanup gc below is never charged to the gate
-        gcMs(name) = gcMillis() - gc0
-        Harness.freeGateBlocks(spark, baselineRdds)
+        gcMs(name) = run.gcMs
         // post-gate post-gc resident heap: monotonic growth across
         // gates = something survives cleanup (the leak signal); flat =
         // the spike was in-gate pressure, not accumulation. This gc
@@ -384,13 +344,7 @@ object Bench {
             e.getValue.path("max").asDouble())
         }.toMap
       }.getOrElse(Map.empty)
-    val flagged: Seq[(String, Double, Double, String)] =
-      (bandRegressions(bands, results)
-         .map { case (n, hi, b) => (n, hi, b, "band") } ++
-       regressions(baseQs,
-           results.filter { case (k, _) => !bands.contains(k) })
-         .map { case (n, a, b) => (n, a, b, "baseline") })
-        .sortBy(_._1)
+    val flags = flagged(bands, baseQs, results)
     // SECOND-RUN attribution pass (r11 verdict item 1 — the third
     // consecutive driver run flagged q_incr_curation_pipeline despite
     // the warm pass holding 4/4 on the builder host): every flagged
@@ -403,52 +357,38 @@ object Bench {
     // CAP on re-runs (r14: 36 flags under host contention cost ~4.5 min
     // of re-runs inside the driver window — the re-runs themselves were
     // half the wall regression). Re-run the WORST offenders by ratio;
-    // flags beyond the cap stay flagged with verdict "unadjudicated"
-    // (never laundered into context, never claimed regressed without a
-    // second reading). A quiet session rarely flags more than a handful,
-    // so the cap only binds exactly when re-runs are least informative.
-    val secondRunCap = sys.env.get("SPARK_GRAFT_SECOND_RUN_CAP")
-      .flatMap(_.toIntOption).getOrElse(12)
-    val rerunSet: Set[String] = flagged
+    // flags beyond the cap (SecondRunCap) stay flagged with verdict
+    // "unadjudicated" (never laundered into context, never claimed
+    // regressed without a second reading). A quiet session rarely flags
+    // more than a handful, so the cap only binds exactly when re-runs
+    // are least informative.
+    val rerunSet: Set[String] = flags
       .sortBy { case (_, ref, b, _) => -(b / math.max(ref, 1e-9)) }
-      .take(secondRunCap).map(_._1).toSet
-    val secondRun: Map[String, Double] =
-      if (sys.env.contains("SPARK_GRAFT_NO_SECOND_RUN")) Map.empty
-      else flagged.filter(f => rerunSet.contains(f._1))
-        .flatMap { case (name, _, _, _) =>
+      .take(SecondRunCap).map(_._1).toSet
+    val secondRun: Map[String, Double] = flags
+      .filter(f => rerunSet.contains(f._1))
+      .flatMap { case (name, _, _, _) =>
         SparkEntry.queries.get(name).flatMap { fn =>
           System.gc()
-          val t0 = System.nanoTime()
-          val r = try {
-            withGateWatchdog(spark, name, gateTimeoutSec) {
-              Harness.noop(fn(spark, sfDir))
-            }
-            Some(name -> (System.nanoTime() - t0) / 1e9)
-          } catch { case _: Throwable => None }
-          Harness.freeGateBlocks(spark, baselineRdds)
-          r
+          val run = Harness.runGate(spark, sfDir, name, fn,
+            timeoutSec = gateTimeoutSec, baseline = Some(baselineRdds))
+          run.error.foreach(msg =>
+            harnessErrors("second_run") :+= Harness.Failure(name, msg))
+          run.error.fold(Option(name -> run.sec))(_ => None)
         }
       }.toMap
-    def inBand(name: String, v: Double): Boolean = bands.get(name) match {
-      case Some((_, hi)) if hi > 0 =>
-        !(v / hi > BandRatio && v - hi > AbsSecFloor)
-      case _ => baseQs.get(name) match {
-        case Some(a) if a > 0 =>
-          !(v / a > BaselineRatio && v - a > AbsSecFloor)
-        case _ => true
-      }
-    }
-    val verdicts = flagged.map { case (name, ref, b, rule) =>
+    def inBand(name: String, v: Double): Boolean =
+      flagged(bands, baseQs, Map(name -> v)).isEmpty
+    val verdicts = flags.map { case (name, ref, b, rule) =>
       val s2 = secondRun.get(name)
       // no second reading: a gate the cap excluded is "unadjudicated"
       // (flag stands, no verdict without evidence); a gate whose
-      // re-run was attempted but failed/skipped keeps the honest
-      // "regressed" rather than laundering into "context"
+      // re-run failed keeps the honest "regressed" rather than
+      // laundering into "context" (its error is in
+      // harness_errors.second_run)
       val verdict =
         if (s2.exists(inBand(name, _))) "context"
-        else if (!rerunSet.contains(name) &&
-                 !sys.env.contains("SPARK_GRAFT_NO_SECOND_RUN"))
-          "unadjudicated"
+        else if (!rerunSet.contains(name)) "unadjudicated"
         else "regressed"
       (name, ref, b, rule, s2, verdict)
     }
@@ -543,6 +483,8 @@ object Bench {
       "load_start" -> r2(loadStart), "load_end" -> r2(loadEnd),
       "n_regressed" -> nRegressed, "n_context" -> nContext,
       "n_unadjudicated" -> nUnadjudicated,
+      "regressed_gates" -> verdicts.filter(_._6 == "regressed")
+        .map(_._1).take(5),
       "queries" -> ListMap(fullQs.take(25): _*), "sf" -> sfDir)))
     spark.stop()
   }

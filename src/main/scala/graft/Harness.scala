@@ -6,7 +6,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * tools.ScaleUp) shares, installed once here instead of copied per
   * main so their confs cannot drift: the session factory with the
   * bench conf, the untimed fixture warm-up, the store-prepare pool,
-  * the store warm pass, and gate-local block freeing.
+  * the store warm pass, gate-local block freeing, and [[runGate]], the
+  * one timed gate execution (Bench's main pass and second run,
+  * GateAB's reps, Verify's pool).
   *
   * The three setup steps never throw for a failed table or prepare:
   * they return one [[Failure]] per failed step, which the caller
@@ -46,9 +48,93 @@ object Harness {
 
   /** Materializes every column of `df` and discards the rows — the
     * bench's timing semantics. `count()` would let Catalyst prune
-    * exactly the per-row expression work most gates exist to measure. */
-  def noop(df: DataFrame): Unit =
+    * exactly the per-row expression work most gates exist to measure.
+    * Private: every timed gate goes through [[runGate]]. */
+  private def noop(df: DataFrame): Unit =
     df.write.format("noop").mode("overwrite").save()
+
+  /** One timed gate: wall seconds from building the DataFrame through
+    * its sink, the STW GC milliseconds accrued meanwhile, and the
+    * failure message (None when the gate succeeded). */
+  final case class GateRun(sec: Double, gcMs: Long, error: Option[String])
+
+  /** Builds gate `name` with `fn`, runs `sink` on it (default: the
+    * bench's noop sink), and times both. A throwing gate is returned
+    * as `error`, never thrown: its time-to-fail is not a timing.
+    * `timeoutSec` arms [[withGateWatchdog]]. With `baseline` set,
+    * every RDD persisted outside it is freed after the gate, on this
+    * thread — only a caller that runs one gate at a time may pass it
+    * (Verify's pool frees at wave boundaries instead; see
+    * [[freeGateBlocks]]). GC is read before the freeing, so cleanup is
+    * never charged to the gate. */
+  def runGate(spark: SparkSession, sfDir: String, name: String,
+              fn: (SparkSession, String) => DataFrame,
+              sink: DataFrame => Unit = noop,
+              timeoutSec: Option[Int] = None,
+              baseline: Option[Set[Int]] = None): GateRun = {
+    val gc0 = gcMillis()
+    val t0 = System.nanoTime()
+    val failed = attempt(name)(
+      withGateWatchdog(spark, name, timeoutSec)(sink(fn(spark, sfDir))))
+    val run = GateRun((System.nanoTime() - t0) / 1e9, gcMillis() - gc0,
+      failed.map(_.message))
+    baseline.foreach(freeGateBlocks(spark, _))
+    run
+  }
+
+  /** Sum of all collectors' accumulated STW time — per-gate deltas
+    * attribute "was this gate slow, or was the JVM collecting". */
+  private def gcMillis(): Long = {
+    import scala.jdk.CollectionConverters._
+    java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
+      .asScala.map(b => math.max(0L, b.getCollectionTime)).sum
+  }
+
+  /** GATE WATCHDOG (r14 post-mortem): the r14 sf10 full-registry sweep
+    * wedged for 4.5+ h inside ONE gate — seven executor threads
+    * spinning at 100% CPU in a codegen'd hash aggregate, the main
+    * thread blocked in AQE's stage-event wait — and the whole sweep
+    * (and the round's artifact) died with it. One pathological gate
+    * must cost its own timeout, not the sweep: with `timeoutSec` set,
+    * a gate still running after that many seconds has its job group
+    * cancelled (interrupt-on-cancel), which fails the gate and lets
+    * the sweep continue. Tasks that ignore interruption (a tight
+    * generated loop) are abandoned as zombies — the scheduler still
+    * fails the job, so the loop advances; the watchdog line in stderr
+    * records the abandonment. A gate the watchdog fired on fails with
+    * a message naming the watchdog, even when it finished (the cancel
+    * raced the finish: it still exceeded its budget). None: the body
+    * runs unguarded. */
+  private def withGateWatchdog(spark: SparkSession, name: String,
+                               timeoutSec: Option[Int])
+                              (body: => Unit): Unit =
+    timeoutSec match {
+      case None => body
+      case Some(t) =>
+        val sc = spark.sparkContext
+        val group = s"gate:$name"
+        sc.setJobGroup(group, s"bench gate $name (watchdog ${t}s)",
+          interruptOnCancel = true)
+        val fired = new java.util.concurrent.atomic.AtomicBoolean(false)
+        val timer = new java.util.Timer(s"gate-watchdog", true)
+        timer.schedule(new java.util.TimerTask {
+          def run(): Unit = {
+            fired.set(true)
+            System.err.println(
+              s"[bench] $name WATCHDOG fired after $t s - cancelling " +
+                "job group (zombie tasks, if any, are abandoned)")
+            try sc.cancelJobGroup(group) catch { case _: Throwable => () }
+          }
+        }, t * 1000L)
+        val exceeded = s"gate exceeded ${t}s watchdog (cancelled)"
+        try {
+          try body
+          catch { case e: Throwable if fired.get =>
+            throw new RuntimeException(s"$exceeded: ${e.getMessage}", e)
+          }
+          if (fired.get) throw new RuntimeException(exceeded)
+        } finally { timer.cancel(); sc.clearJobGroup() }
+    }
 
   /** Untimed warm-up: scheduler + codegen + parquet reader init, then
     * EVERY fixture table read in full, so footers and page cache are

@@ -24,14 +24,10 @@ object Verify {
     // wall; each gate is an independent small Spark job that underuses
     // 32 cores, so a pool of 4 cuts the sweep toward its critical path
     // — same rationale as Bench's prepare pool, and same-store builds
-    // stay serialized by StoreLedger's per-key locks). Sequential
-    // escape hatch: SPARK_GRAFT_VERIFY_POOL=1.
-    val poolN = math.max(1,
-      sys.env.get("SPARK_GRAFT_VERIFY_POOL").flatMap(_.toIntOption)
-        .getOrElse(4))
+    // stay serialized by StoreLedger's per-key locks).
     val gates = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => only.forall(_.contains(name)) }
-    dump(spark, sfDir, outDir, gates, poolN)
+    dump(spark, sfDir, outDir, gates, poolN = 4)
     writeOracleSql(outDir, SparkEntry.oracleSql)
     spark.stop()
   }
@@ -58,21 +54,19 @@ object Verify {
       val pool = java.util.concurrent.Executors.newFixedThreadPool(poolN)
       wave.foreach { case (name, fn) =>
         pool.execute { () =>
-          val t0 = System.nanoTime()
-          val (rows, error) =
-            try {
-              val obs = Observation()
-              fn(spark, sfDir).observe(obs, count(lit(1)).as("rows"))
-                .coalesce(1).write.mode("overwrite")
-                .parquet(s"$outDir/$name")
-              (obs.get("rows"), null)
-            } catch { case e: Throwable =>
-              System.err.println(s"[verify] $name failed: ${e.getMessage}")
-              (null, Option(e.getMessage).getOrElse(e.getClass.getName))
-            }
-          val sec = math.round((System.nanoTime() - t0) / 1e6) / 1e3
-          manifest.put(name, ListMap("rows" -> rows, "seconds" -> sec,
-            "error" -> error).asJava)
+          var rows: Any = null
+          val run = Harness.runGate(spark, sfDir, name, fn, sink = { df =>
+            val obs = Observation()
+            df.observe(obs, count(lit(1)).as("rows"))
+              .coalesce(1).write.mode("overwrite")
+              .parquet(s"$outDir/$name")
+            rows = obs.get("rows")
+          })
+          run.error.foreach(msg =>
+            System.err.println(s"[verify] $name failed: $msg"))
+          manifest.put(name, ListMap("rows" -> rows,
+            "seconds" -> math.round(run.sec * 1e3) / 1e3,
+            "error" -> run.error.orNull).asJava)
         }
       }
       pool.shutdown()

@@ -16,25 +16,19 @@ import graft.schemas.Schemas
   *  - `url` added as a deterministic tiebreaker to the window order
   *    (MD:25-26 leaves equal-null_count ties arbitrary).
   * Plan: the union/filter/null-count are projection-only; the dedup is
-  * ONE hash-partition shuffle on (location, price). For the 100 TB
-  * path, [[graft.ops.Dedup.keepMostCompleteAgg]] computes the same
-  * result with map-side combine and no sort. */
+  * ONE hash-partition shuffle on (location, price).
+  * [[graft.ops.Dedup.keepMostCompleteAgg]] computes the same result with
+  * map-side combine and no sort (PipelineSpec pins the two equal on the
+  * product rows). */
 object MergeDedupJob {
 
   def transform(propnex: DataFrame, srx: DataFrame,
-                runDate: java.time.LocalDate,
-                useAggPath: Boolean = false): DataFrame = {
+                runDate: java.time.LocalDate): DataFrame = {
     val unioned = propnex.unionByName(srx)
       .filter(col("agent_id").isNotNull && col("location").isNotNull &&
         col("price").isNotNull)
-    val deduped =
-      if (useAggPath)
-        Dedup.keepMostCompleteAgg(unioned, Seq("location", "price"),
-          tiebreak = Seq("url"))
-      else
-        Dedup.keepMostComplete(unioned, Seq("location", "price"),
-          tiebreak = Seq("url"))
-    deduped
+    Dedup.keepMostComplete(unioned, Seq("location", "price"),
+        tiebreak = Seq("url"))
       .withColumn("transformed_date",
         lit(java.sql.Date.valueOf(runDate)))
       .select(Schemas.scrapedCols.map(col): _*)

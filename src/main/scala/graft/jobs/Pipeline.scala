@@ -75,15 +75,6 @@ object Pipeline {
     HistoricalJob.transform(HistoricalJob.readRaw(spark, historicalCsvDir),
       dims)
 
-  /** S5 — day-partitioned append sink: the Spark-native equivalent of
-    * the reference's BigQuery DAY time-partitioned WRITE_APPEND tables
-    * (dags/pipeline.py:225-272). Partition pruning on `partitionCol`
-    * gives downstream readers partition elimination; at 100 TB this is
-    * what makes "read yesterday" not "scan everything". */
-  def writePartitioned(df: DataFrame, path: String,
-                       partitionCol: String): Unit =
-    df.write.mode(SaveMode.Append).partitionBy(partitionCol).parquet(path)
-
   /** REPLAY-IDEMPOTENT day-partitioned sink — closes the replay
     * hazard the reference ships: its loads are WRITE_APPEND under
     * Airflow retries (dags/pipeline.py:246,258,271 + per-task
@@ -103,18 +94,6 @@ object Pipeline {
     df.write.mode(SaveMode.Overwrite)
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy(partitionCol).parquet(path)
-
-  /** Bucketed managed-table sink: pre-shuffles rows into `buckets`
-    * files by `bucketCol` so later equi-joins/aggregations on that key
-    * read co-located data and plan with ZERO exchanges. The Spark
-    * analogue of the clustered layout a warehouse would keep for its
-    * hottest join key — at 100 TB, bucketing both fact tables on the
-    * join key turns every subsequent join into a local zip of
-    * pre-sorted buckets. */
-  def writeBucketed(df: DataFrame, table: String, bucketCol: String,
-                    buckets: Int): Unit =
-    graft.ops.Bucketing.writeBucketed(df, table, bucketCol, buckets,
-      overwrite = true)
 
   /** RESUMABLE chain execution — the retry/skip/resume story the
     * reference delegates to Airflow (jobs trap everything to

@@ -3,20 +3,22 @@ package graft.tools
 /** The single-JVM A/B and profiling tool: in the bench session
   * ([[graft.Harness]]) it pays the untimed store-prepare pass ONCE,
   * then times each named gate `reps` times through the bench's own
-  * noop-sink semantics and prints per-rep seconds plus the median, and
-  * jobs / tasks / task-seconds / GC / shuffle bytes for the last rep.
+  * gate runner ([[graft.Harness.runGate]]: noop sink, gate-local blocks
+  * freed after each rep) and prints per-rep seconds plus the median,
+  * and jobs / tasks / task-seconds / GC / shuffle bytes for the last
+  * rep. A failing rep prints `[ab] <gate> FAILED: <message>` and is left
+  * out of the median; the other gates still run.
   * This is the verify skill's A/B protocol ("3x per variant, compare
   * medians") without re-paying a JVM + setup per rep, and without the
   * full-bench context noise.
   *
   *   runMain graft.tools.GateAB <sfDir> <g1,g2,...> [reps]
   *
-  * Env: SPARK_GRAFT_CPUS (default 32); SPARK_GRAFT_AB_EXPLAIN=<dir>
-  * dumps each gate's explain("formatted") to <dir>/<gate>.txt before
-  * timing (the plans/r16 evidence files); SPARK_GRAFT_AB_SAMPLE=1
+  * Env: SPARK_GRAFT_CPUS (default 32); SPARK_GRAFT_AB_SAMPLE=1
   * prints the top executor stack frames of the timed reps;
   * SPARK_GRAFT_AB_CONF=<sqlconf>=<vA>|<vB> interleaves reps of two
-  * values of a runtime SQL conf. */
+  * values of a runtime SQL conf. Formatted plans come from
+  * [[graft.Explain]]. */
 object GateAB {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
@@ -30,7 +32,6 @@ object GateAB {
       graft.Harness.warmStores(spark)
     setupErrors.foreach(f =>
       println(s"[ab-setup] ${f.name} FAILED: ${f.message}"))
-    val explainDir = sys.env.get("SPARK_GRAFT_AB_EXPLAIN")
     val baselineRdds = graft.Harness.gateBaseline(spark)
     // wall-time attribution listener: jobs + tasks + summed task time
     // vs shuffle bytes tells driver overhead apart from executor work
@@ -90,34 +91,22 @@ object GateAB {
       graft.SparkEntry.queries.get(name) match {
         case None => println(s"[ab] $name: NO SUCH GATE")
         case Some(fn) =>
-          explainDir.foreach { dir =>
-            try {
-              val df = fn(spark, sfDir)
-              val txt = df.queryExecution.explainString(
-                org.apache.spark.sql.execution.FormattedMode)
-              val p = java.nio.file.Paths.get(dir, s"$name.txt")
-              java.nio.file.Files.createDirectories(p.getParent)
-              java.nio.file.Files.write(p,
-                txt.getBytes("UTF-8"))
-            } catch { case e: Throwable =>
-              System.err.println(s"[ab] explain $name failed: $e") }
-          }
-          def timedRep(attr: Boolean): Double = {
+          def timedRep(attr: Boolean): Option[Double] = {
             System.gc()
             Seq(nJobs, nTasks, taskMs, gcMs, shufR, shufW).foreach(_.set(0L))
-            val t0 = System.nanoTime()
-            graft.Harness.noop(fn(spark, sfDir))
-            val s = (System.nanoTime() - t0) / 1e9
-            graft.Harness.freeGateBlocks(spark, baselineRdds)
+            val run = graft.Harness.runGate(spark, sfDir, name, fn,
+              baseline = Some(baselineRdds))
+            run.error.foreach(msg => println(s"[ab] $name FAILED: $msg"))
             if (attr)  // warm rep: attribute where the time went
               println(f"[ab-attr] $name%-32s jobs=${nJobs.get}%3d " +
                 f"tasks=${nTasks.get}%5d taskSec=${taskMs.get / 1e3}%8.2f " +
                 f"gcSec=${gcMs.get / 1e3}%6.2f " +
                 f"shufR=${shufR.get / 1048576.0}%8.1f MB " +
                 f"shufW=${shufW.get / 1048576.0}%8.1f MB")
-            s
+            run.error.fold(Option(run.sec))(_ => None)
           }
-          def med(xs: Seq[Double]): Double = xs.sorted.apply(xs.size / 2)
+          def med(xs: Seq[Double]): Double =
+            if (xs.isEmpty) Double.NaN else xs.sorted.apply(xs.size / 2)
           // SPARK_GRAFT_AB_CONF=<sqlconf>=<vA>|<vB>: interleave variant
           // A and variant B reps of a runtime SQLConf in ONE JVM — the
           // only timing comparison this host's cross-session drift
@@ -136,14 +125,15 @@ object GateAB {
                 val b = timedRep(attr = false)
                 spark.conf.set(k, va)
                 (a, b)
-              }.unzip
+              }.unzip match { case (a, b) => (a.flatten, b.flatten) }
               println(f"[ab-cmp] $name%-32s A($k=$va) ${med(as)}%7.3f s " +
                 f"B($k=$vb) ${med(bs)}%7.3f s   A " +
                 as.map(s => f"$s%.3f").mkString(" ") + "   B " +
                 bs.map(s => f"$s%.3f").mkString(" "))
             case None =>
               sampleCounts.clear(); sampling.set(true)
-              val secs = (1 to reps).map(rep => timedRep(attr = rep == reps))
+              val secs =
+                (1 to reps).flatMap(rep => timedRep(attr = rep == reps))
               sampling.set(false)
               println(f"[ab] $name%-32s median ${med(secs)}%7.3f s   " +
                 secs.map(s => f"$s%.3f").mkString(" "))

@@ -82,4 +82,21 @@ class BenchCompareSpec extends AnyFunSuite {
     assert(Bench.bandRegressions(bands, now) ===
       Seq(("a", 1.0, 9.0), ("b", 1.0, 9.0)))
   }
+
+  test("one flag rule adjudicates the first and the second reading: " +
+      "banded gates by the band, unbanded gates by the baseline") {
+    val bands = Map("banded" -> (1.0, 2.0))
+    // the banded gate's own baseline entry must not be consulted
+    val base = Map("banded" -> 0.5, "plain" -> 2.0)
+    val inside = Map("banded" -> 3.0, "plain" -> 3.0)  // 1.5x, +1.0 s
+    val outside = Map("banded" -> 3.5, "plain" -> 3.5) // 1.75x, +1.5 s
+    assert(Bench.flagged(bands, base, inside) === Nil)
+    assert(Bench.flagged(bands, base, outside) ===
+      Seq(("banded", 2.0, 3.5, "band"), ("plain", 2.0, 3.5, "baseline")))
+    // Bench's second-run inBand is flagged on a one-gate reading: it
+    // agrees with the first reading gate by gate
+    for (reading <- Seq(inside, outside); (n, v) <- reading)
+      assert(Bench.flagged(bands, base, Map(n -> v)).isEmpty ===
+        !Bench.flagged(bands, base, reading).exists(_._1 == n), (n, v))
+  }
 }

@@ -95,4 +95,43 @@ class HarnessSpec extends SparkSpec {
       assert(!Files.exists(out.resolve("q_no_orders")))
     } finally { deleteTree(empty); deleteTree(out) }
   }
+
+  test("runGate returns a failing gate's error naming the missing file, " +
+      "and frees the blocks a gate checkpoints") {
+    val empty = Files.createTempDirectory("graft-gate-sf")
+    try {
+      val baseline = Harness.gateBaseline(spark)
+      val failed = Harness.runGate(spark, empty.toString, "q_no_orders",
+        (s, d) => Tables.orders(s, d), baseline = Some(baseline))
+      assert(failed.error.exists(_.contains("orders.parquet")))
+      var pinned = Set.empty[Int]
+      val ok = Harness.runGate(spark, empty.toString, "q_checkpoint",
+        { (s, _) =>
+          val df = s.range(100).toDF().localCheckpoint()
+          pinned = s.sparkContext.getPersistentRDDs.keySet.toSet -- baseline
+          df
+        }, baseline = Some(baseline))
+      assert(ok.error.isEmpty && ok.sec >= 0.0 && ok.gcMs >= 0L)
+      assert(pinned.nonEmpty)
+      assert(spark.sparkContext.getPersistentRDDs.keySet.toSet
+        .subsetOf(baseline))
+    } finally deleteTree(empty)
+  }
+
+  test("the gate watchdog fails a gate stuck past its timeout well " +
+      "before the gate would finish, and the session runs the next gate") {
+    val sleepy = org.apache.spark.sql.functions.udf { (x: Long) =>
+      Thread.sleep(30000); x }
+    val t0 = System.nanoTime()
+    val stuck = Harness.runGate(spark, "", "q_sleep",
+      (s, _) => s.range(0, 1, 1, 1)
+        .select(sleepy(org.apache.spark.sql.functions.col("id"))),
+      timeoutSec = Some(1))
+    val wall = (System.nanoTime() - t0) / 1e9
+    assert(stuck.error.exists(_.contains("watchdog")), stuck.error)
+    assert(wall < 15.0, s"watchdog took $wall s")
+    val next = Harness.runGate(spark, "", "q_next",
+      (s, _) => s.range(10).toDF(), timeoutSec = Some(30))
+    assert(next.error === None)
+  }
 }

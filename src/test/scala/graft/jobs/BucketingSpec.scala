@@ -10,8 +10,8 @@ class BucketingSpec extends SparkSpec {
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     val a = (1 to 1000).map(i => (i.toLong, s"a$i")).toDF("k", "va")
     val b = (1 to 1000).map(i => (i.toLong, s"b$i")).toDF("k", "vb")
-    Pipeline.writeBucketed(a, "bkt_a", "k", 8)
-    Pipeline.writeBucketed(b, "bkt_b", "k", 8)
+    graft.ops.Bucketing.writeBucketed(a, "bkt_a", "k", 8, overwrite = true)
+    graft.ops.Bucketing.writeBucketed(b, "bkt_b", "k", 8, overwrite = true)
     val joined = spark.table("bkt_a").join(spark.table("bkt_b"), "k")
     val plan = joined.queryExecution.executedPlan.toString
     assert(!plan.contains("Exchange"),

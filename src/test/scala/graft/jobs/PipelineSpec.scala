@@ -190,11 +190,15 @@ class PipelineSpec extends SparkSpec {
     assert(merged.schema("transformed_date").dataType == DateType)
     assert(merged.select("transformed_date").distinct().collect()
       .head.getDate(0).toString == "2024-11-01")
-    // window path ≡ aggregation path
-    val agg = MergeDedupJob.transform(pnOut, srxOut, runDate,
-      useAggPath = true)
-    assert(merged.orderBy("url").collect().toSeq ==
-      agg.orderBy("url").collect().toSeq)
+    // window path ≡ aggregation path on the same filtered union
+    val unioned = pnOut.unionByName(srxOut)
+      .filter($"agent_id".isNotNull && $"location".isNotNull &&
+        $"price".isNotNull)
+    val agg = graft.ops.Dedup.keepMostCompleteAgg(unioned,
+      Seq("location", "price"), tiebreak = Seq("url"))
+    assert(merged.drop("transformed_date").orderBy("url").collect().toSeq ==
+      agg.select(Schemas.listingCols.head, Schemas.listingCols.tail: _*)
+        .orderBy("url").collect().toSeq)
   }
 
   test("merge_dedup keeps the most-complete duplicate") {
