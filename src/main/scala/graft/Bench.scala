@@ -24,6 +24,7 @@ object Bench {
   private def loadAvg1(): Double =
     try java.lang.management.ManagementFactory
       .getOperatingSystemMXBean.getSystemLoadAverage
+    // a witness only: -1 marks it missing, the gate still runs
     catch { case _: Throwable => -1.0 }
 
   /** Shared flag thresholds (r12 advice): the flagging rules below and
@@ -146,8 +147,9 @@ object Bench {
     // artifact only
     val harnessErrors = mutable.LinkedHashMap[String, Seq[Harness.Failure]](
       "warm_fixtures" -> Harness.warmFixtures(spark, sfDir),
-      "prepare" -> Nil, "warm_stores" -> Nil, "progress" -> Nil,
-      "compare" -> Nil, "second_run" -> Nil, "latest_link" -> Nil)
+      "prepare" -> Nil, "store_bytes" -> Nil, "warm_stores" -> Nil,
+      "progress" -> Nil, "compare" -> Nil, "second_run" -> Nil,
+      "latest_link" -> Nil)
     // UNTIMED setup: one-time content-addressed store/index builds
     // (graph edge layouts, ANN/inverted indexes, maintained MVs).
     // With a metastore these are paid once per corpus refresh; the
@@ -170,12 +172,18 @@ object Bench {
     // deltas (2 full tree walks per prepare, both UNATTRIBUTED —
     // ~18 s of r12's 87 - 69 s setup gap) to per-table walks over the
     // tables each prepare's build registered in StoreLedger.
-    def tableBytes(tbl: String): Long =
-      try {
+    // A walk that fails counts 0 bytes and is named under
+    // harness_errors.store_bytes.
+    val bytesErrors = mutable.ListBuffer[Harness.Failure]()
+    def tableBytes(tbl: String): Long = {
+      var bytes = 0L
+      bytesErrors ++= Harness.attempt(tbl) {
         val p = new org.apache.hadoop.fs.Path(warehouse,
           tbl.toLowerCase(java.util.Locale.ROOT))
-        if (whFs.exists(p)) whFs.getContentSummary(p).getLength else 0L
-      } catch { case _: Throwable => 0L }
+        if (whFs.exists(p)) bytes = whFs.getContentSummary(p).getLength
+      }
+      bytes
+    }
     if (!sys.env.contains("SPARK_GRAFT_SKIP_SETUP")) {
       // pool of 4 (r12 verdict item 2): per-prepare secs are wall-clock
       // UNDER CONCURRENCY (they overlap; their sum exceeds setup_sec)
@@ -193,6 +201,7 @@ object Bench {
         setupBytes(name) =
           owned.get(name).map(_.toSeq.map(tableBytes).sum).getOrElse(0L)
       }
+      harnessErrors("store_bytes") = bytesErrors.toSeq
       // "no store built twice per session" (r12 verdict item 2): any
       // ledger key whose build block ran more than once is a wasted
       // rebuild — surfaced in the artifact, asserted by the sweep spec

@@ -123,6 +123,8 @@ object Harness {
             System.err.println(
               s"[bench] $name WATCHDOG fired after $t s - cancelling " +
                 "job group (zombie tasks, if any, are abandoned)")
+            // the gate may have finished meanwhile; its own error or
+            // the `fired` flag reports the overrun either way
             try sc.cancelJobGroup(group) catch { case _: Throwable => () }
           }
         }, t * 1000L)
@@ -202,6 +204,7 @@ object Harness {
   def gateBaseline(spark: SparkSession): Set[Int] = {
     try org.apache.logging.log4j.core.config.Configurator.setLevel(
       "org.apache.spark.rdd", org.apache.logging.log4j.Level.ERROR)
+    // another logging backend: the WARN lines stay, nothing else changes
     catch { case _: Throwable => () }
     spark.sparkContext.getPersistentRDDs.keySet.toSet
   }
@@ -219,6 +222,8 @@ object Harness {
                      blocking: Boolean = true): Unit =
     spark.sparkContext.getPersistentRDDs.foreach { case (id, rdd) =>
       if (!baseline.contains(id))
+        // best effort: a block that cannot be freed stays cached, and
+        // the gate's result is already taken
         try rdd.unpersist(blocking) catch { case _: Throwable => () }
     }
 

@@ -28,8 +28,6 @@ import org.apache.spark.sql.types._
   * deterministic cross-JVM output. */
 object BloomKernels {
 
-  def numWords(bytes: Array[Byte]): Int = (bytes.length - 4) / 8
-
   def create(numBitsRequested: Int, numHashes: Int): Array[Long] =
     new Array[Long]((numBitsRequested + 63) / 64)
 

@@ -100,7 +100,7 @@ object Pipeline {
     * sys.exit(1) and the DAG retries the task:
     * merge_dedup.py:67-68, dags/pipeline.py task `retries`): each
     * sink write is guarded by a per-step completion marker beside the
-    * output (the Sinks.ensureBuilt pattern at file level), so a
+    * output (the StoreGuard.tables pattern at file level), so a
     * re-run after a death SKIPS finished sinks and resumes at the
     * first incomplete one.
     *

@@ -256,18 +256,13 @@ object BradleyTerry {
     * pairs carry no preference signal and are dropped. Exact integers
     * (`winrate_milli = wins·1000 div n`).
     *
-    * Scale shape: duels collapse to [[pairStats]]' single shuffle;
-    * the entity-sized score vector broadcasts into the pair list
-    * twice; everything after is a per-pair projection — nothing else
-    * moves at billions of duels. */
-  def dpoPairs(duels: DataFrame, scores: DataFrame,
-               minDuels: Long = 2L): DataFrame =
-    dpoPairsFromStats(pairStats(duels), scores, minDuels)
-
-  /** [[dpoPairs]] from a pair-statistics table — lets a caller that
-    * already holds (or checkpointed) the pair matrix share it between
-    * the fit and the export instead of re-deriving or, worse,
-    * checkpointing the duel stream (the round-13 sf10 OOM). */
+    * Scale shape: reads the [[pairStats]] matrix, so a caller that
+    * already holds (or checkpointed) it shares it between the fit and
+    * the export instead of re-deriving or, worse, checkpointing the
+    * duel stream (the round-13 sf10 OOM); the entity-sized score
+    * vector broadcasts into the pair list twice; everything after is
+    * a per-pair projection — nothing else moves at billions of
+    * duels. */
   def dpoPairsFromStats(pairStats: DataFrame, scores: DataFrame,
                         minDuels: Long = 2L): DataFrame =
     pairStats
@@ -291,7 +286,7 @@ object BradleyTerry {
         expr("wins_chosen * 1000L div n_duels"))
       .where(col("winrate_milli") >= 500L)
 
-  /** DuckDB oracle for [[dpoPairs]] over the [[fit]] scores — appends
+  /** DuckDB oracle for [[dpoPairsFromStats]] over the [[fit]] scores — appends
     * the export projection to the shared score chain, so the gate and
     * the fit gates cannot pin different score definitions. */
   def dpoPairsOracleSql(duelsSql: String, iters: Int,

@@ -81,10 +81,6 @@ object Cleaning {
       asLong.cast(IntegerType))
   }
 
-  /** PN:46, SRX:25 — strip a leading `Blk `/`Block ` token. */
-  def stripBlockPrefix(c: Column): Column =
-    regexp_replace(c, "^(Blk\\s+|Block\\s+)", "")
-
   /** P5 — typed cast loop. Reference: `for column, dtype in dict:
     * withColumn(cast)` (historical_data_transformation.py:66-69,
     * propnex_transformation.py:96-99, srx_transformation.py:108-111).

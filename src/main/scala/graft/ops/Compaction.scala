@@ -53,8 +53,8 @@ object Compaction {
     // so the old dir must be gone before the staged rename. Failure
     // window: a death between the two statements loses the table NAME
     // but no CONTENT — the staged table holds the identical rows, and
-    // callers rebuild on re-entry because Sinks.ensureBuilt verifies
-    // the DATA tables exist (`requires`), not just its completion
+    // callers rebuild on re-entry because StoreGuard.tables verifies
+    // the DATA tables exist (`writes`), not just its completion
     // marker — a surviving marker over a dropped table is exactly
     // this window's signature and triggers the rebuild.
     spark.sql(s"DROP TABLE `$table`")

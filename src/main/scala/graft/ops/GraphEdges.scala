@@ -57,15 +57,8 @@ object GraphEdges {
     * silently serve. */
   def shared(s: SparkSession, table: String,
              build: => DataFrame): DataFrame = {
-    // same lock + ledger discipline as Sinks.ensureBuilt: concurrent
-    // prepares reaching one shared layout build it exactly once
-    StoreLedger.lockFor(table).synchronized {
-      val exists = s.catalog.tableExists(table)
-      if (!exists)
-        Bucketing.writeBucketed(build, table, "src",
-          buckets = s.sessionState.conf.numShufflePartitions)
-      StoreLedger.record(table, ran = !exists, tables = Seq(table))
-    }
+    StoreGuard.table(s, table)(Bucketing.writeBucketed(build, table, "src",
+      buckets = s.sessionState.conf.numShufflePartitions))
     s.table(table)
   }
 }

@@ -47,13 +47,9 @@ object Parsers {
       }
     })
 
-  /** PN:23 — floor area sqm out of `"1,184 sqft (110 sqm)"`.
+  /** SRX:49 — price-per-sqft out of `"$523 psf"` (commas stripped).
     * `regexp_extract` yields '' on no-match; under Spark 4 ANSI mode a
     * plain cast of '' throws, so parsers use `try_cast` (→ NULL). */
-  def areaSqm(c: Column): Column =
-    regexp_extract(c, "\\((\\d+)\\s*sqm\\)", 1).try_cast(IntegerType)
-
-  /** SRX:49 — price-per-sqft out of `"$523 psf"` (commas stripped). */
   def pricePsf(c: Column): Column =
     regexp_extract(regexp_replace(c, ",", ""), "\\$?(\\d+)\\s*psf", 1)
       .try_cast(IntegerType)
@@ -71,17 +67,6 @@ object Parsers {
   /** SRX:14-15 — CEA registration numbers embedded in free text. */
   def agencyRegNo(c: Column): Column = regexp_extract(c, "(L\\d{7}[A-Z])", 1)
   def agentRegNo(c: Column): Column  = regexp_extract(c, "(R\\d{6}[A-Z])", 1)
-
-  /** PN:16 — phone after the last space (`"+65 91234567"` → digits);
-    * SRX:16 — phone after `tel:`. */
-  def phoneAfterSpace(c: Column): Column =
-    substring_index(c, " ", -1).try_cast(LongType)
-  def phoneAfterTel(c: Column): Column =
-    split(c, ":").getItem(1).try_cast(LongType)
-
-  /** PN:57 — district number out of `"D19"` (token after last 'D'). */
-  def districtFromD(c: Column): Column =
-    substring_index(c, "D", -1).try_cast(IntegerType)
 
   /** PN:42, SRX:39 — facilities count = size of comma-split list;
     * null stays null (reference: `when(isNull, None)`). */

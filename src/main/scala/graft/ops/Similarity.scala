@@ -97,7 +97,7 @@ object Similarity {
   /** (id, __bucket) banding table of a shingled corpus — the SHARED
     * bucketize pipeline behind both the self-join
     * ([[lshCandidatePairs]]) and the incremental
-    * ([[nearDupPairsAgainst]]) paths: hash shingle strings to longs
+    * ([[nearDupPairsAgainstBuckets]]) paths: hash shingle strings to longs
     * ONCE behind a materialization barrier, one fused native
     * minhash-signature pass, explode to band buckets. At 100 TB this
     * output is the artifact to STORE for the corpus side (refresh via
@@ -470,19 +470,6 @@ object Similarity {
       .withColumn("jaccard_milli", jaccardMilliFast(col("sh_a"), col("sh_b")))
       .filter(col("jaccard_milli") >= thresholdMilli)
       .select("id_new", "id_corpus", "jaccard_milli")
-  }
-
-  /** Convenience wrapper banding the corpus PAYLOAD inline — one full
-    * corpus banding pass per call; fine for tests and one-offs, wrong
-    * for the daily path (store [[bucketize]]'s output and use the
-    * overload above). */
-  def nearDupPairsAgainst(batch: DataFrame, corpus: DataFrame,
-                          k: Int = 32, bands: Int = 16,
-                          thresholdMilli: Int = 800): DataFrame = {
-    val cm = corpus.select(col("id"), col("shingles"))
-      .repartition(barrierPartitions(corpus), col("id"))
-    nearDupPairsAgainstBuckets(batch, bucketize(cm, k, bands), cm,
-      k, bands, thresholdMilli)
   }
 
   /** 64-bit SimHash over whitespace tokens: per-bit majority vote of

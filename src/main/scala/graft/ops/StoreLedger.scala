@@ -1,6 +1,7 @@
 package graft.ops
 
-/** Session-wide ledger of side-channel store builds.
+/** Session-wide ledger of side-channel store builds, written only by
+  * [[StoreGuard]].
   *
   * Two jobs, both born of Bench's parallel prepare pool (round 13):
   *
@@ -8,12 +9,13 @@ package graft.ops
   *     shared store from two threads; without a lock both see "not
   *     built" and race the overwrite. Locks are per store key, so
   *     distinct stores still build fully in parallel.
-  *  2. '''The build log.''' Every guarded build records how many times
-  *     its block actually RAN this JVM (a re-entry that finds the
-  *     store complete records 0) and which data tables it vouches
-  *     for. Bench asserts from it that no store is built twice per
-  *     session and attributes warehouse bytes per prepare by listing
-  *     ONLY that prepare's tables — replacing the whole-warehouse
+  *  2. '''The build log.''' Every [[StoreGuard]] build records how many
+  *     times its block actually RAN this JVM (a re-entry that finds
+  *     the store complete records 0) and which data tables it vouches
+  *     for (none for a directory store, keyed by its path). Bench
+  *     asserts from it that no store is built twice per session and
+  *     attributes warehouse bytes per prepare by listing ONLY that
+  *     prepare's tables — replacing the whole-warehouse
   *     `getContentSummary` walks that were 2 unattributed tree scans
   *     per prepare (~18 s of the r12 setup gap).
   */

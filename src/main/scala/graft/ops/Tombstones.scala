@@ -35,7 +35,7 @@ object Tombstones {
       // in-memory catalog + shared warehouse: a prior session can have
       // left the LOCATION without a catalog entry, and CREATE trips on
       // LOCATION_ALREADY_EXISTS — clear it first (the owning store's
-      // ensureBuilt re-runs the whole takedown sequence anyway)
+      // StoreGuard re-runs the whole takedown sequence anyway)
       Compaction.dropManagedTable(s, t)
     }
     removeIds.toDF("id")
@@ -158,7 +158,7 @@ object Tombstones {
              else "absent") +
             ". Recovery options: (a) if this is a fresh session and the " +
             s"warehouse still holds '$t''s files, re-register the table " +
-            "(the owning store's ensureBuilt does this) and re-run " +
+            "(the owning store's StoreGuard does this) and re-run " +
             "compact; (b) rebuild the store from its source corpus; " +
             "(c) restore staging from backup and re-run compact.")
         }

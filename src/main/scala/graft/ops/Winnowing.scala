@@ -121,7 +121,7 @@ object Winnowing {
     * CollapseProject leaves it alone).
     *
     * CALLERS MUST PERSIST THIS before filtering, exploding, or
-    * joining it (`Sinks.buildOnce` store, or `.cache()` for tests):
+    * joining it (`StoreGuard.table` store, or `.cache()` for tests):
     * predicate pushdown substitutes aliases with NO cost model, so a
     * filter above — including the `size(e) > 0` filter
     * InferFiltersFromGenerate derives from a downstream explode —

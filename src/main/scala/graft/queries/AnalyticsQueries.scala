@@ -95,13 +95,8 @@ object AnalyticsQueries {
     val key = Sinks.contentKey(d, "lineitem.parquet", "prefscores|v2")
     val (dt, bt, rt, p90) = (s"pref_duels_$key", s"pref_bt_$key",
       s"pref_rc_$key", s"pref_pairs90_$key")
-    Sinks.ensureBuilt(s, s"${dt}_ok", requires = Seq(dt, bt, rt, p90)) {
-      // a fresh session's in-memory catalog doesn't know a previous
-      // JVM's tables, so saveAsTable takes the CREATE path onto the
-      // leftover warehouse directory and throws LOCATION_ALREADY_EXISTS
-      // — drop location + entry first (the store-build discipline)
-      Seq(dt, bt, rt, p90)
-        .foreach(graft.ops.Compaction.dropManagedTable(s, _))
+    graft.ops.StoreGuard.tables(s, s"${dt}_ok",
+      writes = Seq(dt, bt, rt, p90)) {
       val li = lineitem(s, d)
         .select("l_orderkey", "l_suppkey", "l_quantity")
       li.as("a").join(li.as("b"),

@@ -189,8 +189,7 @@ object ClusterQueries {
   private def ivfPqCodesTable(s: SparkSession, d: String): String = {
     val tbl = "ann_ivfpq_codes_" +
       Sinks.contentKey(d, "embeddings.parquet", "ivfpq8x16i2|v1")
-    Sinks.buildOnce(s, tbl) {
-      graft.ops.Compaction.dropManagedTable(s, tbl)
+    graft.ops.StoreGuard.table(s, tbl) {
       val base = embeddings(s, d).select(col("vec_id"), col("embedding"))
         .withColumn("qv", Clustering.quantizeMilli(col("embedding")))
       val codebooks = trainedCodebooks(d, base)
@@ -224,8 +223,8 @@ object ClusterQueries {
     val k = semDedupK(2L * embeddings(s, d).count())
     val tbl = "semdedup_ivf_" +
       Sinks.contentKey(d, "embeddings.parquet", s"semivf$k|v1")
-    Sinks.ensureBuilt(s, s"${tbl}_ok",
-      requires = Seq(tbl, graft.ops.AnnIndex.codebookTable(tbl))) {
+    graft.ops.StoreGuard.tables(s, s"${tbl}_ok",
+      writes = Seq(tbl, graft.ops.AnnIndex.codebookTable(tbl))) {
       val corp = semCorpus(s, d)
       val cents = embeddings(s, d).filter(col("vec_id") < k)
         .select(col("vec_id").as("c_id"), col("embedding").as("cv"))

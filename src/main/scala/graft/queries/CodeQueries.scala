@@ -167,8 +167,7 @@ object CodeQueries {
   private def winnowStore(s: SparkSession, d: String): String = {
     val tbl = "winnow_fp_" +
       Sinks.contentKey(d, "documents.parquet", s"winnow-k$K-w$W|v2")
-    Sinks.buildOnce(s, tbl) {
-      graft.ops.Compaction.dropManagedTable(s, tbl)
+    graft.ops.StoreGuard.table(s, tbl) {
       Winnowing.fingerprintTable(renderedCode(s, d, mod = 13),
           "id", "ftext", K, W, md5)
         .write.format("parquet").mode("overwrite").saveAsTable(tbl)

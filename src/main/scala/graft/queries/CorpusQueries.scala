@@ -18,11 +18,9 @@ object CorpusQueries {
     val tbl = "inv_idx_" +
       Sinks.contentKey(d, "documents.parquet", "terms-tf|v3")
     // marker-guarded: the sequence is FOUR writes (postings + doc
-    // stats, then the appended halves) — a death mid-sequence must
-    // re-run it, not leave later gates reading a store missing the
-    // holdout
-    Sinks.ensureBuilt(s, s"${tbl}_ok",
-      requires = Seq(tbl, graft.ops.InvertedIndexStore.docsTable(tbl),
+    // stats, then the appended halves)
+    graft.ops.StoreGuard.tables(s, s"${tbl}_ok",
+      writes = Seq(tbl, graft.ops.InvertedIndexStore.docsTable(tbl),
         graft.ops.InvertedIndexStore.summaryTable(tbl))) {
       val docs = documents(s, d)
       graft.ops.InvertedIndexStore.build(
@@ -43,8 +41,8 @@ object CorpusQueries {
                                  d: String): String = {
     val tbl = "inv_idx_td_" +
       Sinks.contentKey(d, "documents.parquet", "takedown|v2")
-    Sinks.ensureBuilt(s, s"${tbl}_ok",
-      requires = Seq(tbl, graft.ops.InvertedIndexStore.docsTable(tbl),
+    graft.ops.StoreGuard.tables(s, s"${tbl}_ok",
+      writes = Seq(tbl, graft.ops.InvertedIndexStore.docsTable(tbl),
         graft.ops.InvertedIndexStore.summaryTable(tbl))) {
       val docs = documents(s, d)
       graft.ops.InvertedIndexStore.build(
@@ -71,19 +69,12 @@ object CorpusQueries {
     val key = Sinks.contentKey(d, "documents.parquet", "crosstd|v2")
     val (invT, annT, phT) =
       (s"xtd_inv_$key", s"xtd_ann_$key", s"xtd_ph_$key")
-    Sinks.ensureBuilt(s, s"${invT}_ok", requires = Seq(
+    graft.ops.StoreGuard.tables(s, s"${invT}_ok", writes = Seq(
         invT, graft.ops.InvertedIndexStore.docsTable(invT),
         graft.ops.InvertedIndexStore.summaryTable(invT), annT, phT,
         graft.ops.Tombstones.table(invT),
         graft.ops.Tombstones.table(annT),
         graft.ops.Tombstones.table(phT))) {
-      // half-built leftovers (including stale tombstones from a prior
-      // wrong-code run) are cleared before the rebuild — the
-      // store-build discipline every ensureBuilt block follows
-      Seq(phT, graft.ops.Tombstones.table(invT),
-          graft.ops.Tombstones.table(annT),
-          graft.ops.Tombstones.table(phT))
-        .foreach(graft.ops.Compaction.dropManagedTable(s, _))
       val docs = documents(s, d)
       graft.ops.InvertedIndexStore.build(
         docs, "doc_id", "text", invT, overwrite = true)
@@ -200,8 +191,7 @@ object CorpusQueries {
       s: org.apache.spark.sql.SparkSession, d: String): String = {
     val tbl = "conv_prefix_idx_" +
       Sinks.contentKey(d, "documents.parquet", "convpfx|v1")
-    Sinks.buildOnce(s, tbl) {
-      graft.ops.Compaction.dropManagedTable(s, tbl)
+    graft.ops.StoreGuard.table(s, tbl) {
       graft.ops.TextOps.prefixIndex(plantedConvs(s, d),
           "doc_id", "turns")
         .write.format("parquet").mode("overwrite").saveAsTable(tbl)
@@ -222,10 +212,8 @@ object CorpusQueries {
     val key = Sinks.contentKey(d, "documents.parquet", "capstone|v1")
     val (fpT, packT) = (s"cap_fp_$key", s"cap_pack_$key")
     val evalT = EvalArtifacts.evalShingleTable(s, d)
-    Sinks.ensureBuilt(s, s"${fpT}_ok",
-      requires = Seq(fpT, packT, evalT)) {
-      Seq(fpT, packT)
-        .foreach(graft.ops.Compaction.dropManagedTable(s, _))
+    graft.ops.StoreGuard.tables(s, s"${fpT}_ok",
+      writes = Seq(fpT, packT), requires = Seq(evalT)) {
       val base = documents(s, d)
         .filter(pmod(col("doc_id"), lit(4)) =!= 0)
         .select(col("doc_id").as("id"), col("text"))

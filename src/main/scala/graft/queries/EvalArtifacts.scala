@@ -25,8 +25,7 @@ object EvalArtifacts {
   def evalShingleTable(s: SparkSession, d: String): String = {
     val tbl = "decon_eval_" +
       Sinks.contentKey(d, "documents.parquet", "eval8|v1")
-    Sinks.buildOnce(s, tbl) {
-      graft.ops.Compaction.dropManagedTable(s, tbl)
+    graft.ops.StoreGuard.table(s, tbl) {
       documents(s, d).filter(col("doc_id") % 50 === 0)
         .select(explode(TextOps.wordShingles(col("text"), 8)).as("s"))
         .distinct()

@@ -449,18 +449,13 @@ object JobQueries {
 
   /** Content-keyed parquet layout of the rendered pages (split across
     * default-parallelism files) — the streaming gate's source. */
-  private def propnexPagesDir(s: SparkSession, d: String): String = {
-    val dir = new java.io.File(System.getProperty("java.io.tmpdir"),
-      "graft_pages_" + Sinks.contentKey(d, "customer.parquet", "pages|v1"))
-    val marker = new java.io.File(dir, "_GRAFT_COMPLETE")
-    if (!marker.exists()) {
+  private def propnexPagesDir(s: SparkSession, d: String): String =
+    graft.ops.StoreGuard.directory("graft_pages_" +
+        Sinks.contentKey(d, "customer.parquet", "pages|v1")) { dir =>
       propnexPages(s, d)
         .repartition(s.sparkContext.defaultParallelism)
-        .write.mode("overwrite").parquet(dir.getAbsolutePath)
-      marker.createNewFile()
+        .write.mode("overwrite").parquet(dir)
     }
-    dir.getAbsolutePath
-  }
 
   /** One oracle for the batch and streaming scrape gates — both must
     * hash-match it, which pins stream ≡ batch through the parser. */
@@ -487,12 +482,9 @@ object JobQueries {
 
   /** Content-keyed WARC archive of the rendered pages — the crawl
     * archive the pipeline gate re-reads through the DataSourceV2. */
-  private def propnexWarcDir(s: SparkSession, d: String): String = {
-    val dir = new java.io.File(System.getProperty("java.io.tmpdir"),
-      "graft_pages_warc_" +
-        Sinks.contentKey(d, "customer.parquet", "pages_warc|v1"))
-    val marker = new java.io.File(dir, "_GRAFT_COMPLETE")
-    if (!marker.exists()) {
+  private def propnexWarcDir(s: SparkSession, d: String): String =
+    graft.ops.StoreGuard.directory("graft_pages_warc_" +
+        Sinks.contentKey(d, "customer.parquet", "pages_warc|v1")) { dir =>
       graft.sources.WarcSink.write(
         propnexPages(s, d)
           .repartition(s.sparkContext.defaultParallelism)
@@ -501,11 +493,8 @@ object JobQueries {
             concat(lit("urn:graft:"),
               regexp_extract(col("url"), "([0-9]+)$", 1)).as("rid"),
             encode(col("html"), "UTF-8").as("payload")),
-        dir.getAbsolutePath)
-      marker.createNewFile()
+        dir)
     }
-    dir.getAbsolutePath
-  }
 
   /** One-time content-keyed builds, run untimed by the bench like the
     * other stores: the rendered page layout feeding the streaming
@@ -519,13 +508,15 @@ object JobQueries {
     * parquet so a session re-run re-exercises nothing stale. The HTTP
     * walk itself re-runs per fresh key — it IS the behavior under
     * test. */
-  private def restIngestDir(s: SparkSession, d: String): String = {
+  private def restIngestDir(s: SparkSession, d: String): String =
+    graft.ops.StoreGuard.directory("graft_rest_out_" +
+      Sinks.contentKey(d, "nation.parquet", "rest_ingest|v1"))(
+      restIngest(s, d, _))
+
+  /** Downloads the nation rows, served as two datasets (even and odd
+    * keys) by a loopback catalog, into `out`. */
+  private def restIngest(s: SparkSession, d: String, out: String): Unit = {
     import java.nio.charset.StandardCharsets.UTF_8
-    val key = Sinks.contentKey(d, "nation.parquet", "rest_ingest|v1")
-    val out = new java.io.File(
-      System.getProperty("java.io.tmpdir"), s"graft_rest_out_$key")
-    val marker = new java.io.File(out, "_GRAFT_COMPLETE")
-    if (marker.exists()) return out.getAbsolutePath
     val rows = graft.Tables.nation(s, d)
       .selectExpr("CAST(n_nationkey AS LONG) AS k", "n_name",
         "CAST(n_regionkey AS LONG) AS r")
@@ -561,14 +552,11 @@ object JobQueries {
     try {
       val base = s"http://127.0.0.1:${server.getAddress.getPort}"
       val report = graft.sources.RestIngest.downloadAll(
-        base, "hdb-resale", out.getAbsolutePath, retries = 2,
-        backoffMs = 50)
+        base, "hdb-resale", out, retries = 2, backoffMs = 50)
       val failed = report.filter(_.file.isEmpty)
       require(failed.isEmpty, "rest ingest failed for: " +
         failed.map(f => s"${f.datasetId}: ${f.error.getOrElse("?")}")
           .mkString("; "))
-      marker.createNewFile()
     } finally server.stop(0)
-    out.getAbsolutePath
   }
 }

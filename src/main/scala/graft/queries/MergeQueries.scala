@@ -25,8 +25,7 @@ object MergeQueries {
                              d: String): String = {
     val tbl = "orc_orders_" +
       Sinks.contentKey(d, "orders.parquet", "orc|v2")
-    Sinks.buildOnce(s, tbl) {
-      graft.ops.Compaction.dropManagedTable(s, tbl)
+    graft.ops.StoreGuard.table(s, tbl) {
       orders(s, d)
         .select(col("o_orderkey"), col("o_orderpriority"),
           cents(col("o_totalprice")).as("price_c"))
@@ -42,32 +41,25 @@ object MergeQueries {
     * transactional catalog entry, so completion needs its own
     * witness. */
   private def xmlOrdersDir(s: org.apache.spark.sql.SparkSession,
-                           d: String): String = {
-    val dir = new java.io.File(System.getProperty("java.io.tmpdir"),
-      "graft_xml_" + Sinks.contentKey(d, "orders.parquet", "xml|v1"))
-    val marker = new java.io.File(dir, "_GRAFT_COMPLETE")
-    if (!marker.exists()) {
+                           d: String): String =
+    graft.ops.StoreGuard.directory("graft_xml_" +
+        Sinks.contentKey(d, "orders.parquet", "xml|v1")) { dir =>
       orders(s, d)
         .select(col("o_orderkey"), col("o_orderpriority"),
           cents(col("o_totalprice")).as("price_c"))
         .write.format("xml")
         .option("rootTag", "orders").option("rowTag", "order")
-        .mode("overwrite").save(dir.getAbsolutePath)
-      marker.createNewFile()
+        .mode("overwrite").save(dir)
     }
-    dir.getAbsolutePath
-  }
 
   /** Content-keyed WARC archive of the documents corpus, written by
     * the distributed [[graft.sources.WarcSink]] (4 members, one per
     * task; marker after the full set so a death mid-write re-runs the
-    * sink, whose per-file atomic renames make that a cheap no-op). */
+    * sink). */
   private def warcDir(s: org.apache.spark.sql.SparkSession,
-                      d: String): String = {
-    val dir = new java.io.File(System.getProperty("java.io.tmpdir"),
-      "graft_warc_" + Sinks.contentKey(d, "documents.parquet", "warc|v1"))
-    val marker = new java.io.File(dir, "_GRAFT_COMPLETE")
-    if (!marker.exists()) {
+                      d: String): String =
+    graft.ops.StoreGuard.directory("graft_warc_" +
+        Sinks.contentKey(d, "documents.parquet", "warc|v1")) { dir =>
       graft.sources.WarcSink.write(
         documents(s, d).repartition(4, col("doc_id"))
           .select(
@@ -76,11 +68,8 @@ object MergeQueries {
             lit("2026-01-01T00:00:00Z").as("warc_date"),
             concat(lit("urn:graft:"), col("doc_id")).as("rid"),
             encode(col("text"), "UTF-8").as("payload")),
-        dir.getAbsolutePath)
-      marker.createNewFile()
+        dir)
     }
-    dir.getAbsolutePath
-  }
 
   def prepares: Seq[(String,
       (org.apache.spark.sql.SparkSession, String) => Unit)] = Seq(
@@ -255,26 +244,20 @@ object MergeQueries {
     // id from the partition directory.
     Q("q_schema_evolution",
       (s, d) => {
-        val root = new java.io.File(
-          System.getProperty("java.io.tmpdir"),
-          "graft_schema_evo_" + Sinks.contentKey(d, "orders.parquet",
-            "evo|v1"))
-        val done = new java.io.File(root, "snap=2/_SUCCESS")
-        if (!done.exists()) {
+        val root = graft.ops.StoreGuard.directory("graft_schema_evo_" +
+            Sinks.contentKey(d, "orders.parquet", "evo|v1")) { dir =>
           val o = orders(s, d)
           o.filter(col("o_orderkey") % 2 === 0)
             .select(col("o_orderkey"), col("o_totalprice").as("price"),
               col("o_orderpriority").as("priority"))
-            .write.mode("overwrite")
-            .parquet(s"${root.getAbsolutePath}/snap=1")
+            .write.mode("overwrite").parquet(s"$dir/snap=1")
           o.filter(col("o_orderkey") % 2 === 1)
             .select(col("o_orderkey"), col("o_totalprice").as("price"),
               col("o_orderpriority").as("order_priority"),
               col("o_custkey").as("cust"))
-            .write.mode("overwrite")
-            .parquet(s"${root.getAbsolutePath}/snap=2")
+            .write.mode("overwrite").parquet(s"$dir/snap=2")
         }
-        graft.sources.Evolved.readMerged(s, root.getAbsolutePath,
+        graft.sources.Evolved.readMerged(s, root,
             renames = Map("priority" -> "order_priority"))
           .select(col("o_orderkey"), cents(col("price")).as("price_c"),
             col("order_priority"), col("cust"),

@@ -74,11 +74,7 @@ object MultimodalQueries {
         org.apache.spark.sql.DataFrame, ver: String = "v1"): String = {
     val tbl = s"media_${kind}_" +
       Sinks.contentKey(d, "documents.parquet", s"media$kind|$ver")
-    Sinks.buildOnce(s, tbl) {
-      // a previous session's warehouse directory may survive without
-      // the catalog entry (fresh in-memory catalog, shared cwd) — the
-      // CTAS would then throw locationAlreadyExists
-      graft.ops.Compaction.dropManagedTable(s, tbl)
+    graft.ops.StoreGuard.table(s, tbl) {
       val base = documents(s, d).filter(length(col("text")) >= 1)
         .select("doc_id", "text")
       val twins = documents(s, d).filter(length(col("text")) >= 60)
@@ -115,15 +111,11 @@ object MultimodalQueries {
     * [[prepares]]; the timed gate pays listing + read + decode — the
     * actual operator. */
   private val MediaShards = 256
-  private def mediaFilesDir(s: SparkSession, d: String): String = {
-    val dir = new java.io.File(System.getProperty("java.io.tmpdir"),
-      "graft_mediafiles_" +
-        Sinks.contentKey(d, "documents.parquet", "mediafiles|v2"))
-    val marker = new java.io.File(dir, "_GRAFT_COMPLETE")
-    if (!marker.exists()) {
-      val path = dir.getAbsolutePath
+  private def mediaFilesDir(s: SparkSession, d: String): String =
+    graft.ops.StoreGuard.directory("graft_mediafiles_" +
+        Sinks.contentKey(d, "documents.parquet", "mediafiles|v2")) { path =>
       (0 until MediaShards).foreach { sh =>
-        new java.io.File(dir, f"shard=$sh%03d").mkdirs()
+        new java.io.File(path, f"shard=$sh%03d").mkdirs()
       }
       s.table(mediaPngTable(s, d))
         .filter(col("doc_id") < TwinOffset)
@@ -145,10 +137,7 @@ object MultimodalQueries {
                 java.nio.file.StandardCopyOption.REPLACE_EXISTING)
             }
         }
-      marker.createNewFile()
     }
-    dir.getAbsolutePath
-  }
   private def mediaWavTable(s: SparkSession, d: String): String =
     mediaStore(s, d, "wav", Multimodal.renderWavCorpus)
   private def mediaGifTable(s: SparkSession, d: String): String =
@@ -166,8 +155,7 @@ object MultimodalQueries {
     val srcT = mediaPngTable(s, d)
     val tbl = "phash_idx_" +
       Sinks.contentKey(d, "documents.parquet", "phashix|v2")
-    Sinks.buildOnce(s, tbl) {
-      graft.ops.Compaction.dropManagedTable(s, tbl)
+    graft.ops.StoreGuard.table(s, tbl) {
       Multimodal.bandedPhash(
           Multimodal.pHashDecoded(s.table(srcT)
             .filter(col("doc_id") < 400 && col("n_chars") >= 60)).toDF())
@@ -182,17 +170,15 @@ object MultimodalQueries {
     * the shared [[graft.ops.Tombstones]] lifecycle. Partitioned by
     * band (4 partitions), the layout the index doc prescribes at
     * corpus scale — which also routes the compaction path through the
-    * partitioned two-phase swap. ensureBuilt re-runs the whole block
+    * partitioned two-phase swap. The guard re-runs the whole block
     * on a half-built store; re-delivered tombstones are harmless
     * (readers anti-join). */
   private def phashTdIndexTable(s: SparkSession, d: String): String = {
     val srcT = mediaPngTable(s, d)
     val tbl = "phash_td_" +
       Sinks.contentKey(d, "documents.parquet", "phashtd|v1")
-    Sinks.ensureBuilt(s, s"${tbl}_ok", requires = Seq(tbl)) {
-      graft.ops.Compaction.dropManagedTable(s, tbl)
-      graft.ops.Compaction.dropManagedTable(s,
-        graft.ops.Tombstones.table(tbl))
+    graft.ops.StoreGuard.tables(s, s"${tbl}_ok",
+      writes = Seq(tbl, graft.ops.Tombstones.table(tbl))) {
       Multimodal.bandedPhash(
           Multimodal.pHashDecoded(s.table(srcT)
             .filter(col("doc_id") < 400 && col("n_chars") >= 60)).toDF())

@@ -56,8 +56,7 @@ object SimQueries {
   private def corpusShingleTable(s: SparkSession, d: String): String = {
     val tbl = "sh_corpus_" +
       Sinks.contentKey(d, "documents.parquet", "sh3|v1")
-    Sinks.buildOnce(s, tbl) {
-      graft.ops.Compaction.dropManagedTable(s, tbl)
+    graft.ops.StoreGuard.table(s, tbl) {
       corpus(s, d)
         .withColumn("shingles", TextOps.wordShingles(col("text"), 3))
         .filter(size(col("shingles")) > 0)
@@ -77,11 +76,10 @@ object SimQueries {
   private def neardupComponents(s: SparkSession, d: String): DataFrame = {
     val tbl = "neardup_comp_" +
       Sinks.contentKey(d, "documents.parquet", "k32b16t800|v1")
-    Sinks.buildOnce(s, tbl) {
+    graft.ops.StoreGuard.table(s, tbl) {
       val docs = s.table(corpusShingleTable(s, d))
       val pairs = Similarity.nearDupPairs(docs, k = 32, bands = 16,
         thresholdMilli = 800)
-      graft.ops.Compaction.dropManagedTable(s, tbl)
       graft.ops.Components
         .connectedComponents(pairs.select("id_a", "id_b"))
         .write.format("parquet").mode("overwrite").saveAsTable(tbl)
@@ -91,17 +89,16 @@ object SimQueries {
 
   /** The persisted sign-LSH index both ANN-store gates probe
     * (plain + multiprobe): corpus minus the %7==3 holdout built, the
-    * holdout appended. Marker-guarded (Sinks.ensureBuilt) because the
-    * sequence is two writes — a death between build and append must
-    * re-run it, not leave the second consumer probing an index missing
-    * the holdout. */
+    * holdout appended. Marker-guarded because the sequence is two
+    * writes — a death between build and append must re-run it, not
+    * leave the second consumer probing an index missing the holdout. */
   private def lshIndexTable(s: SparkSession, d: String): String = {
     val emb = embeddings(s, d).select("vec_id", "embedding")
     val hyper = emb.filter(col("vec_id") < 16)
       .select(col("vec_id").as("h_id"), col("embedding").as("hv"))
     val tbl = "ann_lsh_idx_" +
       Sinks.contentKey(d, "embeddings.parquet", "signlsh|r4|v1")
-    Sinks.ensureBuilt(s, s"${tbl}_ok", requires = Seq(tbl)) {
+    graft.ops.StoreGuard.tables(s, s"${tbl}_ok", writes = Seq(tbl)) {
       graft.ops.AnnIndex.buildSignIndex(
         emb.filter(pmod(col("vec_id"), lit(7)) =!= 3),
         "vec_id", "embedding", hyper, rowsPerBand = 4, table = tbl,
@@ -121,8 +118,8 @@ object SimQueries {
     val emb = embeddings(s, d).select("vec_id", "embedding")
     val tbl = "ann_ivf_idx_" +
       Sinks.contentKey(d, "embeddings.parquet", "ivf8|v2")
-    Sinks.ensureBuilt(s, s"${tbl}_ok",
-      requires = Seq(tbl, graft.ops.AnnIndex.codebookTable(tbl))) {
+    graft.ops.StoreGuard.tables(s, s"${tbl}_ok",
+      writes = Seq(tbl, graft.ops.AnnIndex.codebookTable(tbl))) {
       val cents = emb.filter(col("vec_id") < 8)
         .select(col("vec_id").as("c_id"), col("embedding").as("cv"))
       graft.ops.AnnIndex.buildIvf(
@@ -147,13 +144,11 @@ object SimQueries {
     val key = Sinks.contentKey(d, "documents.parquet", "lshc|k32b16|v1")
     val bT = s"lsh_cbuckets_$key"
     val shT = s"lsh_cshingles_$key"
-    Sinks.ensureBuilt(s, s"lsh_corpus_${key}_ok",
-      requires = Seq(bT, shT)) {
+    graft.ops.StoreGuard.tables(s, s"lsh_corpus_${key}_ok",
+      writes = Seq(bT, shT)) {
       val cs = s.table(corpusShingleTable(s, d))
         .filter(col("id") < 1000000L)
-      graft.ops.Compaction.dropManagedTable(s, shT)
       cs.write.format("parquet").mode("overwrite").saveAsTable(shT)
-      graft.ops.Compaction.dropManagedTable(s, bT)
       Similarity.bucketize(s.table(shT), k = 32, bands = 16)
         .write.format("parquet").mode("overwrite").saveAsTable(bT)
     }
@@ -179,13 +174,11 @@ object SimQueries {
     val key = Sinks.contentKey(d, "documents.parquet", "contix|v1")
     val tokT = s"cont_ctokens_$key"
     val freqT = s"cont_cfreq_$key"
-    Sinks.ensureBuilt(s, s"cont_corpus_${key}_ok",
-      requires = Seq(tokT, freqT)) {
+    graft.ops.StoreGuard.tables(s, s"cont_corpus_${key}_ok",
+      writes = Seq(tokT, freqT)) {
       val toks = s.table(shT)
         .select(col("id"), explode(col("shingles")).as("t"))
-      graft.ops.Compaction.dropManagedTable(s, tokT)
       toks.write.format("parquet").mode("overwrite").saveAsTable(tokT)
-      graft.ops.Compaction.dropManagedTable(s, freqT)
       s.table(tokT).groupBy("t").agg(count(lit(1)).as("f"))
         .write.format("parquet").mode("overwrite").saveAsTable(freqT)
     }
@@ -206,7 +199,7 @@ object SimQueries {
       .select(col("vec_id").as("h_id"), col("embedding").as("hv"))
     val tbl = "ann_lsh_td_" +
       Sinks.contentKey(d, "embeddings.parquet", "signlsh-td|v1")
-    Sinks.ensureBuilt(s, s"${tbl}_ok", requires = Seq(tbl)) {
+    graft.ops.StoreGuard.tables(s, s"${tbl}_ok", writes = Seq(tbl)) {
       graft.ops.AnnIndex.buildSignIndex(emb, "vec_id", "embedding",
         hyper, rowsPerBand = 4, table = tbl, overwrite = true)
       graft.ops.AnnIndex.takedown(
@@ -321,7 +314,7 @@ object SimQueries {
   private def simhashDetected(s: SparkSession, d: String): DataFrame = {
     val tbl = "simhash_det_" +
       Sinks.contentKey(d, "documents.parquet", "h16|v1")
-    Sinks.buildOnce(s, tbl) {
+    graft.ops.StoreGuard.table(s, tbl) {
       val nPart = s.sessionState.conf.numShufflePartitions
       // first barrier spreads per-row hash work across cores (small
       // parquet = one input split); second materializes the signature
@@ -333,7 +326,6 @@ object SimQueries {
         .select(col("id").as("id_a"), col("sh").as("sh_a"))
       val b = sig.filter(col("id") >= 1000000L)
         .select((col("id") - 1000000L).as("id_a"), col("sh").as("sh_b"))
-      graft.ops.Compaction.dropManagedTable(s, tbl)
       a.join(b, "id_a")
         .select(col("id_a"),
           Similarity.hamming64(col("sh_a"), col("sh_b")).as("hamming"))

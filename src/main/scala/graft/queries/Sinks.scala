@@ -1,65 +1,9 @@
 package graft.queries
 
-/** Helpers for queries that write side-channel sinks (catalog tables
-  * produced inside a gate, reused across runs in a warm session). */
+/** Content keys for side-channel sinks and stores (catalog tables and
+  * directories reused across runs; [[graft.ops.StoreGuard]] builds
+  * them once). */
 object Sinks {
-
-  /** Run a MULTI-WRITE build sequence exactly once per marker: the
-    * marker table is created only after the whole sequence completes,
-    * so a run that dies between writes (build succeeded, append
-    * didn't; postings written, doc-stats not) re-runs the sequence on
-    * re-entry instead of a later gate silently serving a half-built
-    * store. Single-CTAS sinks don't need this — the catalog entry
-    * itself is their completion marker (CTAS registers only after a
-    * successful write).
-    *
-    * `requires` lists the DATA tables the marker vouches for: the
-    * marker alone is not trusted, because a maintenance pass can
-    * remove a data table while the marker survives (e.g.
-    * [[graft.ops.Compaction.compactPartitionedTable]] dying between
-    * its DROP and the staged RENAME) — if any required table is
-    * missing the marker is dropped and the sequence re-runs. */
-  def ensureBuilt(s: org.apache.spark.sql.SparkSession,
-                  marker: String, requires: Seq[String] = Seq.empty)
-                 (build: => Unit): Unit = {
-    // Per-marker JVM lock + session build log (see
-    // [[graft.ops.StoreLedger]]): Bench's parallel prepare pool may
-    // reach the SAME shared store from two threads — without the lock
-    // both see "not built" and race the overwrite. The second thread
-    // blocks, re-checks, and serves the finished store. Locks are per
-    // marker, so DISTINCT stores still build fully in parallel.
-    graft.ops.StoreLedger.lockFor(marker).synchronized {
-      val complete = s.catalog.tableExists(marker) &&
-        requires.forall(s.catalog.tableExists)
-      if (!complete) {
-        graft.ops.Compaction.dropManagedTable(s, marker)
-        build
-        import s.implicits._
-        Seq(1).toDF("ok").write.format("parquet")
-          .mode("overwrite").saveAsTable(marker)
-      }
-      graft.ops.StoreLedger.record(marker, ran = !complete,
-        tables = marker +: requires)
-    }
-  }
-
-  /** The single-CTAS sibling of [[ensureBuilt]]: run `build` once per
-    * `table` under the table's [[graft.ops.StoreLedger]] lock. For
-    * one-write sinks the catalog entry is the completion marker (CTAS
-    * registers only after a successful write), so no marker table is
-    * needed — but the LOCK is: Bench's parallel prepare pool reaches
-    * shared tables (the corpus shingle table feeds four prepares) from
-    * several threads, and two bare exists-checks then race the same
-    * output committer directory (observed: `_temporary/0 does not
-    * exist` on the shingle store, round 13). */
-  def buildOnce(s: org.apache.spark.sql.SparkSession, table: String)
-               (build: => Unit): Unit =
-    graft.ops.StoreLedger.lockFor(table).synchronized {
-      val exists = s.catalog.tableExists(table)
-      if (!exists) build
-      graft.ops.StoreLedger.record(table, ran = !exists,
-        tables = Seq(table))
-    }
 
   /** Content key for idempotent side-channel sinks: an MD5 over the
     * source file's actual BYTES (plus `extra`), so a regeneration that

@@ -43,12 +43,9 @@ object TextQueries {
     * archive carries. The raw-material store for the end-to-end
     * curation gate. */
   private def warcHtmlDir(s: org.apache.spark.sql.SparkSession,
-                          d: String): String = {
-    val dir = new java.io.File(System.getProperty("java.io.tmpdir"),
-      "graft_warchtml_" +
-        Sinks.contentKey(d, "documents.parquet", "warchtml|v1"))
-    val marker = new java.io.File(dir, "_GRAFT_COMPLETE")
-    if (!marker.exists()) {
+                          d: String): String =
+    graft.ops.StoreGuard.directory("graft_warchtml_" +
+        Sinks.contentKey(d, "documents.parquet", "warchtml|v1")) { dir =>
       val docs = documents(s, d).select("doc_id", "text")
       val crawled = docs.unionByName(docs.filter(col("doc_id") < 25)
         .select((col("doc_id") + 7000000L).as("doc_id"), col("text")))
@@ -61,23 +58,17 @@ object TextQueries {
             concat(lit("urn:graft:"), col("doc_id")).as("rid"),
             encode(concat(lit(HtmlPrefix), col("text"), lit(HtmlSuffix)),
               "UTF-8").as("payload")),
-        dir.getAbsolutePath)
-      marker.createNewFile()
+        dir)
     }
-    dir.getAbsolutePath
-  }
 
   /** Content-keyed gzip JSONL archive of the corpus — the standard
     * LLM-corpus interchange layout (one JSON doc per line, gzip
     * members): docs 7 and 13 are planted as BROKEN lines, the torn
     * writes / truncated uploads a real archive carries. */
   private def jsonlGzDir(s: org.apache.spark.sql.SparkSession,
-                         d: String): String = {
-    val dir = new java.io.File(System.getProperty("java.io.tmpdir"),
-      "graft_jsonlgz_" +
-        Sinks.contentKey(d, "documents.parquet", "jsonlgz|v1"))
-    val marker = new java.io.File(dir, "_GRAFT_COMPLETE")
-    if (!marker.exists()) {
+                         d: String): String =
+    graft.ops.StoreGuard.directory("graft_jsonlgz_" +
+        Sinks.contentKey(d, "documents.parquet", "jsonlgz|v1")) { dir =>
       val line = when(col("doc_id").isin(7L, 13L),
           concat(lit("{corrupt "), col("doc_id")))
         .otherwise(to_json(struct(col("doc_id"), col("text"),
@@ -85,11 +76,8 @@ object TextQueries {
       documents(s, d).select(line.as("value"))
         .repartition(4)
         .write.mode("overwrite").option("compression", "gzip")
-        .text(dir.getAbsolutePath)
-      marker.createNewFile()
+        .text(dir)
     }
-    dir.getAbsolutePath
-  }
 
   /** The 7-host robots fixture the governance gates share: three
     * classes planting specific-over-generic (rules AND crawl-delays),
@@ -222,8 +210,7 @@ object TextQueries {
                             d: String): String = {
     val tbl = "bpe_vocab_" +
       Sinks.contentKey(d, "documents.parquet", s"bpe|r$BpeRounds|v1")
-    Sinks.buildOnce(s, tbl) {
-      graft.ops.Compaction.dropManagedTable(s, tbl)
+    graft.ops.StoreGuard.table(s, tbl) {
       val res = TextOps.bpeTrain(documents(s, d), "text", BpeRounds)
       res.vocab.select("word", "n", "sym")
         .write.format("parquet").mode("overwrite").saveAsTable(tbl)

@@ -12,7 +12,8 @@ import scala.jdk.CollectionConverters._
   * [[graft.streaming.StreamingOps.session]], and every streaming fold,
   * AvailableNow run and fixture-layout dispatch goes through
   * [[graft.streaming.StreamingOps]], every gate's job group is set by
-  * [[Harness.runGate]]'s watchdog, and the set of `SPARK_GRAFT_*`
+  * [[Harness.runGate]]'s watchdog, every store is built through
+  * [[graft.ops.StoreGuard]], and the set of `SPARK_GRAFT_*`
   * environment knobs is pinned. */
 class SourceSweepSpec extends org.scalatest.funsuite.AnyFunSuite {
   private val root = Paths.get("src/main/scala/graft")
@@ -84,5 +85,12 @@ class SourceSweepSpec extends org.scalatest.funsuite.AnyFunSuite {
       "SPARK_GRAFT_CPUS", "SPARK_GRAFT_GATE_TIMEOUT_SEC", "SPARK_GRAFT_ONLY",
       "SPARK_GRAFT_SF_DIR", "SPARK_GRAFT_SKIP_SETUP"))
     assert(filesContaining("setJobGroup(") === Set("Harness.scala"))
+  }
+
+  test("store completion markers and ledger writes appear only in " +
+      "StoreGuard") {
+    for (needle <- Seq("_GRAFT_COMPLETE", "StoreLedger.lockFor(",
+        "StoreLedger.record("))
+      assert(filesContaining(needle) === Set("ops/StoreGuard.scala"), needle)
   }
 }

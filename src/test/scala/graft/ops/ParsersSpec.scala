@@ -36,13 +36,6 @@ class ParsersSpec extends SparkSpec {
     }
   }
 
-  test("areaSqm extracts sqm out of mixed area strings") {
-    val c = Parsers.areaSqm(col("v"))
-    assert(one(c, "1,184 sqft (110 sqm)") == 110)
-    assert(one(c, "(95 sqm)") == 95)
-    assert(one(c, "no area") == null)
-  }
-
   test("pricePsf extracts $/psf with commas") {
     val c = Parsers.pricePsf(col("v"))
     assert(one(c, "$1,523 psf") == 1523)
@@ -62,10 +55,6 @@ class ParsersSpec extends SparkSpec {
     assert(one(Parsers.agentRegNo(col("v")), "CEA R123456A") == "R123456A")
     assert(one(Parsers.agentIdAfterHash(col("v")), "agent#R123456A") ==
       "R123456A")
-  }
-
-  test("district number from D-token") {
-    assert(one(Parsers.districtFromD(col("v")), "D19") == 19)
   }
 
   test("facilities count: null stays null (reference semantics)") {

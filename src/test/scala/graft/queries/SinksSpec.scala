@@ -2,43 +2,9 @@ package graft.queries
 
 import graft.SparkSpec
 
-/** Pins the marker discipline of [[Sinks.ensureBuilt]]: the completion
-  * marker alone is not trusted — a missing DATA table (the
-  * compactPartitionedTable death window: DROP succeeded, staged RENAME
-  * didn't) must trigger a rebuild, not a NoSuchTableException at every
-  * later access. */
+/** Pins [[Sinks.contentKey]]: the key follows a source file's bytes,
+  * not its stat. */
 class SinksSpec extends SparkSpec {
-
-  private def mkTable(name: String): Unit = {
-    import spark.implicits._
-    graft.ops.Compaction.dropManagedTable(spark, name)
-    Seq(1).toDF("x").write.format("parquet").saveAsTable(name)
-  }
-
-  test("ensureBuilt re-runs the build when a required data table is " +
-      "missing even though the marker survives") {
-    var builds = 0
-    def build(): Unit = { builds += 1; mkTable("t_sinks_data") }
-
-    Seq("t_sinks_data", "t_sinks_data_ok")
-      .foreach(graft.ops.Compaction.dropManagedTable(spark, _))
-    Sinks.ensureBuilt(spark, "t_sinks_data_ok",
-      requires = Seq("t_sinks_data"))(build())
-    assert(builds == 1)
-    // marker + data present: no rebuild
-    Sinks.ensureBuilt(spark, "t_sinks_data_ok",
-      requires = Seq("t_sinks_data"))(build())
-    assert(builds == 1)
-    // simulate the maintenance-death window: data table gone, marker
-    // still standing — the next access must rebuild
-    graft.ops.Compaction.dropManagedTable(spark, "t_sinks_data")
-    Sinks.ensureBuilt(spark, "t_sinks_data_ok",
-      requires = Seq("t_sinks_data"))(build())
-    assert(builds == 2)
-    assert(spark.catalog.tableExists("t_sinks_data"))
-    Seq("t_sinks_data", "t_sinks_data_ok")
-      .foreach(graft.ops.Compaction.dropManagedTable(spark, _))
-  }
 
   test("contentKey changes when file bytes change, even at equal " +
       "length, and is stable across touches") {
