@@ -63,8 +63,7 @@ object BloomKernels {
   }
 
   /** Membership test straight off the serialized bytes — no
-    * deserialization per row; called from both eval and generated
-    * code (TextKernels pattern: one implementation, both paths). */
+    * deserialization per row. */
   def mightContain(bytes: Array[Byte], v: Long): Boolean = {
     val k = ((bytes(0) & 0xFF) << 24) | ((bytes(1) & 0xFF) << 16) |
       ((bytes(2) & 0xFF) << 8) | (bytes(3) & 0xFF)

@@ -8,10 +8,10 @@ import org.apache.spark.sql.types.{DataType, LongType, StringType}
 /** Native codegen'd containment similarity in floor-rounded
   * milli-units over two string arrays — C(A,B) = |A ∩ B| / |A|, the
   * asymmetric verify kernel of
-  * [[graft.ops.Similarity.containmentPairs]]. Same fused-loop shape
-  * as [[JaccardMilli]] (count the intersection without materializing
-  * `array_intersect`'s result); only the denominator differs: the
-  * LEFT (contained-candidate) side's raw length.
+  * [[graft.ops.Similarity.containmentPairs]]. Counts the intersection
+  * with [[JaccardMilli]]'s [[ArrayKernels.distinctOverlap]]; only the
+  * denominator differs: the LEFT (contained-candidate) side's raw
+  * length.
   *
   * Arithmetic is identical to the built-in formulation
   * `floor(1000.0 · |distinct(A) ∩ distinct(B)| / |A| + 0.5)` — callers
@@ -38,62 +38,15 @@ case class ContainmentMilli(left: Expression, right: Expression)
   override def nullSafeEval(a: Any, b: Any): Any = {
     val x = a.asInstanceOf[ArrayData]
     val y = b.asInstanceOf[ArrayData]
-    val xn = x.numElements(); val yn = y.numElements()
-    if (xn == 0) return null
-    val setA = new java.util.HashSet[Any](xn * 2)
-    var i = 0
-    while (i < xn) {
-      if (x.isNullAt(i)) return null
-      setA.add(x.getUTF8String(i)); i += 1
-    }
-    // count distinct elements of B present in A; `counted` dedups B
-    val counted = new java.util.HashSet[Any](yn * 2)
-    var inter = 0; i = 0
-    while (i < yn) {
-      if (y.isNullAt(i)) return null
-      val e = y.getUTF8String(i)
-      if (setA.contains(e) && counted.add(e)) inter += 1
-      i += 1
-    }
-    math.floor(1000.0 * inter / xn + 0.5).toLong
+    if (ArrayKernels.containmentIsNull(x, y)) null
+    else ArrayKernels.containmentMilli(x, y)
   }
 
   override protected def doGenCode(ctx: CodegenContext,
                                    ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i"); val xn = ctx.freshName("xn")
-      val yn = ctx.freshName("yn"); val setA = ctx.freshName("setA")
-      val counted = ctx.freshName("counted")
-      val inter = ctx.freshName("inter")
-      val e = ctx.freshName("e"); val poisoned = ctx.freshName("poisoned")
-      // raw types: Janino's generics support is not relied on by
-      // generated Spark code
-      s"""
-         |int $xn = $a.numElements(); int $yn = $b.numElements();
-         |boolean $poisoned = false;
-         |java.util.HashSet $setA = new java.util.HashSet($xn * 2);
-         |for (int $i = 0; $i < $xn; $i++) {
-         |  if ($a.isNullAt($i)) { $poisoned = true; break; }
-         |  $setA.add($a.getUTF8String($i));
-         |}
-         |int $inter = 0;
-         |java.util.HashSet $counted = new java.util.HashSet($yn * 2);
-         |if (!$poisoned) {
-         |  for (int $i = 0; $i < $yn; $i++) {
-         |    if ($b.isNullAt($i)) { $poisoned = true; break; }
-         |    org.apache.spark.unsafe.types.UTF8String $e =
-         |      $b.getUTF8String($i);
-         |    if ($setA.contains($e) && $counted.add($e)) $inter++;
-         |  }
-         |}
-         |if ($poisoned || $xn == 0) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  ${ev.value} = (long) java.lang.Math.floor(
-         |    1000.0 * $inter / $xn + 0.5);
-         |}
-       """.stripMargin
-    })
+    nullSafeCodeGen(ctx, ev, (a, b) => KernelCode.guarded(ev,
+      s"graft.functions.ArrayKernels.containmentIsNull($a, $b)",
+      s"graft.functions.ArrayKernels.containmentMilli($a, $b)"))
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): ContainmentMilli =

@@ -14,8 +14,8 @@ import org.apache.spark.sql.types.{DataType, LongType}
   * [[graft.ops.Similarity.cosineMilli]] (SURVEY.md §7.5: built-ins
   * first, custom Expression only where the bench demands). The HOF
   * form (`aggregate(zip_with(...))`) is interpreted per element and
-  * allocates a product array per pair; this expression is one fused
-  * primitive loop inside whole-stage codegen.
+  * allocates a product array per pair; this expression is one
+  * primitive loop that allocates nothing.
   *
   * IEEE-identical to the HOF form and the DuckDB oracle: elements cast
   * to double BEFORE multiply, sequential accumulation in index order,
@@ -47,44 +47,14 @@ case class CosineMilli(left: Expression, right: Expression)
   override def nullSafeEval(a: Any, b: Any): Any = {
     val x = a.asInstanceOf[ArrayData]
     val y = b.asInstanceOf[ArrayData]
-    val n = math.min(x.numElements(), y.numElements())
-    var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0
-    while (i < n) {
-      if (x.isNullAt(i) || y.isNullAt(i)) return null
-      val p = x.getFloat(i).toDouble
-      val q = y.getFloat(i).toDouble
-      dot += p * q; na += p * p; nb += q * q; i += 1
-    }
-    math.floor(1000.0 * (dot / (math.sqrt(na) * math.sqrt(nb))) + 0.5)
-      .toLong
+    if (ArrayKernels.anyNull(x, y)) null else ArrayKernels.cosineMilli(x, y)
   }
 
   override protected def doGenCode(ctx: CodegenContext,
                                    ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i"); val n = ctx.freshName("n")
-      val dot = ctx.freshName("dot"); val na = ctx.freshName("na")
-      val nb = ctx.freshName("nb")
-      val poisoned = ctx.freshName("poisoned")
-      s"""
-         |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-         |double $dot = 0.0; double $na = 0.0; double $nb = 0.0;
-         |boolean $poisoned = false;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  if ($a.isNullAt($i) || $b.isNullAt($i)) { $poisoned = true; break; }
-         |  double p = (double) $a.getFloat($i);
-         |  double q = (double) $b.getFloat($i);
-         |  $dot += p * q; $na += p * p; $nb += q * q;
-         |}
-         |if ($poisoned) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  ${ev.value} = (long) java.lang.Math.floor(
-         |    1000.0 * ($dot / (java.lang.Math.sqrt($na)
-         |                      * java.lang.Math.sqrt($nb))) + 0.5);
-         |}
-         |""".stripMargin
-    })
+    nullSafeCodeGen(ctx, ev, (a, b) => KernelCode.guarded(ev,
+      s"graft.functions.ArrayKernels.anyNull($a, $b)",
+      s"graft.functions.ArrayKernels.cosineMilli($a, $b)"))
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): CosineMilli =
@@ -96,7 +66,18 @@ case class CosineMilli(left: Expression, right: Expression)
   * resolves in any session with no registration step. [[natives]] is
   * the SQL spelling, injected by [[graft.GraftExtensions]] for
   * `spark.sql` users; GraftFunctionsSpec pins both spellings to the
-  * same expression. */
+  * same expression.
+  *
+  * One body per kernel: each scalar kernel's loop and null rules are
+  * written once, as a Scala method — on a plain object with no
+  * companion class ([[ArrayKernels]], [[TextKernels]],
+  * [[UnicodeKernels]], [[BloomKernels]]), so generated code can call
+  * its static forwarder, or on a reference object
+  * ([[SubwordMatcher]]). `nullSafeEval`/`eval` calls that method, and
+  * `doGenCode` emits only the call, behind the kernel's null-rule call
+  * when it returns a primitive ([[KernelCode]]). No loop is written a
+  * second time as Java source text; SourceSweepSpec fails on any
+  * `ctx.freshName(` in the main sources. */
 object GraftFunctions {
   /** Every native expression under its SQL function name. */
   val natives: Seq[(String, Class[_], Seq[Expression] => Expression)] =

@@ -1,9 +1,9 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression, XXH64}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 
 /** Analysis-time input checks shared by the native kernels: the
@@ -51,25 +51,6 @@ private[functions] object KernelCheck {
     }
 }
 
-/** Native codegen'd hash kernels for the similarity pipeline — the
-  * §7.5 escalation applied to the round-2 bench tail. The HOF forms
-  * ([[graft.ops.Similarity.minHashFromHashes]] / `simhash64` /
-  * `dotDouble`) are evaluated interpreted, re-traverse the input array
-  * once per seed/bit, and allocate an intermediate array per step;
-  * these expressions do the same arithmetic in one fused primitive
-  * loop inside whole-stage codegen.
-  *
-  * Bit-compatibility contract (pinned by NativeHashSpec): each kernel
-  * reproduces its HOF twin EXACTLY —
-  *  - `xxhash64(h, j)` with a long `h` and int literal `j` folds as
-  *    `XXH64.hashInt(j, XXH64.hashLong(h, 42))` (Spark's seed-chain),
-  *  - simhash majority/packing uses the same per-bit counts and
-  *    MSB-first fold,
-  *  - dot products cast each float to double BEFORE multiplying and
-  *    accumulate sequentially in index order (IEEE-identical to the
-  *    DuckDB oracle's list_sum mirror). */
-object HashExprs // scaladoc anchor
-
 /** `minhash_sig(hashes, k)`: the k-seed MinHash signature of a
   * pre-hashed shingle array — `array_min(transform(hashes, h =>
   * xxhash64(h, j)))` for j in [0, k), fused into one pass over the
@@ -98,54 +79,14 @@ case class MinHashSig(left: Expression, right: Expression)
     else KernelCheck.foldablePosInt(right, "minhash_sig k")
   }
 
-  override def nullSafeEval(h: Any, kk: Any): Any = {
-    val arr = h.asInstanceOf[ArrayData]
-    val n = arr.numElements()
-    val mins = Array.fill(k)(Long.MaxValue)
-    var i = 0
-    while (i < n) {
-      if (arr.isNullAt(i)) return null
-      val h1 = XXH64.hashLong(arr.getLong(i), 42L)
-      var j = 0
-      while (j < k) {
-        val v = XXH64.hashInt(j, h1)
-        if (v < mins(j)) mins(j) = v
-        j += 1
-      }
-      i += 1
-    }
-    new GenericArrayData(mins)
-  }
+  override def nullSafeEval(h: Any, kk: Any): Any =
+    ArrayKernels.minHashSig(h.asInstanceOf[ArrayData], k)
 
   override protected def doGenCode(ctx: CodegenContext,
                                    ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, _) => {
-      val xxh = classOf[XXH64].getName
-      val gad = classOf[GenericArrayData].getName
-      val i = ctx.freshName("i"); val j = ctx.freshName("j")
-      val n = ctx.freshName("n"); val mins = ctx.freshName("mins")
-      val h1 = ctx.freshName("h1"); val v = ctx.freshName("v")
-      val poisoned = ctx.freshName("poisoned")
-      s"""
-         |int $n = $a.numElements();
-         |long[] $mins = new long[$k];
-         |java.util.Arrays.fill($mins, java.lang.Long.MAX_VALUE);
-         |boolean $poisoned = false;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  if ($a.isNullAt($i)) { $poisoned = true; break; }
-         |  long $h1 = $xxh.hashLong($a.getLong($i), 42L);
-         |  for (int $j = 0; $j < $k; $j++) {
-         |    long $v = $xxh.hashInt($j, $h1);
-         |    if ($v < $mins[$j]) $mins[$j] = $v;
-         |  }
-         |}
-         |if ($poisoned) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  ${ev.value} = new $gad($mins);
-         |}
-         |""".stripMargin
-    })
+    nullSafeCodeGen(ctx, ev, (a, _) =>
+      KernelCode.nullable(ev,
+        s"graft.functions.ArrayKernels.minHashSig($a, $k)"))
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): MinHashSig =
@@ -168,57 +109,15 @@ case class SimHashPack(child: Expression) extends UnaryExpression {
 
   override def nullSafeEval(h: Any): Any = {
     val arr = h.asInstanceOf[ArrayData]
-    val n = arr.numElements()
-    val counts = new Array[Int](64)
-    var i = 0
-    while (i < n) {
-      if (arr.isNullAt(i)) return null
-      val v = arr.getLong(i)
-      var b = 0
-      while (b < 64) {
-        counts(b) += ((v >>> b) & 1L).toInt
-        b += 1
-      }
-      i += 1
-    }
-    var acc = 0L
-    var b = 0
-    while (b < 64) {
-      acc = (acc << 1) | (if (counts(b) * 2 > n) 1L else 0L)
-      b += 1
-    }
-    acc
+    if (TextKernels.hasNullElement(arr)) null
+    else ArrayKernels.simhashPack(arr)
   }
 
   override protected def doGenCode(ctx: CodegenContext,
                                    ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
-      val i = ctx.freshName("i"); val b = ctx.freshName("b")
-      val n = ctx.freshName("n"); val counts = ctx.freshName("counts")
-      val v = ctx.freshName("v"); val acc = ctx.freshName("acc")
-      val poisoned = ctx.freshName("poisoned")
-      s"""
-         |int $n = $a.numElements();
-         |int[] $counts = new int[64];
-         |boolean $poisoned = false;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  if ($a.isNullAt($i)) { $poisoned = true; break; }
-         |  long $v = $a.getLong($i);
-         |  for (int $b = 0; $b < 64; $b++) {
-         |    $counts[$b] += (int) (($v >>> $b) & 1L);
-         |  }
-         |}
-         |if ($poisoned) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  long $acc = 0L;
-         |  for (int $b = 0; $b < 64; $b++) {
-         |    $acc = ($acc << 1) | (($counts[$b] * 2 > $n) ? 1L : 0L);
-         |  }
-         |  ${ev.value} = $acc;
-         |}
-         |""".stripMargin
-    })
+    nullSafeCodeGen(ctx, ev, a => KernelCode.guarded(ev,
+      s"graft.functions.TextKernels.hasNullElement($a)",
+      s"graft.functions.ArrayKernels.simhashPack($a)"))
 
   override protected def withNewChildInternal(
       newChild: Expression): SimHashPack = copy(child = newChild)
@@ -247,37 +146,14 @@ case class DotDouble(left: Expression, right: Expression)
   override def nullSafeEval(a: Any, b: Any): Any = {
     val x = a.asInstanceOf[ArrayData]
     val y = b.asInstanceOf[ArrayData]
-    val n = math.min(x.numElements(), y.numElements())
-    var dot = 0.0; var i = 0
-    while (i < n) {
-      if (x.isNullAt(i) || y.isNullAt(i)) return null
-      dot += x.getFloat(i).toDouble * y.getFloat(i).toDouble
-      i += 1
-    }
-    dot
+    if (ArrayKernels.anyNull(x, y)) null else ArrayKernels.dotDouble(x, y)
   }
 
   override protected def doGenCode(ctx: CodegenContext,
                                    ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i"); val n = ctx.freshName("n")
-      val dot = ctx.freshName("dot")
-      val poisoned = ctx.freshName("poisoned")
-      s"""
-         |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-         |double $dot = 0.0;
-         |boolean $poisoned = false;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  if ($a.isNullAt($i) || $b.isNullAt($i)) { $poisoned = true; break; }
-         |  $dot += (double) $a.getFloat($i) * (double) $b.getFloat($i);
-         |}
-         |if ($poisoned) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  ${ev.value} = $dot;
-         |}
-         |""".stripMargin
-    })
+    nullSafeCodeGen(ctx, ev, (a, b) => KernelCode.guarded(ev,
+      s"graft.functions.ArrayKernels.anyNull($a, $b)",
+      s"graft.functions.ArrayKernels.dotDouble($a, $b)"))
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): DotDouble =

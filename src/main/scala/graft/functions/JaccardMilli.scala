@@ -12,8 +12,8 @@ import org.apache.spark.sql.types.{DataType, LongType, StringType}
   * incremental near-dup, component build). The built-in form pays a
   * generic `array_intersect` (per-row hash-set machinery through the
   * interpreted ArrayIntersect path plus a materialized result array
-  * whose only use is `size`); this expression is one fused loop that
-  * counts the intersection without building it.
+  * whose only use is `size`); this expression counts the
+  * intersection without building it ([[ArrayKernels.distinctOverlap]]).
   *
   * Arithmetic is IDENTICAL to the built-in form on any input:
   * `inter` = |distinct(A) ∩ distinct(B)| (array_intersect semantics),
@@ -44,64 +44,15 @@ case class JaccardMilli(left: Expression, right: Expression)
   override def nullSafeEval(a: Any, b: Any): Any = {
     val x = a.asInstanceOf[ArrayData]
     val y = b.asInstanceOf[ArrayData]
-    val xn = x.numElements(); val yn = y.numElements()
-    val setA = new java.util.HashSet[Any](xn * 2)
-    var i = 0
-    while (i < xn) {
-      if (x.isNullAt(i)) return null
-      setA.add(x.getUTF8String(i)); i += 1
-    }
-    // count distinct elements of B present in A; `counted` dedups B
-    val counted = new java.util.HashSet[Any](yn * 2)
-    var inter = 0; i = 0
-    while (i < yn) {
-      if (y.isNullAt(i)) return null
-      val e = y.getUTF8String(i)
-      if (setA.contains(e) && counted.add(e)) inter += 1
-      i += 1
-    }
-    val union = xn + yn - inter
-    if (union == 0) null
-    else math.floor(1000.0 * inter / union + 0.5).toLong
+    if (ArrayKernels.jaccardIsNull(x, y)) null
+    else ArrayKernels.jaccardMilli(x, y)
   }
 
   override protected def doGenCode(ctx: CodegenContext,
                                    ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i"); val xn = ctx.freshName("xn")
-      val yn = ctx.freshName("yn"); val setA = ctx.freshName("setA")
-      val counted = ctx.freshName("counted")
-      val inter = ctx.freshName("inter"); val union = ctx.freshName("u")
-      val e = ctx.freshName("e"); val poisoned = ctx.freshName("poisoned")
-      // raw types: Janino's generics support is not relied on by
-      // generated Spark code
-      s"""
-         |int $xn = $a.numElements(); int $yn = $b.numElements();
-         |boolean $poisoned = false;
-         |java.util.HashSet $setA = new java.util.HashSet($xn * 2);
-         |for (int $i = 0; $i < $xn; $i++) {
-         |  if ($a.isNullAt($i)) { $poisoned = true; break; }
-         |  $setA.add($a.getUTF8String($i));
-         |}
-         |int $inter = 0;
-         |java.util.HashSet $counted = new java.util.HashSet($yn * 2);
-         |if (!$poisoned) {
-         |  for (int $i = 0; $i < $yn; $i++) {
-         |    if ($b.isNullAt($i)) { $poisoned = true; break; }
-         |    org.apache.spark.unsafe.types.UTF8String $e =
-         |      $b.getUTF8String($i);
-         |    if ($setA.contains($e) && $counted.add($e)) $inter++;
-         |  }
-         |}
-         |int $union = $xn + $yn - $inter;
-         |if ($poisoned || $union == 0) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  ${ev.value} = (long) java.lang.Math.floor(
-         |    1000.0 * $inter / $union + 0.5);
-         |}
-       """.stripMargin
-    })
+    nullSafeCodeGen(ctx, ev, (a, b) => KernelCode.guarded(ev,
+      s"graft.functions.ArrayKernels.jaccardIsNull($a, $b)",
+      s"graft.functions.ArrayKernels.jaccardMilli($a, $b)"))
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): JaccardMilli =

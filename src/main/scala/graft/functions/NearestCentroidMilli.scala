@@ -2,7 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, QuaternaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, QuaternaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StructField, StructType}
@@ -21,8 +21,8 @@ import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StructField,
   * k = 8; at the SemDeDup scale shape (k grows with n, r15 sf10:
   * k = 400 over 400k vectors × 3 assignment passes) that is ~1e8
   * interpreted lambda evaluations and the gate blew a 900 s watchdog.
-  * This kernel is the same arithmetic in one fused long-loop —
-  * `(k·dim)` multiply-adds per row inside whole-stage codegen.
+  * This kernel is the same arithmetic as `(k·dim)` long multiply-adds
+  * per row in one compiled method, [[ArrayKernels.nearestCentroidMilli]].
   *
   * Arguments, all but the first FOLDABLE: (qv array<long>; centsFlat
   * array<long> — k centroids of `dim` longs concatenated in ASCENDING
@@ -62,9 +62,11 @@ case class NearestCentroidMilli(first: Expression, second: Expression,
     else TypeCheckResult.TypeCheckSuccess
   }
 
-  /** The codebook, unpacked once per task from the foldable literals. */
-  @transient private lazy val flat: Array[Long] =
-    second.eval(null).asInstanceOf[ArrayData].toLongArray()
+  /** The codebook, unpacked and checked once per task from the
+    * foldable literals. Both paths read `flat` and `cids`, so both fire
+    * the checks. */
+  @transient private lazy val dim: Int =
+    fourth.eval(null).asInstanceOf[Int]
   @transient private lazy val cids: Array[Long] = {
     val c = third.eval(null).asInstanceOf[ArrayData].toLongArray()
     require((1 until c.length).forall(i => c(i - 1) < c(i)),
@@ -72,75 +74,30 @@ case class NearestCentroidMilli(first: Expression, second: Expression,
         "(the strict-< scan's tie rule depends on it)")
     c
   }
-  @transient private lazy val dim: Int =
-    fourth.eval(null).asInstanceOf[Int]
-  @transient private lazy val k: Int = {
-    require(dim > 0 && flat.length == cids.length * dim,
-      s"nearest_centroid_milli: ${flat.length} codebook longs do not " +
+  @transient private lazy val flat: Array[Long] = {
+    val f = second.eval(null).asInstanceOf[ArrayData].toLongArray()
+    require(dim > 0 && f.length == cids.length * dim,
+      s"nearest_centroid_milli: ${f.length} codebook longs do not " +
         s"tile ${cids.length} cids by dim=$dim")
-    cids.length
+    f
   }
 
   override def eval(input: InternalRow): Any = {
     val q = first.eval(input)
-    if (q == null) return null
-    val a = q.asInstanceOf[ArrayData]
-    if (a.numElements() != dim) return null
-    var j = 0
-    while (j < dim) { if (a.isNullAt(j)) return null; j += 1 }
-    var bestD = Long.MaxValue
-    var bestC = -1L
-    var c = 0
-    while (c < k) {
-      var s = 0L
-      val base = c * dim
-      j = 0
-      while (j < dim) {
-        val diff = flat(base + j) - a.getLong(j)
-        s += diff * diff
-        j += 1
-      }
-      // strict <: ascending-cid order keeps the smaller cid on ties
-      if (s < bestD) { bestD = s; bestC = cids(c) }
-      c += 1
-    }
-    new GenericInternalRow(Array[Any](bestD, bestC))
+    if (q == null) null
+    else ArrayKernels.nearestCentroidMilli(q.asInstanceOf[ArrayData],
+      flat, cids, dim)
   }
 
   override protected def doGenCode(ctx: CodegenContext,
                                    ev: ExprCode): ExprCode =
-    // fused loop against referenced long[]s; the literal children
-    // never reach generated code (k/dim inline as constants)
+    // the literal children never reach generated code: the codebook
+    // rides as reference objects, dim inlines as a constant
     nullSafeCodeGen(ctx, ev, (q, _, _, _) => {
       val flatRef = ctx.addReferenceObj("centsFlat", flat, "long[]")
       val cidsRef = ctx.addReferenceObj("cids", cids, "long[]")
-      val c = ctx.freshName("c"); val j = ctx.freshName("j")
-      val s = ctx.freshName("s"); val base = ctx.freshName("base")
-      val bestD = ctx.freshName("bestD"); val bestC = ctx.freshName("bestC")
-      val diff = ctx.freshName("diff"); val bad = ctx.freshName("bad")
-      s"""
-         |boolean $bad = $q.numElements() != $dim;
-         |for (int $j = 0; !$bad && $j < $dim; $j++) {
-         |  if ($q.isNullAt($j)) { $bad = true; }
-         |}
-         |if ($bad) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  long $bestD = Long.MAX_VALUE; long $bestC = -1L;
-         |  for (int $c = 0; $c < $k; $c++) {
-         |    long $s = 0L; int $base = $c * $dim;
-         |    for (int $j = 0; $j < $dim; $j++) {
-         |      long $diff = $flatRef[$base + $j] - $q.getLong($j);
-         |      $s += $diff * $diff;
-         |    }
-         |    if ($s < $bestD) { $bestD = $s; $bestC = $cidsRef[$c]; }
-         |  }
-         |  ${ev.value} = new org.apache.spark.sql.catalyst.expressions
-         |    .GenericInternalRow(new Object[] {
-         |      java.lang.Long.valueOf($bestD),
-         |      java.lang.Long.valueOf($bestC) });
-         |}
-       """.stripMargin
+      KernelCode.nullable(ev, "graft.functions.ArrayKernels" +
+        s".nearestCentroidMilli($q, $flatRef, $cidsRef, $dim)")
     })
 
   override protected def withNewChildrenInternal(

@@ -3,7 +3,6 @@ package graft.functions
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 
 /** Native codegen'd intersection of two SORTED-ASCENDING, DISTINCT,
@@ -37,43 +36,14 @@ case class SortedIntersectLongs(left: Expression, right: Expression)
     else KernelCheck.arrayOf(LongType, right, "sorted_intersect_longs right")
   }
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    val xn = x.numElements(); val yn = y.numElements()
-    val buf = new Array[Long](math.min(xn, yn))
-    var i = 0; var j = 0; var k = 0
-    while (i < xn && j < yn) {
-      val xv = x.getLong(i); val yv = y.getLong(j)
-      if (xv < yv) i += 1
-      else if (xv > yv) j += 1
-      else { buf(k) = xv; k += 1; i += 1; j += 1 }
-    }
-    UnsafeArrayData.fromPrimitiveArray(java.util.Arrays.copyOf(buf, k))
-  }
+  override def nullSafeEval(a: Any, b: Any): Any =
+    ArrayKernels.sortedIntersectLongs(a.asInstanceOf[ArrayData],
+      b.asInstanceOf[ArrayData])
 
   override protected def doGenCode(ctx: CodegenContext,
                                    ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i"); val j = ctx.freshName("j")
-      val k = ctx.freshName("k"); val xn = ctx.freshName("xn")
-      val yn = ctx.freshName("yn"); val buf = ctx.freshName("buf")
-      val xv = ctx.freshName("xv"); val yv = ctx.freshName("yv")
-      s"""
-         |int $xn = $a.numElements(); int $yn = $b.numElements();
-         |long[] $buf = new long[java.lang.Math.min($xn, $yn)];
-         |int $i = 0; int $j = 0; int $k = 0;
-         |while ($i < $xn && $j < $yn) {
-         |  long $xv = $a.getLong($i); long $yv = $b.getLong($j);
-         |  if ($xv < $yv) { $i++; }
-         |  else if ($xv > $yv) { $j++; }
-         |  else { $buf[$k++] = $xv; $i++; $j++; }
-         |}
-         |${ev.value} = org.apache.spark.sql.catalyst.expressions
-         |  .UnsafeArrayData.fromPrimitiveArray(
-         |    java.util.Arrays.copyOf($buf, $k));
-       """.stripMargin
-    })
+    nullSafeCodeGen(ctx, ev, (a, b) => s"${ev.value} = " +
+      s"graft.functions.ArrayKernels.sortedIntersectLongs($a, $b);")
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): SortedIntersectLongs =

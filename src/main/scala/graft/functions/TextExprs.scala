@@ -10,12 +10,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * [[graft.ops.TextOps]] stay as the documented reference
   * formulations; these expressions compute the same values in single
   * fused loops (no per-character UTF8String allocation, no
-  * interpreted lambda dispatch per element).
-  *
-  * Each kernel body lives in [[TextKernels]] as a plain JVM method so
-  * eval and codegen share one implementation — generated code is a
-  * single static-forwarder call, which keeps the surrounding
-  * projection inside whole-stage codegen. */
+  * interpreted lambda dispatch per element). */
 object TextKernels {
 
   /** Null-element scan shared by the array kernels' null-poison
@@ -259,14 +254,9 @@ case class RollingHash(child: Expression) extends UnaryExpression {
   }
   override protected def doGenCode(ctx: CodegenContext,
                                    ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"""
-         |if (graft.functions.TextKernels.hasNullElement($c)) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  ${ev.value} = graft.functions.TextKernels.rollingHash($c);
-         |}
-         |""".stripMargin)
+    nullSafeCodeGen(ctx, ev, c => KernelCode.guarded(ev,
+      s"graft.functions.TextKernels.hasNullElement($c)",
+      s"graft.functions.TextKernels.rollingHash($c)"))
   override protected def withNewChildInternal(
       newChild: Expression): RollingHash = copy(child = newChild)
 }
@@ -299,14 +289,9 @@ case class CdcBounds(left: Expression, right: Expression)
   }
   override protected def doGenCode(ctx: CodegenContext,
                                    ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (c, _) =>
-      s"""
-         |if (graft.functions.TextKernels.hasNullElement($c)) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  ${ev.value} = graft.functions.TextKernels.cdcBounds($c, $mask);
-         |}
-         |""".stripMargin)
+    nullSafeCodeGen(ctx, ev, (c, _) => KernelCode.guarded(ev,
+      s"graft.functions.TextKernels.hasNullElement($c)",
+      s"graft.functions.TextKernels.cdcBounds($c, $mask)"))
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): CdcBounds =
     copy(left = newLeft, right = newRight)
@@ -329,9 +314,9 @@ final class SubwordMatcher(vocab: Seq[String]) extends Serializable {
     vocab.foreach(v => a(v.length).add(v))
     a
   }
-  /** Packed counts: (n_subwords << 32) | n_unk. Every emitted token —
-    * vocabulary hit or UNK — counts toward n_subwords. */
-  def stats(s: UTF8String): Long = {
+  /** `[n_subwords, n_unk]`. Every emitted token — vocabulary hit or
+    * UNK — counts toward n_subwords. */
+  def stats(s: UTF8String): ArrayData = {
     val str = s.toString
     val n = str.length
     var pos = 0; var nTok = 0; var nUnk = 0
@@ -346,7 +331,7 @@ final class SubwordMatcher(vocab: Seq[String]) extends Serializable {
       if (matched == 0) { nUnk += 1; pos += 1 } else pos += matched
       nTok += 1
     }
-    (nTok.toLong << 32) | (nUnk.toLong & 0xFFFFFFFFL)
+    new GenericArrayData(Array(nTok, nUnk))
   }
 }
 
@@ -394,22 +379,13 @@ case class SubwordStats(left: Expression, right: Expression)
       }
     }
   }
-  override def nullSafeEval(s: Any, v: Any): Any = {
-    val packed = matcher.stats(s.asInstanceOf[UTF8String])
-    new GenericArrayData(
-      Array((packed >>> 32).toInt, packed.toInt))
-  }
+  override def nullSafeEval(s: Any, v: Any): Any =
+    matcher.stats(s.asInstanceOf[UTF8String])
   override protected def doGenCode(ctx: CodegenContext,
                                    ev: ExprCode): ExprCode = {
     val m = ctx.addReferenceObj("subwordMatcher", matcher,
       classOf[SubwordMatcher].getName)
-    val packed = ctx.freshName("packed")
-    nullSafeCodeGen(ctx, ev, (s, _) =>
-      s"""
-         |long $packed = $m.stats($s);
-         |${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData(
-         |  new int[] {(int) ($packed >>> 32), (int) $packed});
-         |""".stripMargin)
+    nullSafeCodeGen(ctx, ev, (s, _) => s"${ev.value} = $m.stats($s);")
   }
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): SubwordStats =

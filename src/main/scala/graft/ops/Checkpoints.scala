@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.storage.StorageLevel
+import scala.util.control.NonFatal
 
 /** Freeing `localCheckpoint()` storage deterministically.
   *
@@ -125,5 +126,9 @@ object Checkpoints {
       case lr: org.apache.spark.sql.execution.LogicalRDD =>
         lr.rdd.unpersist(blocking = false)
       case _ => ()
-    } catch { case _: Throwable => () }
+    } catch {
+      // callers free in `finally`: a throw here would mask the gate's
+      // own error
+      case NonFatal(_) => ()
+    }
 }

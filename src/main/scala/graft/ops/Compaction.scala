@@ -106,21 +106,17 @@ object Compaction {
 
   /** Rewrite the parquet directory at `inPath` into
     * `ceil(inputBytes / targetBytes)` similarly-sized files at
-    * `outPath` and return the compacted relation. Idempotent per
-    * outPath (skips when _SUCCESS exists — content-keyed out paths
-    * make staleness the caller's contract). */
+    * `outPath` (overwritten) and return the compacted relation. A
+    * caller that reuses the output builds it through
+    * [[StoreGuard.directory]]. */
   def compact(spark: SparkSession, inPath: String, outPath: String,
               targetBytes: Long): DataFrame = {
     require(targetBytes > 0, "targetBytes must be positive")
-    val fs = new Path(outPath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(new Path(outPath, "_SUCCESS"))) {
-      val bytes = dataBytes(spark, inPath)
-      val nFiles = math.max(1L, (bytes + targetBytes - 1) / targetBytes).toInt
-      spark.read.parquet(inPath)
-        .repartition(nFiles)
-        .write.mode("overwrite").parquet(outPath)
-    }
+    val bytes = dataBytes(spark, inPath)
+    val nFiles = math.max(1L, (bytes + targetBytes - 1) / targetBytes).toInt
+    spark.read.parquet(inPath)
+      .repartition(nFiles)
+      .write.mode("overwrite").parquet(outPath)
     spark.read.parquet(outPath)
   }
 }

@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.functions.GraftFunctions
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -16,14 +17,6 @@ import org.apache.spark.sql.types._
   *  - Verification (exact Jaccard) runs only on candidate pairs.
   *  - Cosine: query side broadcast; scan side streams — no shuffle. */
 object Similarity {
-
-  /** k MinHash values of a (distinct) shingle array: for each seed j,
-    * min over shingles of xxhash64(shingle, j). Prefer
-    * [[minHashFromHashes]] over pre-hashed longs in pipelines — this
-    * form re-hashes the string bytes k times per row. */
-  def minHashSignature(shingles: Column, k: Int): Column =
-    transform(sequence(lit(0), lit(k - 1)), j =>
-      array_min(transform(shingles, s => xxhash64(s, j))))
 
   /** k MinHash values derived from PRE-HASHED shingle longs: the
     * string bytes are hashed once (upstream, materialized), each seed
@@ -114,7 +107,7 @@ object Similarity {
     // array_min(transform(...)) traversals — bit-identical signature
     hashed
       .select(col("id"),
-        graft.functions.GraftFunctions.minHashSig(col("__sh"), k)
+        GraftFunctions.minHashSig(col("__sh"), k)
           .as("__sig"))
       .select(col("id"),
         explode(lshBuckets(col("__sig"), bands, r)).as("__bucket"))
@@ -132,21 +125,14 @@ object Similarity {
 
   /** Exact Jaccard similarity of two distinct-element arrays, in
     * floor-rounded milli-units (engine-exact integer). Built-in form —
-    * [[jaccardMilliFast]] is the arithmetic-identical native kernel
-    * the hot verify paths use. */
+    * [[GraftFunctions.jaccardMilli]] is the arithmetic-identical native
+    * kernel the hot verify paths use (equivalence pinned in
+    * SimilaritySpec). */
   def jaccardMilli(a: Column, b: Column): Column = {
     val inter = size(array_intersect(a, b))
     val union = size(a) + size(b) - inter
     floor(lit(1000.0) * inter / union + 0.5).cast(LongType)
   }
-
-  /** [[jaccardMilli]] via the native fused kernel
-    * (functions.JaccardMilli): counts the intersection in one loop
-    * instead of materializing `array_intersect`'s result array just to
-    * take its size — bit-identical milli values (equivalence pinned in
-    * SimilaritySpec). */
-  def jaccardMilliFast(a: Column, b: Column): Column =
-    graft.functions.GraftFunctions.jaccardMilli(a, b)
 
   /** MinHash-LSH near-duplicate pairs with exact-Jaccard verification:
     * candidates from [[lshCandidatePairs]], kept iff the true shingle
@@ -169,7 +155,8 @@ object Similarity {
     val sa = mat.select(col("id").as("id_a"), col("shingles").as("sh_a"))
     val sb = mat.select(col("id").as("id_b"), col("shingles").as("sh_b"))
     cands.join(sa, "id_a").join(sb, "id_b")
-      .withColumn("jaccard_milli", jaccardMilliFast(col("sh_a"), col("sh_b")))
+      .withColumn("jaccard_milli",
+        GraftFunctions.jaccardMilli(col("sh_a"), col("sh_b")))
       .filter(col("jaccard_milli") >= thresholdMilli)
       .select("id_a", "id_b", "jaccard_milli")
   }
@@ -302,7 +289,8 @@ object Similarity {
         "id_a")
       .join(mat.select(col("id").as("id_b"), col("shingles").as("sh_b")),
         "id_b")
-      .withColumn("jaccard_milli", jaccardMilliFast(col("sh_a"), col("sh_b")))
+      .withColumn("jaccard_milli",
+        GraftFunctions.jaccardMilli(col("sh_a"), col("sh_b")))
       .filter(col("jaccard_milli") >= thresholdMilli)
       .select("id_a", "id_b", "jaccard_milli")
   }
@@ -373,7 +361,7 @@ object Similarity {
       .join(mat.select(col("id").as("id_b"), col("shingles").as("sh_b")),
         "id_b")
       .withColumn("containment_milli",
-        graft.functions.GraftFunctions.containmentMilli(
+        GraftFunctions.containmentMilli(
           col("sh_a"), col("sh_b")))
       .filter(col("containment_milli") >= thresholdMilli)
       .select("id_a", "id_b", "containment_milli")
@@ -437,7 +425,7 @@ object Similarity {
       .join(corpusShingles.select(col("id").as("id_corpus"),
         col("shingles").as("sh_b")), "id_corpus")
       .withColumn("containment_milli",
-        graft.functions.GraftFunctions.containmentMilli(
+        GraftFunctions.containmentMilli(
           col("sh_a"), col("sh_b")))
       .filter(col("containment_milli") >= thresholdMilli)
       .select("id_new", "id_corpus", "containment_milli")
@@ -467,7 +455,8 @@ object Similarity {
         "id_new")
       .join(corpusShingles.select(col("id").as("id_corpus"),
         col("shingles").as("sh_b")), "id_corpus")
-      .withColumn("jaccard_milli", jaccardMilliFast(col("sh_a"), col("sh_b")))
+      .withColumn("jaccard_milli",
+        GraftFunctions.jaccardMilli(col("sh_a"), col("sh_b")))
       .filter(col("jaccard_milli") >= thresholdMilli)
       .select("id_new", "id_corpus", "jaccard_milli")
   }
@@ -504,7 +493,7 @@ object Similarity {
     * packing in a single codegen loop — bit-identical signatures,
     * without 64 interpreted array traversals per row. */
   def simhash64Fast(text: Column): Column =
-    graft.functions.GraftFunctions.simhashPack(
+    GraftFunctions.simhashPack(
       transform(TextOps.tokens(text), t => xxhash64(t)))
 
   /** Hamming distance between two packed 64-bit simhashes. */
@@ -532,8 +521,7 @@ object Similarity {
         expr(s"h_id div $rowsPerBand").as("band"),
         // native dot kernel: same sequential IEEE sum as [[dotDouble]]
         // without the per-pair product-array allocation
-        when(graft.functions.GraftFunctions
-            .dotDouble(col(vecCol), col("hv")) > 0,
+        when(GraftFunctions.dotDouble(col(vecCol), col("hv")) > 0,
           call_function("shiftleft", lit(1L),
             pmod(col("h_id"), lit(rowsPerBand)).cast(IntegerType)))
           .otherwise(lit(0L)).as("bit"))

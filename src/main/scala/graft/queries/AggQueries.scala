@@ -32,12 +32,16 @@ object AggQueries {
                          extra: String = ""): String =
     Sinks.contentKey(d, file, extra)
 
+  /** Content key of the fragmented lineitem copy and of its compacted
+    * output. */
+  private def fragKey(d: String): String =
+    contentKey(d, "lineitem.parquet", "frag64|target4m")
+
   /** The deliberately-fragmented lineitem copy q_compact_roundtrip
     * compacts (64 small files — the small-file problem as a fixture).
     * Content-keyed. */
   private def fragDir(s: SparkSession, d: String): String =
-    graft.ops.StoreGuard.directory("graft_frag_" +
-        contentKey(d, "lineitem.parquet", "frag64|target4m")) { dir =>
+    graft.ops.StoreGuard.directory("graft_frag_" + fragKey(d)) { dir =>
       lineitem(s, d).repartition(64).write.mode("overwrite").parquet(dir)
     }
 
@@ -1083,13 +1087,15 @@ object AggQueries {
     // lineitem deliberately fragmented into 64 files, compacted back to
     // ~4 MB targets, then aggregated — the oracle is the plain table:
     // compaction must be row-invisible. File-count behavior is pinned
-    // in CompactionSpec; paths are content-keyed + idempotent.
+    // in CompactionSpec; the output is a content-keyed directory store.
     Q("q_compact_roundtrip",
       (s, d) => {
-        val key = contentKey(d, "lineitem.parquet", "frag64|target4m")
         val frag = fragDir(s, d)
-        graft.ops.Compaction.compact(s, frag, s"/tmp/graft_compact_$key",
-            targetBytes = 4L << 20)
+        val out = graft.ops.StoreGuard.directory(
+            "graft_compact_" + fragKey(d)) { dir =>
+          graft.ops.Compaction.compact(s, frag, dir, targetBytes = 4L << 20)
+        }
+        s.read.parquet(out)
           .groupBy("l_returnflag")
           .agg(count(lit(1)).as("cnt"),
             sum(cents(col("l_quantity"))).as("sum_qty_c"))

@@ -13,7 +13,8 @@ import scala.jdk.CollectionConverters._
   * AvailableNow run and fixture-layout dispatch goes through
   * [[graft.streaming.StreamingOps]], every gate's job group is set by
   * [[Harness.runGate]]'s watchdog, every store is built through
-  * [[graft.ops.StoreGuard]], and the set of `SPARK_GRAFT_*`
+  * [[graft.ops.StoreGuard]], every native kernel's generated code is
+  * one call into its Scala body, and the set of `SPARK_GRAFT_*`
   * environment knobs is pinned. */
 class SourceSweepSpec extends org.scalatest.funsuite.AnyFunSuite {
   private val root = Paths.get("src/main/scala/graft")
@@ -85,6 +86,11 @@ class SourceSweepSpec extends org.scalatest.funsuite.AnyFunSuite {
       "SPARK_GRAFT_CPUS", "SPARK_GRAFT_GATE_TIMEOUT_SEC", "SPARK_GRAFT_ONLY",
       "SPARK_GRAFT_SF_DIR", "SPARK_GRAFT_SKIP_SETUP"))
     assert(filesContaining("setJobGroup(") === Set("Harness.scala"))
+  }
+
+  test("no native kernel writes Java source with fresh variables: " +
+      "generated code only calls the Scala kernel") {
+    assert(filesContaining("ctx.freshName(") === Set.empty)
   }
 
   test("store completion markers and ledger writes appear only in " +

@@ -11,6 +11,18 @@ import org.apache.spark.sql.functions._
 class NativeHashSpec extends SparkSpec {
   import spark.implicits._
 
+  /** A session whose plans run only as generated code (`true`: whole-
+    * stage codegen, generated projections) or only interpreted
+    * (`false`), with no fallback from one to the other. */
+  private def session(codegen: Boolean) = {
+    val s = spark.newSession()
+    s.conf.set("spark.sql.codegen.wholeStage", codegen.toString)
+    s.conf.set("spark.sql.codegen.factoryMode",
+      if (codegen) "CODEGEN_ONLY" else "NO_CODEGEN")
+    s.conf.set("spark.sql.codegen.fallback", "false")
+    s
+  }
+
   private def texts = Seq(
     "the quick brown fox jumps over the lazy dog",
     "pack my box with five dozen liquor jugs",
@@ -105,21 +117,34 @@ class NativeHashSpec extends SparkSpec {
 
   test("null array elements null-poison every kernel (codegen path)") {
     // arrays built from a column so nothing constant-folds — this
-    // exercises the GENERATED code's isNullAt branch
-    val r = spark.range(1).selectExpr(
+    // exercises the GENERATED code's null rules; the last three columns
+    // are the empty-set and wrong-length rules
+    val r = session(codegen = true).range(1).selectExpr(
         "array(id, CAST(NULL AS BIGINT)) AS hs",
         "array(CAST(id AS FLOAT), CAST(NULL AS FLOAT)) AS fa",
-        "array(CAST(id AS INT), CAST(NULL AS INT)) AS codes")
+        "array(CAST(id AS INT), CAST(NULL AS INT)) AS codes",
+        "array(CAST(id AS STRING), CAST(NULL AS STRING)) AS ss",
+        "array(CAST(id AS STRING)) AS one",
+        "array(id, id) AS pair",
+        "array_remove(array(CAST(id AS STRING)), CAST(id AS STRING)) AS empty")
       .select(
         GraftFunctions.minHashSig(col("hs"), 4).as("ms"),
         GraftFunctions.simhashPack(col("hs")).as("sp"),
         GraftFunctions.dotDouble(col("fa"), col("fa")).as("dd"),
         GraftFunctions.cosineMilli(col("fa"), col("fa")).as("cm"),
         GraftFunctions.rollingHash(col("codes")).as("rh"),
-        GraftFunctions.cdcBounds(col("codes"), 64).as("cb"))
+        GraftFunctions.cdcBounds(col("codes"), 64).as("cb"),
+        GraftFunctions.jaccardMilli(col("ss"), col("one")).as("jm"),
+        GraftFunctions.containmentMilli(col("one"), col("ss")).as("cn"),
+        GraftFunctions.nearestCentroidMilli(col("hs"),
+          Array(0L, 0L, 1L, 1L), Array(0L, 1L), 2).as("nc"),
+        GraftFunctions.jaccardMilli(col("empty"), col("empty")).as("j0"),
+        GraftFunctions.containmentMilli(col("empty"), col("one")).as("c0"),
+        GraftFunctions.nearestCentroidMilli(col("pair"),
+          Array(0L, 0L, 1L, 1L, 2L, 2L), Array(0L), 6).as("nd"))
       .collect().head
-    (0 until 6).foreach { i =>
-      assert(r.isNullAt(i), s"column $i should null-poison")
+    (0 until 12).foreach { i =>
+      assert(r.isNullAt(i), s"column $i should be null")
     }
   }
 
@@ -133,28 +158,78 @@ class NativeHashSpec extends SparkSpec {
       new GenericArrayData(Array[Any](1.0f, null)), ArrayType(FloatType))
     val ints = Literal.create(
       new GenericArrayData(Array[Any](97, null)), ArrayType(IntegerType))
+    def strs(xs: String*) = Literal.create(new GenericArrayData(
+      xs.map(org.apache.spark.unsafe.types.UTF8String.fromString).toArray[Any]),
+      ArrayType(StringType))
+    def codebook(xs: Long*) = Literal.create(
+      new GenericArrayData(xs.toArray[Any]), ArrayType(LongType))
     assert(MinHashSig(longs, Literal(4)).eval(null) == null)
     assert(SimHashPack(longs).eval(null) == null)
     assert(DotDouble(floats, floats).eval(null) == null)
     assert(CosineMilli(floats, floats).eval(null) == null)
     assert(RollingHash(ints).eval(null) == null)
     assert(CdcBounds(ints, Literal(64)).eval(null) == null)
+    assert(JaccardMilli(strs("a", null), strs("a")).eval(null) == null)
+    assert(ContainmentMilli(strs("a"), strs("a", null)).eval(null) == null)
+    assert(NearestCentroidMilli(longs, codebook(0L, 0L, 1L, 1L),
+      codebook(0L, 1L), Literal(2)).eval(null) == null)
+    // empty-set and wrong-length rules
+    assert(JaccardMilli(strs(), strs()).eval(null) == null)
+    assert(ContainmentMilli(strs(), strs("a")).eval(null) == null)
+    assert(NearestCentroidMilli(codebook(1L, 2L),
+      codebook(0L, 0L, 1L, 1L, 2L, 2L),
+      codebook(0L), Literal(6)).eval(null) == null)
   }
 
   test("kernels agree between interpreted eval and codegen paths") {
-    // force the interpreted path by eval'ing the expressions directly
-    import org.apache.spark.sql.catalyst.util.ArrayData
-    import org.apache.spark.sql.catalyst.expressions.Literal
-    val hs = ArrayData.toArrayData(Array(123L, -77L, Long.MaxValue, 0L))
-    val sig = MinHashSig(Literal(hs,
-        org.apache.spark.sql.types.ArrayType(
-          org.apache.spark.sql.types.LongType)), Literal(8))
-      .eval(null).asInstanceOf[ArrayData]
-    assert(sig.numElements() == 8)
-    val packed = SimHashPack(Literal(hs,
-        org.apache.spark.sql.types.ArrayType(
-          org.apache.spark.sql.types.LongType)))
-      .eval(null)
-    assert(packed.isInstanceOf[Long])
+    // one non-trivial input per kernel, built from a column so nothing
+    // constant-folds, run once as generated code and once interpreted
+    def kernels(s: org.apache.spark.sql.SparkSession) =
+      s.range(1).selectExpr(
+          "array(id + 123, id - 77, id + 9223372036854775807, id) AS hs",
+          "array(concat('a', id), concat('b', id), concat('c', id), " +
+            "concat('a', id)) AS sa",
+          "array(concat('b', id), concat('c', id), concat('d', id)) AS sb",
+          "array(CAST(id + 0.5 AS FLOAT), CAST(id - 1.25 AS FLOAT), " +
+            "CAST(id + 3.75 AS FLOAT)) AS fa",
+          "array(CAST(id + 2 AS FLOAT), CAST(id + 0.25 AS FLOAT), " +
+            "CAST(id - 0.5 AS FLOAT)) AS fb",
+          "array(id + 1, id + 3, id + 5, id + 8) AS la",
+          "array(id + 3, id + 4, id + 8) AS lb",
+          "array(id + 1, id - 2) AS qv")
+        .select(
+          GraftFunctions.jaccardMilli(col("sa"), col("sb")),
+          GraftFunctions.containmentMilli(col("sa"), col("sb")),
+          GraftFunctions.cosineMilli(col("fa"), col("fb")),
+          GraftFunctions.dotDouble(col("fa"), col("fb")),
+          GraftFunctions.minHashSig(col("hs"), 8),
+          GraftFunctions.simhashPack(col("hs")),
+          GraftFunctions.sortedIntersectLongs(col("la"), col("lb")),
+          GraftFunctions.nearestCentroidMilli(col("qv"),
+            Array(0L, 0L, 2L, -2L, 5L, 5L), Array(3L, 7L, 9L), 2))
+        .collect().head
+    val generated = kernels(session(codegen = true))
+    val interpreted = kernels(session(codegen = false))
+    assert(generated === interpreted)
+    assert(!generated.anyNull, generated)
+    assert(generated.getLong(0) == 400L) // |{b,c}| / (4 + 3 − 2)
+    assert(generated.getLong(1) == 500L) // |{b,c}| / 4
+    assert(generated.getSeq[Long](4).length == 8)
+    assert(generated.getSeq[Long](6) == Seq(3L, 8L))
+    assert(generated.getStruct(7) == org.apache.spark.sql.Row(1L, 7L))
+    // the codebook checks fire on both paths
+    for (codegen <- Seq(true, false); (cids, msg) <- Seq(
+        (Array(7L, 3L, 9L), "strictly ascending"),
+        (Array(3L, 7L), "do not tile"))) {
+      val e = intercept[Exception] {
+        session(codegen).range(1).select(GraftFunctions.nearestCentroidMilli(
+            array(col("id"), col("id")), Array(0L, 0L, 2L, -2L, 5L, 5L),
+            cids, 2))
+          .collect()
+      }
+      assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(t => String.valueOf(t.getMessage).contains(msg)),
+        s"codegen=$codegen: $e")
+    }
   }
 }

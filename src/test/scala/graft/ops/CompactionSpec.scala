@@ -21,7 +21,7 @@ class CompactionSpec extends SparkSpec {
     assert(nFiles(s"$dir/out") <= 6, "expected ~4-5 compacted files")
     assert(out.orderBy("id").collect().toSeq ==
       df.orderBy("id").collect().toSeq)
-    // idempotent: re-running against existing output is a no-op read
+    // re-running over existing output rewrites the same layout
     Compaction.compact(spark, s"$dir/frag", s"$dir/out", bytes / 4)
     assert(nFiles(s"$dir/out") <= 6)
   }

@@ -13,7 +13,7 @@ class SimilaritySpec extends SparkSpec {
     assert(j == 500) // 2 / 4
   }
 
-  test("jaccardMilliFast kernel ≡ built-in form, duplicates and " +
+  test("jaccardMilli kernel ≡ built-in form, duplicates and " +
       "empties included") {
     val rnd = new scala.util.Random(7)
     val vocab = ('a' to 'j').map(_.toString)
@@ -27,7 +27,8 @@ class SimilaritySpec extends SparkSpec {
     val df = cases.toDF("x", "y")
     val rows = df.select(
       Similarity.jaccardMilli(col("x"), col("y")).as("builtin"),
-      Similarity.jaccardMilliFast(col("x"), col("y")).as("kernel"))
+      graft.functions.GraftFunctions.jaccardMilli(col("x"), col("y"))
+        .as("kernel"))
       .collect()
     rows.foreach { r =>
       assert(r.isNullAt(0) == r.isNullAt(1) &&
@@ -110,20 +111,6 @@ class SimilaritySpec extends SparkSpec {
     val v = df.select(Similarity.cosineMilli(col("x"), col("y")))
       .collect().map(_.getLong(0)).toSeq
     assert(v == Seq(1000L, 0L, 707L))
-  }
-
-  test("minHashSignature: identical inputs → identical signatures") {
-    val df = Seq(
-      (1L, Seq("a b c", "b c d")),
-      (2L, Seq("a b c", "b c d")),
-      (3L, Seq("x y z", "q r s"))
-    ).toDF("id", "shingles")
-    val sigs = df.select(col("id"),
-        Similarity.minHashSignature(col("shingles"), 16).as("sig"))
-      .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
-    assert(sigs(1L) == sigs(2L))
-    assert(sigs(1L) != sigs(3L))
-    assert(sigs(1L).length == 16)
   }
 
   test("nearDupPairs finds the planted near-duplicate and only it") {
