@@ -23,8 +23,8 @@ def canon(df: pd.DataFrame) -> pd.DataFrame:
     for c in df.columns:
         s = df[c]
         if s.dtype.kind in "Mm" or (s.dtype == object and len(s) and
-                                    s.map(lambda v: hasattr(v, "isoformat"),
-                                          na_action="ignore").fillna(False).any()):
+                                    s.dropna().map(
+                                        lambda v: hasattr(v, "isoformat")).any()):
             # duckdb DATE surfaces as midnight datetime64; strip the
             # zero time part so it compares equal to spark's date32
             df[c] = s.map(

@@ -312,6 +312,23 @@ object BradleyTerry {
          |FROM dpo WHERE (wins_chosen * 1000) // n_duels >= 500
          |ORDER BY chosen, rejected""".stripMargin
 
+  /** Each distinct (prompt `ok`, response `id`) participant of `duels`
+    * with its fitted score `s` — the input of both per-response
+    * exports ([[ktoLabels]], [[bestOfN]]). */
+  private def responseScores(duels: DataFrame,
+                             scores: DataFrame): DataFrame =
+    duels
+      .select(col("ok").cast("long"),
+        explode(array(col("i").cast("long"), col("j").cast("long")))
+          .as("id"))
+      .distinct()
+      .join(broadcast(scores.select(col("id"), col("bt").as("s"))),
+        Seq("id"))
+
+  /** A prompt's whole response set, for per-prompt totals. */
+  private val wholePrompt = Window.partitionBy("ok")
+    .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+
   /** Unpaired-preference (KTO-style) label export — the post-training
     * data shape for trainers that consume per-response BINARY signals
     * instead of pairs: one row per distinct (prompt, response)
@@ -327,23 +344,14 @@ object BradleyTerry {
     * sort); the entity-sized score vector broadcasts in. Nothing
     * prompt-global or driver-side. */
   def ktoLabels(duels: DataFrame, scores: DataFrame): DataFrame = {
-    val resp = duels
-      .select(col("ok").cast("long"),
-        explode(array(col("i").cast("long"), col("j").cast("long")))
-          .as("id"))
-      .distinct()
-      .join(broadcast(scores.select(col("id"), col("bt").as("s"))),
-        Seq("id"))
     val byScore = Window.partitionBy("ok")
       .orderBy(col("s").asc, col("id").asc)
-    val all = Window.partitionBy("ok")
-      .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    resp
+    responseScores(duels, scores)
       .withColumn("rn", row_number().over(byScore).cast("long"))
-      .withColumn("n", count(lit(1)).over(all))
+      .withColumn("n", count(lit(1)).over(wholePrompt))
       .withColumn("med",
         max(when(col("rn") === expr("(n + 1L) DIV 2L"), col("s")))
-          .over(all))
+          .over(wholePrompt))
       .select(col("ok").as("prompt"), col("id"),
         col("s").as("score_bt"),
         when(col("s") > col("med"), 1L).otherwise(0L).as("desirable"))
@@ -380,21 +388,13 @@ object BradleyTerry {
     * runner-up, margin undefined). Same scale shape as [[ktoLabels]]:
     * one participant distinct + one prompt-partitioned window pass. */
   def bestOfN(duels: DataFrame, scores: DataFrame): DataFrame = {
-    val resp = duels
-      .select(col("ok").cast("long"),
-        explode(array(col("i").cast("long"), col("j").cast("long")))
-          .as("id"))
-      .distinct()
-      .join(broadcast(scores.select(col("id"), col("bt").as("s"))),
-        Seq("id"))
     val byScore = Window.partitionBy("ok")
       .orderBy(col("s").desc, col("id").asc)
-    val all = Window.partitionBy("ok")
-      .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    resp
+    responseScores(duels, scores)
       .withColumn("rn", row_number().over(byScore))
-      .withColumn("n", count(lit(1)).over(all))
-      .withColumn("s2", max(when(col("rn") === 2, col("s"))).over(all))
+      .withColumn("n", count(lit(1)).over(wholePrompt))
+      .withColumn("s2",
+        max(when(col("rn") === 2, col("s"))).over(wholePrompt))
       .where(col("rn") === 1 && col("n") >= 2L)
       .select(col("ok").as("prompt"), col("id").as("best_id"),
         col("s").as("score_bt"),

@@ -189,11 +189,20 @@ object InvertedIndexStore {
     * stats pass per query. The score expression and the final ranking
     * are [[Retrieval.termScoreMilli]]/[[Retrieval.rankTopK]] — the
     * SAME objects the payload path uses, so the stored path is
-    * bit-identical by construction (gate shares q_bm25_topk's oracle). */
+    * bit-identical by construction (q_bm25_from_store's oracle is
+    * q_bm25_topk's). */
   def bm25FromStore(s: SparkSession, table: String,
-                    queryTerms: Seq[String], k: Int): DataFrame = {
-    val post = lookup(s, table, queryTerms)
-    val scalars = corpusScalars(s, table)
+                    queryTerms: Seq[String], k: Int): DataFrame =
+    rankPostings(s, table, lookup(s, table, queryTerms),
+      corpusScalars(s, table), k)
+
+  /** The scoring tail both store reads share: df from the looked-up
+    * postings `post` (term, id, tf), dl via [[dlFor]] for `post`'s ids,
+    * the corpus scalars `scalars` broadcast, then the shared term score
+    * and ranking. */
+  private def rankPostings(s: SparkSession, table: String,
+                           post: DataFrame, scalars: DataFrame,
+                           k: Int): DataFrame = {
     val df = post.groupBy("term").agg(count(lit(1)).as("df"))
     Retrieval.rankTopK(
       post.join(broadcast(df), "term")
@@ -249,17 +258,10 @@ object InvertedIndexStore {
     * needs no extra anti-join: it is looked up for the ALREADY
     * retracted posting ids, so tombstoned docs never enter it. */
   def bm25FromStoreRetracted(s: SparkSession, table: String,
-                             queryTerms: Seq[String], k: Int): DataFrame = {
-    val post = Tombstones.minus(s, table, lookup(s, table, queryTerms))
-    val scalars = retractedScalars(s, table)
-    val df = post.groupBy("term").agg(count(lit(1)).as("df"))
-    Retrieval.rankTopK(
-      post.join(broadcast(df), "term")
-        .join(dlFor(s, table, post), "id")
-        .crossJoin(broadcast(scalars))
-        .withColumn("term_score", Retrieval.termScoreMilli),
-      k)
-  }
+                             queryTerms: Seq[String], k: Int): DataFrame =
+    rankPostings(s, table,
+      Tombstones.minus(s, table, lookup(s, table, queryTerms)),
+      retractedScalars(s, table), k)
 
   /** Fold tombstones into the data files — postings (term-prefix
     * partitioned), doc stats (hash-sharded), AND the corpus-scalars

@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -19,13 +19,89 @@ import graft.Tables._
 object AggQueries {
 
   /** Double → exact integer cents, deterministically. */
-  private def cents(c: org.apache.spark.sql.Column) =
+  private def cents(c: Column) =
     floor(c * 100 + 0.5).cast(LongType)
 
   private val centsSql = OracleSql.cents
 
   /** See [[OracleSql.sumB]]. */
   private val sumB = OracleSql.sumB
+
+  /** Top-3 customers by balance per market segment, ties to the
+    * smaller key: the window gate and the bounded-Aggregator gate must
+    * both return it. */
+  private val topkPerSegmentOracle = """
+    |SELECT c_mktsegment, rk, c_custkey, c_acctbal FROM (
+    |  SELECT c_mktsegment, c_custkey, c_acctbal,
+    |    row_number() OVER (PARTITION BY c_mktsegment
+    |      ORDER BY c_acctbal DESC, c_custkey ASC) AS rk
+    |  FROM customer) WHERE rk <= 3
+    |ORDER BY c_mktsegment, rk
+    |""".stripMargin.trim
+
+  /** The as-of join's sides from events: clicks (user_id, ts_us,
+    * click_id) and views (user_id, ts_us, view_id, view_ts_us). */
+  private def clicksAndViews(s: SparkSession, d: String) = {
+    val ev = events(s, d).withColumn("ts_us", col("ts"))
+    val clicks = ev.filter(col("event_type") === "click")
+      .select(col("user_id"), col("ts_us"),
+        col("event_id").as("click_id"))
+    val views = ev.filter(col("event_type") === "view")
+      .select(col("user_id"), col("ts_us"),
+        col("event_id").as("view_id"),
+        col("ts_us").as("view_ts_us"))
+    (clicks, views)
+  }
+
+  /** Each click's latest view at or before it, replayed with the same
+    * union-tag + IGNORE NULLS last_value construction (so ≤-ties match)
+    * — the answer of both as-of gates, declarative and broadcast. */
+  private val asofClickOracle = """
+    |WITH v AS (SELECT user_id, epoch_us(ts) AS ts_us,
+    |    event_id AS view_id FROM events WHERE event_type = 'view'),
+    |c AS (SELECT user_id, epoch_us(ts) AS ts_us,
+    |    event_id AS click_id FROM events WHERE event_type = 'click'),
+    |u AS (
+    |  SELECT user_id, ts_us, 0 AS side, view_id, ts_us AS view_ts_us,
+    |    CAST(NULL AS BIGINT) AS click_id FROM v
+    |  UNION ALL
+    |  SELECT user_id, ts_us, 1 AS side, NULL, NULL, click_id FROM c),
+    |w AS (SELECT *,
+    |    last_value(view_id IGNORE NULLS) OVER win AS asof_view_id,
+    |    last_value(view_ts_us IGNORE NULLS) OVER win
+    |      AS asof_view_ts_us
+    |  FROM u
+    |  WINDOW win AS (PARTITION BY user_id
+    |    ORDER BY ts_us, side, view_id NULLS FIRST
+    |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW))
+    |SELECT user_id, ts_us, click_id, asof_view_id, asof_view_ts_us
+    |FROM w WHERE side = 1 ORDER BY click_id
+    |""".stripMargin.trim
+
+  /** Lineitem rows of the orders `urgent` keeps, pre-filtered through
+    * the runtime-filter join `prunedJoin(lineitem, dim)`, quantity as
+    * exact cents — the Bloom and IN pruned-join gates. */
+  private def urgentLineQty(s: SparkSession, d: String, urgent: Column,
+      prunedJoin: (DataFrame, DataFrame) => DataFrame) = {
+    val dim = orders(s, d).filter(urgent)
+      .select(col("o_orderkey").as("l_orderkey"), col("o_orderpriority"))
+    prunedJoin(
+        lineitem(s, d).select("l_orderkey", "l_linenumber", "l_quantity"),
+        dim)
+      .withColumn("qty_c", cents(col("l_quantity")))
+      .drop("l_quantity")
+      .orderBy("l_orderkey", "l_linenumber", "qty_c")
+  }
+
+  /** [[urgentLineQty]]'s answer: the plain join under the same order
+    * predicate `where`. */
+  private def urgentLineQtySql(where: String): String = s"""
+    |SELECT l.l_orderkey, l.l_linenumber, o.o_orderpriority,
+    |  ${centsSql("l.l_quantity")} AS qty_c
+    |FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
+    |WHERE $where
+    |ORDER BY l.l_orderkey, l.l_linenumber, qty_c
+    |""".stripMargin.trim
 
   /** See [[Sinks.contentKey]]. */
   private def contentKey(d: String, file: String,
@@ -131,17 +207,10 @@ object AggQueries {
           .select("c_mktsegment", "rk", "c_custkey", "c_acctbal")
           .orderBy("c_mktsegment", "rk")
       },
-      Some("""
-        |SELECT c_mktsegment, rk, c_custkey, c_acctbal FROM (
-        |  SELECT c_mktsegment, c_custkey, c_acctbal,
-        |    row_number() OVER (PARTITION BY c_mktsegment
-        |      ORDER BY c_acctbal DESC, c_custkey ASC) AS rk
-        |  FROM customer) WHERE rk <= 3
-        |ORDER BY c_mktsegment, rk
-        |""".stripMargin.trim)),
+      Some(topkPerSegmentOracle)),
 
-    // ---- top-k via bounded Aggregator (same oracle as the window
-    // form — proving the partial-aggregable path computes identical
+    // ---- top-k via bounded Aggregator (topkPerSegmentOracle, as the
+    // window form — proving the partial-aggregable path computes identical
     // results; see functions/TopKAggregator for the scale rationale) --
     Q("q_agg_topk_agg",
       (s, d) => {
@@ -154,14 +223,7 @@ object AggQueries {
             col("col._2").as("c_custkey"), col("col._1").as("c_acctbal"))
           .orderBy("c_mktsegment", "rk")
       },
-      Some("""
-        |SELECT c_mktsegment, rk, c_custkey, c_acctbal FROM (
-        |  SELECT c_mktsegment, c_custkey, c_acctbal,
-        |    row_number() OVER (PARTITION BY c_mktsegment
-        |      ORDER BY c_acctbal DESC, c_custkey ASC) AS rk
-        |  FROM customer) WHERE rk <= 3
-        |ORDER BY c_mktsegment, rk
-        |""".stripMargin.trim)),
+      Some(topkPerSegmentOracle)),
 
     // ---- rollup with grouping indicators ------------------------------
     Q("q_agg_rollup",
@@ -737,85 +799,31 @@ object AggQueries {
     // IGNORE NULLS last_value, so semantics incl. ≤-ties match exactly.
     Q("q_asof_view_click",
       (s, d) => {
-        val ev = events(s, d).withColumn("ts_us", col("ts"))
-        val clicks = ev.filter(col("event_type") === "click")
-          .select(col("user_id"), col("ts_us"),
-            col("event_id").as("click_id"))
-        val views = ev.filter(col("event_type") === "view")
-          .select(col("user_id"), col("ts_us"),
-            col("event_id").as("view_id"),
-            col("ts_us").as("view_ts_us"))
+        val (clicks, views) = clicksAndViews(s, d)
         graft.ops.Joins.asofJoinBackward(clicks, views,
             key = "user_id", time = "ts_us",
             payload = Seq("view_id", "view_ts_us"),
             rightTiebreak = Seq("view_id"))
           .orderBy("click_id")
       },
-      Some("""
-        |WITH v AS (SELECT user_id, epoch_us(ts) AS ts_us,
-        |    event_id AS view_id FROM events WHERE event_type = 'view'),
-        |c AS (SELECT user_id, epoch_us(ts) AS ts_us,
-        |    event_id AS click_id FROM events WHERE event_type = 'click'),
-        |u AS (
-        |  SELECT user_id, ts_us, 0 AS side, view_id, ts_us AS view_ts_us,
-        |    CAST(NULL AS BIGINT) AS click_id FROM v
-        |  UNION ALL
-        |  SELECT user_id, ts_us, 1 AS side, NULL, NULL, click_id FROM c),
-        |w AS (SELECT *,
-        |    last_value(view_id IGNORE NULLS) OVER win AS asof_view_id,
-        |    last_value(view_ts_us IGNORE NULLS) OVER win
-        |      AS asof_view_ts_us
-        |  FROM u
-        |  WINDOW win AS (PARTITION BY user_id
-        |    ORDER BY ts_us, side, view_id NULLS FIRST
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW))
-        |SELECT user_id, ts_us, click_id, asof_view_id, asof_view_ts_us
-        |FROM w WHERE side = 1 ORDER BY click_id
-        |""".stripMargin.trim)),
+      Some(asofClickOracle)),
 
     // ---- native as-of exec: same semantics, broadcast physical plan --
     // The whole-operator Catalyst path (plans.BroadcastAsOfJoin →
     // AsOfJoinStrategy → BroadcastAsOfJoinExec): right side broadcast as
     // per-key sorted arrays, left streamed with NO shuffle and NO sort.
-    // Same oracle as q_asof_view_click — pins the custom exec
+    // asofClickOracle, as q_asof_view_click — pins the custom exec
     // row-identical to the declarative union-window form at sf scale.
     Q("q_asof_broadcast",
       (s, d) => {
-        val ev = events(s, d).withColumn("ts_us", col("ts"))
-        val clicks = ev.filter(col("event_type") === "click")
-          .select(col("user_id"), col("ts_us"),
-            col("event_id").as("click_id"))
-        val views = ev.filter(col("event_type") === "view")
-          .select(col("user_id"), col("ts_us"),
-            col("event_id").as("view_id"),
-            col("ts_us").as("view_ts_us"))
+        val (clicks, views) = clicksAndViews(s, d)
         graft.ops.Joins.asofJoinBroadcast(clicks, views,
             key = "user_id", time = "ts_us",
             payload = Seq("view_id", "view_ts_us"),
             rightTiebreak = Seq("view_id"))
           .orderBy("click_id")
       },
-      Some("""
-        |WITH v AS (SELECT user_id, epoch_us(ts) AS ts_us,
-        |    event_id AS view_id FROM events WHERE event_type = 'view'),
-        |c AS (SELECT user_id, epoch_us(ts) AS ts_us,
-        |    event_id AS click_id FROM events WHERE event_type = 'click'),
-        |u AS (
-        |  SELECT user_id, ts_us, 0 AS side, view_id, ts_us AS view_ts_us,
-        |    CAST(NULL AS BIGINT) AS click_id FROM v
-        |  UNION ALL
-        |  SELECT user_id, ts_us, 1 AS side, NULL, NULL, click_id FROM c),
-        |w AS (SELECT *,
-        |    last_value(view_id IGNORE NULLS) OVER win AS asof_view_id,
-        |    last_value(view_ts_us IGNORE NULLS) OVER win
-        |      AS asof_view_ts_us
-        |  FROM u
-        |  WINDOW win AS (PARTITION BY user_id
-        |    ORDER BY ts_us, side, view_id NULLS FIRST
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW))
-        |SELECT user_id, ts_us, click_id, asof_view_id, asof_view_ts_us
-        |FROM w WHERE side = 1 ORDER BY click_id
-        |""".stripMargin.trim)),
+      Some(asofClickOracle)),
 
     Q("q_semi_anti_join",
       (s, d) => {
@@ -843,29 +851,13 @@ object AggQueries {
     // shuffle. False positives are re-checked by the join — the oracle
     // is the PLAIN join, asserting row-identical composition.
     Q("q_join_bloom_pruned",
-      (s, d) => {
-        val urgent = orders(s, d)
-          .filter(col("o_orderpriority") === "1-URGENT")
-          .select(col("o_orderkey").as("l_orderkey"),
-            col("o_orderpriority"))
-        // 2^20 bits = 128 KB: ~10 bits/key up to 100k dim keys; the
-        // sketch ships in every task binary, so size to the dim, not
-        // to the default
-        graft.ops.Joins.bloomPrunedJoin(
-            lineitem(s, d).select("l_orderkey", "l_linenumber",
-              "l_quantity"),
-            urgent, key = "l_orderkey", numBits = 1 << 20)
-          .withColumn("qty_c", cents(col("l_quantity")))
-          .drop("l_quantity")
-          .orderBy("l_orderkey", "l_linenumber", "qty_c")
-      },
-      Some(s"""
-        |SELECT l.l_orderkey, l.l_linenumber, o.o_orderpriority,
-        |  ${centsSql("l.l_quantity")} AS qty_c
-        |FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
-        |WHERE o.o_orderpriority = '1-URGENT'
-        |ORDER BY l.l_orderkey, l.l_linenumber, qty_c
-        |""".stripMargin.trim)),
+      // 2^20 bits = 128 KB: ~10 bits/key up to 100k dim keys; the
+      // sketch ships in every task binary, so size to the dim, not
+      // to the default
+      (s, d) => urgentLineQty(s, d, col("o_orderpriority") === "1-URGENT",
+        graft.ops.Joins.bloomPrunedJoin(_, _, key = "l_orderkey",
+          numBits = 1 << 20)),
+      Some(urgentLineQtySql("o.o_orderpriority = '1-URGENT'"))),
 
     // Multi-column-key Bloom pruning: the composite key is hashed
     // through ONE xxhash64 (same as the shuffle's own composite hash).
@@ -897,32 +889,16 @@ object AggQueries {
     // IN-pruned join — the EXACT runtime-filter twin of the Bloom gate:
     // the urgent key set is collected (bounded) and pushed into the
     // lineitem scan as PushedFilters: In(...), pruning row-groups at
-    // the I/O layer. Oracle = the same plain join as q_join_bloom_pruned.
+    // the I/O layer. Oracle = the plain join (urgentLineQtySql).
     // The dim is deliberately SMALL (~1.5k keys at sf0.1): the exact
     // IN form is for genuinely small key sets — beyond that regime the
     // Bloom form is the right tool (and inPrunedJoin enforces maxKeys).
     Q("q_join_in_pruned",
-      (s, d) => {
-        val urgent = orders(s, d)
-          .filter(col("o_orderpriority") === "1-URGENT" &&
-            col("o_orderkey") % 20 === 0)
-          .select(col("o_orderkey").as("l_orderkey"),
-            col("o_orderpriority"))
-        graft.ops.Joins.inPrunedJoin(
-            lineitem(s, d).select("l_orderkey", "l_linenumber",
-              "l_quantity"),
-            urgent, keys = Seq("l_orderkey"))
-          .withColumn("qty_c", cents(col("l_quantity")))
-          .drop("l_quantity")
-          .orderBy("l_orderkey", "l_linenumber", "qty_c")
-      },
-      Some(s"""
-        |SELECT l.l_orderkey, l.l_linenumber, o.o_orderpriority,
-        |  ${centsSql("l.l_quantity")} AS qty_c
-        |FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
-        |WHERE o.o_orderpriority = '1-URGENT' AND o.o_orderkey % 20 = 0
-        |ORDER BY l.l_orderkey, l.l_linenumber, qty_c
-        |""".stripMargin.trim)),
+      (s, d) => urgentLineQty(s, d,
+        col("o_orderpriority") === "1-URGENT" && col("o_orderkey") % 20 === 0,
+        graft.ops.Joins.inPrunedJoin(_, _, keys = Seq("l_orderkey"))),
+      Some(urgentLineQtySql(
+        "o.o_orderpriority = '1-URGENT' AND o.o_orderkey % 20 = 0"))),
 
     // ---- equi-width histogram (width_bucket) ---------------------------
     // Distribution profiling over exact cents: SQL-standard

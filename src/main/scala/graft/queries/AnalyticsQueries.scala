@@ -69,6 +69,60 @@ object AnalyticsQueries {
     "copurchase_edges_stored90" -> ((s, d) => { storedEdges90(s, d); () }),
     "pref_score_store" -> ((s, d) => { prefScoreTables(s, d); () }))
 
+  /** Lineitem self-join aliased `a`/`b`: supplier pairs of one order
+    * in strict key order whose quantities differ — every duel stream
+    * below selects its outcome from these rows. */
+  private def duelJoin(s: org.apache.spark.sql.SparkSession, d: String) = {
+    val li = lineitem(s, d)
+      .select("l_orderkey", "l_suppkey", "l_quantity")
+    li.as("a").join(li.as("b"),
+      col("a.l_orderkey") === col("b.l_orderkey") &&
+        col("a.l_suppkey") < col("b.l_suppkey") &&
+        col("a.l_quantity") =!= col("b.l_quantity"))
+  }
+
+  /** Quantity duels (i, j, awin): the larger quantity wins. */
+  private def quantityDuels(s: org.apache.spark.sql.SparkSession,
+                            d: String) =
+    duelJoin(s, d).select(col("a.l_suppkey").as("i"),
+      col("b.l_suppkey").as("j"),
+      (col("a.l_quantity") > col("b.l_quantity")).as("awin"))
+
+  /** [[quantityDuels]] in DuckDB. */
+  private val quantityDuelsSql =
+    """SELECT a.l_suppkey AS i, b.l_suppkey AS j,
+      |    a.l_quantity > b.l_quantity AS awin
+      |  FROM lineitem a JOIN lineitem b
+      |    ON a.l_orderkey = b.l_orderkey
+      |   AND a.l_suppkey < b.l_suppkey
+      |   AND a.l_quantity <> b.l_quantity""".stripMargin
+
+  /** Latent-strength duels (i, j, awin): the higher suppkey wins unless
+    * a deterministic hash-noise term (~1/4 of duels) flips the outcome. */
+  private def noisyDuels(s: org.apache.spark.sql.SparkSession, d: String) =
+    duelJoin(s, d).select(col("a.l_suppkey").as("i"),
+        col("b.l_suppkey").as("j"),
+        (pmod(col("a.l_suppkey") * 7 + col("b.l_suppkey") * 13 +
+          col("a.l_orderkey"), lit(4)) > 0).as("awin0"))
+      // i < j always: "a wins" = noise says follow strength = j…
+      // so awin (i wins) = NOT(strength outcome kept)
+      .select(col("i"), col("j"), (!col("awin0")).as("awin"))
+
+  /** [[noisyDuels]] in DuckDB. */
+  private val noisyDuelsSql =
+    """SELECT a.l_suppkey AS i, b.l_suppkey AS j,
+      |    NOT ((a.l_suppkey*7 + b.l_suppkey*13 + a.l_orderkey)
+      |      % 4 > 0) AS awin
+      |  FROM lineitem a JOIN lineitem b
+      |    ON a.l_orderkey = b.l_orderkey
+      |   AND a.l_suppkey < b.l_suppkey
+      |   AND a.l_quantity <> b.l_quantity""".stripMargin
+
+  /** The from-scratch 5-iteration BT fit over all quantity duels: the
+    * batch, incremental-refresh and streaming fits must all equal it. */
+  private lazy val btOracle =
+    BradleyTerry.oracleSql(quantityDuelsSql, iters = 5)
+
   /** The stored preference artifacts the grading gates consume: the
     * quantity-duel stream plus BOTH aggregators' fitted score vectors,
     * content-keyed on the lineitem fixture. At deployment these are
@@ -97,12 +151,7 @@ object AnalyticsQueries {
       s"pref_rc_$key", s"pref_pairs90_$key")
     graft.ops.StoreGuard.tables(s, s"${dt}_ok",
       writes = Seq(dt, bt, rt, p90)) {
-      val li = lineitem(s, d)
-        .select("l_orderkey", "l_suppkey", "l_quantity")
-      li.as("a").join(li.as("b"),
-          col("a.l_orderkey") === col("b.l_orderkey") &&
-            col("a.l_suppkey") < col("b.l_suppkey") &&
-            col("a.l_quantity") =!= col("b.l_quantity"))
+      duelJoin(s, d)
         .select(col("a.l_orderkey").as("ok"),
           col("a.l_suppkey").as("i"),
           col("b.l_suppkey").as("j"),
@@ -375,26 +424,9 @@ object AnalyticsQueries {
     // SAME code that documents the iteration (BradleyTerry.oracleSql).
     Q("q_pref_bradley_terry",
       (s, d) => {
-        val li = lineitem(s, d)
-          .select("l_orderkey", "l_suppkey", "l_quantity")
-        BradleyTerry.fit(
-          li.as("a").join(li.as("b"),
-              col("a.l_orderkey") === col("b.l_orderkey") &&
-                col("a.l_suppkey") < col("b.l_suppkey") &&
-                col("a.l_quantity") =!= col("b.l_quantity"))
-            .select(col("a.l_suppkey").as("i"),
-              col("b.l_suppkey").as("j"),
-              (col("a.l_quantity") > col("b.l_quantity")).as("awin")),
-          iters = 5).orderBy("id")
+        BradleyTerry.fit(quantityDuels(s, d), iters = 5).orderBy("id")
       },
-      Some(BradleyTerry.oracleSql(
-        """SELECT a.l_suppkey AS i, b.l_suppkey AS j,
-          |    a.l_quantity > b.l_quantity AS awin
-          |  FROM lineitem a JOIN lineitem b
-          |    ON a.l_orderkey = b.l_orderkey
-          |   AND a.l_suppkey < b.l_suppkey
-          |   AND a.l_quantity <> b.l_quantity""".stripMargin,
-        iters = 5))),
+      Some(btOracle)),
 
     // ---- rank centrality (the spectral preference aggregator) --------
     // Same duel stream as the BT gate, scored by the OTHER standard
@@ -403,26 +435,9 @@ object AnalyticsQueries {
     // the unrolled chain generated next to the Spark loop.
     Q("q_pref_rank_centrality",
       (s, d) => {
-        val li = lineitem(s, d)
-          .select("l_orderkey", "l_suppkey", "l_quantity")
-        RankCentrality.fit(
-          li.as("a").join(li.as("b"),
-              col("a.l_orderkey") === col("b.l_orderkey") &&
-                col("a.l_suppkey") < col("b.l_suppkey") &&
-                col("a.l_quantity") =!= col("b.l_quantity"))
-            .select(col("a.l_suppkey").as("i"),
-              col("b.l_suppkey").as("j"),
-              (col("a.l_quantity") > col("b.l_quantity")).as("awin")),
-          iters = 5).orderBy("id")
+        RankCentrality.fit(quantityDuels(s, d), iters = 5).orderBy("id")
       },
-      Some(RankCentrality.oracleSql(
-        """SELECT a.l_suppkey AS i, b.l_suppkey AS j,
-          |    a.l_quantity > b.l_quantity AS awin
-          |  FROM lineitem a JOIN lineitem b
-          |    ON a.l_orderkey = b.l_orderkey
-          |   AND a.l_suppkey < b.l_suppkey
-          |   AND a.l_quantity <> b.l_quantity""".stripMargin,
-        iters = 5))),
+      Some(RankCentrality.oracleSql(quantityDuelsSql, iters = 5))),
 
     // ---- cross-method rank agreement (BT × rank-centrality) ----------
     // Decile-bucket both aggregators' rankings and count the joint
@@ -439,33 +454,24 @@ object AnalyticsQueries {
           .withColumnRenamed("dec_b", "dec_rc")
           .orderBy("dec_bt", "dec_rc")
       },
-      {
-        val duelsSql =
-          """SELECT a.l_suppkey AS i, b.l_suppkey AS j,
-            |    a.l_quantity > b.l_quantity AS awin
-            |  FROM lineitem a JOIN lineitem b
-            |    ON a.l_orderkey = b.l_orderkey
-            |   AND a.l_suppkey < b.l_suppkey
-            |   AND a.l_quantity <> b.l_quantity""".stripMargin
-        Some(s"""
-          |WITH btq AS MATERIALIZED (
-          |${BradleyTerry.oracleSql(duelsSql, 5)}),
-          |rcq AS MATERIALIZED (
-          |${RankCentrality.oracleSql(duelsSql, 5)}),
-          |da AS (SELECT id,
-          |    (CAST(row_number() OVER (ORDER BY bt DESC, id ASC) - 1
-          |      AS BIGINT) * 10) // (SELECT count(*) FROM btq)
-          |      AS dec_bt FROM btq),
-          |db AS (SELECT id,
-          |    (CAST(row_number() OVER (ORDER BY rc DESC, id ASC) - 1
-          |      AS BIGINT) * 10) // (SELECT count(*) FROM rcq)
-          |      AS dec_rc FROM rcq)
-          |SELECT da.dec_bt, db.dec_rc, CAST(count(*) AS BIGINT)
-          |    AS n_entities
-          |FROM da JOIN db ON da.id = db.id
-          |GROUP BY 1, 2 ORDER BY 1, 2
-          |""".stripMargin.trim)
-      }),
+      Some(s"""
+        |WITH btq AS MATERIALIZED (
+        |$btOracle),
+        |rcq AS MATERIALIZED (
+        |${RankCentrality.oracleSql(quantityDuelsSql, 5)}),
+        |da AS (SELECT id,
+        |    (CAST(row_number() OVER (ORDER BY bt DESC, id ASC) - 1
+        |      AS BIGINT) * 10) // (SELECT count(*) FROM btq)
+        |      AS dec_bt FROM btq),
+        |db AS (SELECT id,
+        |    (CAST(row_number() OVER (ORDER BY rc DESC, id ASC) - 1
+        |      AS BIGINT) * 10) // (SELECT count(*) FROM rcq)
+        |      AS dec_rc FROM rcq)
+        |SELECT da.dec_bt, db.dec_rc, CAST(count(*) AS BIGINT)
+        |    AS n_entities
+        |FROM da JOIN db ON da.id = db.id
+        |GROUP BY 1, 2 ORDER BY 1, 2
+        |""".stripMargin.trim)),
 
     // ---- incremental preference refresh (pair-matrix merge) ----------
     // A new tranche of judgments (ok % 10 == 0, the held-out 10%)
@@ -484,14 +490,7 @@ object AnalyticsQueries {
             BradleyTerry.pairStats(delta)),
           iters = 5).orderBy("id")
       },
-      Some(BradleyTerry.oracleSql(
-        """SELECT a.l_suppkey AS i, b.l_suppkey AS j,
-          |    a.l_quantity > b.l_quantity AS awin
-          |  FROM lineitem a JOIN lineitem b
-          |    ON a.l_orderkey = b.l_orderkey
-          |   AND a.l_suppkey < b.l_suppkey
-          |   AND a.l_quantity <> b.l_quantity""".stripMargin,
-        iters = 5))),
+      Some(btOracle)),
 
     // ---- streaming preference ingest (pair-matrix fold) --------------
     // The online face of q_incr_pref_refresh: duels arrive in
@@ -514,41 +513,22 @@ object AnalyticsQueries {
           graft.streaming.StreamingOps.streamingPairStats(duelStream),
           iters = 5).orderBy("id")
       },
-      Some(BradleyTerry.oracleSql(
-        """SELECT a.l_suppkey AS i, b.l_suppkey AS j,
-          |    a.l_quantity > b.l_quantity AS awin
-          |  FROM lineitem a JOIN lineitem b
-          |    ON a.l_orderkey = b.l_orderkey
-          |   AND a.l_suppkey < b.l_suppkey
-          |   AND a.l_quantity <> b.l_quantity""".stripMargin,
-        iters = 5))),
+      Some(btOracle)),
 
     // ---- reward-model calibration (reliability diagram) --------------
     // Bucket every duel by the fitted-score GAP between its sides and
     // measure how often the higher-scored side won: the win rate must
     // rise with the gap for the scores' magnitudes to mean anything.
-    // Shares the BT gate's duel stream and score chain (oracle reuses
-    // the exact same unrolled CTEs, so the two gates cannot drift).
-    // (Duels carry a LATENT STRENGTH gradient — the higher suppkey
+    // Shares the BT gate's score chain (oracle reuses the exact same
+    // unrolled CTEs, so the two gates cannot drift).
+    // (noisyDuels carry a LATENT STRENGTH gradient — the higher suppkey
     // wins unless a deterministic hash-noise term flips the outcome
     // (~1/4 of duels) — so fitted scores spread over the range and
     // several gap deciles populate; the BT gate's pure-quantity duels
     // cluster every score mid-range and grade only two buckets.)
     Q("q_pref_calibration",
       (s, d) => {
-        val li = lineitem(s, d)
-          .select("l_orderkey", "l_suppkey", "l_quantity")
-        val duels = li.as("a").join(li.as("b"),
-            col("a.l_orderkey") === col("b.l_orderkey") &&
-              col("a.l_suppkey") < col("b.l_suppkey") &&
-              col("a.l_quantity") =!= col("b.l_quantity"))
-          .select(col("a.l_suppkey").as("i"),
-            col("b.l_suppkey").as("j"),
-            (pmod(col("a.l_suppkey") * 7 + col("b.l_suppkey") * 13 +
-              col("a.l_orderkey"), lit(4)) > 0).as("awin0"))
-          // i < j always: "a wins" = noise says follow strength = j…
-          // so awin (i wins) = NOT(strength outcome kept)
-          .select(col("i"), col("j"), (!col("awin0")).as("awin"))
+        val duels = noisyDuels(s, d)
         // pair-matrix-first: the duel stream collapses to the
         // entity-pair-bounded matrix in ONE shuffle and only THAT is
         // checkpointed for the two consumers (fit + grading) — a
@@ -558,15 +538,7 @@ object AnalyticsQueries {
           BradleyTerry.fitFromPairs(pairs, iters = 5))
           .orderBy("gap_decile")
       },
-      Some(BradleyTerry.calibrationOracleSql(
-        """SELECT a.l_suppkey AS i, b.l_suppkey AS j,
-          |    NOT ((a.l_suppkey*7 + b.l_suppkey*13 + a.l_orderkey)
-          |      % 4 > 0) AS awin
-          |  FROM lineitem a JOIN lineitem b
-          |    ON a.l_orderkey = b.l_orderkey
-          |   AND a.l_suppkey < b.l_suppkey
-          |   AND a.l_quantity <> b.l_quantity""".stripMargin,
-        iters = 5))),
+      Some(BradleyTerry.calibrationOracleSql(noisyDuelsSql, iters = 5))),
 
     // ---- DPO training-pair export ------------------------------------
     // The materialization step a post-training pipeline runs between
@@ -577,35 +549,18 @@ object AnalyticsQueries {
     // the global ranking (winrate >= 500 milli; exact ties kept, the
     // score order breaks them) — majority-contradicting pairs are
     // label-noise audit material, not training rows. Shares the
-    // calibration gate's noisy duel stream and the BT score chain
+    // calibration gate's noisyDuels stream and the BT score chain
     // (dpoPairsOracleSql appends to the same unrolled CTEs).
     Q("q_pref_dpo_pairs",
       (s, d) => {
-        val li = lineitem(s, d)
-          .select("l_orderkey", "l_suppkey", "l_quantity")
-        val duels = li.as("a").join(li.as("b"),
-            col("a.l_orderkey") === col("b.l_orderkey") &&
-              col("a.l_suppkey") < col("b.l_suppkey") &&
-              col("a.l_quantity") =!= col("b.l_quantity"))
-          .select(col("a.l_suppkey").as("i"),
-            col("b.l_suppkey").as("j"),
-            (pmod(col("a.l_suppkey") * 7 + col("b.l_suppkey") * 13 +
-              col("a.l_orderkey"), lit(4)) > 0).as("awin0"))
-          .select(col("i"), col("j"), (!col("awin0")).as("awin"))
+        val duels = noisyDuels(s, d)
         // pair-matrix-first, same rationale as q_pref_calibration
         val pairs = BradleyTerry.pairStats(duels).localCheckpoint()
         BradleyTerry.dpoPairsFromStats(pairs,
             BradleyTerry.fitFromPairs(pairs, iters = 5), minDuels = 2L)
           .orderBy("chosen", "rejected")
       },
-      Some(BradleyTerry.dpoPairsOracleSql(
-        """SELECT a.l_suppkey AS i, b.l_suppkey AS j,
-          |    NOT ((a.l_suppkey*7 + b.l_suppkey*13 + a.l_orderkey)
-          |      % 4 > 0) AS awin
-          |  FROM lineitem a JOIN lineitem b
-          |    ON a.l_orderkey = b.l_orderkey
-          |   AND a.l_suppkey < b.l_suppkey
-          |   AND a.l_quantity <> b.l_quantity""".stripMargin,
+      Some(BradleyTerry.dpoPairsOracleSql(noisyDuelsSql,
         iters = 5, minDuels = 2L))),
 
     // ---- unpaired-preference (KTO-style) label export -----------------
@@ -712,17 +667,7 @@ object AnalyticsQueries {
     // don't explode the wedge join at corpus scale.
     Q("q_pref_transitivity",
       (s, d) => {
-        val li = lineitem(s, d)
-          .select("l_orderkey", "l_suppkey", "l_quantity")
-        PreferenceAudit.transitivityAudit(
-          li.as("a").join(li.as("b"),
-              col("a.l_orderkey") === col("b.l_orderkey") &&
-                col("a.l_suppkey") < col("b.l_suppkey") &&
-                col("a.l_quantity") =!= col("b.l_quantity"))
-            .select(col("a.l_suppkey").as("i"),
-              col("b.l_suppkey").as("j"),
-              (col("a.l_quantity") > col("b.l_quantity")).as("awin")),
-          minDuels = 4L)
+        PreferenceAudit.transitivityAudit(quantityDuels(s, d), minDuels = 4L)
       },
       Some("""
         |WITH duels AS MATERIALIZED (SELECT a.l_suppkey AS i,

@@ -69,6 +69,94 @@ object ClusterQueries {
       |      embedding[2:64]) AS embedding FROM e),
       |corp AS (SELECT * FROM e UNION ALL SELECT * FROM pert)""".stripMargin
 
+  /** q_semdedup's exact clustering: the corpus, its k-means
+    * assignment (id, cluster) on milli-quantized vectors, and that
+    * assignment joined back to the raw vectors (id, cluster, ev). */
+  private def semKmeans(s: SparkSession,
+                        d: String): (DataFrame, DataFrame, DataFrame) = {
+    val corp = semCorpus(s, d)
+    // n WITHOUT re-evaluating the union+perturbation pipeline: the
+    // corpus is by construction exactly 2x the base embeddings
+    // table (r15 advice — corp.count() paid the corpus scan twice)
+    val k = semDedupK(2L * embeddings(s, d).count())
+    val qv = corp.select(col("vec_id").as("id"),
+      Clustering.quantizeMilli(col("embedding")).as("qv"))
+    val asg = Clustering.kmeansAssign(qv, "id", "qv", k = k, iters = 2)
+      .select("id", "cluster")
+    val withV = asg.join(
+      corp.select(col("vec_id").as("id"), col("embedding").as("ev")),
+      "id")
+    (corp, asg, withV)
+  }
+
+  /** SemDeDup's keep rule over `wv` (id, cluster, ev): the ids that
+    * have a smaller-id cluster mate at cos_milli >= 950. */
+  private def semDupsWithin(wv: DataFrame): DataFrame = {
+    val a = wv.select(col("id").as("id_a"), col("cluster"),
+      col("ev").as("ea"))
+    val b = wv.select(col("id").as("id_b"), col("cluster"),
+      col("ev").as("eb"))
+    a.join(b, Seq("cluster"))
+      .filter(col("id_a") < col("id_b"))
+      .filter(GraftFunctions.cosineMilli(col("ea"), col("eb")) >= 950)
+      .select(col("id_b").as("id")).distinct()
+  }
+
+  /** [[semKmeans]] as DuckDB CTEs, ending at `wv(id, cluster, ev)`. */
+  private lazy val semKmeansCtes: String = {
+    val kmeans = Clustering.oracleCtes(
+      s"SELECT vec_id AS id, ${OracleSql.quantMilli("embedding", 64)} " +
+        "AS qv FROM corp",
+      k = SemDedupOracleK, iters = 2, dim = 64)
+    s"""$semCorpusSql,
+       |$kmeans,
+       |wv AS (SELECT a.id, a.cluster, c.embedding AS ev
+       |  FROM asg a JOIN corp c ON c.vec_id = a.id)""".stripMargin
+  }
+
+  /** [[semDupsWithin]] as a DuckDB CTE `name` over the CTE `wv`. */
+  private def semDupsSql(name: String, wv: String): String = s"""
+    |$name AS (SELECT DISTINCT b.id FROM $wv a JOIN $wv b
+    |  ON a.cluster = b.cluster AND a.id < b.id
+    |  WHERE ${OracleSql.cosMilli("a.ev", "b.ev")} >= 950)""".stripMargin.trim
+
+  /** hits@10 of `approx` (q_id, vec_id) for queries 20..24: how many of
+    * its rows are in the exact-cosine top-10 — the recall companion of
+    * the PQ and IVF-PQ top-k gates. */
+  private def recallAt10(s: SparkSession, d: String,
+                         approx: DataFrame): DataFrame = {
+    val base = embeddings(s, d).select(col("vec_id"), col("embedding"))
+    val q = base.filter(col("vec_id") >= 20 && col("vec_id") < 25)
+      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
+    val wCos = Window.partitionBy("q_id")
+      .orderBy(col("cos_milli").desc, col("vec_id").asc)
+    val exact = base.crossJoin(broadcast(q))
+      .filter(col("vec_id") =!= col("q_id"))
+      .withColumn("cos_milli",
+        GraftFunctions.cosineMilli(col("q_emb"), col("embedding")))
+      .withColumn("rn", row_number().over(wCos))
+      .filter(col("rn") <= 10)
+      .select("q_id", "vec_id")
+    val hits = approx.select("q_id", "vec_id")
+      .join(exact, Seq("q_id", "vec_id"))
+      .groupBy("q_id").agg(count(lit(1)).as("hits10"))
+    q.select("q_id").join(hits, Seq("q_id"), "left")
+      .select(col("q_id"),
+        coalesce(col("hits10"), lit(0L)).as("hits10"))
+      .orderBy("q_id")
+  }
+
+  /** [[recallAt10]]'s exact top-10 as a DuckDB CTE `name` (q_id, vec_id)
+    * over the query CTE `qq`. */
+  private def exactTop10Sql(name: String): String = s"""
+    |$name AS (SELECT q_id, vec_id FROM (
+    |    SELECT q.q_id, e.vec_id, row_number() OVER (
+    |      PARTITION BY q.q_id
+    |      ORDER BY ${OracleSql.cosMilli("q.q_emb", "e.embedding")}
+    |        DESC, e.vec_id) AS rn
+    |    FROM qq q, embeddings e WHERE e.vec_id <> q.q_id)
+    |  WHERE rn <= 10)""".stripMargin.trim
+
   /** The shared PQ pipeline (train → encode → ADC shortlist 40 →
     * exact re-rank): q_ann_pq_topk returns its top-10, q_ann_pq_recall
     * compares that top-10 against the exact brute-force answer.
@@ -395,49 +483,19 @@ object ClusterQueries {
     // + pairing end-to-end.
     Q("q_semdedup",
       (s, d) => {
-        val corp = semCorpus(s, d)
-        // n WITHOUT re-evaluating the union+perturbation pipeline: the
-        // corpus is by construction exactly 2x the base embeddings
-        // table (r15 advice — corp.count() paid the corpus scan twice)
-        val k = semDedupK(2L * embeddings(s, d).count())
-        val qv = corp.select(col("vec_id").as("id"),
-          Clustering.quantizeMilli(col("embedding")).as("qv"))
-        val asg = Clustering.kmeansAssign(qv, "id", "qv", k = k, iters = 2)
-          .select("id", "cluster")
-        val withV = asg.join(
-          corp.select(col("vec_id").as("id"), col("embedding").as("ev")),
-          "id")
-        val a = withV.select(col("id").as("id_a"), col("cluster"),
-          col("ev").as("ea"))
-        val b = withV.select(col("id").as("id_b"), col("cluster"),
-          col("ev").as("eb"))
-        val dupIds = a.join(b, Seq("cluster"))
-          .filter(col("id_a") < col("id_b"))
-          .filter(GraftFunctions.cosineMilli(col("ea"), col("eb")) >= 950)
-          .select(col("id_b").as("id")).distinct()
-          .withColumn("dup", lit(true))
+        val (_, asg, withV) = semKmeans(s, d)
+        val dupIds = semDupsWithin(withV).withColumn("dup", lit(true))
         asg.join(dupIds, Seq("id"), "left")
           .select(col("id"), col("cluster"),
             coalesce(col("dup"), lit(false)).as("is_dup"))
           .orderBy("id")
       },
-      Some {
-        val kmeans = Clustering.oracleCtes(
-          s"SELECT vec_id AS id, ${OracleSql.quantMilli("embedding", 64)} " +
-            "AS qv FROM corp",
-          k = SemDedupOracleK, iters = 2, dim = 64)
-        s"""WITH $semCorpusSql,
-           |$kmeans,
-           |wv AS (SELECT a.id, a.cluster, c.embedding AS ev
-           |  FROM asg a JOIN corp c ON c.vec_id = a.id),
-           |dups AS (SELECT DISTINCT b.id FROM wv a JOIN wv b
-           |  ON a.cluster = b.cluster AND a.id < b.id
-           |  WHERE ${OracleSql.cosMilli("a.ev", "b.ev")} >= 950)
-           |SELECT w.id, w.cluster, d.id IS NOT NULL AS is_dup
-           |FROM wv w LEFT JOIN dups d ON w.id = d.id
-           |ORDER BY w.id
-           |""".stripMargin.trim
-      }),
+      Some(s"""WITH $semKmeansCtes,
+        |${semDupsSql("dups", "wv")}
+        |SELECT w.id, w.cluster, d.id IS NOT NULL AS is_dup
+        |FROM wv w LEFT JOIN dups d ON w.id = d.id
+        |ORDER BY w.id
+        |""".stripMargin.trim)),
 
     // ---- SemDeDup with ANN-ASSIGNED clusters (the deployment swap) ----
     // q_semdedup's documented 100 TB answer, demonstrated instead of
@@ -459,30 +517,11 @@ object ClusterQueries {
     // (shared semDedupK), the agreement join is one id-keyed merge.
     Q("q_semdedup_ann",
       (s, d) => {
-        val corp = semCorpus(s, d)
-        val k = semDedupK(2L * embeddings(s, d).count())
-        // exact path: k-means on quantized vectors (q_semdedup's body)
-        val qv = corp.select(col("vec_id").as("id"),
-          Clustering.quantizeMilli(col("embedding")).as("qv"))
-        val asg = Clustering.kmeansAssign(qv, "id", "qv", k = k, iters = 2)
-          .select("id", "cluster")
-        val withV = asg.join(
-          corp.select(col("vec_id").as("id"), col("embedding").as("ev")),
-          "id")
-        def dupsWithin(wv: DataFrame): DataFrame = {
-          val a = wv.select(col("id").as("id_a"), col("cluster"),
-            col("ev").as("ea"))
-          val b = wv.select(col("id").as("id_b"), col("cluster"),
-            col("ev").as("eb"))
-          a.join(b, Seq("cluster"))
-            .filter(col("id_a") < col("id_b"))
-            .filter(GraftFunctions.cosineMilli(col("ea"), col("eb"))
-              >= 950)
-            .select(col("id_b").as("id")).distinct()
-        }
-        val exactDup = dupsWithin(withV).withColumn("e", lit(1))
+        // exact path: q_semdedup's k-means on quantized vectors
+        val (corp, _, withV) = semKmeans(s, d)
+        val exactDup = semDupsWithin(withV).withColumn("e", lit(1))
         // ANN path: clusters READ from the persisted IVF store
-        val annDup = dupsWithin(
+        val annDup = semDupsWithin(
             s.table(semAnnIvfTable(s, d))
               .select(col("id"), col("cluster"), col("vec").as("ev")))
           .withColumn("a", lit(1))
@@ -502,46 +541,33 @@ object ClusterQueries {
               / count(lit(1)) + lit(0.5))
             .cast("long").as("agree_milli"))
       },
-      Some {
-        val kmeans = Clustering.oracleCtes(
-          s"SELECT vec_id AS id, ${OracleSql.quantMilli("embedding", 64)} " +
-            "AS qv FROM corp",
-          k = SemDedupOracleK, iters = 2, dim = 64)
-        s"""WITH $semCorpusSql,
-           |$kmeans,
-           |wv AS (SELECT a.id, a.cluster, c.embedding AS ev
-           |  FROM asg a JOIN corp c ON c.vec_id = a.id),
-           |edups AS (SELECT DISTINCT b.id FROM wv a JOIN wv b
-           |  ON a.cluster = b.cluster AND a.id < b.id
-           |  WHERE ${OracleSql.cosMilli("a.ev", "b.ev")} >= 950),
-           |cents AS (SELECT vec_id AS c_id, embedding AS cv
-           |  FROM embeddings WHERE vec_id < $SemDedupOracleK),
-           |aasg AS (SELECT id, cluster, ev FROM (
-           |    SELECT c.vec_id AS id, ct.c_id AS cluster,
-           |      c.embedding AS ev,
-           |      row_number() OVER (PARTITION BY c.vec_id
-           |        ORDER BY ${OracleSql.cosMilli("c.embedding", "ct.cv")}
-           |          DESC, ct.c_id ASC) AS rn
-           |    FROM corp c, cents ct) WHERE rn = 1),
-           |adups AS (SELECT DISTINCT b.id FROM aasg a JOIN aasg b
-           |  ON a.cluster = b.cluster AND a.id < b.id
-           |  WHERE ${OracleSql.cosMilli("a.ev", "b.ev")} >= 950),
-           |fl AS (SELECT c.vec_id AS id,
-           |    CASE WHEN e.id IS NULL THEN 0 ELSE 1 END AS e,
-           |    CASE WHEN a.id IS NULL THEN 0 ELSE 1 END AS a
-           |  FROM corp c LEFT JOIN edups e ON e.id = c.vec_id
-           |    LEFT JOIN adups a ON a.id = c.vec_id)
-           |SELECT CAST(count(*) AS BIGINT) AS n_vectors,
-           |  CAST(sum(e) AS BIGINT) AS exact_dups,
-           |  CAST(sum(a) AS BIGINT) AS ann_dups,
-           |  CAST(sum(CASE WHEN e = 1 AND a = 1 THEN 1 ELSE 0 END)
-           |    AS BIGINT) AS both_dups,
-           |  CAST(floor(1000.0
-           |      * sum(CASE WHEN e = a THEN 1 ELSE 0 END)
-           |      / count(*) + 0.5) AS BIGINT) AS agree_milli
-           |FROM fl
-           |""".stripMargin.trim
-      }),
+      Some(s"""WITH $semKmeansCtes,
+        |${semDupsSql("edups", "wv")},
+        |cents AS (SELECT vec_id AS c_id, embedding AS cv
+        |  FROM embeddings WHERE vec_id < $SemDedupOracleK),
+        |aasg AS (SELECT id, cluster, ev FROM (
+        |    SELECT c.vec_id AS id, ct.c_id AS cluster,
+        |      c.embedding AS ev,
+        |      row_number() OVER (PARTITION BY c.vec_id
+        |        ORDER BY ${OracleSql.cosMilli("c.embedding", "ct.cv")}
+        |          DESC, ct.c_id ASC) AS rn
+        |    FROM corp c, cents ct) WHERE rn = 1),
+        |${semDupsSql("adups", "aasg")},
+        |fl AS (SELECT c.vec_id AS id,
+        |    CASE WHEN e.id IS NULL THEN 0 ELSE 1 END AS e,
+        |    CASE WHEN a.id IS NULL THEN 0 ELSE 1 END AS a
+        |  FROM corp c LEFT JOIN edups e ON e.id = c.vec_id
+        |    LEFT JOIN adups a ON a.id = c.vec_id)
+        |SELECT CAST(count(*) AS BIGINT) AS n_vectors,
+        |  CAST(sum(e) AS BIGINT) AS exact_dups,
+        |  CAST(sum(a) AS BIGINT) AS ann_dups,
+        |  CAST(sum(CASE WHEN e = 1 AND a = 1 THEN 1 ELSE 0 END)
+        |    AS BIGINT) AS both_dups,
+        |  CAST(floor(1000.0
+        |      * sum(CASE WHEN e = a THEN 1 ELSE 0 END)
+        |      / count(*) + 0.5) AS BIGINT) AS agree_milli
+        |FROM fl
+        |""".stripMargin.trim)),
 
     // ---- product-quantization ANN top-k (TRAINED codebook) ------------
     // The COMPRESSION ANN family beside brute/IVF/LSH: encode every
@@ -573,36 +599,10 @@ object ClusterQueries {
     // oracle replays BOTH pipelines — training included — so the
     // recall number itself is hash-pinned, not asserted.
     Q("q_ann_pq_recall",
-      (s, d) => {
-        val base = embeddings(s, d).select(col("vec_id"), col("embedding"))
-        val q = base.filter(col("vec_id") >= 20 && col("vec_id") < 25)
-          .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-        val wCos = Window.partitionBy("q_id")
-          .orderBy(col("cos_milli").desc, col("vec_id").asc)
-        val exact = base.crossJoin(broadcast(q))
-          .filter(col("vec_id") =!= col("q_id"))
-          .withColumn("cos_milli",
-            GraftFunctions.cosineMilli(col("q_emb"), col("embedding")))
-          .withColumn("rn", row_number().over(wCos))
-          .filter(col("rn") <= 10)
-          .select("q_id", "vec_id")
-        val pq = pqTopK(s, d).select("q_id", "vec_id")
-        val hits = pq.join(exact, Seq("q_id", "vec_id"))
-          .groupBy("q_id").agg(count(lit(1)).as("hits10"))
-        q.select("q_id").join(hits, Seq("q_id"), "left")
-          .select(col("q_id"),
-            coalesce(col("hits10"), lit(0L)).as("hits10"))
-          .orderBy("q_id")
-      },
+      (s, d) => recallAt10(s, d, pqTopK(s, d)),
       Some(s"""
         |WITH $pqCtes,
-        |ex AS (SELECT q_id, vec_id FROM (
-        |    SELECT q.q_id, e.vec_id, row_number() OVER (
-        |      PARTITION BY q.q_id
-        |      ORDER BY ${OracleSql.cosMilli("q.q_emb", "e.embedding")}
-        |        DESC, e.vec_id) AS rn
-        |    FROM qq q, embeddings e WHERE e.vec_id <> q.q_id)
-        |  WHERE rn <= 10),
+        |${exactTop10Sql("ex")},
         |hits AS (SELECT r.q_id, CAST(count(*) AS BIGINT) AS hits10
         |  FROM (SELECT q_id, vec_id FROM ranked WHERE rank <= 10) r
         |  JOIN ex ON ex.q_id = r.q_id AND ex.vec_id = r.vec_id
@@ -668,37 +668,11 @@ object ClusterQueries {
     // cost of BOTH approximations (cell truncation + code compression)
     // measured together, the number an index rollout is judged by.
     Q("q_ann_ivfpq_recall",
-      (s, d) => {
-        val base = embeddings(s, d).select(col("vec_id"), col("embedding"))
-        val q = base.filter(col("vec_id") >= 20 && col("vec_id") < 25)
-          .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-        val wCos = Window.partitionBy("q_id")
-          .orderBy(col("cos_milli").desc, col("vec_id").asc)
-        val exact = base.crossJoin(broadcast(q))
-          .filter(col("vec_id") =!= col("q_id"))
-          .withColumn("cos_milli",
-            GraftFunctions.cosineMilli(col("q_emb"), col("embedding")))
-          .withColumn("rn", row_number().over(wCos))
-          .filter(col("rn") <= 10)
-          .select("q_id", "vec_id")
-        val approx = ivfPqTopK(s, d).select("q_id", "vec_id")
-        val hits = approx.join(exact, Seq("q_id", "vec_id"))
-          .groupBy("q_id").agg(count(lit(1)).as("hits10"))
-        q.select("q_id").join(hits, Seq("q_id"), "left")
-          .select(col("q_id"),
-            coalesce(col("hits10"), lit(0L)).as("hits10"))
-          .orderBy("q_id")
-      },
+      (s, d) => recallAt10(s, d, ivfPqTopK(s, d)),
       Some(s"""
         |WITH $pqCtes,
         |$ivfPqCtes,
-        |ipq_ex AS (SELECT q_id, vec_id FROM (
-        |    SELECT q.q_id, e.vec_id, row_number() OVER (
-        |      PARTITION BY q.q_id
-        |      ORDER BY ${OracleSql.cosMilli("q.q_emb", "e.embedding")}
-        |        DESC, e.vec_id) AS rn
-        |    FROM qq q, embeddings e WHERE e.vec_id <> q.q_id)
-        |  WHERE rn <= 10)
+        |${exactTop10Sql("ipq_ex")}
         |SELECT q.q_id, CAST(coalesce(h.hits10, 0) AS BIGINT) AS hits10
         |FROM qq q LEFT JOIN (
         |  SELECT a.q_id, count(*) AS hits10
@@ -714,12 +688,11 @@ object ClusterQueries {
     // |labels|-row expression, and arriving vectors are scored AS A
     // STREAM — a stateless projection, so batch semantics carry over
     // verbatim (Append mode, AvailableNow to completion). The oracle
-    // is the SAME chain as q_classify_centroid: stream ≡ batch is
+    // is q_classify_centroid's classifierOracle: stream ≡ batch is
     // hash-pinned.
     Q("q_stream_classify",
       (s, d) => {
-        val emb = embeddings(s, d).select(col("vec_id"), col("label"),
-          Clustering.quantizeMilli(col("embedding")).as("qv"))
+        val emb = labeledQv(s, d)
         val model = graft.ops.Classify.centroidModel(
           emb.filter(pmod(col("vec_id"), lit(5)) =!= 0), "label", "qv")
         val s2 = graft.streaming.StreamingOps.session(s)
@@ -741,11 +714,7 @@ object ClusterQueries {
             org.apache.spark.sql.streaming.OutputMode.Append())
           .orderBy("id")
       },
-      Some(classifierOracleCtes +
-        """
-        |SELECT id, label_true, pred, dist_sq, hit
-        |FROM cls_best WHERE rn = 1 ORDER BY id
-        |""".stripMargin.trim)),
+      Some(classifierOracle)),
 
     // ---- trained centroid (Rocchio) classifier -----------------------
     // Fit one integer centroid per label on the %5!=0 training split,
@@ -758,8 +727,7 @@ object ClusterQueries {
     // smaller label).
     Q("q_classify_centroid",
       (s, d) => {
-        val emb = embeddings(s, d).select(col("vec_id"), col("label"),
-          Clustering.quantizeMilli(col("embedding")).as("qv"))
+        val emb = labeledQv(s, d)
         val cents = graft.ops.Classify.centroidTrain(
           emb.filter(pmod(col("vec_id"), lit(5)) =!= 0), "label", "qv")
         graft.ops.Classify.centroidClassify(
@@ -767,11 +735,7 @@ object ClusterQueries {
           "vec_id", "label", "qv")
           .orderBy("id")
       },
-      Some(classifierOracleCtes +
-        """
-        |SELECT id, label_true, pred, dist_sq, hit
-        |FROM cls_best WHERE rn = 1 ORDER BY id
-        |""".stripMargin.trim)),
+      Some(classifierOracle)),
 
     // ---- active learning: smallest-margin labeling batch -------------
     // The label-efficiency move: rank the holdout by the gap between
@@ -783,8 +747,7 @@ object ClusterQueries {
     // window. Exact integers; ties to the smaller id.
     Q("q_classify_active_sample",
       (s, d) => {
-        val emb = embeddings(s, d).select(col("vec_id"), col("label"),
-          Clustering.quantizeMilli(col("embedding")).as("qv"))
+        val emb = labeledQv(s, d)
         val model = graft.ops.Classify.centroidModel(
           emb.filter(pmod(col("vec_id"), lit(5)) =!= 0), "label", "qv")
         val m = graft.ops.Classify.uncertaintyMargin(
@@ -816,8 +779,7 @@ object ClusterQueries {
     // Bounded output: |labels|² rows at any corpus size.
     Q("q_classify_confusion",
       (s, d) => {
-        val emb = embeddings(s, d).select(col("vec_id"), col("label"),
-          Clustering.quantizeMilli(col("embedding")).as("qv"))
+        val emb = labeledQv(s, d)
         val cents = graft.ops.Classify.centroidTrain(
           emb.filter(pmod(col("vec_id"), lit(5)) =!= 0), "label", "qv")
         val scored = graft.ops.Classify.centroidClassify(
@@ -841,7 +803,21 @@ object ClusterQueries {
         |""".stripMargin.trim))
   )
 
-  /** The CTE chain both classifier oracles share: quantize, split,
+  /** (vec_id, label, qv): the labeled embeddings, milli-quantized —
+    * the input every centroid-classifier gate splits on vec_id % 5. */
+  private def labeledQv(s: SparkSession, d: String): DataFrame =
+    embeddings(s, d).select(col("vec_id"), col("label"),
+      Clustering.quantizeMilli(col("embedding")).as("qv"))
+
+  /** The holdout's nearest-centroid labels — q_classify_centroid's
+    * answer, which q_stream_classify's stream must reproduce. */
+  private def classifierOracle: String = classifierOracleCtes +
+    """
+    |SELECT id, label_true, pred, dist_sq, hit
+    |FROM cls_best WHERE rn = 1 ORDER BY id
+    |""".stripMargin.trim
+
+  /** The CTE chain all classifier oracles share: quantize, split,
     * per-label floor-div centroid fit, exact-L2 scoring of the
     * holdout, rank-1 = nearest centroid (ties to smaller label). */
   private def classifierOracleCtes: String = {

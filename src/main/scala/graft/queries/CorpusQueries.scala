@@ -557,18 +557,12 @@ object CorpusQueries {
     // — exact integer math, shards give the parallelism)
     Q("q_token_packing",
       (s, d) => Corpus.packByTokenBudget(
-          documents(s, d).select(col("doc_id"),
-            pmod(col("doc_id"), lit(8L)).as("shard"),
-            graft.ops.TextOps.tokenCount(col("text")).cast("long")
-              .as("n_tokens")),
+          shardTokens(s, d),
           shardCol = "shard", orderCol = "doc_id",
           tokenCol = "n_tokens", budget = 1000L)
         .orderBy("shard", "doc_id"),
-      Some("""
-        |WITH t AS (SELECT doc_id, doc_id % 8 AS shard,
-        |    CAST(len(string_split_regex(trim(text), '[ \t\n\r\f]+')) AS BIGINT)
-        |      AS n_tokens
-        |  FROM documents),
+      Some(s"""
+        |WITH $shardTokensSql,
         |c AS (SELECT doc_id, shard, n_tokens,
         |    CAST(sum(n_tokens) OVER (PARTITION BY shard ORDER BY doc_id
         |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
@@ -587,18 +581,12 @@ object CorpusQueries {
     // ceil(tokens/window).)
     Q("q_pack_concat_split",
       (s, d) => Corpus.concatSplitWindows(
-          documents(s, d).select(col("doc_id"),
-            pmod(col("doc_id"), lit(8L)).as("shard"),
-            graft.ops.TextOps.tokenCount(col("text")).cast("long")
-              .as("n_tokens")),
+          shardTokens(s, d),
           shardCol = "shard", orderCol = "doc_id",
           tokenCol = "n_tokens", window = 512L)
         .orderBy("doc_id", "win"),
-      Some("""
-        |WITH t AS (SELECT doc_id, doc_id % 8 AS shard,
-        |    CAST(len(string_split_regex(trim(text), '[ \t\n\r\f]+')) AS BIGINT)
-        |      AS n_tokens
-        |  FROM documents),
+      Some(s"""
+        |WITH $shardTokensSql,
         |c AS (SELECT doc_id, shard, n_tokens,
         |    CAST(sum(n_tokens) OVER (PARTITION BY shard ORDER BY doc_id
         |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
@@ -841,14 +829,8 @@ object CorpusQueries {
             expr("supervised_tokens * 1000L DIV window_tokens"))
           .orderBy("doc_id", "win")
       },
-      Some("""
-        |WITH turns AS (SELECT doc_id, i,
-        |    CASE WHEN i % 2 = 0 THEN 'user' ELSE 'assistant' END AS role,
-        |    CAST(len(string_split_regex(
-        |      trim(substring(text, 1 + 80 * i::INT, 80)),
-        |      '[ \t\n\r\f]+')) AS BIGINT) AS cnt
-        |  FROM documents, unnest(generate_series(0, 3)) AS u(i)
-        |  WHERE substring(text, 1 + 80 * i::INT, 80) <> ''),
+      Some(s"""
+        |WITH ${OracleSql.chatTurns},
         |tot AS (SELECT doc_id, doc_id % 8 AS shard,
         |    CAST(sum(cnt) AS BIGINT) AS n_tokens
         |  FROM turns GROUP BY doc_id),
@@ -914,15 +896,7 @@ object CorpusQueries {
       (s, d) => graft.ops.Retrieval.invertedIndex(
           documents(s, d), "doc_id", "text")
         .orderBy("term"),
-      Some("""
-        |WITH t AS (SELECT doc_id AS id,
-        |    unnest(string_split_regex(trim(lower(text)), '[ \t\n\r\f]+')) AS term
-        |  FROM documents),
-        |p AS (SELECT DISTINCT term, id FROM t WHERE term <> '')
-        |SELECT term, CAST(count(*) AS BIGINT) AS df,
-        |  array_to_string(list(id ORDER BY id), ',') AS postings
-        |FROM p GROUP BY term ORDER BY term
-        |""".stripMargin.trim)),
+      Some(invertedIndexOracle)),
 
     // ---- deterministic training-mixture sample -------------------------
     // The domain-reweighting knob: unequal per-source quotas (src0=30
@@ -999,28 +973,20 @@ object CorpusQueries {
     // holdout's postings APPENDED (the posting merge is structural —
     // new pairs land beside old ones, no read-modify-write, no
     // rebuild), and the merged store assembled back to the
-    // (term, df, postings) shape. Shares q_inverted_index's oracle
-    // verbatim: the incremental path must be bit-identical to a full
-    // rebuild over the whole corpus.
+    // (term, df, postings) shape. Its oracle is invertedIndexOracle:
+    // the incremental path must be bit-identical to a full rebuild over
+    // the whole corpus.
     Q("q_incr_index_maintain",
       (s, d) => graft.ops.InvertedIndexStore
         .assemble(s, incrIndexTable(s, d)).orderBy("term"),
-      Some("""
-        |WITH t AS (SELECT doc_id AS id,
-        |    unnest(string_split_regex(trim(lower(text)), '[ \t\n\r\f]+')) AS term
-        |  FROM documents),
-        |p AS (SELECT DISTINCT term, id FROM t WHERE term <> '')
-        |SELECT term, CAST(count(*) AS BIGINT) AS df,
-        |  array_to_string(list(id ORDER BY id), ',') AS postings
-        |FROM p GROUP BY term ORDER BY term
-        |""".stripMargin.trim)),
+      Some(invertedIndexOracle)),
 
     // ---- index compaction: assembly invariant, files bounded ----------
     // The maintenance pass of the append-maintained store: after the
     // build+append lifecycle each touched prefix partition holds 2
     // files; compaction clusters rows back to their partition key and
     // swaps the table (one file per partition). The gate assembles the
-    // COMPACTED store against the same full-corpus oracle — content
+    // COMPACTED store against invertedIndexOracle — content
     // must be untouched; the file-count drop is pinned in
     // CompactionSpec.
     Q("q_index_compaction",
@@ -1029,23 +995,15 @@ object CorpusQueries {
         graft.ops.Compaction.compactPartitionedTable(s, tbl)
         graft.ops.InvertedIndexStore.assemble(s, tbl).orderBy("term")
       },
-      Some("""
-        |WITH t AS (SELECT doc_id AS id,
-        |    unnest(string_split_regex(trim(lower(text)), '[ \t\n\r\f]+')) AS term
-        |  FROM documents),
-        |p AS (SELECT DISTINCT term, id FROM t WHERE term <> '')
-        |SELECT term, CAST(count(*) AS BIGINT) AS df,
-        |  array_to_string(list(id ORDER BY id), ',') AS postings
-        |FROM p GROUP BY term ORDER BY term
-        |""".stripMargin.trim)),
+      Some(invertedIndexOracle)),
 
     // ---- BM25 answered from the persisted store only ------------------
     // The sufficient-statistics contract of the stored index: tf rides
     // in the pruned posting lookup, df derives from the looked-up
     // lists, dl/N/total-token-mass come from the doc-stats side table
     // — NO text is touched at query time, and the store is the same
-    // incremental build+append as q_incr_index_maintain. Shares
-    // q_bm25_topk's oracle verbatim: score expression and ranking are
+    // incremental build+append as q_incr_index_maintain. Its oracle is
+    // q_bm25_topk's bm25TopkOracle: score expression and ranking are
     // the same shared objects, so stored scoring must be bit-identical
     // to payload scoring over the full corpus.
     Q("q_bm25_from_store",
@@ -1053,29 +1011,7 @@ object CorpusQueries {
           s, incrIndexTable(s, d),
           queryTerms = Seq("batch", "join", "filter"), k = 20)
         .orderBy("rank"),
-      Some(s"""
-        |WITH tok AS (SELECT doc_id AS id,
-        |    unnest(string_split_regex(trim(lower(text)), '[ \\t\\n\\r\\f]+')) AS term
-        |  FROM documents),
-        |t AS (SELECT * FROM tok WHERE term <> ''),
-        |dl AS (SELECT id, count(*) AS dl FROM t GROUP BY id),
-        |sc AS (SELECT (SELECT count(*) FROM documents) AS n_docs,
-        |    (SELECT count(*) FROM t) AS total_tokens),
-        |qt AS (SELECT * FROM t
-        |  WHERE term IN ('batch', 'join', 'filter')),
-        |tf AS (SELECT id, term, count(*) AS tf FROM qt GROUP BY 1, 2),
-        |dfq AS (SELECT term, count(DISTINCT id) AS df FROM qt GROUP BY 1),
-        |ts AS (SELECT tf.id,
-        |    ${graft.ops.Retrieval.scoreSql("tf.tf", "dfq.df", "dl.dl",
-                 "sc.n_docs", "sc.total_tokens")} AS term_score
-        |  FROM tf JOIN dfq USING (term) JOIN dl ON dl.id = tf.id, sc),
-        |agg AS (SELECT id, CAST(sum(term_score) AS BIGINT)
-        |    AS score_milli FROM ts GROUP BY id)
-        |SELECT rank, id, score_milli FROM (
-        |  SELECT *, row_number() OVER (
-        |    ORDER BY score_milli DESC, id ASC) AS rank FROM agg)
-        |WHERE rank <= 20 ORDER BY rank
-        |""".stripMargin.trim)),
+      Some(bm25TopkOracle)),
 
     // ---- takedown sweep: the store must FORGET, cheaply --------------
     // The deletion path (takedown / consent revocation): the removal
@@ -1093,31 +1029,10 @@ object CorpusQueries {
           s, takedownIndexTable(s, d),
           queryTerms = Seq("batch", "join", "filter"), k = 20)
         .orderBy("rank"),
-      Some(s"""
-        |WITH rd AS (SELECT doc_id, text FROM documents
+      Some(bm25Top20(s"""
+        |rd AS (SELECT doc_id, text FROM documents
         |  WHERE doc_id % 37 <> 0),
-        |tok AS (SELECT doc_id AS id,
-        |    unnest(string_split_regex(trim(lower(text)), '[ \\t\\n\\r\\f]+')) AS term
-        |  FROM rd),
-        |t AS (SELECT * FROM tok WHERE term <> ''),
-        |dl AS (SELECT id, count(*) AS dl FROM t GROUP BY id),
-        |sc AS (SELECT (SELECT count(*) FROM rd) AS n_docs,
-        |    (SELECT count(*) FROM t) AS total_tokens),
-        |qt AS (SELECT * FROM t
-        |  WHERE term IN ('batch', 'join', 'filter')),
-        |tf AS (SELECT id, term, count(*) AS tf FROM qt GROUP BY 1, 2),
-        |dfq AS (SELECT term, count(DISTINCT id) AS df FROM qt GROUP BY 1),
-        |ts AS (SELECT tf.id,
-        |    ${graft.ops.Retrieval.scoreSql("tf.tf", "dfq.df", "dl.dl",
-                 "sc.n_docs", "sc.total_tokens")} AS term_score
-        |  FROM tf JOIN dfq USING (term) JOIN dl ON dl.id = tf.id, sc),
-        |agg AS (SELECT id, CAST(sum(term_score) AS BIGINT)
-        |    AS score_milli FROM ts GROUP BY id)
-        |SELECT rank, id, score_milli FROM (
-        |  SELECT *, row_number() OVER (
-        |    ORDER BY score_milli DESC, id ASC) AS rank FROM agg)
-        |WHERE rank <= 20 ORDER BY rank
-        |""".stripMargin.trim)),
+        |${bm25Ctes("rd")}""".stripMargin.trim))),
 
     // ---- CROSS-store takedown propagation audit ----------------------
     // The sweep a real DMCA request triggers (r11 verdict item 6): ONE
@@ -1228,29 +1143,7 @@ object CorpusQueries {
           documents(s, d), "doc_id", "text",
           queryTerms = Seq("batch", "join", "filter"), k = 20)
         .orderBy("rank"),
-      Some(s"""
-        |WITH tok AS (SELECT doc_id AS id,
-        |    unnest(string_split_regex(trim(lower(text)), '[ \\t\\n\\r\\f]+')) AS term
-        |  FROM documents),
-        |t AS (SELECT * FROM tok WHERE term <> ''),
-        |dl AS (SELECT id, count(*) AS dl FROM t GROUP BY id),
-        |sc AS (SELECT (SELECT count(*) FROM documents) AS n_docs,
-        |    (SELECT count(*) FROM t) AS total_tokens),
-        |qt AS (SELECT * FROM t
-        |  WHERE term IN ('batch', 'join', 'filter')),
-        |tf AS (SELECT id, term, count(*) AS tf FROM qt GROUP BY 1, 2),
-        |dfq AS (SELECT term, count(DISTINCT id) AS df FROM qt GROUP BY 1),
-        |ts AS (SELECT tf.id,
-        |    ${graft.ops.Retrieval.scoreSql("tf.tf", "dfq.df", "dl.dl",
-                 "sc.n_docs", "sc.total_tokens")} AS term_score
-        |  FROM tf JOIN dfq USING (term) JOIN dl ON dl.id = tf.id, sc),
-        |agg AS (SELECT id, CAST(sum(term_score) AS BIGINT)
-        |    AS score_milli FROM ts GROUP BY id)
-        |SELECT rank, id, score_milli FROM (
-        |  SELECT *, row_number() OVER (
-        |    ORDER BY score_milli DESC, id ASC) AS rank FROM agg)
-        |WHERE rank <= 20 ORDER BY rank
-        |""".stripMargin.trim)),
+      Some(bm25TopkOracle)),
 
     // ---- hybrid retrieval: reciprocal-rank fusion ---------------------
     // RRF (c=60) of two heterogeneous lexical rankings over the same
@@ -1271,23 +1164,7 @@ object CorpusQueries {
           .orderBy("rank")
       },
       Some(s"""
-        |WITH tok AS (SELECT doc_id AS id,
-        |    unnest(string_split_regex(trim(lower(text)), '[ \\t\\n\\r\\f]+')) AS term
-        |  FROM documents),
-        |t AS (SELECT * FROM tok WHERE term <> ''),
-        |dl AS (SELECT id, count(*) AS dl FROM t GROUP BY id),
-        |sc AS (SELECT (SELECT count(*) FROM documents) AS n_docs,
-        |    (SELECT count(*) FROM t) AS total_tokens),
-        |qt AS (SELECT * FROM t
-        |  WHERE term IN ('batch', 'join', 'filter')),
-        |tf AS (SELECT id, term, count(*) AS tf FROM qt GROUP BY 1, 2),
-        |dfq AS (SELECT term, count(DISTINCT id) AS df FROM qt GROUP BY 1),
-        |ts AS (SELECT tf.id,
-        |    ${graft.ops.Retrieval.scoreSql("tf.tf", "dfq.df", "dl.dl",
-                 "sc.n_docs", "sc.total_tokens")} AS term_score
-        |  FROM tf JOIN dfq USING (term) JOIN dl ON dl.id = tf.id, sc),
-        |agg AS (SELECT id, CAST(sum(term_score) AS BIGINT)
-        |    AS score_milli FROM ts GROUP BY id),
+        |WITH ${bm25Ctes("documents")},
         |r1 AS (SELECT id, row_number() OVER (
         |    ORDER BY score_milli DESC, id ASC) AS rank FROM agg),
         |w2 AS (SELECT tf.id,
@@ -1747,4 +1624,69 @@ object CorpusQueries {
     |  UNION ALL
     |  SELECT doc_id + 3000000, text || ' fresh'
     |  FROM documents WHERE doc_id % 29 = 0)""".stripMargin.trim
+
+  /** Per-document whitespace-token counts on 8 doc_id shards — the
+    * packing input of q_token_packing and q_pack_concat_split. */
+  private def shardTokens(s: org.apache.spark.sql.SparkSession,
+                          d: String) =
+    documents(s, d).select(col("doc_id"),
+      pmod(col("doc_id"), lit(8L)).as("shard"),
+      graft.ops.TextOps.tokenCount(col("text")).cast("long")
+        .as("n_tokens"))
+
+  /** [[shardTokens]] as a DuckDB CTE named `t`. */
+  private val shardTokensSql = """
+    |t AS (SELECT doc_id, doc_id % 8 AS shard,
+    |    CAST(len(string_split_regex(trim(text), '[ \t\n\r\f]+')) AS BIGINT)
+    |      AS n_tokens
+    |  FROM documents)""".stripMargin.trim
+
+  /** Full-corpus (term, df, postings) — q_inverted_index's answer, which
+    * the appended and the compacted stored index must both reproduce. */
+  private val invertedIndexOracle = """
+    |WITH t AS (SELECT doc_id AS id,
+    |    unnest(string_split_regex(trim(lower(text)), '[ \t\n\r\f]+')) AS term
+    |  FROM documents),
+    |p AS (SELECT DISTINCT term, id FROM t WHERE term <> '')
+    |SELECT term, CAST(count(*) AS BIGINT) AS df,
+    |  array_to_string(list(id ORDER BY id), ',') AS postings
+    |FROM p GROUP BY term ORDER BY term
+    |""".stripMargin.trim
+
+  /** The ONE BM25 CTE chain for the query ('batch', 'join', 'filter')
+    * over the relation `docs` (doc_id, text): tokens, doc lengths,
+    * corpus scalars, tf/df and the shared [[graft.ops.Retrieval.scoreSql]]
+    * term score, ending at `agg(id, score_milli)`. */
+  private def bm25Ctes(docs: String): String = s"""
+    |tok AS (SELECT doc_id AS id,
+    |    unnest(string_split_regex(trim(lower(text)), '[ \\t\\n\\r\\f]+')) AS term
+    |  FROM $docs),
+    |t AS (SELECT * FROM tok WHERE term <> ''),
+    |dl AS (SELECT id, count(*) AS dl FROM t GROUP BY id),
+    |sc AS (SELECT (SELECT count(*) FROM $docs) AS n_docs,
+    |    (SELECT count(*) FROM t) AS total_tokens),
+    |qt AS (SELECT * FROM t
+    |  WHERE term IN ('batch', 'join', 'filter')),
+    |tf AS (SELECT id, term, count(*) AS tf FROM qt GROUP BY 1, 2),
+    |dfq AS (SELECT term, count(DISTINCT id) AS df FROM qt GROUP BY 1),
+    |ts AS (SELECT tf.id,
+    |    ${graft.ops.Retrieval.scoreSql("tf.tf", "dfq.df", "dl.dl",
+                 "sc.n_docs", "sc.total_tokens")} AS term_score
+    |  FROM tf JOIN dfq USING (term) JOIN dl ON dl.id = tf.id, sc),
+    |agg AS (SELECT id, CAST(sum(term_score) AS BIGINT)
+    |    AS score_milli FROM ts GROUP BY id)""".stripMargin.trim
+
+  /** Top-20 by score_milli, ties to the smaller id, after the CTEs
+    * `ctes`, which end at [[bm25Ctes]]. */
+  private def bm25Top20(ctes: String): String = s"""
+    |WITH $ctes
+    |SELECT rank, id, score_milli FROM (
+    |  SELECT *, row_number() OVER (
+    |    ORDER BY score_milli DESC, id ASC) AS rank FROM agg)
+    |WHERE rank <= 20 ORDER BY rank
+    |""".stripMargin.trim
+
+  /** q_bm25_topk's answer over the full corpus, which
+    * q_bm25_from_store's stored scoring must reproduce bit-for-bit. */
+  private lazy val bm25TopkOracle = bm25Top20(bm25Ctes("documents"))
 }

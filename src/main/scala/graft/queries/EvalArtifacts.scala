@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables.documents
 import graft.ops.TextOps
@@ -44,6 +44,17 @@ object EvalArtifacts {
         .agg(bloomAgg(xxhash64(col("s")), 1 << 20, 7).as("b"))
         .head().getAs[Array[Byte]](0)
     })
+  }
+
+  /** The corpus both decontamination gates scan: every doc outside the
+    * eval set (doc_id % 50 == 0) plus a planted copy of each eval doc
+    * at doc_id + 2000000, the rows that must be flagged. */
+  def plantedCorpus(s: SparkSession, d: String): DataFrame = {
+    val docs = documents(s, d)
+    val planted = docs.filter(col("doc_id") % 50 === 0)
+      .select((col("doc_id") + 2000000L).as("doc_id"), col("text"))
+    docs.filter(col("doc_id") % 50 =!= 0)
+      .select("doc_id", "text").unionByName(planted)
   }
 
   /** One-time artifact build (see [[SimQueries.prepares]]). */

@@ -240,12 +240,7 @@ object JobQueries {
         // help (parse cost is embarrassingly parallel scan work)
         val pages = propnexPages(s, d)
           .repartition(s.sparkContext.defaultParallelism)
-        graft.ops.HtmlListing.parsePropnex(pages, "url", "html")
-          .select("url", "location", "price", "street_town_district",
-            "num_bedroom", "floor_area_sqft", "agent_name", "agent_id",
-            "agent_email", "agent_phone_num", "listing_type", "district",
-            "tenure", "property_group", "description", "facilities")
-          .orderBy("url")
+        propnexFields(pages).orderBy("url")
       },
       Some(scrapeExtractOracle)),
 
@@ -263,12 +258,7 @@ object JobQueries {
         val stream = s2.readStream
           .schema("url STRING, html STRING").parquet(dir)
         graft.streaming.StreamingOps.runToTable(
-            graft.ops.HtmlListing.parsePropnex(stream.toDF(), "url", "html")
-              .select("url", "location", "price", "street_town_district",
-                "num_bedroom", "floor_area_sqft", "agent_name", "agent_id",
-                "agent_email", "agent_phone_num", "listing_type",
-                "district", "tenure", "property_group", "description",
-                "facilities"),
+            propnexFields(stream.toDF()),
             org.apache.spark.sql.streaming.OutputMode.Append())
           .orderBy("url")
       },
@@ -287,12 +277,7 @@ object JobQueries {
         val dir = propnexWarcDir(s, d)
         val pages = s.read.format("graft.sources.WarcSource").load(dir)
           .select(col("uri").as("url"), col("content").as("html"))
-        graft.ops.HtmlListing.parsePropnex(pages, "url", "html")
-          .select("url", "location", "price", "street_town_district",
-            "num_bedroom", "floor_area_sqft", "agent_name", "agent_id",
-            "agent_email", "agent_phone_num", "listing_type", "district",
-            "tenure", "property_group", "description", "facilities")
-          .orderBy("url")
+        propnexFields(pages).orderBy("url")
       },
       Some(scrapeExtractOracle)),
 
@@ -457,8 +442,17 @@ object JobQueries {
         .write.mode("overwrite").parquet(dir)
     }
 
-  /** One oracle for the batch and streaming scrape gates — both must
-    * hash-match it, which pins stream ≡ batch through the parser. */
+  /** The 16 PropNex listing fields parsed from (url, html) `pages` —
+    * the one parse the parquet, stream and WARC scrape gates share. */
+  private def propnexFields(pages: DataFrame): DataFrame =
+    graft.ops.HtmlListing.parsePropnex(pages, "url", "html")
+      .select("url", "location", "price", "street_town_district",
+        "num_bedroom", "floor_area_sqft", "agent_name", "agent_id",
+        "agent_email", "agent_phone_num", "listing_type", "district",
+        "tenure", "property_group", "description", "facilities")
+
+  /** One oracle for the parquet, stream and WARC scrape gates — all
+    * must hash-match it, which pins stream ≡ batch through the parser. */
   private val scrapeExtractOracle = """
     |SELECT 'http://listing/' || c_custkey AS url,
     |  c_name AS location,

@@ -18,6 +18,21 @@ object MergeQueries {
     floor(c * 100 + 0.5).cast(LongType)
   private val centsSql = OracleSql.cents
 
+  /** Order count and exact cents sum per priority over (o_orderpriority,
+    * price_c) rows — the aggregate both format round-trips compare. */
+  private def priorityCents(
+      df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
+    df.groupBy("o_orderpriority")
+      .agg(count(lit(1)).as("n"), sum(col("price_c")).as("sum_c"))
+      .orderBy("o_orderpriority")
+
+  /** [[priorityCents]] computed straight from the parquet orders. */
+  private val priorityCentsSql = s"""
+    |SELECT o_orderpriority, count(*) AS n,
+    |  CAST(sum(${centsSql("o_totalprice")}) AS BIGINT) AS sum_c
+    |FROM orders GROUP BY 1 ORDER BY 1
+    |""".stripMargin.trim
+
   /** Content-keyed managed ORC table over an orders projection — the
     * q_orc_roundtrip store (single CTAS: the catalog entry is its own
     * completion marker). */
@@ -282,17 +297,8 @@ object MergeQueries {
     // parquet table, pinning value fidelity across the format boundary
     // (long keys, strings, cent-quantized money).
     Q("q_orc_roundtrip",
-      (s, d) => {
-        s.table(orcOrdersTable(s, d))
-          .groupBy("o_orderpriority")
-          .agg(count(lit(1)).as("n"), sum(col("price_c")).as("sum_c"))
-          .orderBy("o_orderpriority")
-      },
-      Some(s"""
-        |SELECT o_orderpriority, count(*) AS n,
-        |  CAST(sum(${centsSql("o_totalprice")}) AS BIGINT) AS sum_c
-        |FROM orders GROUP BY 1 ORDER BY 1
-        |""".stripMargin.trim)),
+      (s, d) => priorityCents(s.table(orcOrdersTable(s, d))),
+      Some(priorityCentsSql)),
 
     // ---- XML round-trip through Spark 4's NATIVE XML source -----------
     // Same value-fidelity pin as the ORC twin, through the one
@@ -304,22 +310,13 @@ object MergeQueries {
     // land as longs, never inferred doubles), aggregated, and
     // hash-compared against the parquet-side aggregate.
     Q("q_xml_roundtrip",
-      (s, d) => {
-        s.read.format("xml").option("rowTag", "order")
-          .schema(StructType(Seq(
-            StructField("o_orderkey", LongType),
-            StructField("o_orderpriority", StringType),
-            StructField("price_c", LongType))))
-          .load(xmlOrdersDir(s, d))
-          .groupBy("o_orderpriority")
-          .agg(count(lit(1)).as("n"), sum(col("price_c")).as("sum_c"))
-          .orderBy("o_orderpriority")
-      },
-      Some(s"""
-        |SELECT o_orderpriority, count(*) AS n,
-        |  CAST(sum(${centsSql("o_totalprice")}) AS BIGINT) AS sum_c
-        |FROM orders GROUP BY 1 ORDER BY 1
-        |""".stripMargin.trim)),
+      (s, d) => priorityCents(s.read.format("xml").option("rowTag", "order")
+        .schema(StructType(Seq(
+          StructField("o_orderkey", LongType),
+          StructField("o_orderpriority", StringType),
+          StructField("price_c", LongType))))
+        .load(xmlOrdersDir(s, d))),
+      Some(priorityCentsSql)),
 
     // ---- WARC ingestion round-trip (DataSourceV2) --------------------
     // The web-archive front door: the corpus written as WARC/1.0

@@ -59,6 +59,17 @@ object MultimodalQueries {
     * oracle's id arithmetic. */
   private val TwinOffset = 3000000L
 
+  /** The planted media near-dup corpus as DuckDB CTEs: docs of >= 60
+    * chars (`base`) plus a one-char-splice twin of each at
+    * doc_id + [[TwinOffset]] (`corpus`). */
+  private val spliceTwinsSql =
+    """base AS (SELECT doc_id, text FROM documents
+      |  WHERE length(text) >= 60),
+      |corpus AS (SELECT doc_id, text FROM base
+      |  UNION ALL SELECT doc_id + 3000000,
+      |    concat(substr(text, 1, 9), 'Z', substr(text, 11))
+      |  FROM base)""".stripMargin
+
   /** The stored media lake: rendered payloads persisted ONCE per
     * fixture as a content-keyed CTAS — in a real pipeline the binary
     * payloads ARE the source data, so queries read stored bytes and
@@ -327,12 +338,7 @@ object MultimodalQueries {
           .orderBy("id_a", "id_b")
       },
       Some(s"""
-        |WITH base AS (SELECT doc_id, text FROM documents
-        |  WHERE length(text) >= 60),
-        |corpus AS (SELECT doc_id, text FROM base
-        |  UNION ALL SELECT doc_id + 3000000,
-        |    concat(substr(text, 1, 9), 'Z', substr(text, 11))
-        |  FROM base),
+        |WITH $spliceTwinsSql,
         |${phashCtes("corpus", "text", "p", "phash")}
         |SELECT a.doc_id AS id_a, b.doc_id AS id_b,
         |  CAST(bit_count(xor(a.phash, b.phash)) AS BIGINT) AS hamming
@@ -543,12 +549,7 @@ object MultimodalQueries {
           .orderBy("id_a", "id_b")
       },
       Some(s"""
-        |WITH base AS (SELECT doc_id, text FROM documents
-        |  WHERE length(text) >= 60),
-        |corpus AS (SELECT doc_id, text FROM base
-        |  UNION ALL SELECT doc_id + 3000000,
-        |    concat(substr(text, 1, 9), 'Z', substr(text, 11))
-        |  FROM base),
+        |WITH $spliceTwinsSql,
         |${audioFpCtes("corpus", "text", "w", "afp")}
         |SELECT a.doc_id AS id_a, b.doc_id AS id_b,
         |  CAST(bit_count(xor(a.afp, b.afp)) AS BIGINT) AS hamming
@@ -580,12 +581,7 @@ object MultimodalQueries {
           .orderBy("component")
       },
       Some(s"""
-        |WITH RECURSIVE base AS (SELECT doc_id, text FROM documents
-        |  WHERE length(text) >= 60),
-        |corpus AS (SELECT doc_id, text FROM base
-        |  UNION ALL SELECT doc_id + 3000000,
-        |    concat(substr(text, 1, 9), 'Z', substr(text, 11))
-        |  FROM base),
+        |WITH RECURSIVE $spliceTwinsSql,
         |${phashCtes("corpus", "text", "p", "phash")},
         |e AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b
         |  FROM ph a JOIN ph b ON a.doc_id < b.doc_id

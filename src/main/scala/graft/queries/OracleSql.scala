@@ -18,8 +18,7 @@ private[queries] object OracleSql {
 
   /** Cosine similarity in milli over two 64-dim float lists — MUST
     * mirror `GraftFunctions.cosineMilli` operation-for-operation (cast
-    * to double, sequential sum) so IEEE results are bit-identical.
-    * Same recipe as SimQueries' private twin. */
+    * to double, sequential sum) so IEEE results are bit-identical. */
   def cosMilli(a: String, b: String): String = {
     def dot(x: String, y: String) =
       s"list_sum(list_transform(range(1, 65), i -> " +
@@ -39,4 +38,41 @@ private[queries] object OracleSql {
   def l2sqList(a: String, b: String, dim: Int): String =
     s"CAST(list_sum(list_transform(range(1, ${dim + 1}), i -> " +
       s"($a[i] - $b[i]) * ($a[i] - $b[i]))) AS BIGINT)"
+
+  /** CTE `turns(doc_id, i, role, cnt)`: each document cut into up to
+    * four 80-char turns, user/assistant alternating, with each turn's
+    * whitespace-token count — the conversation fixture both SFT gates
+    * (q_sft_loss_mask, q_sft_masked_pack) replay. */
+  val chatTurns: String = """
+    |turns AS (SELECT doc_id, i,
+    |    CASE WHEN i % 2 = 0 THEN 'user' ELSE 'assistant' END AS role,
+    |    CAST(len(string_split_regex(
+    |      trim(substring(text, 1 + 80 * i::INT, 80)),
+    |      '[ \t\n\r\f]+')) AS BIGINT) AS cnt
+    |  FROM documents, unnest(generate_series(0, 3)) AS u(i)
+    |  WHERE substring(text, 1 + 80 * i::INT, 80) <> '')""".stripMargin.trim
+
+  /** Ids of [[EvalArtifacts.plantedCorpus]] docs sharing an 8-token
+    * shingle with the eval set — the exact answer of both
+    * decontamination gates (broadcast semi-join and Bloom-staged). */
+  val decontaminated: String = """
+    |WITH ev AS (SELECT doc_id, text FROM documents
+    |  WHERE doc_id % 50 = 0),
+    |corpus AS (
+    |  SELECT doc_id, text FROM documents WHERE doc_id % 50 <> 0
+    |  UNION ALL SELECT doc_id + 2000000 AS doc_id, text FROM ev),
+    |evs AS (SELECT DISTINCT unnest(list_distinct(
+    |    list_transform(range(1, len(toks) - 6),
+    |      i -> array_to_string(toks[i:i+7], ' ')))) AS s
+    |  FROM (SELECT string_split_regex(trim(text), '[ \t\n\r\f]+') AS toks
+    |        FROM ev) WHERE len(toks) >= 8),
+    |cs AS (SELECT doc_id, unnest(list_distinct(
+    |    list_transform(range(1, len(toks) - 6),
+    |      i -> array_to_string(toks[i:i+7], ' ')))) AS s
+    |  FROM (SELECT doc_id,
+    |          string_split_regex(trim(text), '[ \t\n\r\f]+') AS toks
+    |        FROM corpus) WHERE len(toks) >= 8)
+    |SELECT DISTINCT doc_id FROM cs
+    |WHERE s IN (SELECT s FROM evs) ORDER BY doc_id
+    |""".stripMargin.trim
 }

@@ -161,12 +161,7 @@ object ScaleQueries {
     // Joins.bloomPrunedJoin. Oracle = the exact formulation.
     Q("q_decontaminate_bloom",
       (s, d) => {
-        val docs = documents(s, d)
-        val eval_ = docs.filter(col("doc_id") % 50 === 0)
-        val planted = eval_.select(
-          (col("doc_id") + 2000000L).as("doc_id"), col("text"))
-        val corpus = docs.filter(col("doc_id") % 50 =!= 0)
-          .select("doc_id", "text").unionByName(planted)
+        val corpus = EvalArtifacts.plantedCorpus(s, d)
         // the eval-set artifacts (stored shingle table + memoized
         // sketch) are read, not rebuilt — EvalArtifacts; the timed
         // path is corpus-side work only
@@ -180,26 +175,7 @@ object ScaleQueries {
           .select("doc_id").distinct()
           .orderBy("doc_id")
       },
-      Some("""
-        |WITH ev AS (SELECT doc_id, text FROM documents
-        |  WHERE doc_id % 50 = 0),
-        |corpus AS (
-        |  SELECT doc_id, text FROM documents WHERE doc_id % 50 <> 0
-        |  UNION ALL SELECT doc_id + 2000000 AS doc_id, text FROM ev),
-        |evs AS (SELECT DISTINCT unnest(list_distinct(
-        |    list_transform(range(1, len(toks) - 6),
-        |      i -> array_to_string(toks[i:i+7], ' ')))) AS s
-        |  FROM (SELECT string_split_regex(trim(text), '[ \t\n\r\f]+') AS toks
-        |        FROM ev) WHERE len(toks) >= 8),
-        |cs AS (SELECT doc_id, unnest(list_distinct(
-        |    list_transform(range(1, len(toks) - 6),
-        |      i -> array_to_string(toks[i:i+7], ' ')))) AS s
-        |  FROM (SELECT doc_id,
-        |          string_split_regex(trim(text), '[ \t\n\r\f]+') AS toks
-        |        FROM corpus) WHERE len(toks) >= 8)
-        |SELECT DISTINCT doc_id FROM cs
-        |WHERE s IN (SELECT s FROM evs) ORDER BY doc_id
-        |""".stripMargin.trim)),
+      Some(OracleSql.decontaminated)),
 
     // ---- rolling distinct users from MERGED daily sketches ----------
     // Distinct counts don't sum, but their SKETCHES merge: one daily

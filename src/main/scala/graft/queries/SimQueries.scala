@@ -7,6 +7,7 @@ import org.apache.spark.sql.types.{DoubleType, FloatType, LongType}
 import graft.Tables._
 import graft.functions.GraftFunctions
 import graft.ops.{Similarity, TextOps}
+import OracleSql.cosMilli
 
 /** Similarity-search and dedup-at-scale queries: exact dedup, MinHash
   * LSH near-dup with exact-Jaccard verification, SimHash, and
@@ -94,8 +95,7 @@ object SimQueries {
     * leave the second consumer probing an index missing the holdout. */
   private def lshIndexTable(s: SparkSession, d: String): String = {
     val emb = embeddings(s, d).select("vec_id", "embedding")
-    val hyper = emb.filter(col("vec_id") < 16)
-      .select(col("vec_id").as("h_id"), col("embedding").as("hv"))
+    val hyper = lshHyper(emb)
     val tbl = "ann_lsh_idx_" +
       Sinks.contentKey(d, "embeddings.parquet", "signlsh|r4|v1")
     graft.ops.StoreGuard.tables(s, s"${tbl}_ok", writes = Seq(tbl)) {
@@ -155,6 +155,22 @@ object SimQueries {
     (bT, shT)
   }
 
+  /** Ids of `batch` (id, text) rows with a jaccard >= 800 near-dup in
+    * the stored corpus — the near-rejection probe both incremental
+    * curation gates run against [[corpusLshTables]]. */
+  private def nearCorpusIds(s: SparkSession, d: String,
+                            batch: DataFrame): DataFrame = {
+    val (bT, shT) = corpusLshTables(s, d)
+    val shingled = batch
+      .withColumn("shingles", TextOps.wordShingles(col("text"), 3))
+      .filter(size(col("shingles")) > 0)
+      .select("id", "shingles")
+    Similarity.nearDupPairsAgainstBuckets(shingled,
+        s.table(bT), s.table(shT),
+        k = 32, bands = 16, thresholdMilli = 800)
+      .select(col("id_new").as("id")).distinct()
+  }
+
   /** Stored containment index over the ORIGINALS side of the corpus:
     * the exploded (id, token) shingle index plus the (token, f)
     * frequency table, both derived from the stored corpus shingle
@@ -195,8 +211,7 @@ object SimQueries {
     * corpus banded, vec_id % 13 == 0 tombstoned at build. */
   private def annTdIndexTable(s: SparkSession, d: String): String = {
     val emb = embeddings(s, d).select("vec_id", "embedding")
-    val hyper = emb.filter(col("vec_id") < 16)
-      .select(col("vec_id").as("h_id"), col("embedding").as("hv"))
+    val hyper = lshHyper(emb)
     val tbl = "ann_lsh_td_" +
       Sinks.contentKey(d, "embeddings.parquet", "signlsh-td|v1")
     graft.ops.StoreGuard.tables(s, s"${tbl}_ok", writes = Seq(tbl)) {
@@ -246,6 +261,28 @@ object SimQueries {
     |WHERE jaccard_milli >= 800 ORDER BY id_new, id_corpus
     |""".stripMargin.trim
 
+  /** Brute-force verified near-dup pairs (jaccard >= 800) and their
+    * recursive reachability `reach(id, r)` — the component ground
+    * truth q_neardup_components and q_neardup_keep_best both read, as
+    * CTEs after `WITH RECURSIVE`. */
+  private lazy val neardupReachCtes: String = s"""$corpusSql,
+    |p0 AS (SELECT DISTINCT a.id AS id_a, b.id AS id_b
+    |  FROM (SELECT id, unnest(shingles) AS s FROM sh) a
+    |  JOIN (SELECT id, unnest(shingles) AS s FROM sh) b
+    |    ON a.s = b.s AND a.id < b.id),
+    |j AS (SELECT id_a, id_b,
+    |    ${jaccardMilliSql("sa.shingles", "sb.shingles")} AS jaccard_milli
+    |  FROM p0 JOIN sh sa ON sa.id = p0.id_a
+    |          JOIN sh sb ON sb.id = p0.id_b),
+    |e AS (SELECT id_a, id_b FROM j WHERE jaccard_milli >= 800),
+    |sym AS (SELECT id_a AS src, id_b AS dst FROM e
+    |        UNION ALL SELECT id_b AS src, id_a AS dst FROM e),
+    |nodes AS (SELECT DISTINCT src AS id FROM sym),
+    |reach(id, r) AS (
+    |  SELECT id, id FROM nodes
+    |  UNION
+    |  SELECT s.src, r.r FROM sym s JOIN reach r ON s.dst = r.id)""".stripMargin
+
   private def jaccardMilliSql(a: String, b: String): String =
     s"CAST(floor(1000.0 * len(list_intersect($a, $b)) / " +
       s"(len($a) + len($b) - len(list_intersect($a, $b))) + 0.5)" +
@@ -265,17 +302,6 @@ object SimQueries {
     |WHERE jaccard_milli >= 800 ORDER BY id_a, id_b
     |""".stripMargin.trim
 
-  /** Shared cosine-milli SQL: MUST mirror Similarity.cosineMilli
-    * operation-for-operation (cast to double, sequential sum) so IEEE
-    * results are bit-identical. */
-  private def cosSql(a: String, b: String): String = {
-    def dot(x: String, y: String) =
-      s"list_sum(list_transform(range(1, 65), i -> " +
-        s"CAST($x[i] AS DOUBLE) * CAST($y[i] AS DOUBLE)))"
-    s"CAST(floor(1000.0 * (${dot(a, b)} / " +
-      s"(sqrt(${dot(a, a)}) * sqrt(${dot(b, b)}))) + 0.5) AS BIGINT)"
-  }
-
   /** The ONE IVF oracle CTE chain (codebook → assignment → probes →
     * exact re-rank over probed clusters), ending at
     * `ranked(q_id, vec_id, cos_milli, rank)`. Three gates build on it
@@ -287,7 +313,7 @@ object SimQueries {
     |assigned AS (SELECT vec_id, cluster, embedding FROM (
     |    SELECT e.vec_id, c.c_id AS cluster, e.embedding,
     |      row_number() OVER (PARTITION BY e.vec_id
-    |        ORDER BY ${cosSql("e.embedding", "c.cv")} DESC,
+    |        ORDER BY ${cosMilli("e.embedding", "c.cv")} DESC,
     |                 c.c_id ASC) AS rn
     |    FROM embeddings e, cents c) WHERE rn = 1),
     |q AS (SELECT vec_id AS q_id, embedding AS qv FROM embeddings
@@ -295,15 +321,89 @@ object SimQueries {
     |probes AS (SELECT q_id, qv, cluster FROM (
     |    SELECT q.q_id, q.qv, c.c_id AS cluster,
     |      row_number() OVER (PARTITION BY q.q_id
-    |        ORDER BY ${cosSql("q.qv", "c.cv")} DESC, c.c_id ASC) AS rn
+    |        ORDER BY ${cosMilli("q.qv", "c.cv")} DESC, c.c_id ASC) AS rn
     |    FROM q, cents c) WHERE rn <= 2),
     |ranked AS (SELECT q_id, vec_id, cos_milli,
     |    row_number() OVER (PARTITION BY q_id
     |      ORDER BY cos_milli DESC, vec_id ASC) AS rank
     |  FROM (SELECT p.q_id, a.vec_id,
-    |      ${cosSql("p.qv", "a.embedding")} AS cos_milli
+    |      ${cosMilli("p.qv", "a.embedding")} AS cos_milli
     |    FROM probes p JOIN assigned a ON p.cluster = a.cluster
     |    WHERE a.vec_id <> p.q_id))""".stripMargin.trim
+
+  /** The IVF top-5 answer q_ann_ivf_topk and q_ann_ivf_persisted
+    * share: the persisted index must return the inline pipeline's rows. */
+  private lazy val ivfTopkOracle: String = s"""
+    |WITH $ivfOracleCtes
+    |SELECT q_id, rank, vec_id, cos_milli FROM ranked WHERE rank <= 5
+    |ORDER BY q_id, rank
+    |""".stripMargin.trim
+
+  /** The sign-LSH hyperplanes every ANN-LSH gate and index bands with:
+    * the first 16 corpus vectors, 4 bands x 4 rows. */
+  private def lshHyper(emb: DataFrame): DataFrame =
+    emb.filter(col("vec_id") < 16)
+      .select(col("vec_id").as("h_id"), col("embedding").as("hv"))
+
+  /** Top-10 for queries 13..17 probed from a persisted sign-LSH index
+    * (`multiprobe` and `retracted` as in
+    * [[graft.ops.AnnIndex.probeTopK]]). */
+  private def annLshProbe(s: SparkSession, d: String, table: String,
+                          multiprobe: Int = 0,
+                          retracted: Boolean = false): DataFrame = {
+    val emb = embeddings(s, d).select("vec_id", "embedding")
+    val q = emb.filter(col("vec_id") >= 13 && col("vec_id") < 18)
+    graft.ops.AnnIndex.probeTopK(s, table, q, "vec_id", "embedding",
+        lshHyper(emb), rowsPerBand = 4, k = 10, multiprobe = multiprobe,
+        retracted = retracted)
+      .withColumnRenamed("id", "vec_id")
+      .select("q_id", "rank", "vec_id", "cos_milli")
+      .orderBy("q_id", "rank")
+  }
+
+  /** The ONE sign-LSH ANN oracle: it replays the banding bit-for-bit
+    * (hyperplanes are data rows, same IEEE dot order) and ranks exact
+    * cosine over the probed candidates. `retracted` drops the
+    * tombstoned ids (vec_id % 13 == 0) from the candidate side only;
+    * `multiprobe` also probes each band's first single-bit flips —
+    * the same two knobs as [[annLshProbe]]. */
+  private def annLshOracle(retracted: Boolean = false,
+                           multiprobe: Int = 0): String = {
+    val probe = if (multiprobe == 0) "qb" else "qb0"
+    val flipSet =
+      (0 until multiprobe).map(i => s", xor(bucket, ${1 << i})").mkString
+    val flips = if (multiprobe == 0) "" else s"""
+      |qb AS (SELECT q_id, band,
+      |    unnest([bucket$flipSet]) AS bucket
+      |  FROM qb0),"""
+    val tombstoned = if (retracted) "\n  WHERE c.vec_id % 13 <> 0" else ""
+    s"""
+    |WITH hyper AS (SELECT vec_id AS h_id, embedding AS hv
+    |    FROM embeddings WHERE vec_id < 16),
+    |sgn AS (SELECT e.vec_id, h_id // 4 AS band,
+    |    CAST(sum(CASE WHEN list_sum(list_transform(range(1, 65),
+    |        i -> CAST(e.embedding[i] AS DOUBLE)
+    |           * CAST(h.hv[i] AS DOUBLE))) > 0
+    |      THEN (1 << CAST(h_id % 4 AS INTEGER)) ELSE 0 END)
+    |      AS BIGINT) AS bucket
+    |  FROM embeddings e, hyper h GROUP BY e.vec_id, band),
+    |$probe AS (SELECT vec_id AS q_id, band, bucket FROM sgn
+    |    WHERE vec_id >= 13 AND vec_id < 18),$flips
+    |cands AS (SELECT DISTINCT q.q_id, c.vec_id
+    |  FROM sgn c JOIN qb q ON c.band = q.band
+    |    AND c.bucket = q.bucket AND c.vec_id <> q.q_id$tombstoned),
+    |ranked AS (SELECT q_id, vec_id, cos_milli,
+    |    row_number() OVER (PARTITION BY q_id
+    |      ORDER BY cos_milli DESC, vec_id ASC) AS rank
+    |  FROM (SELECT cd.q_id, cd.vec_id,
+    |      ${cosMilli("q.embedding", "e.embedding")} AS cos_milli
+    |    FROM cands cd
+    |      JOIN embeddings e ON e.vec_id = cd.vec_id
+    |      JOIN embeddings q ON q.vec_id = cd.q_id))
+    |SELECT q_id, rank, vec_id, cos_milli FROM ranked WHERE rank <= 10
+    |ORDER BY q_id, rank
+    |""".stripMargin.trim
+  }
 
   /** Shared simhash detection pipeline: signature per corpus doc, then
     * original⋈mutated pairs with hamming ≤ 16. FOUR gates consume this
@@ -602,23 +702,7 @@ object SimQueries {
     Q("q_neardup_components",
       (s, d) => neardupComponents(s, d).orderBy("id"),
       Some(s"""
-        |WITH RECURSIVE $corpusSql,
-        |p0 AS (SELECT DISTINCT a.id AS id_a, b.id AS id_b
-        |  FROM (SELECT id, unnest(shingles) AS s FROM sh) a
-        |  JOIN (SELECT id, unnest(shingles) AS s FROM sh) b
-        |    ON a.s = b.s AND a.id < b.id),
-        |j AS (SELECT id_a, id_b,
-        |    ${jaccardMilliSql("sa.shingles", "sb.shingles")} AS jaccard_milli
-        |  FROM p0 JOIN sh sa ON sa.id = p0.id_a
-        |          JOIN sh sb ON sb.id = p0.id_b),
-        |e AS (SELECT id_a, id_b FROM j WHERE jaccard_milli >= 800),
-        |sym AS (SELECT id_a AS src, id_b AS dst FROM e
-        |        UNION ALL SELECT id_b AS src, id_a AS dst FROM e),
-        |nodes AS (SELECT DISTINCT src AS id FROM sym),
-        |reach(id, r) AS (
-        |  SELECT id, id FROM nodes
-        |  UNION
-        |  SELECT s.src, r.r FROM sym s JOIN reach r ON s.dst = r.id)
+        |WITH RECURSIVE $neardupReachCtes
         |SELECT id, min(r) AS component FROM reach
         |GROUP BY id ORDER BY id
         |""".stripMargin.trim)),
@@ -638,23 +722,7 @@ object SimQueries {
           .orderBy("component")
       },
       Some(s"""
-        |WITH RECURSIVE $corpusSql,
-        |p0 AS (SELECT DISTINCT a.id AS id_a, b.id AS id_b
-        |  FROM (SELECT id, unnest(shingles) AS s FROM sh) a
-        |  JOIN (SELECT id, unnest(shingles) AS s FROM sh) b
-        |    ON a.s = b.s AND a.id < b.id),
-        |j AS (SELECT id_a, id_b,
-        |    ${jaccardMilliSql("sa.shingles", "sb.shingles")} AS jaccard_milli
-        |  FROM p0 JOIN sh sa ON sa.id = p0.id_a
-        |          JOIN sh sb ON sb.id = p0.id_b),
-        |e AS (SELECT id_a, id_b FROM j WHERE jaccard_milli >= 800),
-        |sym AS (SELECT id_a AS src, id_b AS dst FROM e
-        |        UNION ALL SELECT id_b AS src, id_a AS dst FROM e),
-        |nodes AS (SELECT DISTINCT src AS id FROM sym),
-        |reach(id, r) AS (
-        |  SELECT id, id FROM nodes
-        |  UNION
-        |  SELECT s.src, r.r FROM sym s JOIN reach r ON s.dst = r.id),
+        |WITH RECURSIVE $neardupReachCtes,
         |comp AS (SELECT id, min(r) AS component FROM reach GROUP BY id),
         |scored AS (SELECT id,
         |    CAST(len(string_split_regex(trim(text), '[ \\t\\n\\r\\f]+')) AS BIGINT)
@@ -910,15 +978,7 @@ object SimQueries {
         val s1 = graft.ops.Dedup.incrementalExactDedup(docs, batch,
           contentCols = Seq("text"), tiebreak = Seq("id"))
           .transform(graft.ops.Checkpoints.spill)
-        val (bT, shT) = corpusLshTables(s, d)
-        val shingled = s1
-          .withColumn("shingles", TextOps.wordShingles(col("text"), 3))
-          .filter(size(col("shingles")) > 0)
-          .select("id", "shingles")
-        val nearIds = Similarity.nearDupPairsAgainstBuckets(shingled,
-            s.table(bT), s.table(shT),
-            k = 32, bands = 16, thresholdMilli = 800)
-          .select(col("id_new").as("id")).distinct()
+        val nearIds = nearCorpusIds(s, d, s1)
         // verdict assembly in ONE pass over s1 (r9 verdict item 4):
         // the near-rejection and quality-floor fates are both decidable
         // per s1 row once the near-id set is at hand. The previous
@@ -1041,15 +1101,7 @@ object SimQueries {
           batch.filter(!quar).select("id", "text"),
           contentCols = Seq("text"), tiebreak = Seq("id"))
           .transform(graft.ops.Checkpoints.spill) // 2 consumers: banding + verdict assembly
-        val (bT, shT) = corpusLshTables(s, d)
-        val shingled = s1
-          .withColumn("shingles", TextOps.wordShingles(col("text"), 3))
-          .filter(size(col("shingles")) > 0)
-          .select("id", "shingles")
-        val nearIds = Similarity.nearDupPairsAgainstBuckets(shingled,
-            s.table(bT), s.table(shT),
-            k = 32, bands = 16, thresholdMilli = 800)
-          .select(col("id_new").as("id")).distinct()
+        val nearIds = nearCorpusIds(s, d, s1)
         // batch-sized frames: no broadcast hints — AQE decides (see
         // q_incr_curation_pipeline's verdict-assembly note)
         val s1v = s1
@@ -1230,7 +1282,7 @@ object SimQueries {
       Some(s"""
         |WITH q AS (SELECT vec_id AS q_id, embedding AS qv
         |    FROM embeddings WHERE vec_id < 5),
-        |c AS (SELECT q_id, vec_id, ${cosSql("qv", "embedding")} AS cos_milli
+        |c AS (SELECT q_id, vec_id, ${cosMilli("qv", "embedding")} AS cos_milli
         |  FROM q, embeddings WHERE vec_id <> q_id),
         |r AS (SELECT *, row_number() OVER (PARTITION BY q_id
         |    ORDER BY cos_milli DESC, vec_id ASC) AS rank FROM c)
@@ -1302,7 +1354,7 @@ object SimQueries {
         |  FROM sgn a JOIN sgn b ON a.band = b.band
         |    AND a.bucket = b.bucket AND a.vec_id < b.vec_id),
         |pairs AS (SELECT id_a, id_b,
-        |    ${cosSql("a.embedding", "b.embedding")} AS cos_milli
+        |    ${cosMilli("a.embedding", "b.embedding")} AS cos_milli
         |  FROM cands JOIN corp a ON a.vec_id = id_a
         |              JOIN corp b ON b.vec_id = id_b)
         |SELECT id_a, id_b, cos_milli FROM pairs WHERE cos_milli >= 950
@@ -1346,9 +1398,9 @@ object SimQueries {
         |    WHERE vec_id < 20),
         |nn AS (SELECT * FROM (
         |    SELECT q.q_id, l.vec_id, l.label,
-        |      ${cosSql("q.qv", "l.embedding")} AS cos_milli,
+        |      ${cosMilli("q.qv", "l.embedding")} AS cos_milli,
         |      row_number() OVER (PARTITION BY q.q_id
-        |        ORDER BY ${cosSql("q.qv", "l.embedding")} DESC,
+        |        ORDER BY ${cosMilli("q.qv", "l.embedding")} DESC,
         |                 l.vec_id ASC) AS rk
         |    FROM q, labeled l) WHERE rk <= 5),
         |votes AS (SELECT q_id, label, count(*) AS votes FROM nn
@@ -1402,11 +1454,11 @@ object SimQueries {
         |anchors AS (SELECT vec_id AS q_id, embedding AS qv,
         |    label AS q_label FROM embeddings WHERE vec_id < 20),
         |pos AS (SELECT a.q_id,
-        |    max(${cosSql("a.qv", "c.embedding")}) AS best_pos_milli
+        |    max(${cosMilli("a.qv", "c.embedding")}) AS best_pos_milli
         |  FROM anchors a JOIN corpus c ON c.label = a.q_label
         |  GROUP BY a.q_id),
         |neg AS (SELECT a.q_id, c.vec_id,
-        |    ${cosSql("a.qv", "c.embedding")} AS cos_milli,
+        |    ${cosMilli("a.qv", "c.embedding")} AS cos_milli,
         |    p.best_pos_milli
         |  FROM anchors a JOIN pos p ON p.q_id = a.q_id, corpus c
         |  WHERE c.label <> a.q_label),
@@ -1458,8 +1510,8 @@ object SimQueries {
         |c AS (SELECT vec_id, embedding FROM embeddings
         |    WHERE vec_id >= 20 UNION ALL SELECT * FROM pl)
         |SELECT c.vec_id,
-        |  max(${cosSql("c.embedding", "e.ev")}) AS max_cos_milli,
-        |  max(${cosSql("c.embedding", "e.ev")}) >= 950 AS is_contam
+        |  max(${cosMilli("c.embedding", "e.ev")}) AS max_cos_milli,
+        |  max(${cosMilli("c.embedding", "e.ev")}) >= 950 AS is_contam
         |FROM c, ev e GROUP BY c.vec_id ORDER BY c.vec_id
         |""".stripMargin.trim)),
 
@@ -1501,11 +1553,7 @@ object SimQueries {
           .select("q_id", "rank", "vec_id", "cos_milli")
           .orderBy("q_id", "rank")
       },
-      Some(s"""
-        |WITH $ivfOracleCtes
-        |SELECT q_id, rank, vec_id, cos_milli FROM ranked WHERE rank <= 5
-        |ORDER BY q_id, rank
-        |""".stripMargin.trim)),
+      Some(ivfTopkOracle)),
 
     // ---- PERSISTED IVF index (build → append → pruned probe) ----------
     // q_ann_ivf_topk's inverted-file layout round-tripped through a
@@ -1514,7 +1562,7 @@ object SimQueries {
     // under the SAME persisted codebook and appended (assignment is
     // per-row deterministic against fixed centroids, so build ∪ append
     // ≡ rebuild); probes pick top-2 centroids and read only those
-    // cluster partitions. Shares q_ann_ivf_topk's oracle verbatim.
+    // cluster partitions. Its oracle is q_ann_ivf_topk's ivfTopkOracle.
     Q("q_ann_ivf_persisted",
       (s, d) => {
         val emb = embeddings(s, d).select("vec_id", "embedding")
@@ -1526,11 +1574,7 @@ object SimQueries {
           .select("q_id", "rank", "vec_id", "cos_milli")
           .orderBy("q_id", "rank")
       },
-      Some(s"""
-        |WITH $ivfOracleCtes
-        |SELECT q_id, rank, vec_id, cos_milli FROM ranked WHERE rank <= 5
-        |ORDER BY q_id, rank
-        |""".stripMargin.trim)),
+      Some(ivfTopkOracle)),
 
     // ---- IVF recall vs exact brute-force ------------------------------
     // The companion that MEASURES the nprobe=2-of-8 pruning (the PQ
@@ -1570,7 +1614,7 @@ object SimQueries {
         |ex AS (SELECT q_id, vec_id FROM (
         |    SELECT q.q_id, e.vec_id, row_number() OVER (
         |      PARTITION BY q.q_id
-        |      ORDER BY ${cosSql("q.qv", "e.embedding")} DESC,
+        |      ORDER BY ${cosMilli("q.qv", "e.embedding")} DESC,
         |        e.vec_id) AS rn
         |    FROM q, embeddings e WHERE e.vec_id <> q.q_id)
         |  WHERE rn <= 5),
@@ -1599,10 +1643,8 @@ object SimQueries {
         // 4 bands x 4 hyperplanes: 16 buckets per band keeps real
         // occupancy at corpus scale (16-bit bands collapse to
         // singleton buckets here -> zero candidates)
-        val hyper = emb.filter(col("vec_id") < 16)
-          .select(col("vec_id").as("h_id"), col("embedding").as("hv"))
         val buckets = Similarity.signLshBuckets(
-          emb, "vec_id", "embedding", hyper, rowsPerBand = 4)
+          emb, "vec_id", "embedding", lshHyper(emb), rowsPerBand = 4)
         val qb = buckets.filter(col("vec_id") >= 13 && col("vec_id") < 18)
           .select(col("vec_id").as("q_id"), col("band"), col("bucket"))
         val cands = buckets.join(broadcast(qb), Seq("band", "bucket"))
@@ -1620,32 +1662,7 @@ object SimQueries {
           .select("q_id", "rank", "vec_id", "cos_milli")
           .orderBy("q_id", "rank")
       },
-      Some(s"""
-        |WITH hyper AS (SELECT vec_id AS h_id, embedding AS hv
-        |    FROM embeddings WHERE vec_id < 16),
-        |sgn AS (SELECT e.vec_id, h_id // 4 AS band,
-        |    CAST(sum(CASE WHEN list_sum(list_transform(range(1, 65),
-        |        i -> CAST(e.embedding[i] AS DOUBLE)
-        |           * CAST(h.hv[i] AS DOUBLE))) > 0
-        |      THEN (1 << CAST(h_id % 4 AS INTEGER)) ELSE 0 END)
-        |      AS BIGINT) AS bucket
-        |  FROM embeddings e, hyper h GROUP BY e.vec_id, band),
-        |qb AS (SELECT vec_id AS q_id, band, bucket FROM sgn
-        |    WHERE vec_id >= 13 AND vec_id < 18),
-        |cands AS (SELECT DISTINCT q.q_id, c.vec_id
-        |  FROM sgn c JOIN qb q ON c.band = q.band
-        |    AND c.bucket = q.bucket AND c.vec_id <> q.q_id),
-        |ranked AS (SELECT q_id, vec_id, cos_milli,
-        |    row_number() OVER (PARTITION BY q_id
-        |      ORDER BY cos_milli DESC, vec_id ASC) AS rank
-        |  FROM (SELECT cd.q_id, cd.vec_id,
-        |      ${cosSql("q.embedding", "e.embedding")} AS cos_milli
-        |    FROM cands cd
-        |      JOIN embeddings e ON e.vec_id = cd.vec_id
-        |      JOIN embeddings q ON q.vec_id = cd.q_id))
-        |SELECT q_id, rank, vec_id, cos_milli FROM ranked WHERE rank <= 10
-        |ORDER BY q_id, rank
-        |""".stripMargin.trim)),
+      Some(annLshOracle())),
 
     // ---- PERSISTED LSH ANN index (build → append → pruned probe) ------
     // q_ann_lsh_topk's banding ROUND-TRIPPED through a stored index:
@@ -1655,46 +1672,11 @@ object SimQueries {
     // queries probe the stored table with dynamic partition pruning
     // (plan pinned in AnnIndexSpec). Banding is a deterministic per-row
     // projection, so build ∪ append ≡ one-shot banding over the full
-    // corpus and the gate shares q_ann_lsh_topk's oracle verbatim —
-    // the stored path must be bit-identical to the in-memory one.
+    // corpus and the gate reads q_ann_lsh_topk's annLshOracle — the
+    // stored path must be bit-identical to the in-memory one.
     Q("q_ann_lsh_persisted",
-      (s, d) => {
-        val emb = embeddings(s, d).select("vec_id", "embedding")
-        val hyper = emb.filter(col("vec_id") < 16)
-          .select(col("vec_id").as("h_id"), col("embedding").as("hv"))
-        val q = emb.filter(col("vec_id") >= 13 && col("vec_id") < 18)
-        graft.ops.AnnIndex.probeTopK(s, lshIndexTable(s, d), q,
-            "vec_id", "embedding", hyper, rowsPerBand = 4, k = 10)
-          .withColumnRenamed("id", "vec_id")
-          .select("q_id", "rank", "vec_id", "cos_milli")
-          .orderBy("q_id", "rank")
-      },
-      Some(s"""
-        |WITH hyper AS (SELECT vec_id AS h_id, embedding AS hv
-        |    FROM embeddings WHERE vec_id < 16),
-        |sgn AS (SELECT e.vec_id, h_id // 4 AS band,
-        |    CAST(sum(CASE WHEN list_sum(list_transform(range(1, 65),
-        |        i -> CAST(e.embedding[i] AS DOUBLE)
-        |           * CAST(h.hv[i] AS DOUBLE))) > 0
-        |      THEN (1 << CAST(h_id % 4 AS INTEGER)) ELSE 0 END)
-        |      AS BIGINT) AS bucket
-        |  FROM embeddings e, hyper h GROUP BY e.vec_id, band),
-        |qb AS (SELECT vec_id AS q_id, band, bucket FROM sgn
-        |    WHERE vec_id >= 13 AND vec_id < 18),
-        |cands AS (SELECT DISTINCT q.q_id, c.vec_id
-        |  FROM sgn c JOIN qb q ON c.band = q.band
-        |    AND c.bucket = q.bucket AND c.vec_id <> q.q_id),
-        |ranked AS (SELECT q_id, vec_id, cos_milli,
-        |    row_number() OVER (PARTITION BY q_id
-        |      ORDER BY cos_milli DESC, vec_id ASC) AS rank
-        |  FROM (SELECT cd.q_id, cd.vec_id,
-        |      ${cosSql("q.embedding", "e.embedding")} AS cos_milli
-        |    FROM cands cd
-        |      JOIN embeddings e ON e.vec_id = cd.vec_id
-        |      JOIN embeddings q ON q.vec_id = cd.q_id))
-        |SELECT q_id, rank, vec_id, cos_milli FROM ranked WHERE rank <= 10
-        |ORDER BY q_id, rank
-        |""".stripMargin.trim)),
+      (s, d) => annLshProbe(s, d, lshIndexTable(s, d)),
+      Some(annLshOracle())),
 
     // ---- takedown against the persisted ANN index --------------------
     // The index-family twin of q_takedown_sweep (same Tombstones
@@ -1706,45 +1688,8 @@ object SimQueries {
     // document can still be somebody's query), buckets and ranking
     // otherwise identical.
     Q("q_ann_takedown",
-      (s, d) => {
-        val emb = embeddings(s, d).select("vec_id", "embedding")
-        val hyper = emb.filter(col("vec_id") < 16)
-          .select(col("vec_id").as("h_id"), col("embedding").as("hv"))
-        val q = emb.filter(col("vec_id") >= 13 && col("vec_id") < 18)
-        graft.ops.AnnIndex.probeTopK(s, annTdIndexTable(s, d), q,
-            "vec_id", "embedding", hyper, rowsPerBand = 4, k = 10,
-            retracted = true)
-          .withColumnRenamed("id", "vec_id")
-          .select("q_id", "rank", "vec_id", "cos_milli")
-          .orderBy("q_id", "rank")
-      },
-      Some(s"""
-        |WITH hyper AS (SELECT vec_id AS h_id, embedding AS hv
-        |    FROM embeddings WHERE vec_id < 16),
-        |sgn AS (SELECT e.vec_id, h_id // 4 AS band,
-        |    CAST(sum(CASE WHEN list_sum(list_transform(range(1, 65),
-        |        i -> CAST(e.embedding[i] AS DOUBLE)
-        |           * CAST(h.hv[i] AS DOUBLE))) > 0
-        |      THEN (1 << CAST(h_id % 4 AS INTEGER)) ELSE 0 END)
-        |      AS BIGINT) AS bucket
-        |  FROM embeddings e, hyper h GROUP BY e.vec_id, band),
-        |qb AS (SELECT vec_id AS q_id, band, bucket FROM sgn
-        |    WHERE vec_id >= 13 AND vec_id < 18),
-        |cands AS (SELECT DISTINCT q.q_id, c.vec_id
-        |  FROM sgn c JOIN qb q ON c.band = q.band
-        |    AND c.bucket = q.bucket AND c.vec_id <> q.q_id
-        |  WHERE c.vec_id % 13 <> 0),
-        |ranked AS (SELECT q_id, vec_id, cos_milli,
-        |    row_number() OVER (PARTITION BY q_id
-        |      ORDER BY cos_milli DESC, vec_id ASC) AS rank
-        |  FROM (SELECT cd.q_id, cd.vec_id,
-        |      ${cosSql("q.embedding", "e.embedding")} AS cos_milli
-        |    FROM cands cd
-        |      JOIN embeddings e ON e.vec_id = cd.vec_id
-        |      JOIN embeddings q ON q.vec_id = cd.q_id))
-        |SELECT q_id, rank, vec_id, cos_milli FROM ranked WHERE rank <= 10
-        |ORDER BY q_id, rank
-        |""".stripMargin.trim)),
+      (s, d) => annLshProbe(s, d, annTdIndexTable(s, d), retracted = true),
+      Some(annLshOracle(retracted = true))),
 
     // ---- multiprobe over the persisted LSH index ----------------------
     // The recall knob that needs NO index growth: each band probes its
@@ -1754,47 +1699,8 @@ object SimQueries {
     // the oracle replays the exact flip set with xor, so the widened
     // candidate set and re-ranking are hash-checked bit-for-bit.
     Q("q_ann_lsh_multiprobe",
-      (s, d) => {
-        val emb = embeddings(s, d).select("vec_id", "embedding")
-        val hyper = emb.filter(col("vec_id") < 16)
-          .select(col("vec_id").as("h_id"), col("embedding").as("hv"))
-        val q = emb.filter(col("vec_id") >= 13 && col("vec_id") < 18)
-        graft.ops.AnnIndex.probeTopK(s, lshIndexTable(s, d), q,
-            "vec_id", "embedding", hyper, rowsPerBand = 4, k = 10,
-            multiprobe = 2)
-          .withColumnRenamed("id", "vec_id")
-          .select("q_id", "rank", "vec_id", "cos_milli")
-          .orderBy("q_id", "rank")
-      },
-      Some(s"""
-        |WITH hyper AS (SELECT vec_id AS h_id, embedding AS hv
-        |    FROM embeddings WHERE vec_id < 16),
-        |sgn AS (SELECT e.vec_id, h_id // 4 AS band,
-        |    CAST(sum(CASE WHEN list_sum(list_transform(range(1, 65),
-        |        i -> CAST(e.embedding[i] AS DOUBLE)
-        |           * CAST(h.hv[i] AS DOUBLE))) > 0
-        |      THEN (1 << CAST(h_id % 4 AS INTEGER)) ELSE 0 END)
-        |      AS BIGINT) AS bucket
-        |  FROM embeddings e, hyper h GROUP BY e.vec_id, band),
-        |qb0 AS (SELECT vec_id AS q_id, band, bucket FROM sgn
-        |    WHERE vec_id >= 13 AND vec_id < 18),
-        |qb AS (SELECT q_id, band,
-        |    unnest([bucket, xor(bucket, 1), xor(bucket, 2)]) AS bucket
-        |  FROM qb0),
-        |cands AS (SELECT DISTINCT q.q_id, c.vec_id
-        |  FROM sgn c JOIN qb q ON c.band = q.band
-        |    AND c.bucket = q.bucket AND c.vec_id <> q.q_id),
-        |ranked AS (SELECT q_id, vec_id, cos_milli,
-        |    row_number() OVER (PARTITION BY q_id
-        |      ORDER BY cos_milli DESC, vec_id ASC) AS rank
-        |  FROM (SELECT cd.q_id, cd.vec_id,
-        |      ${cosSql("q.embedding", "e.embedding")} AS cos_milli
-        |    FROM cands cd
-        |      JOIN embeddings e ON e.vec_id = cd.vec_id
-        |      JOIN embeddings q ON q.vec_id = cd.q_id))
-        |SELECT q_id, rank, vec_id, cos_milli FROM ranked WHERE rank <= 10
-        |ORDER BY q_id, rank
-        |""".stripMargin.trim)),
+      (s, d) => annLshProbe(s, d, lshIndexTable(s, d), multiprobe = 2),
+      Some(annLshOracle(multiprobe = 2))),
 
     // ---- sorted-neighborhood blocking dedup --------------------------
     // The record-linkage classic beside hash blocking (PassJoin) and

@@ -984,12 +984,7 @@ object TextQueries {
     // shuffle-free.
     Q("q_text_decontaminate",
       (s, d) => {
-        val docs = documents(s, d)
-        val eval_ = docs.filter(col("doc_id") % 50 === 0)
-        val planted = eval_.select((col("doc_id") + 2000000L).as("doc_id"),
-          col("text"))
-        val corpus = docs.filter(col("doc_id") % 50 =!= 0)
-          .select("doc_id", "text").unionByName(planted)
+        val corpus = EvalArtifacts.plantedCorpus(s, d)
         // stored eval-shingle artifact (EvalArtifacts): the eval suite
         // is frozen once; per-batch decontamination reads it
         val evalShingles = s.table(EvalArtifacts.evalShingleTable(s, d))
@@ -1000,26 +995,7 @@ object TextQueries {
           .select("doc_id").distinct()
           .orderBy("doc_id")
       },
-      Some("""
-        |WITH ev AS (SELECT doc_id, text FROM documents
-        |  WHERE doc_id % 50 = 0),
-        |corpus AS (
-        |  SELECT doc_id, text FROM documents WHERE doc_id % 50 <> 0
-        |  UNION ALL SELECT doc_id + 2000000 AS doc_id, text FROM ev),
-        |evs AS (SELECT DISTINCT unnest(list_distinct(
-        |    list_transform(range(1, len(toks) - 6),
-        |      i -> array_to_string(toks[i:i+7], ' ')))) AS s
-        |  FROM (SELECT string_split_regex(trim(text), '[ \t\n\r\f]+') AS toks
-        |        FROM ev) WHERE len(toks) >= 8),
-        |cs AS (SELECT doc_id, unnest(list_distinct(
-        |    list_transform(range(1, len(toks) - 6),
-        |      i -> array_to_string(toks[i:i+7], ' ')))) AS s
-        |  FROM (SELECT doc_id,
-        |          string_split_regex(trim(text), '[ \t\n\r\f]+') AS toks
-        |        FROM corpus) WHERE len(toks) >= 8)
-        |SELECT DISTINCT doc_id FROM cs
-        |WHERE s IN (SELECT s FROM evs) ORDER BY doc_id
-        |""".stripMargin.trim)),
+      Some(OracleSql.decontaminated)),
 
     // ---- bigram LM coherence scoring ---------------------------------
     // The KenLM-style fluency filter kept exact: per-doc mean bigram
@@ -1178,14 +1154,8 @@ object TextQueries {
             "doc_id", "turns")
           .orderBy("doc_id", "turn_idx")
       },
-      Some("""
-        |WITH turns AS (SELECT doc_id, i,
-        |    CASE WHEN i % 2 = 0 THEN 'user' ELSE 'assistant' END AS role,
-        |    CAST(len(string_split_regex(
-        |      trim(substring(text, 1 + 80 * i::INT, 80)),
-        |      '[ \t\n\r\f]+')) AS BIGINT) AS cnt
-        |  FROM documents, unnest(generate_series(0, 3)) AS u(i)
-        |  WHERE substring(text, 1 + 80 * i::INT, 80) <> ''),
+      Some(s"""
+        |WITH ${OracleSql.chatTurns},
         |o AS (SELECT doc_id, CAST(i AS BIGINT) AS turn_idx, role, cnt,
         |    CAST(COALESCE(sum(cnt) OVER (PARTITION BY doc_id ORDER BY i
         |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)

@@ -16,7 +16,7 @@ class HarnessSpec extends SparkSpec {
   test("fixture warm-up reports exactly the fixture table that fails " +
       "to read") {
     val src = Paths.get("/root/testdata/sf0.001")
-    val dir = Files.createTempDirectory("graft-warm")
+    val dir = SparkSpec.tempDir("graft-warm")
     try {
       tree(src).foreach { p =>
         val to = dir.resolve(src.relativize(p).toString)
@@ -37,7 +37,7 @@ class HarnessSpec extends SparkSpec {
       "q_tab_cr" -> "SELECT 'a\tb' AS x\r\nFROM t",
       "q_quote_backslash" -> "SELECT \"c\" FROM t WHERE s = '\\\\'",
       "q_ctrl" -> "SELECT 1 -- \u0001 end")
-    val dir = Files.createTempDirectory("graft-oracle")
+    val dir = SparkSpec.tempDir("graft-oracle")
     try {
       Verify.writeOracleSql(dir.toString, sql)
       val back = new com.fasterxml.jackson.databind.ObjectMapper()
@@ -49,7 +49,7 @@ class HarnessSpec extends SparkSpec {
 
   test("Bench reports a truncated bands file and an unparseable " +
       "progress line instead of dropping them") {
-    val dir = Files.createTempDirectory("graft-bench-io")
+    val dir = SparkSpec.tempDir("graft-bench-io")
     try {
       val bands = dir.resolve("bands.json")
       Files.write(bands,
@@ -76,8 +76,8 @@ class HarnessSpec extends SparkSpec {
 
   test("Verify's manifest records each gate's rows, seconds and the " +
       "error of a gate over a missing fixture table") {
-    val empty = Files.createTempDirectory("graft-verify-sf")
-    val out = Files.createTempDirectory("graft-verify-out")
+    val empty = SparkSpec.tempDir("graft-verify-sf")
+    val out = SparkSpec.tempDir("graft-verify-out")
     try {
       Verify.dump(spark, empty.toString, out.toString, Seq(
         "q_ok" -> ((s, _) => s.range(3).toDF()),
@@ -98,7 +98,7 @@ class HarnessSpec extends SparkSpec {
 
   test("runGate returns a failing gate's error naming the missing file, " +
       "and frees the blocks a gate checkpoints") {
-    val empty = Files.createTempDirectory("graft-gate-sf")
+    val empty = SparkSpec.tempDir("graft-gate-sf")
     try {
       val baseline = Harness.gateBaseline(spark)
       val failed = Harness.runGate(spark, empty.toString, "q_no_orders",

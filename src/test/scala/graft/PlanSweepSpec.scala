@@ -208,7 +208,7 @@ class PlanSweepSpec extends SparkSpec {
     "ops/TextOps.scala" -> 1,     // per-source template-line dictionary
                                   // (lines with df ≥ minRatio of a
                                   // source's docs — template-sized)
-    "ops/InvertedIndexStore.scala" -> 6, // query-term sets, 1-row
+    "ops/InvertedIndexStore.scala" -> 4, // query-term sets, 1-row
                                   // corpus scalars / tombstone
                                   // corrections, and the dl-lookup id
                                   // set (bounded by the query terms'
@@ -220,7 +220,7 @@ class PlanSweepSpec extends SparkSpec {
     "ops/Robots.scala" -> 1,      // per-host crawl-delay dim
     "ops/Classify.scala" -> 1,    // |labels|-row centroid model
     "ops/Retrieval.scala" -> 3,   // query-term sets + 1-row scalars
-    "ops/BradleyTerry.scala" -> 6, // entity score vectors (id, bt —
+    "ops/BradleyTerry.scala" -> 5, // entity score vectors (id, bt —
                                   // two longs per entity) into pair
                                   // lists; the per-iteration max
                                   // anchor broadcast was fused into
@@ -246,7 +246,7 @@ class PlanSweepSpec extends SparkSpec {
                                   // anchor/eval sets, LSH query buckets
     "queries/TextQueries.scala" -> 2, // 1-row percentile bounds;
                                   // eval-set shingles
-    "queries/ClusterQueries.scala" -> 6, // query batches, k centroids,
+    "queries/ClusterQueries.scala" -> 5, // query batches, k centroids,
                                   // probe buckets
     "queries/CodeQueries.scala" -> 1 // 1-row prose-threshold scalar
   )

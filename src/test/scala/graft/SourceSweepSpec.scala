@@ -14,31 +14,34 @@ import scala.jdk.CollectionConverters._
   * [[graft.streaming.StreamingOps]], every gate's job group is set by
   * [[Harness.runGate]]'s watchdog, every store is built through
   * [[graft.ops.StoreGuard]], every native kernel's generated code is
-  * one call into its Scala body, and the set of `SPARK_GRAFT_*`
+  * one call into its Scala body, no gate body or oracle chain under
+  * queries/ is spelled twice, and the set of `SPARK_GRAFT_*`
   * environment knobs is pinned. */
 class SourceSweepSpec extends org.scalatest.funsuite.AnyFunSuite {
   private val root = Paths.get("src/main/scala/graft")
 
-  /** Each main source's lines outside comments, keyed by its path
-    * relative to the source root. */
-  private lazy val codeLines: Map[String, Vector[String]] = {
+  /** Each main source's lines outside comments, with their 1-based
+    * line numbers, keyed by its path relative to the source root. */
+  private lazy val codeLines: Map[String, Vector[(String, Int)]] = {
     val s = Files.walk(root)
     val files = try s.iterator().asScala
       .filter(_.toString.endsWith(".scala")).toVector
       finally s.close()
     files.map { p =>
       root.relativize(p).toString ->
-        new String(Files.readAllBytes(p), "UTF-8").linesIterator.filter { l =>
-          val t = l.trim
-          !(t.startsWith("*") || t.startsWith("//") || t.startsWith("/*"))
-        }.toVector
+        new String(Files.readAllBytes(p), "UTF-8").linesIterator
+          .zip(Iterator.from(1)).filter { case (l, _) =>
+            val t = l.trim
+            !(t.startsWith("*") || t.startsWith("//") || t.startsWith("/*"))
+          }.toVector
     }.toMap
   }
 
   /** Main sources containing `needle` outside comment lines. */
   private def filesContaining(needle: String): Set[String] =
-    codeLines.collect { case (f, ls) if ls.exists(_.contains(needle)) => f }
-      .toSet
+    codeLines.collect {
+      case (f, ls) if ls.exists(_._1.contains(needle)) => f
+    }.toSet
 
   test("SparkSession.builder() appears only in Harness and the " +
       "product CLI (jobs/Pipeline)") {
@@ -79,7 +82,7 @@ class SourceSweepSpec extends org.scalatest.funsuite.AnyFunSuite {
   test("the SPARK_GRAFT_* knobs are exactly the eleven kept, and only " +
       "Harness sets a job group") {
     val knobs = codeLines.values.flatten
-      .flatMap("SPARK_GRAFT_[A-Z0-9_]+".r.findAllIn(_)).toSet
+      .flatMap(l => "SPARK_GRAFT_[A-Z0-9_]+".r.findAllIn(l._1)).toSet
     assert(knobs === Set("SPARK_GRAFT_AB_CONF", "SPARK_GRAFT_AB_SAMPLE",
       "SPARK_GRAFT_BENCH_BANDS", "SPARK_GRAFT_BENCH_BASELINE",
       "SPARK_GRAFT_BENCH_OUT", "SPARK_GRAFT_BENCH_PROGRESS",
@@ -98,5 +101,21 @@ class SourceSweepSpec extends org.scalatest.funsuite.AnyFunSuite {
     for (needle <- Seq("_GRAFT_COMPLETE", "StoreLedger.lockFor(",
         "StoreLedger.record("))
       assert(filesContaining(needle) === Set("ops/StoreGuard.scala"), needle)
+  }
+
+  test("no 8 consecutive code lines appear twice under queries/: a " +
+      "shared gate body or oracle chain is one def") {
+    val width = 8
+    val windows = for {
+      (f, ls) <- codeLines.toSeq if f.startsWith("queries/")
+      code = ls.map { case (l, n) => (l.trim, n) }.filter(_._1.nonEmpty)
+      w <- code.sliding(width) if w.size == width
+    } yield w.map(_._1) -> (f, w.head._2)
+    val repeated = windows.groupBy(_._1).values.filter(_.size > 1)
+      .map(_.map(_._2).sorted).toSeq.sortBy(_.head)
+      .map(_.map { case (f, n) => s"$f:$n" }.mkString(" = "))
+    if (repeated.nonEmpty)
+      fail(s"${repeated.size} repeated $width-line windows:\n" +
+        repeated.mkString("\n"))
   }
 }

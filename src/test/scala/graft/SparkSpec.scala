@@ -1,5 +1,6 @@
 package graft
 
+import java.nio.file.{Files, Path}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
@@ -21,5 +22,21 @@ object SparkSpec {
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
+  }
+
+  /** A fresh directory under java.io.tmpdir whose whole tree is deleted
+    * when the JVM exits (tests run in a forked JVM, so that is the end
+    * of the test run). */
+  def tempDir(prefix: String): Path = {
+    val dir = Files.createTempDirectory(prefix)
+    sys.addShutdownHook {
+      if (Files.exists(dir)) {
+        val s = Files.walk(dir)
+        try s.sorted(java.util.Comparator.reverseOrder[Path]())
+          .forEach(p => Files.deleteIfExists(p))
+        finally s.close()
+      }
+    }
+    dir
   }
 }

@@ -20,7 +20,7 @@ class TablesMemoSpec extends SparkSpec {
     * layout: events.parquet is a file, not a directory). */
   private def writeBareParquet(df: org.apache.spark.sql.DataFrame,
                                target: String): Unit = {
-    val stage = Files.createTempDirectory("memo_stage").toString
+    val stage = SparkSpec.tempDir("memo_stage").toString
     df.coalesce(1).write.mode("overwrite").parquet(stage)
     val part = new java.io.File(stage).listFiles()
       .filter(f => f.getName.startsWith("part-") &&
@@ -31,7 +31,7 @@ class TablesMemoSpec extends SparkSpec {
 
   test("events-schema memo refreshes when the fixture is regenerated " +
       "mid-session (content change -> new schema served, same JVM)") {
-    val dir = Files.createTempDirectory("memo_fixture").toString
+    val dir = SparkSpec.tempDir("memo_fixture").toString
     val path = s"$dir/events.parquet"
 
     // generation 1: ts as TIMESTAMP (the current driver layout)

@@ -107,7 +107,7 @@ class PipelineSpec extends SparkSpec {
       |""".stripMargin
 
   private def writeTemp(name: String, content: String): String = {
-    val dir = Files.createTempDirectory("graft-fixture").toFile
+    val dir = graft.SparkSpec.tempDir("graft-fixture").toFile
     val f = new java.io.File(dir, name)
     Files.writeString(f.toPath, content)
     if (name.endsWith(".csv")) dir.getAbsolutePath else f.getAbsolutePath
@@ -217,7 +217,7 @@ class PipelineSpec extends SparkSpec {
 
   test("kill-and-rerun: a death after the first sink's write resumes " +
       "at the second, and no sink double-appends") {
-    val outDir = Files.createTempDirectory("graft-resume").toString
+    val outDir = graft.SparkSpec.tempDir("graft-resume").toString
     val dims = Pipeline.Dims(districtCode, districtRegion, townDistrict,
       agencyId)
     val pnPath = writeTemp("pn.json", propnexRawJson)
@@ -259,7 +259,7 @@ class PipelineSpec extends SparkSpec {
 
   test("ordered markers: a death in historical's hook keeps the scraped " +
       "marker, and the rerun runs only historical") {
-    val outDir = Files.createTempDirectory("graft-order").toString
+    val outDir = graft.SparkSpec.tempDir("graft-order").toString
     val pnPath = writeTemp("pn.json", propnexRawJson)
     val srxPath = writeTemp("srx.json", srxRawJson)
     val histDir = writeTemp("hist.csv", histCsv)
@@ -288,7 +288,7 @@ class PipelineSpec extends SparkSpec {
 
   test("ordered markers: when scraped dies, the concurrent historical " +
       "write has finished by the time the call throws, unmarked") {
-    val outDir = Files.createTempDirectory("graft-order").toString
+    val outDir = graft.SparkSpec.tempDir("graft-order").toString
     val boom = intercept[RuntimeException] {
       Pipeline.runResumable(spark, writeTemp("pn.json", propnexRawJson),
         writeTemp("srx.json", srxRawJson), writeTemp("hist.csv", histCsv),
@@ -356,7 +356,7 @@ class PipelineSpec extends SparkSpec {
     spark.conf.set(key, "static")
     try {
       val paths = Seq.fill(2)(
-        Files.createTempDirectory("graft-concurrent").toString)
+        graft.SparkSpec.tempDir("graft-concurrent").toString)
       paths.foreach(p => Pipeline.writePartitionedIdempotent(
         Seq((1L, "2024-11-01")).toDF("k", "day"), p, "day"))
       // each round lands a new day in both sinks at the same time
@@ -380,7 +380,7 @@ class PipelineSpec extends SparkSpec {
   test("writePartitionedIdempotent: a replayed day's load is a no-op; " +
       "other days' partitions survive") {
     import org.apache.spark.sql.functions._
-    val path = Files.createTempDirectory("graft-replay").toString
+    val path = graft.SparkSpec.tempDir("graft-replay").toString
     val day1 = Seq((1L, "a", "2024-11-01"), (2L, "b", "2024-11-01"))
       .toDF("k", "v", "day")
     val day2 = Seq((3L, "c", "2024-11-02")).toDF("k", "v", "day")
@@ -401,7 +401,7 @@ class PipelineSpec extends SparkSpec {
     import org.apache.spark.sql.functions._
     val rnd = new scala.util.Random(11)
     for (trial <- 1 to 3) {
-      val path = Files.createTempDirectory(s"graft-replay-p$trial").toString
+      val path = graft.SparkSpec.tempDir(s"graft-replay-p$trial").toString
       val days = (1 to 4).map(d => f"2024-11-$d%02d")
       // per day, 1-2 batch VERSIONS; the schedule interleaves them and
       // replays arbitrary earlier versions; dynamic overwrite must

@@ -7,7 +7,7 @@ class CompactionSpec extends SparkSpec {
 
   test("compact rewrites a fragmented directory into few sized files " +
       "with identical rows") {
-    val dir = java.nio.file.Files.createTempDirectory("compact").toString
+    val dir = graft.SparkSpec.tempDir("compact").toString
     val df = spark.range(200000).selectExpr("id", "id * 3 AS v")
     df.repartition(64).write.parquet(s"$dir/frag")
     val conf = spark.sparkContext.hadoopConfiguration

@@ -94,7 +94,7 @@ class JoinsSpec extends SparkSpec {
 
   test("inPrunedJoin pushes the key set into the fact scan and bounds " +
       "the collect") {
-    val dir = java.nio.file.Files.createTempDirectory("inpruned").toString
+    val dir = graft.SparkSpec.tempDir("inpruned").toString
     spark.range(1000).selectExpr("id AS k", "id * 2 AS v")
       .write.mode("overwrite").parquet(s"$dir/fact")
     val fact = spark.read.parquet(s"$dir/fact")

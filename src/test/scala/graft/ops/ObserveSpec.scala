@@ -14,8 +14,7 @@ class ObserveSpec extends SparkSpec {
     val df = Seq((1L, 10.0), (2L, 2.5), (3L, Double.NaN), (4L, 7.5))
       .toDF("id", "v")
       .withColumn("v", when(col("id") === 3L, lit(null)).otherwise(col("v")))
-    val out = java.nio.file.Files
-      .createTempDirectory("observe_sink").toString
+    val out = graft.SparkSpec.tempDir("observe_sink").toString
     val row = Observe.metrics(df, Seq(
         count(lit(1)).as("n"),
         sum(when(col("v").isNull, 1L).otherwise(0L)).as("nulls"),

@@ -59,8 +59,7 @@ class XmlRoundTripFuzzSpec extends SparkSpec {
         }
         (i.toLong, s, n)
       }
-    val dir = java.nio.file.Files
-      .createTempDirectory("xml_fuzz_").toString
+    val dir = graft.SparkSpec.tempDir("xml_fuzz_").toString
     rows.toDF("id", "s", "n").repartition(4)
       .write.format("xml")
       .option("rootTag", "rows").option("rowTag", "row")

@@ -39,7 +39,7 @@ class ZOrderSpec extends SparkSpec {
     // two independent uniform dimensions
     val df = spark.range(100000)
       .selectExpr("id % 317 AS a", "(id * 7919) % 311 AS b", "id AS v")
-    val dir = java.nio.file.Files.createTempDirectory("zorder").toString
+    val dir = graft.SparkSpec.tempDir("zorder").toString
     val zo = ZOrder.writeZOrdered(df, s"$dir/t", "a", "b",
       bits = 9, files = 32)
     // baseline: single-column sort prunes its own column perfectly and

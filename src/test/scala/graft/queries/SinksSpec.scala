@@ -8,8 +8,7 @@ class SinksSpec extends SparkSpec {
 
   test("contentKey changes when file bytes change, even at equal " +
       "length, and is stable across touches") {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_sinks_spec")
+    val dir = graft.SparkSpec.tempDir("graft_sinks_spec")
     val f = dir.resolve("data.bin")
     java.nio.file.Files.write(f, Array[Byte](1, 2, 3, 4))
     val k1 = Sinks.contentKey(dir.toString, "data.bin", "p")

@@ -2,7 +2,6 @@ package graft.sources
 
 import graft.SparkSpec
 import org.apache.spark.sql.types._
-import java.nio.file.Files
 
 /** Pins the PERMISSIVE-audit contract: planted corrupt rows land in
   * the quarantine ledger with their raw payload, clean rows parse
@@ -14,7 +13,7 @@ class AuditedSpec extends SparkSpec {
     StructField("id", LongType), StructField("v", StringType)))
 
   private def writeLines(name: String, lines: Seq[String]): String = {
-    val dir = Files.createTempDirectory("graft-audit").toFile
+    val dir = graft.SparkSpec.tempDir("graft-audit").toFile
     val f = new java.io.File(dir, name)
     val w = new java.io.PrintWriter(f, "UTF-8")
     try lines.foreach(w.println) finally w.close()

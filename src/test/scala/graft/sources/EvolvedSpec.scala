@@ -20,8 +20,7 @@ class EvolvedSpec extends SparkSpec {
 
   test("two-era read coalesces the rename; single-era subsets alias " +
       "or pass through instead of throwing") {
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_evolved_spec").toString
+    val root = graft.SparkSpec.tempDir("graft_evolved_spec").toString
     writeSnap(root, 1, renamed = false)
     writeSnap(root, 2, renamed = true)
     val renames = Map("priority" -> "order_priority")

@@ -65,7 +65,7 @@ class RestIngestSpec extends AnyFunSuite {
     val meta =
       """{"data":{"datasetMetadata":[{"datasetId":"d_even"},
         |{"datasetId":"d_odd"},{"datasetId":"d_gone"}]}}""".stripMargin
-    val out = Files.createTempDirectory("rest_ingest").toString
+    val out = graft.SparkSpec.tempDir("rest_ingest").toString
     withServer(
       "/v2/public/api/collections/c1/metadata" ->
         (x => respond(x, 200, meta.getBytes(UTF_8))),
@@ -119,7 +119,7 @@ class RestIngestSpec extends AnyFunSuite {
     val meta =
       """{"data":{"datasetMetadata":[{"datasetId":"y2017"},
         |{"datasetId":"y2018"}]}}""".stripMargin
-    val out = Files.createTempDirectory("rest_hist").toString
+    val out = graft.SparkSpec.tempDir("rest_hist").toString
     withServer(
       "/v2/public/api/collections/resale/metadata" ->
         (x => respond(x, 200, meta.getBytes(UTF_8))),
@@ -164,7 +164,7 @@ class RestIngestSpec extends AnyFunSuite {
     val meta =
       """{"data":{"datasetMetadata":[{"datasetId":"d1"},
         |{"datasetId":"d2"},{"datasetId":"../evil id"}]}}""".stripMargin
-    val out = Files.createTempDirectory("rest_sanitize").toString
+    val out = graft.SparkSpec.tempDir("rest_sanitize").toString
     withServer(
       "/v2/public/api/collections/c3/metadata" ->
         (x => respond(x, 200, meta.getBytes(UTF_8))),
@@ -205,7 +205,7 @@ class RestIngestSpec extends AnyFunSuite {
     val meta =
       """{"data":{"datasetMetadata":[{"datasetId":"d_flaky"},
         |{"datasetId":"d_dead"},{"datasetId":"d_ok"}]}}""".stripMargin
-    val out = Files.createTempDirectory("rest_retry").toString
+    val out = graft.SparkSpec.tempDir("rest_retry").toString
     withServer(
       "/v2/public/api/collections/c2/metadata" ->
         (x => respond(x, 200, meta.getBytes(UTF_8))),

@@ -94,7 +94,7 @@ class WarcFramingFuzzSpec extends SparkSpec {
 
   test("300 random archives: full read == framed records; " +
       "header-only read has identical membership") {
-    val dir = Files.createTempDirectory("warc_fuzz_intact_")
+    val dir = graft.SparkSpec.tempDir("warc_fuzz_intact_")
     val cases = (0 until 300).map(seed => seed -> mkCase(seed, 0))
     cases.foreach { case (seed, recs) =>
       writeArchive(dir, f"case$seed%04d.warc", recs) }
@@ -104,7 +104,7 @@ class WarcFramingFuzzSpec extends SparkSpec {
 
   test("300 archives truncated inside the final record: both " +
       "projections yield exactly the preceding records") {
-    val dir = Files.createTempDirectory("warc_fuzz_torn_")
+    val dir = graft.SparkSpec.tempDir("warc_fuzz_torn_")
     val cases = (0 until 300).map { seed =>
       val recs = mkCase(seed, 1)
       val rnd = new Random(seed * 40503L + 7)
@@ -130,7 +130,7 @@ class WarcFramingFuzzSpec extends SparkSpec {
   }
 
   test("a final record with a torn TRAILER (payload complete) is kept") {
-    val dir = Files.createTempDirectory("warc_fuzz_trailer_")
+    val dir = graft.SparkSpec.tempDir("warc_fuzz_trailer_")
     val recs = mkCase(9999, 2)
     val cut = recs.map(frameLen).sum - 3 // inside the closing \r\n\r\n
     writeArchive(dir, "case.warc", recs, cutAt = cut)

@@ -8,8 +8,7 @@ class WarcSpec extends SparkSpec {
   import spark.implicits._
 
   private def writeFixture(): String = {
-    val dir = java.nio.file.Files
-      .createTempDirectory("warc_spec_").toString
+    val dir = graft.SparkSpec.tempDir("warc_spec_").toString
     val rows = Seq(
       (1L, "plain payload"),
       (2L, ""), // empty body

@@ -21,8 +21,7 @@ class DirLayoutStreamSpec extends SparkSpec {
     // the RAW bytes re-laid-out, ts type untouched (this is fixture
     // manufacturing, the one legitimate reason to read events.parquet
     // outside the two read boundaries)
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_dirlayout_sf_").toString
+    val dir = graft.SparkSpec.tempDir("graft_dirlayout_sf_").toString
     spark.read.parquet(s"$sf/events.parquet").repartition(4)
       .write.mode("overwrite").parquet(s"$dir/events.parquet")
 
@@ -48,8 +47,7 @@ class DirLayoutStreamSpec extends SparkSpec {
       "fixture (same gate code, both layouts, identical rows)") {
     // re-lay the whole sf dir: documents as a 3-part DIRECTORY, the
     // rest copied through so the gate's store builds resolve
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_dirlayout_docs_").toString
+    val dir = graft.SparkSpec.tempDir("graft_dirlayout_docs_").toString
     for (t <- Seq("region", "nation", "customer", "supplier", "part",
         "orders", "lineitem", "events", "embeddings"))
       java.nio.file.Files.copy(
@@ -74,8 +72,7 @@ class DirLayoutStreamSpec extends SparkSpec {
       "fixture (same gate code, both layouts, identical rows)") {
     // embeddings as a 3-part DIRECTORY: the gate's batch model fit and
     // its scored stream both read the one table
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_dirlayout_emb_").toString
+    val dir = graft.SparkSpec.tempDir("graft_dirlayout_emb_").toString
     spark.read.parquet(s"$sf/embeddings.parquet").repartition(3)
       .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
 

@@ -27,8 +27,7 @@ class FoldBatchesSpec extends SparkSpec {
   /** sf0.001 events (ts already canonical micros) as a 4-part table
     * directory under a fresh sf dir. */
   private lazy val dirSf: String = {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_fold_batches_").toString
+    val dir = graft.SparkSpec.tempDir("graft_fold_batches_").toString
     Tables.events(spark, sf).repartition(4)
       .write.parquet(s"$dir/events.parquet")
     dir
@@ -96,8 +95,7 @@ class FoldBatchesSpec extends SparkSpec {
 
   test("a stream with no input fails the fold instead of returning " +
       "an empty accumulator") {
-    val empty = java.nio.file.Files
-      .createTempDirectory("graft_fold_empty_").toString
+    val empty = graft.SparkSpec.tempDir("graft_fold_empty_").toString
     val stream = StreamingOps.session(spark).readStream
       .schema("x LONG").parquet(empty)
     val e = intercept[IllegalStateException] {

@@ -18,7 +18,7 @@ class LocalCheckpointFileManagerSpec extends AnyFunSuite {
   private val conf = new Configuration()
 
   private def withDir(body: NioPath => Unit): Unit = {
-    val dir = Files.createTempDirectory("graft-lcfm")
+    val dir = graft.SparkSpec.tempDir("graft-lcfm")
     try body(dir)
     finally Files.walk(dir).iterator().asScala.toVector.reverse
       .foreach(Files.delete)

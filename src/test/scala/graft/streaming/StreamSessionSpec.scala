@@ -58,7 +58,7 @@ class StreamSessionSpec extends SparkSpec {
   test("a checkpoint written by Spark's default manager restarts on " +
       "StreamingOps.session without a new batch; a second log writer " +
       "fails the same way under both managers") {
-    val dir = Files.createTempDirectory("graft-compat")
+    val dir = graft.SparkSpec.tempDir("graft-compat")
     try {
       val out = dir.resolve("sink").toString
       val default = spark.newSession()
