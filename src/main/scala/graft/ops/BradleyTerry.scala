@@ -41,9 +41,8 @@ import org.apache.spark.sql.functions._
   * pairs, not duels. Each iteration joins the entity-sized score
   * vector into the symmetric pair list twice (AQE broadcasts the
   * vector; the pair list never moves), one partial-aggregable sum by
-  * entity, one 1-row max scalar broadcast back. localCheckpoint per
-  * iteration truncates lineage, same as [[PageRank]]. Nothing is
-  * driver-collected. */
+  * entity, one 1-row max scalar broadcast back, run through
+  * [[Checkpoints.iterate]]. Nothing is driver-collected. */
 object BradleyTerry {
 
   /** (id, bt) after exactly `iters` MM iterations over `duels`
@@ -77,19 +76,6 @@ object BradleyTerry {
       .groupBy("i", "j")
       .agg(sum(col("n")).as("n"), sum(col("wi")).as("wi"))
 
-  /** Materialization cadence of the score vector: 5 fuses five MM
-    * steps into one lazy plan before cutting lineage (the raw update
-    * inside each iteration stays checkpointed — it feeds both the max
-    * anchor and the re-anchor, so leaving it lazy doubles the den
-    * aggregate, and it is ALSO what bounds lineage depth under
-    * fusion: the lazy sv is always one crossJoin off the last raw
-    * checkpoint). Results are BIT-IDENTICAL for any cadence (exact
-    * integer recurrence). 5 = the measured winner at the gates'
-    * iters=5 (A/B in BASELINE.md round 12: 3.61 → 3.32 s median;
-    * KCore's peel keeps cadence 1 — there fusion LOSES because the
-    * degree vector feeds two consumers per round). */
-  private val CheckpointEvery = 5
-
   /** [[fit]] from a (possibly merged) pair-statistics table. */
   def fitFromPairs(pairStats: DataFrame, iters: Int): DataFrame = {
     require(iters >= 1, "bradleyTerry needs at least one iteration")
@@ -116,8 +102,11 @@ object BradleyTerry {
     val wt = nodes.join(wins, Seq("id"), "left")
       .select(col("id"), coalesce(col("w"), lit(0L)).as("w"))
       .localCheckpoint()
-    var sv = wt.select(col("id"), lit(1000000L).as("s"))
-    for (it <- 1 to iters) {
+    // each step's raw update stays checkpointed: it feeds both the max
+    // anchor and the re-anchor, so leaving it lazy doubles the den
+    // aggregate
+    val sv0 = wt.select(col("id"), lit(1000000L).as("s"))
+    val (sv, _) = Checkpoints.iterate(sv0, iters, every = 5) { (sv, _) =>
       val den = sym
         .join(sv.select(col("id").as("i"), col("s").as("si")), Seq("i"))
         .join(sv.select(col("id").as("j"), col("s").as("sj")), Seq("j"))
@@ -138,10 +127,8 @@ object BradleyTerry {
           .select(col("id"), expr("w * 1000000000L div den").as("sr")),
         "sr")
       val mx = mxOpt.getOrElse(1L) // None only when raw is empty
-      sv = raw.select(col("id"),
+      raw.select(col("id"),
         greatest(lit(1L), expr(s"sr * 1000000L div ${mx}L")).as("s"))
-      if (it % CheckpointEvery == 0 || it == iters)
-        sv = sv.localCheckpoint()
     }
     sv.select(col("id"), col("s").as("bt"))
   }
@@ -159,15 +146,21 @@ object BradleyTerry {
     oracleChain(duelsSql, iters) +
       s"\nSELECT id, s AS bt FROM it$iters ORDER BY id"
 
+  /** The `duels` and `pairs` CTEs that open every preference-fit
+    * oracle — [[pairStats]] in DuckDB. `duelsSql` must be a CTE body
+    * yielding `(i, j, awin)`. */
+  private[ops] def pairsCtes(duelsSql: String): String =
+    s"""WITH duels AS MATERIALIZED ($duelsSql),
+       |pairs AS MATERIALIZED (SELECT i, j, CAST(count(*) AS BIGINT) AS n,
+       |    CAST(sum(CASE WHEN awin THEN 1 ELSE 0 END) AS BIGINT) AS wi
+       |  FROM duels GROUP BY 1, 2)""".stripMargin
+
   /** The CTE chain only (everything up to `it<iters>` = (id, s)) —
     * shared by [[oracleSql]] and the calibration oracle so the two
     * gates can never pin different score definitions. */
   private def oracleChain(duelsSql: String, iters: Int): String = {
-    val base =
-      s"""WITH duels AS MATERIALIZED ($duelsSql),
-         |pairs AS MATERIALIZED (SELECT i, j, CAST(count(*) AS BIGINT) AS n,
-         |    CAST(sum(CASE WHEN awin THEN 1 ELSE 0 END) AS BIGINT) AS wi
-         |  FROM duels GROUP BY 1, 2),
+    val base = pairsCtes(duelsSql) +
+      """,
          |sym AS MATERIALIZED (SELECT i, j, n FROM pairs
          |  UNION ALL SELECT j AS i, i AS j, n FROM pairs),
          |nodes AS (SELECT DISTINCT i AS id FROM sym),

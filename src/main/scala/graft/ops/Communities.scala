@@ -16,10 +16,10 @@ import org.apache.spark.sql.types.LongType
   * each round is ONE equi-join of the symmetric edge list with the
   * KB-per-node label table plus two partial-aggregable aggregates
   * ((id,lbl) tally, then per-id argmax via min-of-struct — codegen'd
-  * hash aggregates, no window, no sort). `localCheckpoint` bounds the
-  * lineage per round; nothing but the final label table leaves the
-  * executors. Integer labels and counts — no floating point anywhere,
-  * so the oracle can replay rounds bit-exactly. */
+  * hash aggregates, no window, no sort), run through
+  * [[Checkpoints.iterate]]; nothing but the final label table leaves
+  * the executors. Integer labels and counts — no floating point
+  * anywhere, so the oracle can replay rounds bit-exactly. */
 object Communities {
 
   /** `edges`: undirected edge list (long `src`, `dst`), any
@@ -35,21 +35,18 @@ object Communities {
       .union(e.select(col("dst").as("src"), col("src").as("dst")))
       .distinct()
       .localCheckpoint()
-    var labels = sym.select(col("src").as("id")).distinct()
+    val labels0 = sym.select(col("src").as("id")).distinct()
       .withColumn("lbl", col("id"))
       .localCheckpoint()
-    for (_ <- 1 to iters) {
-      val tally = sym.join(labels, sym("src") === labels("id"))
+    Checkpoints.iterate(labels0, iters) { (labels, _) =>
+      sym.join(labels, sym("src") === labels("id"))
         .select(sym("dst").as("id"), col("lbl"))
         .groupBy("id", "lbl").agg(count(lit(1)).as("c"))
-      labels = tally
         .groupBy("id")
         .agg(min(struct((-col("c")).as("nc"), col("lbl").as("l")))
           .as("b"))
         .select(col("id"), col("b.l").as("lbl"))
-        .localCheckpoint()
-    }
-    labels
+    }._1
   }
 
   /** DuckDB oracle twin: the same rounds unrolled as CTEs (`iters` is

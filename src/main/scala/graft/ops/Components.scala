@@ -20,15 +20,9 @@ import org.apache.spark.storage.StorageLevel
   * sorts, no windows, no driver-side data. The driver only observes
   * the converged/changed COUNT per round (a scalar), which is the
   * standard iterative-algorithm control loop (GraphX Pregel does the
-  * same). Each round's labels are `localCheckpoint`ed: persist alone
-  * reuses DATA but leaves the logical plan growing (the round-N plan
-  * references round-N-1 twice — union and convergence join — so the
-  * tree doubles per round and the analyzer OOMs near round 12);
-  * checkpointing truncates lineage to the materialized blocks, which
-  * is how every iterative DataFrame algorithm must bound its plan.
-  * For graphs with billion-node components the alternating
-  * large-star/small-star variant halves round count; near-dup graphs
-  * don't need it. */
+  * same); rounds run through [[Checkpoints.iterate]]. For graphs with
+  * billion-node components the alternating large-star/small-star
+  * variant halves round count; near-dup graphs don't need it. */
 object Components {
 
   /** (id, component) for every node incident to ≥1 edge; `component`
@@ -39,9 +33,7 @@ object Components {
     * `maxIter` rounds (a component of diameter > maxIter): returning
     * the mid-propagation labels would silently split real clusters,
     * which for a dedup caller means silently keeping duplicates. Pass
-    * a larger `maxIter` for deep graphs. Superseded per-round label
-    * tables are released by the ContextCleaner as their references
-    * drop; only the latest checkpoint stays pinned. */
+    * a larger `maxIter` for deep graphs. */
   def connectedComponents(edges: DataFrame, maxIter: Int = 20): DataFrame = {
     // checkpoint the edge list FIRST: the symmetric union references it
     // twice, and an expensive upstream (e.g. the whole LSH candidate
@@ -58,41 +50,29 @@ object Components {
     // via ONE aggregation — replaces the separate distinct() node list
     // AND the first propagation round (star-shaped clusters, the common
     // near-dup case, are already converged here)
-    var labels = sym.groupBy(col("src").as("id"))
+    val labels0 = sym.groupBy(col("src").as("id"))
       .agg(min(col("dst")).as("min_nbr"))
       .select(col("id"),
         least(col("id"), col("min_nbr")).as("label"))
       .localCheckpoint() // eager: materialize + truncate lineage
 
-    var iter = 0
-    var converged = false
-    while (!converged && iter < maxIter) {
-      // candidate labels: own + every neighbor's current label. The
-      // self rows carry the previous label in `old`, so ONE aggregation
-      // yields both the new label and the convergence signal — no extra
-      // old⋈new join per round (each id has exactly one self row, so
-      // max(old) recovers its previous label).
-      val self = labels.select(col("id"), col("label"),
-        col("label").as("old"))
-      val nbr = sym.join(labels, sym("dst") === labels("id"))
-        .select(sym("src").as("id"), col("label"),
-          lit(null).cast("long").as("old"))
-      // convergence count fused into the checkpoint job (r17, same
-      // observe fuse as the preference-fit anchors): the separate
-      // filter+count job per round becomes a metric over rows the
-      // checkpoint already streams. Only the count's ZERONESS is
-      // consumed, which is retry-robust — a resubmitted task re-adds
-      // contributions from the same deterministic rows, so a zero
-      // stays zero and a nonzero stays nonzero.
-      val (next, metr) = Checkpoints.checkpointObserving(
+    // candidate labels: own + every neighbor's current label. The self
+    // rows carry the previous label in `old`, so ONE aggregation yields
+    // both the new label and the convergence signal — no extra old⋈new
+    // join per round (each id has exactly one self row, so max(old)
+    // recovers its previous label). The changed-row count is observed
+    // inside the round's checkpoint job (r17 fuse), not a separate job.
+    val (labels, converged) = Checkpoints.iterate(labels0, maxIter,
+        stopWhenZero = Some(count(when(col("label") =!= col("old"), 1)))) {
+      (labels, _) =>
+        val self = labels.select(col("id"), col("label"),
+          col("label").as("old"))
+        val nbr = sym.join(labels, sym("dst") === labels("id"))
+          .select(sym("src").as("id"), col("label"),
+            lit(null).cast("long").as("old"))
         self.unionByName(nbr)
           .groupBy("id")
-          .agg(min("label").as("label"), max("old").as("old")),
-        "graft_cc_changed",
-        count(when(col("label") =!= col("old"), 1)).as("changed"))
-      labels = next.select("id", "label")
-      converged = metr.getLong(0) == 0L
-      iter += 1
+          .agg(min("label").as("label"), max("old").as("old"))
     }
     sym.unpersist()
     if (!converged) throw new IllegalStateException(

@@ -23,8 +23,9 @@ import org.apache.spark.sql.functions._
   * Scale shape: the symmetrized edge list is static (checkpointed
   * once); each round is two equi-joins of the node-sized alive set
   * into the edge list (AQE broadcasts the vector), one
-  * partial-aggregable degree count, one anti-join. The removed-set
-  * accumulator is node-sized. Nothing driver-collected. */
+  * partial-aggregable degree count, one anti-join, run through
+  * [[Checkpoints.iterate]]. The removed-set accumulator is node-sized.
+  * Nothing driver-collected. */
 object KCore {
 
   /** (id, removed_round) after exactly `rounds` parallel peels at
@@ -68,12 +69,15 @@ object KCore {
     // gap widens with graph size since the delta side stays put).
     // Results are identical: deg(v) − |neighbors(v) ∩ removed| IS the
     // surviving degree.
-    var deg = sym.groupBy(col("src").as("id"))
+    val deg0 = sym.groupBy(col("src").as("id"))
       .agg(count(lit(1)).as("deg"))
       .localCheckpoint()
-    var removed = deg.select(col("id"),
+    var removed = deg0.select(col("id"),
       lit(null).cast("int").as("removed_round")).limit(0)
-    for (r <- 1 to rounds) {
+    // degree vector cut EVERY round: fusing several peel rounds into
+    // one lazy plan measured slower (A/B in BASELINE.md round 12) —
+    // the degree vector feeds two consumers per round
+    val (deg, _) = Checkpoints.iterate(deg0, rounds) { (deg, r) =>
       val rm = deg.where(col("deg") < k)
         .select(col("id"), lit(r).cast("int").as("removed_round"))
         .localCheckpoint()
@@ -82,14 +86,10 @@ object KCore {
         .join(rm.select(col("id").as("dst")), Seq("dst"))
         .groupBy(col("src").as("id"))
         .agg(count(lit(1)).as("minus"))
-      deg = deg.join(rm.select("id"), Seq("id"), "left_anti")
+      deg.join(rm.select("id"), Seq("id"), "left_anti")
         .join(delta, Seq("id"), "left")
         .select(col("id"),
           (col("deg") - coalesce(col("minus"), lit(0L))).as("deg"))
-      // degree vector checkpointed EVERY round: fusing several peel
-      // rounds into one lazy plan measured slower (A/B in BASELINE.md
-      // round 12) — the degree vector feeds two consumers per round
-      deg = deg.localCheckpoint()
     }
     deg.select(col("id"), lit(null).cast("int").as("removed_round"))
       .unionByName(removed)

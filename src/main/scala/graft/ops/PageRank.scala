@@ -27,9 +27,9 @@ import org.apache.spark.sql.functions._
   * current rank vector with the edge list on src (both hash-
   * partitionable on the join key) + ONE partial-aggregable sum by dst
   * + one left join back onto the node set — the Pregel shape, same as
-  * [[Components.connectedComponents]]. localCheckpoint per iteration
-  * truncates lineage so the plan stays iteration-independent. The
-  * rank vector is node-sized, never driver-collected. */
+  * [[Components.connectedComponents]]; rounds run through
+  * [[Checkpoints.iterate]]. The rank vector is node-sized, never
+  * driver-collected. */
 object PageRank {
 
   /** (id, pr_milli) after exactly `iters` iterations over the directed
@@ -61,20 +61,19 @@ object PageRank {
       .agg(count(lit(1)).as("deg"))
     // the out-degree is static: carry it INSIDE the rank vector so
     // each iteration joins once (rank ⋈ edges), not twice
-    var pr = nodes.join(outdeg, Seq("id"), "left")
+    val pr0 = nodes.join(outdeg, Seq("id"), "left")
       .select(col("id"), coalesce(col("deg"), lit(0L)).as("deg"),
         lit(1000L).as("p"))
       .localCheckpoint()
-    for (_ <- 1 to iters) {
+    val (pr, _) = Checkpoints.iterate(pr0, iters) { (pr, _) =>
       val contrib = pr.filter(col("deg") > 0)
         .withColumn("share", expr("p div deg"))
         .join(e, col("id") === col("src"))
         .groupBy(col("dst").as("id"))
         .agg(sum(col("share")).as("s"))
-      pr = pr.select(col("id"), col("deg")).join(contrib, Seq("id"), "left")
+      pr.select(col("id"), col("deg")).join(contrib, Seq("id"), "left")
         .select(col("id"), col("deg"),
           (lit(150L) + expr("850L * coalesce(s, 0L) div 1000L")).as("p"))
-        .localCheckpoint()
     }
     pr.select(col("id"), col("p").as("pr_milli"))
   }

@@ -39,22 +39,12 @@ import org.apache.spark.sql.functions._
   * driver-collected. */
 object RankCentrality {
 
-  /** Score-vector materialization cadence: 5 = the measured winner
-    * at the gates' iters=5 (BASELINE.md round 12: 4.31 → 4.19 s). */
-  private val CheckpointEvery = 5
-
   /** (id, rc) after exactly `iters` iterations over `duels`
     * (columns `i`, `j` long entity ids with i ≠ j canonical per pair,
     * `awin` boolean — one row per comparison, no ties). `rc` is in
     * micro units, max entity = 1,000,000. */
-  def fit(duels: DataFrame, iters: Int): DataFrame = {
-    val d = duels.select(col("i").cast("long"), col("j").cast("long"),
-      col("awin").cast("boolean"))
-    fitFromPairs(d.groupBy("i", "j")
-      .agg(count(lit(1)).as("n"),
-        sum(when(col("awin"), 1L).otherwise(0L)).as("wi")),
-      iters)
-  }
+  def fit(duels: DataFrame, iters: Int): DataFrame =
+    fitFromPairs(BradleyTerry.pairStats(duels), iters)
 
   /** [[fit]] from a precomputed `(i, j, n, wi)` pair-statistics table
     * (the same additive matrix [[BradleyTerry.pairStats]] persists) —
@@ -97,16 +87,13 @@ object RankCentrality {
       .agg(sum(col("rate")).as("r"))
     // out-rate is static: carry it inside the score vector so each
     // iteration joins once (scores ⋈ edges), the PageRank layout
-    var sv = deg.select("id").join(outr, Seq("id"), "left")
+    val sv0 = deg.select("id").join(outr, Seq("id"), "left")
       .select(col("id"), coalesce(col("r"), lit(0L)).as("r"),
         lit(1000000L).as("s"))
       .localCheckpoint()
-    // score-vector materialization cadence (CheckpointEvery) fuses
-    // that many update steps into one lazy plan before cutting
-    // lineage; the raw update stays checkpointed (max anchor +
-    // re-anchor both consume it). Bit-identical for any cadence
-    // (measured A/B in BASELINE.md round 12).
-    for (it <- 1 to iters) {
+    // each step's raw update stays checkpointed (max anchor +
+    // re-anchor both consume it)
+    val (sv, _) = Checkpoints.iterate(sv0, iters, every = 5) { (sv, _) =>
       val inflow = sv.select(col("id").as("src"), col("s"))
         .join(edges, Seq("src"))
         .groupBy(col("dst").as("id"))
@@ -123,10 +110,8 @@ object RankCentrality {
               expr("coalesce(x, 0L) div 1000000000L")).as("raw")),
         "raw")
       val mx = mxOpt.getOrElse(1L) // None only when raw is empty
-      sv = raw.select(col("id"), col("r"),
+      raw.select(col("id"), col("r"),
         expr(s"raw * 1000000L div ${mx}L").as("s"))
-      if (it % CheckpointEvery == 0 || it == iters)
-        sv = sv.localCheckpoint()
     }
     sv.select(col("id"), col("s").as("rc"))
   }
@@ -137,11 +122,8 @@ object RankCentrality {
     * same-level max scalar — the MATERIALIZED hints keep DuckDB from
     * inlining the chain exponentially (BASELINE protocol note). */
   def oracleSql(duelsSql: String, iters: Int): String = {
-    val base =
-      s"""WITH duels AS MATERIALIZED ($duelsSql),
-         |pairs AS MATERIALIZED (SELECT i, j, CAST(count(*) AS BIGINT) AS n,
-         |    CAST(sum(CASE WHEN awin THEN 1 ELSE 0 END) AS BIGINT) AS wi
-         |  FROM duels GROUP BY 1, 2),
+    val base = BradleyTerry.pairsCtes(duelsSql) +
+      """,
          |deg AS MATERIALIZED (SELECT id, CAST(count(*) AS BIGINT) AS d
          |  FROM (SELECT i AS id FROM pairs
          |        UNION ALL SELECT j AS id FROM pairs) GROUP BY 1),

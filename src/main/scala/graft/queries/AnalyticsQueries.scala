@@ -71,15 +71,23 @@ object AnalyticsQueries {
 
   /** Lineitem self-join aliased `a`/`b`: supplier pairs of one order
     * in strict key order whose quantities differ — every duel stream
-    * below selects its outcome from these rows. */
+    * below selects its outcome from these rows (the price column only
+    * feeds the confound audit; column pruning drops it elsewhere). */
   private def duelJoin(s: org.apache.spark.sql.SparkSession, d: String) = {
     val li = lineitem(s, d)
-      .select("l_orderkey", "l_suppkey", "l_quantity")
+      .select("l_orderkey", "l_suppkey", "l_quantity", "l_extendedprice")
     li.as("a").join(li.as("b"),
       col("a.l_orderkey") === col("b.l_orderkey") &&
         col("a.l_suppkey") < col("b.l_suppkey") &&
         col("a.l_quantity") =!= col("b.l_quantity"))
   }
+
+  /** [[duelJoin]] in DuckDB: the FROM clause of every duel CTE. */
+  private val duelJoinSql =
+    """  FROM lineitem a JOIN lineitem b
+      |    ON a.l_orderkey = b.l_orderkey
+      |   AND a.l_suppkey < b.l_suppkey
+      |   AND a.l_quantity <> b.l_quantity""".stripMargin
 
   /** Quantity duels (i, j, awin): the larger quantity wins. */
   private def quantityDuels(s: org.apache.spark.sql.SparkSession,
@@ -90,12 +98,9 @@ object AnalyticsQueries {
 
   /** [[quantityDuels]] in DuckDB. */
   private val quantityDuelsSql =
-    """SELECT a.l_suppkey AS i, b.l_suppkey AS j,
+    s"""SELECT a.l_suppkey AS i, b.l_suppkey AS j,
       |    a.l_quantity > b.l_quantity AS awin
-      |  FROM lineitem a JOIN lineitem b
-      |    ON a.l_orderkey = b.l_orderkey
-      |   AND a.l_suppkey < b.l_suppkey
-      |   AND a.l_quantity <> b.l_quantity""".stripMargin
+      |$duelJoinSql""".stripMargin
 
   /** Latent-strength duels (i, j, awin): the higher suppkey wins unless
     * a deterministic hash-noise term (~1/4 of duels) flips the outcome. */
@@ -110,13 +115,10 @@ object AnalyticsQueries {
 
   /** [[noisyDuels]] in DuckDB. */
   private val noisyDuelsSql =
-    """SELECT a.l_suppkey AS i, b.l_suppkey AS j,
+    s"""SELECT a.l_suppkey AS i, b.l_suppkey AS j,
       |    NOT ((a.l_suppkey*7 + b.l_suppkey*13 + a.l_orderkey)
       |      % 4 > 0) AS awin
-      |  FROM lineitem a JOIN lineitem b
-      |    ON a.l_orderkey = b.l_orderkey
-      |   AND a.l_suppkey < b.l_suppkey
-      |   AND a.l_quantity <> b.l_quantity""".stripMargin
+      |$duelJoinSql""".stripMargin
 
   /** The from-scratch 5-iteration BT fit over all quantity duels: the
     * batch, incremental-refresh and streaming fits must all equal it. */
@@ -137,12 +139,9 @@ object AnalyticsQueries {
     * exports (KTO labels, best-of-n). The score chain's pair CTEs
     * ignore the extra column, so the same SQL feeds both. */
   private val duelsWithPromptSql =
-    """SELECT a.l_orderkey AS ok, a.l_suppkey AS i, b.l_suppkey AS j,
+    s"""SELECT a.l_orderkey AS ok, a.l_suppkey AS i, b.l_suppkey AS j,
       |    a.l_quantity > b.l_quantity AS awin
-      |  FROM lineitem a JOIN lineitem b
-      |    ON a.l_orderkey = b.l_orderkey
-      |   AND a.l_suppkey < b.l_suppkey
-      |   AND a.l_quantity <> b.l_quantity""".stripMargin
+      |$duelJoinSql""".stripMargin
 
   private def prefScoreTables(s: org.apache.spark.sql.SparkSession,
       d: String): (String, String, String, String) = {
@@ -604,12 +603,7 @@ object AnalyticsQueries {
     // broadcast-joined priority dim — scan-speed at any corpus size.
     Q("q_pref_confound_audit",
       (s, d) => {
-        val li = lineitem(s, d).select("l_orderkey", "l_suppkey",
-          "l_quantity", "l_extendedprice")
-        li.as("a").join(li.as("b"),
-            col("a.l_orderkey") === col("b.l_orderkey") &&
-              col("a.l_suppkey") < col("b.l_suppkey") &&
-              col("a.l_quantity") =!= col("b.l_quantity"))
+        duelJoin(s, d)
           .select(col("a.l_orderkey").as("ok"),
             (col("a.l_extendedprice") =!= col("b.l_extendedprice"))
               .as("attr_diff"),
@@ -631,17 +625,14 @@ object AnalyticsQueries {
             expr("higher_attr_wins * 1000L div nullif(n_attr_diff, 0L)"))
           .orderBy("priority")
       },
-      Some("""
+      Some(s"""
         |WITH duels AS (SELECT a.l_orderkey AS ok,
         |    a.l_extendedprice <> b.l_extendedprice AS attr_diff,
         |    (a.l_quantity > b.l_quantity
         |       AND a.l_extendedprice > b.l_extendedprice)
         |    OR (b.l_quantity > a.l_quantity
         |       AND b.l_extendedprice > a.l_extendedprice) AS hi_wins
-        |  FROM lineitem a JOIN lineitem b
-        |    ON a.l_orderkey = b.l_orderkey
-        |   AND a.l_suppkey < b.l_suppkey
-        |   AND a.l_quantity <> b.l_quantity)
+        |$duelJoinSql)
         |SELECT o.o_orderpriority AS priority,
         |  CAST(count(*) AS BIGINT) AS n_duels,
         |  CAST(sum(CASE WHEN attr_diff THEN 1 ELSE 0 END) AS BIGINT)
@@ -669,13 +660,8 @@ object AnalyticsQueries {
       (s, d) => {
         PreferenceAudit.transitivityAudit(quantityDuels(s, d), minDuels = 4L)
       },
-      Some("""
-        |WITH duels AS MATERIALIZED (SELECT a.l_suppkey AS i,
-        |    b.l_suppkey AS j, a.l_quantity > b.l_quantity AS awin
-        |  FROM lineitem a JOIN lineitem b
-        |    ON a.l_orderkey = b.l_orderkey
-        |   AND a.l_suppkey < b.l_suppkey
-        |   AND a.l_quantity <> b.l_quantity),
+      Some(s"""
+        |WITH duels AS MATERIALIZED ($quantityDuelsSql),
         |maj AS MATERIALIZED (SELECT i AS lo, j AS hi,
         |    (2 * wi > n) AS lowins FROM (
         |    SELECT i, j, CAST(count(*) AS BIGINT) AS n,

@@ -795,13 +795,8 @@ object CorpusQueries {
     // join is on the doc key (co-partitioned, delta-free).
     Q("q_sft_masked_pack",
       (s, d) => {
-        val turns = expr("""
-          filter(transform(sequence(0, 3), i -> struct(
-            CASE WHEN i % 2 = 0 THEN 'user' ELSE 'assistant' END AS role,
-            substring(text, 1 + 80 * i, 80) AS content)),
-          t -> t.content <> '')""")
         val convs = documents(s, d)
-          .select(col("doc_id"), turns.as("turns"))
+          .select(col("doc_id"), TextQueries.chatTurns.as("turns"))
         val totals = convs.select(col("doc_id"),
           pmod(col("doc_id"), lit(8L)).as("shard"),
           expr("aggregate(transform(turns, t -> CAST(size(split(" +

@@ -37,6 +37,16 @@ object TextQueries {
   private def sqlLit(s: String): String =
     "'" + s.replace("'", "''").replace("\n", "' || chr(10) || '") + "'"
 
+  /** Each document's `text` as a chat of up to four 80-char turns,
+    * user/assistant alternating, empty turns dropped — the Spark twin
+    * of [[OracleSql.chatTurns]], read by both SFT gates
+    * (q_sft_loss_mask, q_sft_masked_pack). */
+  private[queries] def chatTurns = expr("""
+    filter(transform(sequence(0, 3), i -> struct(
+      CASE WHEN i % 2 = 0 THEN 'user' ELSE 'assistant' END AS role,
+      substring(text, 1 + 80 * i, 80) AS content)),
+    t -> t.content <> '')""")
+
   /** Content-keyed WARC archive of the documents corpus AS CRAWLED
     * HTML — every payload is the markup-wrapped text, and docs < 25
     * arrive twice (rid + 7000000), the recrawl duplicates a real
@@ -1144,13 +1154,8 @@ object TextQueries {
     // re-derives offsets with window prefix sums over unnested turns.
     Q("q_sft_loss_mask",
       (s, d) => {
-        val turns = expr("""
-          filter(transform(sequence(0, 3), i -> struct(
-            CASE WHEN i % 2 = 0 THEN 'user' ELSE 'assistant' END AS role,
-            substring(text, 1 + 80 * i, 80) AS content)),
-          t -> t.content <> '')""")
         TextOps.lossMaskSpans(
-            documents(s, d).select(col("doc_id"), turns.as("turns")),
+            documents(s, d).select(col("doc_id"), chatTurns.as("turns")),
             "doc_id", "turns")
           .orderBy("doc_id", "turn_idx")
       },

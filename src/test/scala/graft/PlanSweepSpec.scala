@@ -298,38 +298,43 @@ class PlanSweepSpec extends SparkSpec {
     * narrowness argument; a new bare `.localCheckpoint()` fails this
     * sweep until it is entered (or routed through spill). */
   private val narrowCheckpoints: Map[String, Int] = Map(
-    "ops/KCore.scala" -> 4,        // symmetrized edge list (2 longs) +
-                                   // degree/node vectors (longs)
+    "ops/KCore.scala" -> 3,        // symmetrized edge list (2 longs) +
+                                   // degree/node vectors (longs); the
+                                   // per-round degree cut is iterate's
     "ops/Blocking.scala" -> 1,     // (__idx, id) — two longs per row
     "ops/Clustering.scala" -> 2,   // (id, cluster, dist_sq) fixed-width
     "ops/Components.scala" -> 2,   // edge list + label vectors (2
                                    // longs); the per-round labels
-                                   // route through checkpointObserving
-                                   // (r17 convergence-count fuse)
-    "ops/PageRank.scala" -> 4,     // edge list (2 longs), node ids,
-                                   // rank vectors
+                                   // are cut by iterate
+    "ops/PageRank.scala" -> 3,     // edge list (2 longs), node ids,
+                                   // rank vectors (per-round: iterate)
     "ops/Triangles.scala" -> 1,    // oriented edge list (2 longs)
-    "ops/BradleyTerry.scala" -> 3, // pair matrix (4 longs), wins/score
-                                   // vectors (2 longs per entity); the
+    "ops/BradleyTerry.scala" -> 2, // pair matrix (4 longs), wins
+                                   // vector (2 longs per entity); the
                                    // raw vector routes through
-                                   // checkpointWithMax (r17)
-    "ops/Communities.scala" -> 3,  // edges + label vectors
+                                   // checkpointWithMax (r17), the score
+                                   // vector is cut by iterate
+    "ops/Communities.scala" -> 2,  // edges + label vectors (per-round:
+                                   // iterate)
     "ops/Tombstones.scala" -> 1,   // takedown id list (request-sized)
     "ops/PreferenceAudit.scala" -> 1, // pair matrix (4 longs)
-    "ops/RankCentrality.scala" -> 4,  // pair matrix + entity vectors;
+    "ops/RankCentrality.scala" -> 3,  // pair matrix + entity vectors;
                                    // the raw vector routes through
-                                   // checkpointWithMax (r17)
-    "streaming/StreamingOps.scala" -> 5, // fold states: key-domain-
+                                   // checkpointWithMax (r17), the score
+                                   // vector is cut by iterate
+    "streaming/StreamingOps.scala" -> 1, // foldBatches' per-batch cut
+                                   // of every fold state: key-domain-
                                    // bounded snapshots + narrow pair
                                    // matrices + the (p, fp-md5, n)
                                    // prefix index (audited r14)
     "queries/StreamQueries.scala" -> 1,   // ≤bins histogram snapshot
     "queries/AnalyticsQueries.scala" -> 4, // pair matrices (4 longs)
     "queries/TextQueries.scala" -> 1, // lang×pred confusion grid
-    "ops/Checkpoints.scala" -> 1   // checkpointWithMax's own eager
-                                   // checkpoint (narrow frames by the
-                                   // callers' contract, same as a
-                                   // bare-site caller)
+    "ops/Checkpoints.scala" -> 2   // checkpointObserving's and
+                                   // iterate's eager checkpoints
+                                   // (narrow frames by the callers'
+                                   // contract, same as a bare-site
+                                   // caller)
   )
 
   test("bare localCheckpoint() only on narrow bounded-or-linear " +

@@ -14,9 +14,10 @@ import scala.jdk.CollectionConverters._
   * [[graft.streaming.StreamingOps]], every gate's job group is set by
   * [[Harness.runGate]]'s watchdog, every store is built through
   * [[graft.ops.StoreGuard]], every native kernel's generated code is
-  * one call into its Scala body, no gate body or oracle chain under
-  * queries/ is spelled twice, and the set of `SPARK_GRAFT_*`
-  * environment knobs is pinned. */
+  * one call into its Scala body, every iterative operator's rounds run
+  * through [[graft.ops.Checkpoints.iterate]], no gate body or oracle
+  * chain under queries/ is spelled twice, and the set of
+  * `SPARK_GRAFT_*` environment knobs is pinned. */
 class SourceSweepSpec extends org.scalatest.funsuite.AnyFunSuite {
   private val root = Paths.get("src/main/scala/graft")
 
@@ -101,6 +102,18 @@ class SourceSweepSpec extends org.scalatest.funsuite.AnyFunSuite {
     for (needle <- Seq("_GRAFT_COMPLETE", "StoreLedger.lockFor(",
         "StoreLedger.record("))
       assert(filesContaining(needle) === Set("ops/StoreGuard.scala"), needle)
+  }
+
+  test("the six iterative operators loop only through " +
+      "Checkpoints.iterate, which alone reads an observed convergence " +
+      "metric") {
+    for (op <- Seq("PageRank", "Communities", "KCore", "BradleyTerry",
+        "RankCentrality", "Components");
+        needle <- Seq("for (", "while ("))
+      assert(!codeLines(s"ops/$op.scala").exists(_._1.contains(needle)),
+        s"$op: $needle")
+    assert(filesContaining("checkpointObserving(") ===
+      Set("ops/Checkpoints.scala"))
   }
 
   test("no 8 consecutive code lines appear twice under queries/: a " +

@@ -30,6 +30,14 @@ class ComponentsSpec extends SparkSpec {
     assert(out.size == 12)
   }
 
+  test("a path longer than maxIter throws instead of returning split " +
+      "labels, and the message names maxIter") {
+    val path = (1L until 12L).map(i => (i, i + 1)).toDF("id_a", "id_b")
+    val err = intercept[IllegalStateException](
+      Components.connectedComponents(path, maxIter = 2))
+    assert(err.getMessage.contains("maxIter"))
+  }
+
   test("edge direction does not matter") {
     val out = run(Seq((5L, 1L), (1L, 9L)))
     assert(out == Map(1L -> 1L, 5L -> 1L, 9L -> 1L))

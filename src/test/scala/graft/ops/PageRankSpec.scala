@@ -35,6 +35,23 @@ class PageRankSpec extends SparkSpec {
       (4L, 433L)))
   }
 
+  test("the rounds leave one rank vector's blocks pinned, not one per " +
+      "round: pageRank adds as many persisted RDDs at 6 iterations as " +
+      "at 2") {
+    val edges = Seq((1L, 2L), (2L, 3L), (3L, 1L), (3L, 4L))
+      .toDF("src", "dst")
+    // read right after the call (every round is eager): once the
+    // result is unreachable the ContextCleaner may free its blocks too
+    def pinned(iters: Int): Int = {
+      val before = spark.sparkContext.getPersistentRDDs.keySet
+      val ranks = PageRank.pageRank(edges, iters)
+      val added = (spark.sparkContext.getPersistentRDDs.keySet -- before)
+      assert(ranks.columns.toSeq === Seq("id", "pr_milli"))
+      added.size
+    }
+    assert(pinned(6) === pinned(2))
+  }
+
   test("oracleSql mirrors the Spark loop on the same graph") {
     // generated SQL references edges/nodes/outdeg/itN CTEs; sanity-pin
     // the structure so the generator and the loop can't drift silently
