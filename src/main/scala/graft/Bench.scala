@@ -1,6 +1,7 @@
 package graft
 import scala.collection.immutable.ListMap
 import scala.collection.mutable
+import scala.util.control.NonFatal
 object Bench {
 
   /** Every JSON this main reads or writes. The Scala module serializes
@@ -25,7 +26,7 @@ object Bench {
     try java.lang.management.ManagementFactory
       .getOperatingSystemMXBean.getSystemLoadAverage
     // a witness only: -1 marks it missing, the gate still runs
-    catch { case _: Throwable => -1.0 }
+    catch { case NonFatal(_) => -1.0 }
 
   /** Shared flag thresholds (r12 advice): the flagging rules below and
     * the second-run `inBand` adjudication must always apply the SAME

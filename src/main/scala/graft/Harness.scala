@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.util.control.NonFatal
 
 /** What every harness main (Bench, Verify, Explain, tools.GateAB,
   * tools.ScaleUp) shares, installed once here instead of copied per
@@ -125,7 +126,7 @@ object Harness {
                 "job group (zombie tasks, if any, are abandoned)")
             // the gate may have finished meanwhile; its own error or
             // the `fired` flag reports the overrun either way
-            try sc.cancelJobGroup(group) catch { case _: Throwable => () }
+            try sc.cancelJobGroup(group) catch { case NonFatal(_) => () }
           }
         }, t * 1000L)
         val exceeded = s"gate exceeded ${t}s watchdog (cancelled)"
@@ -204,8 +205,9 @@ object Harness {
   def gateBaseline(spark: SparkSession): Set[Int] = {
     try org.apache.logging.log4j.core.config.Configurator.setLevel(
       "org.apache.spark.rdd", org.apache.logging.log4j.Level.ERROR)
-    // another logging backend: the WARN lines stay, nothing else changes
-    catch { case _: Throwable => () }
+    // another logging backend (a missing log4j-core class is a
+    // LinkageError): the WARN lines stay, nothing else changes
+    catch { case NonFatal(_) | _: LinkageError => () }
     spark.sparkContext.getPersistentRDDs.keySet.toSet
   }
 
@@ -224,7 +226,7 @@ object Harness {
       if (!baseline.contains(id))
         // best effort: a block that cannot be freed stays cached, and
         // the gate's result is already taken
-        try rdd.unpersist(blocking) catch { case _: Throwable => () }
+        try rdd.unpersist(blocking) catch { case NonFatal(_) => () }
     }
 
   private[graft] def attempt(name: String)(body: => Unit): Option[Failure] =

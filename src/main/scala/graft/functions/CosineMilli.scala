@@ -5,7 +5,7 @@ import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.aggregate.AggregateFunction
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.{array, lit}
+import org.apache.spark.sql.functions.{array, lit, typedLit}
 import org.apache.spark.sql.graft.Internals
 import org.apache.spark.sql.types.{DataType, LongType}
 
@@ -108,6 +108,8 @@ object GraftFunctions {
         es => CdcBounds(es.head, es(1))),
       ("unicode_nfc", classOf[UnicodeNfc],
         es => UnicodeNfc(es.head)),
+      ("null_if_sentinel", classOf[NullIfSentinel],
+        es => NullIfSentinel(es.head, es(1))),
       ("subword_stats", classOf[SubwordStats],
         es => SubwordStats(es.head, es(1))),
       // aggregates: the analyzer wraps a bare AggregateFunction returned
@@ -155,6 +157,8 @@ object GraftFunctions {
     native(CdcBounds(ex(codes), ex(lit(mask))))
   def unicodeNfc(c: Column): Column =
     native(UnicodeNfc(ex(c)))
+  def nullIfSentinel(c: Column, sentinels: Seq[String]): Column =
+    native(NullIfSentinel(ex(c), ex(typedLit(sentinels))))
   def subwordStats(text: Column, vocab: Seq[String]): Column =
     native(SubwordStats(ex(text), ex(array(vocab.map(lit): _*))))
   def minByObj(value: Column, ord: Column): Column =

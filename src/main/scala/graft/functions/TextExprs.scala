@@ -100,6 +100,22 @@ object TextKernels {
     new GenericArrayData(cuts.toArray)
   }
 
+  /** `s`, or null when `s` equals one of `sentinels` byte for byte:
+    * `CASE WHEN s IN (...) THEN NULL ELSE s END` (F3,
+    * [[graft.ops.Cleaning.normalizeNulls]]) with ONE read of `s`. The
+    * comparison is `UTF8String.equals`, which is what `IN` uses under
+    * the default UTF8_BINARY collation; a null sentinel matches
+    * nothing, as a NULL in an `IN` list does. */
+  def nullIfSentinel(s: UTF8String, sentinels: ArrayData): UTF8String = {
+    val n = sentinels.numElements()
+    var i = 0
+    while (i < n) {
+      if (s.equals(sentinels.getUTF8String(i))) return null
+      i += 1
+    }
+    s
+  }
+
   /** Selenium-`.text`-alike HTML text extraction in ONE fused pass —
     * the kernel behind `ops.HtmlListing`'s per-field cleanup, replacing
     * a chain of eight regex passes (`<br>`→newline, complete-tag strip,
@@ -259,6 +275,32 @@ case class RollingHash(child: Expression) extends UnaryExpression {
       s"graft.functions.TextKernels.rollingHash($c)"))
   override protected def withNewChildInternal(
       newChild: Expression): RollingHash = copy(child = newChild)
+}
+
+/** `null_if_sentinel(str, sentinels)` — see
+  * [[TextKernels.nullIfSentinel]]; `sentinels` is an array<string>. */
+case class NullIfSentinel(left: Expression, right: Expression)
+    extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
+  override def nullable: Boolean = true
+  override def dataType: DataType = StringType
+  override def prettyName: String = "null_if_sentinel"
+  override def checkInputDataTypes()
+      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
+    val l = KernelCheck.isString(left, "null_if_sentinel input")
+    if (l != org.apache.spark.sql.catalyst.analysis.TypeCheckResult
+        .TypeCheckSuccess) l
+    else KernelCheck.arrayOf(StringType, right, "null_if_sentinel sentinels")
+  }
+  override def nullSafeEval(s: Any, sentinels: Any): Any =
+    TextKernels.nullIfSentinel(s.asInstanceOf[UTF8String],
+      sentinels.asInstanceOf[ArrayData])
+  override protected def doGenCode(ctx: CodegenContext,
+                                   ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, (s, sentinels) => KernelCode.nullable(ev,
+      s"graft.functions.TextKernels.nullIfSentinel($s, $sentinels)"))
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): NullIfSentinel =
+    copy(left = newLeft, right = newRight)
 }
 
 /** `cdc_bounds(codes, mask)` — see [[TextKernels.cdcBounds]]; `mask`

@@ -86,13 +86,15 @@ object Pipeline {
     * untouched, and downstream readers keep the same pruned layout.
     * At 100 TB this is the difference between "retries are safe" and
     * "every retry needs a manual dedup pass". The session's own
-    * partitionOverwriteMode is left untouched. */
+    * partitionOverwriteMode is left untouched. Local paths are written
+    * through [[NioLocalFileSystem]], which forks no `chmod`. */
   def writePartitionedIdempotent(df: DataFrame, path: String,
                                  partitionCol: String): Unit =
-    // a write option, not the session conf: concurrent writers (the
+    // write options, not the session conf: concurrent writers (the
     // pipeline's branches) must not see each other's mode
     df.write.mode(SaveMode.Overwrite)
       .option("partitionOverwriteMode", "dynamic")
+      .options(NioLocalFileSystem.writeOptions)
       .partitionBy(partitionCol).parquet(path)
 
   /** RESUMABLE chain execution — the retry/skip/resume story the

@@ -29,18 +29,18 @@ object Cleaning {
     * Reference: `df.na.replace(['None',''], None)`
     * (jobs/spark/propnex_transformation.py:113,138;
     * jobs/spark/srx_transformation.py:125,151). PySpark applies this to
-    * string columns only; we replicate that exactly. */
+    * string columns only; we replicate that exactly. Each column is one
+    * native [[graft.functions.NullIfSentinel]] call, which reads the
+    * column once, so every filter the optimizer pushes through this
+    * projection inlines one copy of the column, not two. */
   def normalizeNulls(df: DataFrame,
-                     sentinels: Seq[String] = Seq("None", "")): DataFrame = {
-    val strCols =
-      df.schema.fields.filter(_.dataType == StringType).map(_.name).toSet
-    df.select(df.columns.map { c =>
-      if (strCols(c))
-        when(col(c).isin(sentinels.map(_.asInstanceOf[Any]): _*), lit(null))
-          .otherwise(col(c)).as(c)
-      else col(c)
+                     sentinels: Seq[String] = Seq("None", "")): DataFrame =
+    df.select(df.schema.fields.map { f =>
+      if (f.dataType == StringType)
+        graft.functions.GraftFunctions.nullIfSentinel(col(f.name), sentinels)
+          .as(f.name)
+      else col(f.name)
     }.toIndexedSeq: _*)
-  }
 
   /** F4 — conditional null-out of garbage-prefixed values.
     * Reference: `when(col.startswith('(D'), None).otherwise(col)`

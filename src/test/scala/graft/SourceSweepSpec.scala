@@ -16,8 +16,9 @@ import scala.jdk.CollectionConverters._
   * [[graft.ops.StoreGuard]], every native kernel's generated code is
   * one call into its Scala body, every iterative operator's rounds run
   * through [[graft.ops.Checkpoints.iterate]], no gate body or oracle
-  * chain under queries/ is spelled twice, and the set of
-  * `SPARK_GRAFT_*` environment knobs is pinned. */
+  * chain under queries/ is spelled twice, the product's sentinel
+  * nulls and fork-free local writes each have one spelling, and the
+  * set of `SPARK_GRAFT_*` environment knobs is pinned. */
 class SourceSweepSpec extends org.scalatest.funsuite.AnyFunSuite {
   private val root = Paths.get("src/main/scala/graft")
 
@@ -130,5 +131,21 @@ class SourceSweepSpec extends org.scalatest.funsuite.AnyFunSuite {
     if (repeated.nonEmpty)
       fail(s"${repeated.size} repeated $width-line windows:\n" +
         repeated.mkString("\n"))
+  }
+
+  test("the fs.file.impl write option is spelled only where its " +
+      "FileSystem is defined") {
+    assert(filesContaining("fs.file.impl") ===
+      Set("jobs/NioLocalFileSystem.scala"))
+  }
+
+  test("no isin(...) + lit(null) sentinel CASE is left in the product " +
+      "jobs or Cleaning: sentinels go through the native kernel") {
+    val sentinelCase = codeLines.collect {
+      case (f, ls) if (f.startsWith("jobs/") || f == "ops/Cleaning.scala") &&
+          ls.exists(_._1.contains("isin(")) &&
+          ls.exists(_._1.contains("lit(null)")) => f
+    }
+    assert(sentinelCase.isEmpty)
   }
 }

@@ -17,7 +17,7 @@ import org.apache.spark.sql.types._
   * [[graft.GraftExtensions]]) builds from the same arguments. */
 class GraftFunctionsSpec extends SparkSpec {
 
-  test("all 18 Column builders evaluate on an unregistered session") {
+  test("every Column builder evaluates on an unregistered session") {
     val fresh = spark.newSession()
     val registry = fresh.sessionState.functionRegistry
     GraftFunctions.natives.foreach { case (name, _, _) =>
@@ -45,7 +45,9 @@ class GraftFunctionsSpec extends SparkSpec {
       GraftFunctions.rollingHash(abc),
       GraftFunctions.cdcBounds(GraftFunctions.charCodes(lit("abcdefghij")), 1),
       GraftFunctions.unicodeNfc(lit("e\u0301")),
-      GraftFunctions.subwordStats(lit("the cat"), Seq("the", "at", " ", "c"))
+      GraftFunctions.subwordStats(lit("the cat"), Seq("the", "at", " ", "c")),
+      GraftFunctions.nullIfSentinel(lit("None"), Seq("None", "")),
+      GraftFunctions.nullIfSentinel(lit("none"), Seq("None", ""))
     ).collect().head
     assert(r.getLong(0) == 960L) // 24 / (5 · 5)
     val h7 = XXH64.hashLong(7L, 42)
@@ -66,6 +68,7 @@ class GraftFunctionsSpec extends SparkSpec {
     assert(r.getSeq[Int](11) == Seq(0, 8, 9, 10, 10))
     assert(r.getString(12) == "\u00e9")
     assert(r.getSeq[Int](13) == Seq(4, 0)) // the | ' ' | c | at
+    assert(r.isNullAt(14) && r.getString(15) == "none")
 
     import fresh.implicits._
     val kv = Seq(("a", 3L, 5L), ("b", 1L, 9L), ("c", 2L, 5L))
@@ -125,6 +128,8 @@ class GraftFunctionsSpec extends SparkSpec {
       "rolling_hash" -> (Seq(ia), GraftFunctions.rollingHash(c(ia))),
       "cdc_bounds" -> (Seq(ia, ex(lit(16))), GraftFunctions.cdcBounds(c(ia), 16)),
       "unicode_nfc" -> (Seq(s), GraftFunctions.unicodeNfc(c(s))),
+      "null_if_sentinel" -> (Seq(s, ex(typedLit(Seq("None", "")))),
+        GraftFunctions.nullIfSentinel(c(s), Seq("None", ""))),
       "subword_stats" -> (Seq(s, ex(array(lit("ab"), lit("c")))),
         GraftFunctions.subwordStats(c(s), Seq("ab", "c"))),
       "min_by_obj" -> (Seq(s, o), GraftFunctions.minByObj(c(s), c(o))),

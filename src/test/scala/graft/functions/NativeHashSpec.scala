@@ -232,4 +232,30 @@ class NativeHashSpec extends SparkSpec {
         s"codegen=$codegen: $e")
     }
   }
+
+  test("null_if_sentinel agrees between interpreted eval and codegen: " +
+      "null and exact sentinels map to null, near-misses pass through") {
+    val values = Seq(null, "None", "", "none", " None", "plain")
+    def cleaned(s: org.apache.spark.sql.SparkSession) =
+      s.range(values.size).select(col("id"),
+          // built from a column so nothing constant-folds
+          element_at(typedLit(values), (col("id") + 1).cast("int"))
+            .as("v"))
+        .select(GraftFunctions.nullIfSentinel(col("v"), Seq("None", "")))
+        .collect().map(_.getString(0)).toSeq
+    val generated = cleaned(session(codegen = true))
+    assert(generated === cleaned(session(codegen = false)))
+    assert(generated === Seq(null, null, null, "none", " None", "plain"))
+  }
+
+  test("null_if_sentinel over a foldable input constant-folds to the " +
+      "value it computes per row") {
+    val df = spark.range(1).select(
+      GraftFunctions.nullIfSentinel(lit("None"), Seq("None", "")),
+      GraftFunctions.nullIfSentinel(lit("plain"), Seq("None", "")))
+    val folded = df.queryExecution.optimizedPlan.expressions
+    assert(!folded.exists(_.exists(_.isInstanceOf[NullIfSentinel])), folded)
+    val r = df.collect().head
+    assert(r.isNullAt(0) && r.getString(1) == "plain")
+  }
 }

@@ -396,6 +396,56 @@ class PipelineSpec extends SparkSpec {
       (3L, "c", "2024-11-02")))
   }
 
+  test("writePartitionedIdempotent forks no Hadoop Shell process; its " +
+      "files keep mode 0644, its directories 0755, and every file its " +
+      ".crc sidecar") {
+    import java.nio.file.attribute.PosixFilePermissions
+    import jdk.jfr.Recording
+    import jdk.jfr.consumer.RecordingFile
+    import scala.jdk.CollectionConverters._
+    // Shell's static initializer probes `setsid` once per JVM
+    Class.forName("org.apache.hadoop.util.Shell")
+    val out = graft.SparkSpec.tempDir("graft-forks").resolve("sink")
+    val jfr = Files.createTempFile("graft-forks", ".jfr")
+    val rec = new Recording()
+    rec.enable("jdk.ProcessStart").withStackTrace()
+    rec.start()
+    try {
+      // a fork outside Hadoop: the recording does see process starts
+      new ProcessBuilder("true").start().waitFor()
+      val days = Seq((1L, "2024-11-01"), (2L, "2024-11-02")).toDF("k", "day")
+      // a new sink, then a replay that replaces its partitions
+      Pipeline.writePartitionedIdempotent(days, out.toString, "day")
+      Pipeline.writePartitionedIdempotent(days, out.toString, "day")
+    } finally rec.stop()
+    try {
+      rec.dump(jfr)
+      val starts = RecordingFile.readAllEvents(jfr).asScala
+        .filter(_.getEventType.getName == "jdk.ProcessStart")
+      val viaShell = starts.filter(e => Option(e.getStackTrace).exists(
+        _.getFrames.asScala.exists(_.getMethod.getType.getName
+          .startsWith("org.apache.hadoop.util.Shell"))))
+      assert(starts.nonEmpty)
+      assert(viaShell.isEmpty,
+        s"${viaShell.size} Shell forks: ${viaShell.map(_.getString("command"))
+          .distinct.take(5).mkString("; ")}")
+    } finally { rec.close(); Files.delete(jfr) }
+    val tree = {
+      val w = Files.walk(out)
+      try w.iterator().asScala.toVector finally w.close()
+    }
+    def mode(p: java.nio.file.Path) =
+      PosixFilePermissions.toString(Files.getPosixFilePermissions(p))
+    val (dirs, files) = tree.partition(Files.isDirectory(_))
+    assert(dirs.size == 3) // the sink and its two day partitions
+    dirs.foreach(d => assert(mode(d) == "rwxr-xr-x", d))
+    files.foreach(f => assert(mode(f) == "rw-r--r--", f))
+    val (crcs, data) = files.partition(_.getFileName.toString.endsWith(".crc"))
+    assert(data.count(_.getFileName.toString.endsWith(".parquet")) >= 2)
+    assert(crcs.map(_.toString).toSet == data.map(f =>
+      f.resolveSibling(s".${f.getFileName}.crc").toString).toSet)
+  }
+
   test("writePartitionedIdempotent property: any replay schedule of " +
       "day batches converges to the last batch per day") {
     import org.apache.spark.sql.functions._

@@ -15,6 +15,21 @@ class CleaningSpec extends SparkSpec {
     assert((0 to 2).forall(i => !out(i).isNullAt(1))) // int col untouched
   }
 
+  test("normalizeNulls reads each input column once: every output " +
+      "column references its input attribute exactly once") {
+    val df = Seq(("None", "x", 1)).toDF("a", "b", "i")
+    val plan = Cleaning.normalizeNulls(df).queryExecution.analyzed
+    val input = plan.children.head.output
+    assert(plan.expressions.size == input.size)
+    plan.expressions.zip(input).foreach { case (out, in) =>
+      val refs = out.collect {
+        case a: org.apache.spark.sql.catalyst.expressions.AttributeReference
+          if a.exprId == in.exprId => a
+      }
+      assert(refs.size == 1, s"${in.name}: $out")
+    }
+  }
+
   test("nullIfPrefix nulls garbage-prefixed values") {
     val df = Seq("(D19) x", "keep me").toDF("v")
     val out = df.select(Cleaning.nullIfPrefix(col("v"), "(D").as("v"))
