@@ -11,9 +11,10 @@ import org.apache.spark.sql.types.DataType
   * so the planner can pick `ObjectHashAggregateExec` instead of
   * `SortAggregateExec`.
   *
-  * Why this exists: the completeness-dedup aggregate
-  * ([[graft.ops.Dedup.keepMostCompleteAgg]]) packs the whole row into a
-  * struct and takes `min_by(row_struct, ordering_struct)`. Spark's
+  * Why this exists: the keep-one-row-per-key aggregate
+  * ([[graft.ops.Dedup.firstPerKey]], behind every min_by_obj /
+  * max_by_obj compaction) packs the row into a struct and takes
+  * `min_by(row_struct, ordering_struct)`. Spark's
   * built-in `min_by` is a DECLARATIVE aggregate whose buffer holds the
   * two structs — struct buffers are not mutable in an UnsafeRow, so
   * `HashAggregateExec` can't run it and the plan degrades to

@@ -77,33 +77,6 @@ object Compaction {
     if (fs.exists(loc)) fs.delete(loc, true)
   }
 
-  /** Parquet data-file count per partition directory of a managed
-    * table — the compaction metric. */
-  def filesPerPartition(spark: SparkSession,
-                        table: String): Map[String, Int] = {
-    val loc = new Path(spark.sessionState.catalog
-      .getTableMetadata(
-        org.apache.spark.sql.catalyst.TableIdentifier(table))
-      .location)
-    val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // key by the FULL partition path relative to the table root:
-    // multi-level layouts (band=N/bucket=M) must not collide on the
-    // leaf directory name or counts silently overwrite each other
-    def walk(p: Path, prefix: String): Seq[(String, Int)] = {
-      val (dirs, files) = fs.listStatus(p).partition(_.isDirectory)
-      val here =
-        if (prefix.nonEmpty)
-          Seq(prefix -> files.count(_.getPath.getName.endsWith(".parquet")))
-        else Seq.empty
-      here.filter(_._2 > 0) ++ dirs.flatMap { d =>
-        val child = if (prefix.isEmpty) d.getPath.getName
-                    else s"$prefix/${d.getPath.getName}"
-        walk(d.getPath, child)
-      }
-    }
-    walk(loc, "").toMap
-  }
-
   /** Rewrite the parquet directory at `inPath` into
     * `ceil(inputBytes / targetBytes)` similarly-sized files at
     * `outPath` (overwritten) and return the compacted relation. A

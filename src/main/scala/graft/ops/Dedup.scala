@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.functions.GraftFunctions.minByObj
+import graft.functions.GraftFunctions.{maxByObj, minByObj}
 
 /** Completeness-based entity dedup — the reference's flagship semantics
   * (jobs/spark/merge_dedup.py:14-29): rows agreeing on a business key
@@ -18,9 +18,10 @@ import graft.functions.GraftFunctions.minByObj
   * Measured A/B (sf0.1, local[32], medians):
   * at ~2.6 rows/key window 2.1 s vs min_by_obj 3.1 s; at ~50 rows/key
   * min_by_obj 0.99 s vs window 1.6 s. Crossover ≈ 10 rows/key — use
-  * [[keepMostComplete]] for lightly-duplicated data and
-  * [[keepMostCompleteAgg]] when duplication is heavy or keys are
-  * skewed (the object-hash aggregate has no per-group sort to skew). */
+  * [[keepMostComplete]] for lightly-duplicated data and the
+  * [[firstPerKey]] aggregate (through [[keepMostCompleteAgg]]) when
+  * duplication is heavy or keys are skewed (the object-hash aggregate
+  * has no per-group sort to skew). */
 object Dedup {
 
   /** A1 (merge_dedup.py:21-22) — horizontal null count: an N-ary
@@ -34,10 +35,9 @@ object Dedup {
     * nondeterministic; `tiebreak` columns make the kept row stable so
     * the DuckDB oracle can match (SURVEY §7.4). */
   def keepMostComplete(df: DataFrame, keys: Seq[String],
-                       tiebreak: Seq[String],
-                       countedCols: Option[Seq[String]] = None): DataFrame = {
-    val counted = countedCols.getOrElse(df.columns.toIndexedSeq)
-    val withNc = df.withColumn("__null_count", nullCount(counted.map(col)))
+                       tiebreak: Seq[String]): DataFrame = {
+    val withNc = df.withColumn("__null_count",
+      nullCount(df.columns.toIndexedSeq.map(col)))
     val w = Window.partitionBy(keys.map(col): _*)
       .orderBy((col("__null_count").asc +: tiebreak.map(col(_).asc)): _*)
     withNc.withColumn("__rn", row_number().over(w))
@@ -45,53 +45,67 @@ object Dedup {
       .drop("__rn", "__null_count")
   }
 
-  /** Same semantics as [[keepMostComplete]] via a min-by aggregate over
-    * a packed (null_count, tiebreak) ordering struct. One
-    * partial-aggregable shuffle, no sort, no row_number — the
-    * heavy-duplication path (measured crossover vs the window form is
-    * ~10 rows/key; see the object scaladoc).
+  /** Keep one row per `keys` group — the one whose `ord` struct is
+    * smallest (largest with `largest`) — as the `keep` columns in their
+    * given order, `extra` aggregates after them. The sort-free form of
+    * W1+F2: ONE partial-aggregable shuffle, no sort, no row_number.
+    * Ties on `ord` keep an arbitrary candidate, so a deterministic
+    * caller makes `ord` total.
     *
-    * Uses [[graft.functions.MinByObj]], not the built-in `min_by`: the
-    * declarative min_by keeps its struct arguments in the aggregation
-    * buffer, struct buffers aren't HashAggregate-mutable, and the plan
-    * silently degrades to SortAggregateExec. The typed-imperative twin
-    * runs in ObjectHashAggregateExec and measured faster than the
-    * declarative form at BOTH duplication regimes once its ordering
-    * was codegen'd and the compact single-struct form landed
-    * (obj 3.09/0.99 s vs decl 3.27/1.55 s — low/high dup). */
-  def keepMostCompleteAgg(df: DataFrame, keys: Seq[String],
-                          tiebreak: Seq[String]): DataFrame = {
-    val counted = df.columns.toIndexedSeq
-    val ord = struct(
-      (nullCount(counted.map(col)).as("__nc") +: tiebreak.map(col)): _*)
+    * Uses [[graft.functions.MinByObj]], not the built-in `min_by`,
+    * whose struct buffers degrade the plan to SortAggregateExec (the
+    * measurements are in MinByObj's scaladoc).
+    *
+    * COMPACT form, when every kept non-key column is a plain `ord`
+    * column: the ordering struct already carries the output row, so
+    * ONE struct is aggregated — min_by_obj(ord, ord) evals once,
+    * copies once, and ships half the bytes of the two-struct form
+    * (see MinByObj.sameExpr). This is the common dedup shape:
+    * determinism demands a total tiebreak, which means full-row.
+    * Otherwise the kept non-key columns ride a second `__packed`
+    * struct. A kept column no struct carries is a key, read from the
+    * grouping key. */
+  def firstPerKey(df: DataFrame, keys: Seq[String], ord: Seq[Column],
+                  keep: Seq[String], largest: Boolean = false,
+                  extra: Seq[Column] = Nil): DataFrame = {
+    val payload = keep.filterNot(keys.contains)
+    val plain = keep.filter(c => ord.contains(col(c)))
+    val compact = payload.forall(plain.contains) && ord.distinct == ord
     // build the structs in a codegen'd Project BELOW the aggregate:
     // a typed-imperative update() evaluates its argument expressions
     // interpreted per row, so handing it CreateStruct trees would undo
     // the sort-free win — handing it ready attributes keeps the
     // per-row work whole-stage-compiled
-    if (counted.forall(c => keys.contains(c) || tiebreak.contains(c)) &&
-        tiebreak.distinct == tiebreak) {
-      // COMPACT path: the ordering struct already carries every output
-      // column, so aggregate ONE struct — min_by_obj(ord, ord) evals
-      // once, copies once, and ships half the bytes of the two-struct
-      // form (see MinByObj.sameExpr). This is the common dedup shape:
-      // determinism demands a total tiebreak, which means full-row.
-      df.withColumn("__ord", ord)
-        .groupBy(keys.map(col): _*)
-        .agg(minByObj(col("__ord"), col("__ord"))
-          .as("__row"))
-        .select(counted.map { c =>
-          if (tiebreak.contains(c)) col(s"__row.$c").as(c) else col(c)
-        }: _*)
-    } else {
-      val packed = struct(counted.map(col): _*)
-      df.withColumn("__ord", ord).withColumn("__packed", packed)
-        .groupBy(keys.map(col): _*)
-        .agg(minByObj(col("__packed"), col("__ord"))
-          .as("__row"))
-        .select(counted.map(c => col(s"__row.$c").as(c)): _*)
-    }
+    val withOrd = df.withColumn("__ord", struct(ord: _*))
+    val (in, value, carried) =
+      if (compact) (withOrd, col("__ord"), plain)
+      else (withOrd.withColumn("__packed", struct(payload.map(col): _*)),
+        col("__packed"), payload)
+    val row = if (largest) maxByObj(value, col("__ord"))
+              else minByObj(value, col("__ord"))
+    val picked = in.groupBy(keys.map(col): _*)
+      .agg(row.as("__row"), extra: _*)
+    picked.select(keep.map { c =>
+      if (carried.contains(c)) col(s"__row.$c").as(c) else col(c)
+    } ++ picked.columns.drop(keys.size + 1).map(col): _*)
   }
+
+  /** Same semantics as [[keepMostComplete]] via [[firstPerKey]] over a
+    * (null_count, tiebreak) ordering struct — the heavy-duplication
+    * path (measured crossover vs the window form is ~10 rows/key; see
+    * the object scaladoc). */
+  def keepMostCompleteAgg(df: DataFrame, keys: Seq[String],
+                          tiebreak: Seq[String]): DataFrame = {
+    val counted = df.columns.toIndexedSeq
+    firstPerKey(df, keys,
+      nullCount(counted.map(col)).as("__nc") +: tiebreak.map(col), counted)
+  }
+
+  // hash an UNAMBIGUOUS encoding: concat_ws skips NULLs (NULL vs ''
+  // collide) - to_json(struct) preserves column boundaries, quoting,
+  // and null-vs-empty distinctions
+  private def fingerprint(contentCols: Seq[String]): Column =
+    sha2(to_json(struct(contentCols.map(col): _*)), 256)
 
   /** Content fingerprint table of a corpus: one distinct `__fp` row
     * per distinct content. This is the artifact the incremental path
@@ -100,8 +114,19 @@ object Dedup {
     * recomputed; this helper exists to build/refresh it. */
   def contentFingerprints(corpus: DataFrame,
                           contentCols: Seq[String]): DataFrame =
-    corpus.select(sha2(to_json(struct(contentCols.map(col): _*)), 256)
-      .as("__fp")).distinct()
+    corpus.select(fingerprint(contentCols).as("__fp")).distinct()
+
+  /** The exact-dedup family's one body: per content fingerprint, the
+    * row with the smallest `tiebreak`, then `extra` — over the rows
+    * whose fingerprint is absent from `corpusFp` when one is given. */
+  private def firstPerFingerprint(df: DataFrame, contentCols: Seq[String],
+                                  tiebreak: Seq[String],
+                                  corpusFp: Option[DataFrame] = None,
+                                  extra: Seq[Column] = Nil): DataFrame = {
+    val withFp = df.withColumn("__fp", fingerprint(contentCols))
+    firstPerKey(corpusFp.fold(withFp)(withFp.join(_, Seq("__fp"), "left_anti")),
+      Seq("__fp"), tiebreak.map(col), df.columns.toIndexedSeq, extra = extra)
+  }
 
   /** Incremental exact dedup — the daily-ingest case: keep batch rows
     * whose content fingerprint is NEW (not duplicated within the
@@ -111,23 +136,12 @@ object Dedup {
     * corpus payload scan). NULL content participates like any other
     * value (all-NULL rows share one fingerprint) — the SQL analogue
     * is `IS NOT DISTINCT FROM`, not `=`. The fingerprint is computed
-    * ONCE per batch row, before the within-batch compaction, and
-    * carried through to the anti-join. */
+    * ONCE per batch row; the anti-join keys on it, the grouping key,
+    * so it runs below the within-batch compaction. */
   def incrementalExactDedupByFp(corpusFp: DataFrame, batch: DataFrame,
                                 contentCols: Seq[String],
-                                tiebreak: Seq[String]): DataFrame = {
-    val counted = batch.columns.toIndexedSeq
-    batch
-      .withColumn("__fp",
-        sha2(to_json(struct(contentCols.map(col): _*)), 256))
-      .withColumn("__ord", struct(tiebreak.map(col): _*))
-      .withColumn("__packed", struct(counted.map(col): _*))
-      .groupBy(col("__fp"))
-      .agg(minByObj(col("__packed"), col("__ord"))
-        .as("__row"))
-      .join(corpusFp, Seq("__fp"), "left_anti")
-      .select(counted.map(c => col(s"__row.$c").as(c)): _*)
-  }
+                                tiebreak: Seq[String]): DataFrame =
+    firstPerFingerprint(batch, contentCols, tiebreak, Some(corpusFp))
 
   /** Convenience wrapper deriving the fingerprint set from the corpus
     * PAYLOAD — one full corpus scan per call; fine for tests and
@@ -144,26 +158,8 @@ object Dedup {
     * tiebreak. Backbone of the exact-dedup stage of a training-data
     * pipeline; one shuffle, partial-aggregable. */
   def exactDedup(df: DataFrame, contentCols: Seq[String],
-                 tiebreak: Seq[String]): DataFrame = {
-    // hash an UNAMBIGUOUS encoding: concat_ws skips NULLs (NULL vs ''
-    // collide) - to_json(struct) preserves column boundaries, quoting,
-    // and null-vs-empty distinctions
-    val fp = sha2(to_json(struct(contentCols.map(col): _*)), 256)
-    val counted = df.columns.toIndexedSeq
-    // materialize the structs in a codegen'd Project BELOW the
-    // aggregate (same reasoning as keepMostCompleteAgg: a
-    // typed-imperative update() evaluates raw CreateStruct argument
-    // trees interpreted per row)
-    df.withColumn("__fp", fp)
-      .withColumn("__packed", struct(counted.map(col): _*))
-      .withColumn("__ord", struct(tiebreak.map(col): _*))
-      .groupBy(col("__fp"))
-      // min_by_obj, not min_by: ObjectHashAggregate vs SortAggregate
-      // (see keepMostCompleteAgg)
-      .agg(minByObj(col("__packed"), col("__ord"))
-        .as("__row"))
-      .select(counted.map(c => col(s"__row.$c").as(c)): _*)
-  }
+                 tiebreak: Seq[String]): DataFrame =
+    firstPerFingerprint(df, contentCols, tiebreak)
 
   /** [[exactDedup]] that PRESERVES multiplicity: one representative
     * per content fingerprint plus `weight` = how many copies it stood
@@ -173,17 +169,7 @@ object Dedup {
     * rather than discarded. Same single partial-aggregable shuffle;
     * the count rides the existing aggregate for free. */
   def exactDedupWeighted(df: DataFrame, contentCols: Seq[String],
-                         tiebreak: Seq[String]): DataFrame = {
-    val fp = sha2(to_json(struct(contentCols.map(col): _*)), 256)
-    val counted = df.columns.toIndexedSeq
-    df.withColumn("__fp", fp)
-      .withColumn("__packed", struct(counted.map(col): _*))
-      .withColumn("__ord", struct(tiebreak.map(col): _*))
-      .groupBy(col("__fp"))
-      .agg(minByObj(col("__packed"), col("__ord"))
-        .as("__row"),
-        count(lit(1)).as("weight"))
-      .select(counted.map(c => col(s"__row.$c").as(c)) :+
-        col("weight"): _*)
-  }
+                         tiebreak: Seq[String]): DataFrame =
+    firstPerFingerprint(df, contentCols, tiebreak,
+      extra = Seq(count(lit(1)).as("weight")))
 }

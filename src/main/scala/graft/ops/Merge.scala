@@ -3,7 +3,6 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.functions.GraftFunctions.maxByObj
 
 /** Incremental-maintenance operators: upsert, CDC merge-apply, and
   * SCD type-2 history — the "MERGE INTO" family an ETL engine needs
@@ -23,8 +22,9 @@ import graft.functions.GraftFunctions.maxByObj
   *    anti-join instead of failing on the 8 GB broadcast limit /
   *    driver OOM — a forced hint would suppress exactly that judgment.
   *  - [[applyCdc]]: ONE partial-aggregable max_by_obj shuffle over the
-  *    change log (each task ships one candidate per key) + the upsert
-  *    join. Change logs compact before touching the snapshot.
+  *    change log ([[Dedup.firstPerKey]]; each task ships one candidate
+  *    per key) + the upsert join. Change logs compact before touching
+  *    the snapshot.
   *  - [[scd2]]: one window (shuffle + intra-partition sort on the
   *    key) — inherent to "each version needs its successor". */
 object Merge {
@@ -45,8 +45,8 @@ object Merge {
     * LATEST change wins: 'U' replaces the snapshot row, 'D' removes
     * it; keys without changes pass through.
     *
-    * The compaction is max_by_obj — ObjectHashAggregate, map-side
-    * combine, no sort (see [[graft.functions.MinByObj]]) — so a
+    * The compaction is [[Dedup.firstPerKey]] with `largest` — one
+    * max_by_obj ObjectHashAggregate, map-side combine, no sort — so a
     * billion-row change log reduces to one row per touched key before
     * the snapshot is ever read. */
   def applyCdc(snapshot: DataFrame, changes: DataFrame, keys: Seq[String],
@@ -54,16 +54,8 @@ object Merge {
     val payloadCols = snapshot.columns.toIndexedSeq
     require((payloadCols :+ opCol).toSet.subsetOf(changes.columns.toSet),
       "changes must carry the snapshot schema plus the op column")
-    // codegen'd Project below the aggregate (typed-imperative update
-    // evaluates children interpreted — same pattern as Dedup)
-    val compacted = changes
-      .withColumn("__packed",
-        struct((payloadCols :+ opCol).map(col): _*))
-      .withColumn("__ord", struct(ordCols.map(col): _*))
-      .groupBy(keys.map(col): _*)
-      .agg(maxByObj(col("__packed"), col("__ord"))
-        .as("__last"))
-      .select(col("__last.*"))
+    val compacted = Dedup.firstPerKey(changes, keys, ordCols.map(col),
+      payloadCols :+ opCol, largest = true)
     val upserts = compacted.filter(col(opCol) =!= "D")
       .select(payloadCols.map(col): _*)
     // touched = every key with ANY change (deletes must suppress the

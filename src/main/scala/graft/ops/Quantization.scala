@@ -90,14 +90,6 @@ object Quantization {
     concat(parts: _*)
   }
 
-  /** Slice driver-side codebook rows (id, fullVec) into per-subspace
-    * codebooks for [[pqReconstruct]]. */
-  def sliceCodebooks(rows: Seq[(Int, Seq[Long])], subspaces: Int,
-                     subDim: Int): Seq[Seq[(Int, Seq[Long])]] =
-    (0 until subspaces).map { s =>
-      rows.map { case (j, v) => j -> v.slice(s * subDim, (s + 1) * subDim) }
-    }
-
   /** DuckDB replay of [[pqReconstruct]]: CTEs `rec(id, recon)` over
     * `v(id, qv)` and `cb(j, qv)` (both BIGINT[dim]). Inlined distance
     * expressions mirror the Spark argmin exactly (ties to smaller j). */

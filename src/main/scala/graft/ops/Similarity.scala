@@ -18,14 +18,6 @@ import org.apache.spark.sql.types._
   *  - Cosine: query side broadcast; scan side streams — no shuffle. */
 object Similarity {
 
-  /** k MinHash values derived from PRE-HASHED shingle longs: the
-    * string bytes are hashed once (upstream, materialized), each seed
-    * then re-mixes the 8-byte long — k×|shingles| cheap long hashes
-    * instead of k×|shingles| string hashes. */
-  def minHashFromHashes(shingleHashes: Column, k: Int): Column =
-    transform(sequence(lit(0), lit(k - 1)), j =>
-      array_min(transform(shingleHashes, h => xxhash64(h, j))))
-
   /** LSH bucket ids: the signature split into `bands` bands of
     * `rowsPerBand` values, each band hashed to one bucket key. */
   def lshBuckets(sig: Column, bands: Int, rowsPerBand: Int): Column =
@@ -105,6 +97,7 @@ object Similarity {
     // native fused kernel (functions.MinHashSig): one pass over the
     // hash array with a k-wide running min, vs k interpreted
     // array_min(transform(...)) traversals — bit-identical signature
+    // (NativeHashSpec holds the HOF reference)
     hashed
       .select(col("id"),
         GraftFunctions.minHashSig(col("__sh"), k)

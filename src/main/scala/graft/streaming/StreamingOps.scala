@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.functions.GraftFunctions.maxByObj
 import org.apache.spark.sql.streaming.{DataStreamReader, DataStreamWriter,
   ExpiredTimerInfo, GroupStateTimeout, ListState, OutputMode,
   StatefulProcessor, TTLConfig, TimeMode, TimerValues, Trigger}
@@ -249,8 +248,8 @@ object StreamingOps {
     * upsert pattern ([[foldBatches]]): every micro-batch folds into a
     * keyed snapshot holding the LATEST row per (user_id, event_type),
     * "latest" by (ts, event_id). The fold is `latest(snapshot ∪ batch)`
-    * — a max_by_obj compaction ([[graft.functions.MinByObj]]) — so it
-    * is ORDER-INDEPENDENT and idempotent: correct under any batching,
+    * — a max_by_obj compaction ([[graft.ops.Dedup.firstPerKey]]) — so
+    * it is ORDER-INDEPENDENT and idempotent: correct under any batching,
     * replayed batches, or late data, unlike blind per-batch overwrite
     * (which silently loses to an out-of-order batch).
     *
@@ -265,17 +264,11 @@ object StreamingOps {
       val b = batch.select(col("user_id"), col("event_type"),
         col("ts").as("ts_us"), col("event_id"),
         floor(col("value") * 100 + 0.5).cast(LongType).as("value_c"))
-      snapshot.map(_.unionByName(b)).getOrElse(b)
-        .withColumn("__packed",
-          struct(col("ts_us"), col("event_id"), col("value_c")))
-        .withColumn("__ord", struct(col("ts_us"), col("event_id")))
-        .groupBy(col("user_id"), col("event_type"))
-        .agg(maxByObj(col("__packed"), col("__ord"))
-          .as("__row"))
-        .select(col("user_id"), col("event_type"),
-          col("__row.ts_us").as("ts_us"),
-          col("__row.event_id").as("event_id"),
-          col("__row.value_c").as("value_c"))
+      graft.ops.Dedup.firstPerKey(
+        snapshot.map(_.unionByName(b)).getOrElse(b),
+        keys = Seq("user_id", "event_type"),
+        ord = Seq(col("ts_us"), col("event_id")), keep = b.columns.toSeq,
+        largest = true)
     }
 
   /** Streaming face of the incremental near-dup path

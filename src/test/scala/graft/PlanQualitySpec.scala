@@ -1,11 +1,16 @@
 package graft
 
+import graft.functions.MinByObj
 import graft.queries.Registry
+import org.apache.spark.sql.catalyst.expressions.AttributeReference
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.aggregate.{BaseAggregateExec,
+  ObjectHashAggregateExec}
 
 /** Regression-pins the plan properties the engine is designed around:
   * filter pushdown, column pruning, broadcast joins, partial
   * aggregation. Uses sf0.001 so plans build fast. */
-class PlanQualitySpec extends SparkSpec {
+class PlanQualitySpec extends SparkSpec with AdaptiveSparkPlanHelper {
   private val sf = "/root/testdata/sf0.001"
 
   private def plan(q: String): String =
@@ -92,12 +97,31 @@ class PlanQualitySpec extends SparkSpec {
       "signature barrier exchange expected")
   }
 
-  test("q_dedup_agg: ObjectHashAggregate, never SortAggregate") {
-    val p = plan("q_dedup_agg")
-    assert(p.contains("ObjectHashAggregate"),
-      s"min_by_obj should plan as ObjectHashAggregate:\n$p")
-    assert(!p.contains("SortAggregate"),
-      "the typed-imperative form exists to avoid SortAggregate")
+  test("firstPerKey gates: ObjectHashAggregate, min_by_obj reads " +
+      "attributes") {
+    for (q <- Seq("q_dedup_agg", "q_dedup_weighted", "q_docs_exact_dedup",
+        "q_incr_exact_dedup", "q_cdc_merge_apply")) {
+      val qe = Registry.queries(q)(spark, sf).queryExecution
+      val p = qe.executedPlan.toString
+      val picking = collect(qe.executedPlan) { case a: BaseAggregateExec => a }
+        .filter(_.aggregateExpressions.exists(
+          _.aggregateFunction.isInstanceOf[MinByObj]))
+      assert(picking.nonEmpty &&
+        picking.forall(_.isInstanceOf[ObjectHashAggregateExec]),
+        s"$q: min_by_obj should plan as ObjectHashAggregate:\n$p")
+      // q_cdc_merge_apply's snapshot fixture is a declarative min(struct)
+      if (q != "q_cdc_merge_apply")
+        assert(!p.contains("SortAggregate"),
+          s"$q: the typed-imperative form exists to avoid SortAggregate")
+      // the structs come from the Project below the aggregate: update()
+      // would evaluate a CreateStruct argument interpreted per row
+      val args = qe.optimizedPlan.flatMap(_.expressions.flatMap(
+        _.collect { case m: MinByObj => m.children }))
+      assert(args.nonEmpty, s"$q: no min_by_obj / max_by_obj")
+      args.foreach(a => assert(
+        a.forall(_.isInstanceOf[AttributeReference]),
+        s"$q: min_by_obj arguments are not attributes: ${a.mkString(", ")}"))
+    }
   }
 
   test("q_corpus_split is a pure projection: only the output sort " +

@@ -17,8 +17,12 @@ import scala.jdk.CollectionConverters._
   * one call into its Scala body, every iterative operator's rounds run
   * through [[graft.ops.Checkpoints.iterate]], no gate body or oracle
   * chain under queries/ is spelled twice, the product's sentinel
-  * nulls and fork-free local writes each have one spelling, and the
-  * set of `SPARK_GRAFT_*` environment knobs is pinned. */
+  * nulls and fork-free local writes each have one spelling, every
+  * `minByObj(` / `maxByObj(` call outside their definitions in
+  * functions/ is in [[graft.ops.Dedup]] (its `firstPerKey` is the one
+  * keep-one-row-per-key builder), the content fingerprint
+  * `sha2(to_json(struct(` is spelled once, and the set of
+  * `SPARK_GRAFT_*` environment knobs is pinned. */
 class SourceSweepSpec extends org.scalatest.funsuite.AnyFunSuite {
   private val root = Paths.get("src/main/scala/graft")
 
@@ -137,6 +141,16 @@ class SourceSweepSpec extends org.scalatest.funsuite.AnyFunSuite {
       "FileSystem is defined") {
     assert(filesContaining("fs.file.impl") ===
       Set("jobs/NioLocalFileSystem.scala"))
+  }
+
+  test("min_by_obj / max_by_obj are called only in Dedup, and the " +
+      "content fingerprint is spelled once") {
+    for (needle <- Seq("minByObj(", "maxByObj("))
+      assert(filesContaining(needle).filterNot(_.startsWith("functions/"))
+        === Set("ops/Dedup.scala"), needle)
+    val fp = "sha2(to_json(struct("
+    assert(codeLines.values.flatten.map(_._1.sliding(fp.length)
+      .count(_ == fp)).sum === 1)
   }
 
   test("no isin(...) + lit(null) sentinel CASE is left in the product " +

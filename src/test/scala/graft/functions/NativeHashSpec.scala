@@ -2,6 +2,7 @@ package graft.functions
 
 import graft.SparkSpec
 import graft.ops.Similarity
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** Bit-compatibility contract of the native hash kernels: each codegen
@@ -30,11 +31,18 @@ class NativeHashSpec extends SparkSpec {
     "the quick brown fox jumps over the lazy cat"
   ).zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("id", "text")
 
+  /** k MinHash values derived from PRE-HASHED shingle longs as
+    * interpreted HOFs — each seed re-mixes every 8-byte long — the
+    * reference the native `minhash_sig` kernel must reproduce. */
+  private def minHashFromHashes(shingleHashes: Column, k: Int): Column =
+    transform(sequence(lit(0), lit(k - 1)), j =>
+      array_min(transform(shingleHashes, h => xxhash64(h, j))))
+
   test("minhash_sig equals the HOF minHashFromHashes, all k seeds") {
     val hashed = texts.select(col("id"),
       transform(split(col("text"), " "), t => xxhash64(t)).as("h"))
     val rows = hashed.select(col("id"),
-        Similarity.minHashFromHashes(col("h"), 32).as("hof"),
+        minHashFromHashes(col("h"), 32).as("hof"),
         GraftFunctions.minHashSig(col("h"), 32).as("native"))
       .collect()
     rows.foreach { r =>

@@ -139,7 +139,7 @@ class AnnIndexSpec extends SparkSpec {
       .orderBy("q_id", "rank").collect().toSeq
     assert(before == after,
       "compaction must be probe-invisible on the ANN store")
-    val files = Compaction.filesPerPartition(spark, incrIndex)
+    val files = graft.SparkSpec.filesPerPartition(spark, incrIndex)
     assert(files.nonEmpty && files.values.forall(_ == 1),
       s"expected one file per partition after compaction, got " +
         files.filter(_._2 > 1).take(5).toString)

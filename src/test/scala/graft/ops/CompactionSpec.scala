@@ -36,13 +36,13 @@ class CompactionSpec extends SparkSpec {
       .mode("overwrite").saveAsTable("t_compact_parts")
     mk(400, 800).write.partitionBy("p").format("parquet")
       .mode("append").saveAsTable("t_compact_parts")
-    val before = Compaction.filesPerPartition(spark, "t_compact_parts")
+    val before = graft.SparkSpec.filesPerPartition(spark, "t_compact_parts")
     assert(before.nonEmpty && before.values.forall(_ >= 2),
       s"append should fragment every partition: $before")
     val rows = spark.table("t_compact_parts").orderBy("id")
       .collect().toSeq
     Compaction.compactPartitionedTable(spark, "t_compact_parts")
-    val after = Compaction.filesPerPartition(spark, "t_compact_parts")
+    val after = graft.SparkSpec.filesPerPartition(spark, "t_compact_parts")
     assert(after.values.forall(_ == 1),
       s"every partition should compact to one file: $after")
     assert(spark.table("t_compact_parts").orderBy("id")

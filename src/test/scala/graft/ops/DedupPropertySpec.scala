@@ -1,14 +1,16 @@
 package graft.ops
 
 import graft.SparkSpec
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import scala.util.Random
 
-/** Property-style agreement tests over seeded random data: the two
-  * keep-most-complete formulations (window row_number, typed-imperative
-  * min_by_obj) must produce IDENTICAL row sets
-  * whenever the tiebreak is total — the invariant the optimizer rule
-  * and the 100 TB path both rest on. Seeded, so failures reproduce. */
+/** Property-style agreement tests over seeded random data: the window
+  * row_number formulation and the typed-imperative min_by_obj one
+  * ([[Dedup.firstPerKey]] — compact and packed forms, both directions)
+  * must produce IDENTICAL row sets whenever the ordering is total —
+  * the invariant the optimizer rule and the 100 TB path both rest on. Seeded, so failures reproduce. */
 @org.scalatest.tags.Slow
 class DedupPropertySpec extends SparkSpec {
   import spark.implicits._
@@ -23,19 +25,39 @@ class DedupPropertySpec extends SparkSpec {
     }.toDF("k", "a", "b", "v", "row_id")
   }
 
+  /** The row_number() = 1 reference: per `k`, the first row by `order`. */
+  private def firstByWindow(df: DataFrame, order: Column*) =
+    df.withColumn("__rn",
+        row_number().over(Window.partitionBy("k").orderBy(order: _*)))
+      .filter(col("__rn") === 1).drop("__rn")
+
   test("window / min_by_obj dedup agree on random data") {
     for (seed <- Seq(1L, 2L, 42L)) {
       val df = randomFrame(seed, rows = 500, keys = 60)
-      // row_id makes the tiebreak total
-      val tiebreak = Seq("row_id", "a", "b", "v")
-      def norm(out: org.apache.spark.sql.DataFrame) =
+      def norm(out: DataFrame) =
         out.select("k", "a", "b", "v", "row_id")
           .sort("k", "row_id").collect().toSeq
-      val w = norm(Dedup.keepMostComplete(df, Seq("k"), tiebreak))
-      val o = norm(Dedup.keepMostCompleteAgg(df, Seq("k"), tiebreak))
-      assert(w == o, s"window vs min_by_obj diverged (seed=$seed)")
-      assert(w.map(_.getLong(0)).distinct.size == w.size,
-        s"keys must be unique after dedup (seed=$seed)")
+      // row_id makes every ordering total
+      val full = Seq("row_id", "a", "b", "v")
+      val byV = Seq(col("v"), col("row_id"))
+      val cases = Seq(
+        // compact form: every non-key column is in the ordering
+        "full tiebreak" -> (Dedup.keepMostComplete(df, Seq("k"), full),
+          Dedup.keepMostCompleteAgg(df, Seq("k"), full)),
+        // packed form: a, b and v ride outside the ordering
+        "row_id tiebreak" -> (
+          Dedup.keepMostComplete(df, Seq("k"), Seq("row_id")),
+          Dedup.keepMostCompleteAgg(df, Seq("k"), Seq("row_id"))),
+        "largest" -> (firstByWindow(df, byV.map(_.desc): _*),
+          Dedup.firstPerKey(df, Seq("k"), byV, df.columns.toSeq,
+            largest = true)))
+      for ((name, (window, agg)) <- cases) {
+        val w = norm(window)
+        assert(w == norm(agg),
+          s"$name: window vs min_by_obj diverged (seed=$seed)")
+        assert(w.map(_.getLong(0)).distinct.size == w.size,
+          s"$name: keys must be unique after dedup (seed=$seed)")
+      }
     }
   }
 

@@ -60,15 +60,6 @@ class DedupSpec extends SparkSpec {
     assert(out.toSeq == Seq(("text one", 1L), ("text two", 5L)))
   }
 
-  test("keepMostComplete with countedCols restricts the completeness score") {
-    // b column ignored: s2 row (null in a) still loses; but if we count
-    // only b, both rows tie on nc=0 and tiebreak src picks s1
-    val only_b = Dedup.keepMostComplete(
-      frame.filter($"key" === "k1"), Seq("key"), Seq("src"),
-      countedCols = Some(Seq("b")))
-    assert(only_b.collect().head.getString(3) == "s1")
-  }
-
   test("incrementalExactDedup keeps new content, drops batch-internal " +
       "and corpus duplicates") {
     val corpus = Seq((1L, "aa"), (2L, "bb")).toDF("id", "t")

@@ -8,10 +8,18 @@ import org.apache.spark.sql.functions._
 class QuantizationSpec extends SparkSpec {
   import spark.implicits._
 
+  /** Slice driver-side codebook rows (id, fullVec) into per-subspace
+    * codebooks for [[Quantization.pqReconstruct]]. */
+  private def sliceCodebooks(rows: Seq[(Int, Seq[Long])], subspaces: Int,
+                             subDim: Int): Seq[Seq[(Int, Seq[Long])]] =
+    (0 until subspaces).map { s =>
+      rows.map { case (j, v) => j -> v.slice(s * subDim, (s + 1) * subDim) }
+    }
+
   // 2 subspaces × 2 dims; codebook = 2 codes
   //   code 0: full vec (0, 0 | 10, 10)
   //   code 1: full vec (4, 4 |  0,  0)
-  private val codebooks = Quantization.sliceCodebooks(
+  private val codebooks = sliceCodebooks(
     Seq(0 -> Seq(0L, 0L, 10L, 10L), 1 -> Seq(4L, 4L, 0L, 0L)),
     subspaces = 2, subDim = 2)
 
@@ -60,7 +68,7 @@ class QuantizationSpec extends SparkSpec {
       "codebooks (the at-rest store round trip, fuzzed)") {
     val rnd = new scala.util.Random(91L)
     def v(n: Int) = Seq.fill(n)(rnd.nextLong().abs % 200L - 100L)
-    val cbs = Quantization.sliceCodebooks(
+    val cbs = sliceCodebooks(
       (0 until 8).map(j => j -> v(8)), subspaces = 2, subDim = 4)
     val df = (0 until 200).map(_ => Tuple1(v(8))).toDF("qv")
     val out = df.select(
