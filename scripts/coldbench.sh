@@ -2,7 +2,10 @@
 # Cold-JVM bench of a gate subset via the raw-java runner (no sbt JVM):
 #   scripts/coldbench.sh <out.json> <gates> [cpus] [extra JVM flags...]
 # Uses the same module opens / heap / codecache as build.sbt javaOptions.
-# Assumes `sbt compile` is current. Writes the bench artifact to <out.json>.
+# Setup builds only the stores the named gates declare (Q.stores), so
+# compare its readings only with runs of the same gate list. An unknown
+# gate name fails the run. Assumes `sbt compile` is current. Writes the
+# bench artifact to <out.json>.
 set -e
 OUT="$1"; shift; GATES="$1"; shift; CPUS="${1:-32}"; [ $# -gt 0 ] && shift
 CP="target/scala-2.13/classes:$(ls -d /opt/spark/jars/*.jar | tr '\n' ':')"

@@ -2,9 +2,10 @@ package graft
 
 /** Plan-audit utility: print the formatted physical plan of any
   * registered query by name —
-  * `runMain graft.Explain <sfDir> <name>[,<name>...]`. To time a gate
-  * with the bench's setup already paid, use
-  * `graft.tools.GateAB <sfDir> <gate> 1`.
+  * `runMain graft.Explain <sfDir> <name>[,<name>...]`. It runs no
+  * setup: a store gate builds its missing store while its DataFrame
+  * is built. To time a gate with its declared stores (`Q.stores`)
+  * already built, use `graft.tools.GateAB <sfDir> <gate> 1`.
   * The .explain-then-iterate loop the scale posture demands, as a
   * first-class tool instead of ad-hoc scratch code. Runs in the bench
   * session ([[Harness.session]]: SPARK_GRAFT_CPUS cores, default 32). */

@@ -149,16 +149,31 @@ object Harness {
       attempt(t)(noop(spark.read.parquet(s"$sfDir/$t.parquet"))))
   }
 
-  /** Runs every `Registry.prepares` store build on a pool of 4
-    * threads. The prepares are independent content-addressed builds
-    * (shared sub-stores are serialized by StoreLedger's per-key
-    * locks), each a small Spark job that underuses 32 cores, so the
-    * pool brings setup wall toward its critical path. Returns each
-    * prepare's wall seconds in submit order — they overlap, so their
-    * sum exceeds the pool's wall by design — and the failures. */
-  def prepareStores(spark: SparkSession, sfDir: String)
+  /** The registered gates a comma-separated selection names, sorted;
+    * None selects every gate. A name that is no registered gate fails
+    * the selection, naming each such name: a typo would otherwise run
+    * nothing and report an empty run. */
+  def selectGates(only: Option[String]): Seq[String] = {
+    val gates = SparkEntry.queries.keySet
+    val names = only.fold(gates.toSeq)(_.split(",").toSeq)
+    val unknown = names.filterNot(gates).distinct
+    require(unknown.isEmpty, s"unknown gate(s): ${unknown.mkString(", ")}")
+    names.distinct.sorted
+  }
+
+  /** Runs the store builds that `gates` declare (their `Q.stores`) on a
+    * pool of 4 threads; names that are no gate declare nothing. The
+    * prepares are independent content-addressed builds (shared
+    * sub-stores are serialized by StoreLedger's per-key locks), each a
+    * small Spark job that underuses 32 cores, so the pool brings setup
+    * wall toward its critical path. Returns each prepare's wall
+    * seconds in submit order — they overlap, so their sum exceeds the
+    * pool's wall by design — and the failures. */
+  def prepareStores(spark: SparkSession, sfDir: String, gates: Seq[String])
       : (Seq[(String, Double)], Seq[Failure]) = {
-    val prepares = graft.queries.Registry.prepares
+    val selected = gates.toSet
+    val prepares = graft.queries.Registry.storesOf(
+      graft.queries.Registry.all.filter(q => selected(q.name)))
     val pool = java.util.concurrent.Executors.newFixedThreadPool(
       math.min(4, math.max(1, prepares.size)))
     val done = prepares.map { case (name, fn) =>

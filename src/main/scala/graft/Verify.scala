@@ -16,8 +16,10 @@ object Verify {
     // re-verification while iterating; driver passes only two args)
     val (sfDir, outDir, only) = args match {
       case Array(s, o)    => (s, o, None)
-      case Array(s, o, q) => (s, o, Some(q.split(",").toSet))
+      case Array(s, o, q) => (s, o, Some(q))
     }
+    val queries = SparkEntry.queries
+    val gates = Harness.selectGates(only).map(n => n -> queries(n))
     val spark = Harness.session()
     // CONCURRENT dump (r14 verdict item 1/6: the driver's correctness
     // record was empty because the round's gate window ran out of
@@ -25,8 +27,6 @@ object Verify {
     // 32 cores, so a pool of 4 cuts the sweep toward its critical path
     // — same rationale as Bench's prepare pool, and same-store builds
     // stay serialized by StoreLedger's per-key locks).
-    val gates = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => only.forall(_.contains(name)) }
     dump(spark, sfDir, outDir, gates, poolN = 4)
     writeOracleSql(outDir, SparkEntry.oracleSql)
     spark.stop()

@@ -38,16 +38,14 @@ object HistoricalJob {
         // sqm → sqft (HIST:44-46)
         "total_floor_area" ->
           Cleaning.sqmToSqft(col("floor_area_sqm").try_cast(DoubleType)),
-        // date assembly (HIST:48-49); try_to_date: pre-ANSI null
-        // behavior on malformed months
-        "date_of_sale" ->
-          try_to_date(concat_ws("-", col("month"), lit("01")), "yyyy-MM-dd")))
+        // date assembly (HIST:48-49)
+        "date_of_sale" -> Cleaning.monthToDate(col("month"))))
       .withColumns(Map(
         // date parts (HIST:50-51) + remaining lease (HIST:53-54)
         "year" -> year(col("date_of_sale")),
         "month" -> month(col("date_of_sale")),
-        "remaining_lease" -> (lit(99) -
-          (year(col("date_of_sale")) - col("top").try_cast(IntegerType)))))
+        "remaining_lease" -> Cleaning.remainingLease(
+          year(col("date_of_sale")), col("top").try_cast(IntegerType))))
 
     // case-insensitive town → district/zone/region enrich with initcap
     // restore + the '/w'→'/W' fix-up (HIST:59-63, 103-104)

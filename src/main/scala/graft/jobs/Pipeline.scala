@@ -1,6 +1,7 @@
 package graft.jobs
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import graft.ops.Joins
 import graft.schemas.Schemas
 import java.time.LocalDate
 import java.util.concurrent.Executors
@@ -40,9 +41,8 @@ object Pipeline {
     /** general_location → district, zone, region (town_district ⟕
       * distinct(district, zone) ⟕ district_region; HIST:59-63,103-104). */
     lazy val townLookup: DataFrame = local(
-      townDistrict
-        .join(districtCode.select("district", "zone").distinct(),
-          Seq("district"), "left")
+      Joins.distinctDimEnrich(townDistrict, districtCode,
+          Seq("district", "zone"), "district")
         .join(districtRegion, Seq("district"), "left"))
 
     /** agency_id → agency. */

@@ -23,7 +23,7 @@ object PropnexJob {
       .option("multiLine", "true").json(path)
 
   /** Staged wide projections (one `withColumns` per dependency level,
-    * the rule [[Cleaning.castColumns]] states) instead of a
+    * the rule [[Cleaning.castColumnsLenient]] states) instead of a
     * `withColumn` chain: each stage reads only the previous stage's
     * columns. Output: [[Schemas.listingCols]]. */
   def transform(raw: DataFrame, dims: Pipeline.Dims,
@@ -57,8 +57,8 @@ object PropnexJob {
         // floor (PN:58)
         "floor" -> lower(split(col("floor"), " ").getItem(0)),
         // remaining lease from injected run date (PN:71-72)
-        "remaining_lease" ->
-          (lit(99) - (lit(runDate.getYear) - col("top").try_cast(IntegerType))),
+        "remaining_lease" -> Cleaning.remainingLease(
+          lit(runDate.getYear), col("top").try_cast(IntegerType)),
         // postal sector for the district join (PN:74-75)
         "postal_sector" -> Parsers.postalSector(col("post_code"))))
       .withColumns(Map(

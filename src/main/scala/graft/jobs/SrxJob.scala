@@ -61,8 +61,8 @@ object SrxJob {
         // bedrooms parser — the UDF replacement (SRX:68-83)
         "bedrooms" -> Parsers.bedroomCount(col("bedrooms")),
         // remaining lease from injected run date (SRX:85-86)
-        "remaining_lease" -> (lit(99) -
-          (lit(runDate.getYear) - col("top").try_cast(IntegerType)))))
+        "remaining_lease" -> Cleaning.remainingLease(
+          lit(runDate.getYear), col("top").try_cast(IntegerType))))
       .withColumns(Map(
         // sqft from the parsed sqm (SRX:53-54)
         "total_floor_area" -> Cleaning.sqmToSqft(col("floor_area_sqm")),

@@ -184,12 +184,6 @@ object AnnIndex {
       .select("q_id", "rank", "id", "cos_milli")
   }
 
-  /** Top-k exact-cosine neighbors for each query vector, answered FROM
-    * THE STORED INDEX: the queries are banded (KB-side work), the index
-    * scan is joined on the partition columns (broadcast → dynamic
-    * partition pruning), candidates dedup across bands, and exact
-    * cosine ranks the union. Output (q_id, rank, id, cos_milli),
-    * rank ties to the smaller id. */
   /** Record a takedown against a sign-LSH index (see
     * [[Tombstones.record]]); probe with `retracted = true` to apply
     * it, [[compactSignIndex]] to fold it into the bucket files. A
@@ -203,6 +197,12 @@ object AnnIndex {
   def compactSignIndex(s: SparkSession, table: String): Unit =
     Tombstones.compact(s, table, Seq((table, Seq("band", "bucket"))))
 
+  /** Top-k exact-cosine neighbors for each query vector, answered FROM
+    * THE STORED INDEX: the queries are banded (KB-side work), the index
+    * scan is joined on the partition columns (broadcast → dynamic
+    * partition pruning), candidates dedup across bands, and exact
+    * cosine ranks the union. Output (q_id, rank, id, cos_milli),
+    * rank ties to the smaller id. */
   def probeTopK(s: SparkSession, table: String, queries: DataFrame,
                 idCol: String, vecCol: String, hyper: DataFrame,
                 rowsPerBand: Int, k: Int, multiprobe: Int = 0,

@@ -45,31 +45,31 @@ object Checkpoints {
   def spill(df: DataFrame): DataFrame =
     df.localCheckpoint(true, StorageLevel.MEMORY_AND_DISK_SER)
 
-  /** REMOVED round 17: `pinPartitioned(df, key)` — materialize an
-    * iteration-static frame hash-partitioned on `key` via
-    * `repartition(key).persist()` so per-iteration aggregates plan no
-    * Exchange (round 16, KCore/PageRank). The exchange-free plan was
-    * real (PinPartitionedSpec pinned it), but the mechanism LOST under
-    * cold conditions every time it was measured honestly: the round-16
-    * driver bench adjudicated q_graph_kcore 7.8 → 13.8 s (inverse
-    * scaling 0.31 — 8 cores beat 32 by 3×) and q_web_host_rank
-    * 1.7 → 2.5 s cold, and a round-17 interleaved cold A/B still
-    * measured the pin behind plain `localCheckpoint()` with a
-    * data-proportional partition count and no engine-wide conf
-    * (kcore pinned 9.99 s vs checkpointed 8.69 s; pagerank flat).
-    * The per-iteration exchange it removes ships a NODE-sized
-    * partial-aggregated vector — cheap — while the pin bills the gate
-    * an upfront full-edge shuffle, a persist whose blocks carry live
-    * lineage, and (in the r16 form) an AQE-cached-plan conf that
-    * changed behavior for every cached frame in the engine. Do not
-    * re-add on warm same-JVM A/B evidence; only a cold-JVM paired win
-    * at local[32] AND a non-degraded 8-core reading justifies it.
-    *
-    * (The original rationale, kept for the record: a checkpoint scan
-    * reports `UnknownPartitioning`, so `repartition(col)
-    * .localCheckpoint()` still plans the per-round Exchange — pinning
-    * needs persist(), whose cached plan keeps its output
-    * partitioning.) */
+  // REMOVED round 17: `pinPartitioned(df, key)` — materialize an
+  // iteration-static frame hash-partitioned on `key` via
+  // `repartition(key).persist()` so per-iteration aggregates plan no
+  // Exchange (round 16, KCore/PageRank). The exchange-free plan was
+  // real (PinPartitionedSpec pinned it), but the mechanism LOST under
+  // cold conditions every time it was measured honestly: the round-16
+  // scored bench adjudicated q_graph_kcore 7.8 → 13.8 s (inverse
+  // scaling 0.31 — 8 cores beat 32 by 3×) and q_web_host_rank
+  // 1.7 → 2.5 s cold, and a round-17 interleaved cold A/B still
+  // measured the pin behind plain `localCheckpoint()` with a
+  // data-proportional partition count and no engine-wide conf
+  // (kcore pinned 9.99 s vs checkpointed 8.69 s; pagerank flat).
+  // The per-iteration exchange it removes ships a NODE-sized
+  // partial-aggregated vector — cheap — while the pin bills the gate
+  // an upfront full-edge shuffle, a persist whose blocks carry live
+  // lineage, and (in the r16 form) an AQE-cached-plan conf that
+  // changed behavior for every cached frame in the engine. Do not
+  // re-add on warm same-JVM A/B evidence; only a cold-JVM paired win
+  // at local[32] AND a non-degraded 8-core reading justifies it.
+  //
+  // (The original rationale, kept for the record: a checkpoint scan
+  // reports `UnknownPartitioning`, so `repartition(col)
+  // .localCheckpoint()` still plans the per-round Exchange — pinning
+  // needs persist(), whose cached plan keeps its output
+  // partitioning.)
 
   /** Eager deserialized localCheckpoint of a NARROW frame (same
     * storage policy as a bare `localCheckpoint()` — callers' contract)

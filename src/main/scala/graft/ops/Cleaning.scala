@@ -86,24 +86,14 @@ object Cleaning {
     * propnex_transformation.py:96-99, srx_transformation.py:108-111).
     * One wide `select` (a single Project node) instead of N
     * `withColumn`s — N chained withColumns make Catalyst re-analyze N
-    * plans, which hurts at wide schemas. */
-  def castColumns(df: DataFrame, casts: Map[String, DataType]): DataFrame =
-    df.select(df.columns.map { c =>
-      casts.get(c).map(t => col(c).cast(t).as(c)).getOrElse(col(c))
-    }.toIndexedSeq: _*)
-
-  /** Like [[castColumns]] but malformed values become NULL instead of
-    * throwing — matches the reference's pre-ANSI PySpark `cast`
+    * plans, which hurts at wide schemas. Malformed values become NULL
+    * instead of throwing — the reference's pre-ANSI PySpark `cast`
     * behavior (Spark 4 runs ANSI mode where plain cast throws). */
   def castColumnsLenient(df: DataFrame,
                          casts: Map[String, DataType]): DataFrame =
     df.select(df.columns.map { c =>
       casts.get(c).map(t => col(c).try_cast(t).as(c)).getOrElse(col(c))
     }.toIndexedSeq: _*)
-
-  /** P2 — batch rename (HIST:34-37, PN:61-63, SRX:62-66). */
-  def renameColumns(df: DataFrame, renames: Map[String, String]): DataFrame =
-    df.withColumnsRenamed(renames)
 
   /** HIST:41-42 — flat-type label fixes: `'Room'→'Rooms'`,
     * `'Multi G'→'Multi-g'`. */
@@ -115,9 +105,11 @@ object Cleaning {
   def sqmToSqft(c: Column): Column =
     round(c * lit(3.28084 * 3.28084), 0).cast(IntegerType)
 
-  /** HIST:48-49 — assemble a DATE from a `"YYYY-MM"` month string. */
+  /** HIST:48-49 — assemble a DATE from a `"YYYY-MM"` month string;
+    * a malformed month is NULL, the reference's pre-ANSI behavior
+    * (Spark 4's ANSI `to_date` throws). */
   def monthToDate(c: Column): Column =
-    to_date(concat_ws("-", c, lit("01")), "yyyy-MM-dd")
+    try_to_date(concat_ws("-", c, lit("01")), "yyyy-MM-dd")
 
   /** HIST:53-54, PN:72, SRX:86 — remaining lease = 99 − (saleYear − top).
     * The reference calls driver-side `datetime.today()`; we take the

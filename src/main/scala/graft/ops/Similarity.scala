@@ -24,21 +24,6 @@ object Similarity {
     transform(sequence(lit(0), lit(bands - 1)), b =>
       xxhash64(b, slice(sig, b * rowsPerBand + lit(1), lit(rowsPerBand))))
 
-  /** Candidate pairs (idA < idB) of rows sharing ≥1 LSH bucket.
-    * `df` must carry `id` (long) and `shingles` (array<string>).
-    *
-    * The `repartition(id)` below is a deliberate MATERIALIZATION
-    * BARRIER, not a partitioning choice: Catalyst's CollapseProject
-    * inlines column expressions into every reference site, and
-    * common-subexpression elimination does not reach inside
-    * higher-order-function lambdas — without the barrier the shingle
-    * array (regex splits) and the k-hash signature are recomputed for
-    * every band slice and every join side (~50× per row; measured
-    * 558 s → ~20 s at sf0.1). An Exchange materializes the projection
-    * below it, so everything downstream reads stored arrays. At scale
-    * this is the standard "write the signature table once" step of an
-    * LSH pipeline; the exchange also gets reused by both self-join
-    * sides. */
   /** Explicit partition count for materialization barriers: an
     * explicit `repartition(n, col)` is never AQE-coalesced — tiny
     * inputs (one parquet split) would otherwise collapse to a single
@@ -106,6 +91,21 @@ object Similarity {
         explode(lshBuckets(col("__sig"), bands, r)).as("__bucket"))
   }
 
+  /** Candidate pairs (idA < idB) of rows sharing ≥1 LSH bucket.
+    * `df` must carry `id` (long) and `shingles` (array<string>).
+    *
+    * The `repartition(id)` in [[bucketize]] is a deliberate MATERIALIZATION
+    * BARRIER, not a partitioning choice: Catalyst's CollapseProject
+    * inlines column expressions into every reference site, and
+    * common-subexpression elimination does not reach inside
+    * higher-order-function lambdas — without the barrier the shingle
+    * array (regex splits) and the k-hash signature are recomputed for
+    * every band slice and every join side (~50× per row; measured
+    * 558 s → ~20 s at sf0.1). An Exchange materializes the projection
+    * below it, so everything downstream reads stored arrays. At scale
+    * this is the standard "write the signature table once" step of an
+    * LSH pipeline; the exchange also gets reused by both self-join
+    * sides. */
   def lshCandidatePairs(df: DataFrame, k: Int, bands: Int): DataFrame = {
     val withBuckets = bucketize(df, k, bands)
     val a = withBuckets.as("a")
@@ -522,17 +522,16 @@ object Similarity {
       .agg(sum(col("bit")).cast(LongType).as("bucket"))
   }
 
-
-  /** Deterministic double cosine similarity between two float vectors,
-    * in floor-rounded milli-units. Elements are cast to double BEFORE
-    * multiply/accumulate and summed sequentially (aggregate), so any
-    * engine computing the same formula gets bit-identical IEEE results. */
   /** Sequential-order double dot product of two float vectors (cast to
     * double BEFORE multiply/accumulate — engine-portable IEEE result). */
   def dotDouble(x: Column, y: Column): Column = aggregate(
     zip_with(x, y, (p, q) => p.cast(DoubleType) * q.cast(DoubleType)),
     lit(0.0), (acc, v) => acc + v)
 
+  /** Deterministic double cosine similarity between two float vectors,
+    * in floor-rounded milli-units. Elements are cast to double BEFORE
+    * multiply/accumulate and summed sequentially (aggregate), so any
+    * engine computing the same formula gets bit-identical IEEE results. */
   def cosineMilli(a: Column, b: Column): Column = {
     val cos = dotDouble(a, b) / (sqrt(dotDouble(a, a)) * sqrt(dotDouble(b, b)))
     floor(lit(1000.0) * cos + 0.5).cast(LongType)

@@ -11,7 +11,6 @@ import org.apache.spark.sql.types._
   * integers (engine-portable, hash-comparable). */
 object TextOps {
 
-  /** Whitespace tokens of trimmed text. */
   /** Whitespace tokenizer with the split class PINNED to the explicit
     * five chars `[ \t\n\r\f]` — Java's `\s` includes vertical tab
     * (\x0B) while RE2's (the oracle engine's) excludes it, so a bare

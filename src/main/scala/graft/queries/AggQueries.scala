@@ -141,9 +141,9 @@ object AggQueries {
     * run otherwise misreads the GATE as super-linear (the sf1 probe
     * measured q_compact_roundtrip at 34× with the build in-gate and
     * 4.4× warm). */
-  def prepares: Seq[(String, (SparkSession, String) => Unit)] = Seq(
-    "frag_lineitem_layout" -> ((s, d) => { fragDir(s, d); () }),
-    "zorder_orders_layout" -> ((s, d) => { zorderOrdersDir(s, d); () }))
+  val FragLineitemLayout = Prepare("frag_lineitem_layout", fragDir(_, _))
+  val ZorderOrdersLayout =
+    Prepare("zorder_orders_layout", zorderOrdersDir(_, _))
 
   def all: Seq[Q] = Seq(
 
@@ -1081,7 +1081,8 @@ object AggQueries {
         |SELECT l_returnflag, count(*) AS cnt,
         |  ${sumB(centsSql("l_quantity"))} AS sum_qty_c
         |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag
-        |""".stripMargin.trim)),
+        |""".stripMargin.trim),
+      stores = Seq(FragLineitemLayout)),
 
     // ---- Z-order scan ---------------------------------------------------
     // Orders rewritten z-ordered on (o_custkey, o_orderkey), then a
@@ -1100,7 +1101,8 @@ object AggQueries {
         |WHERE o_custkey BETWEEN 100 AND 500
         |  AND o_orderkey BETWEEN 1000 AND 50000
         |ORDER BY o_orderkey
-        |""".stripMargin.trim)),
+        |""".stripMargin.trim),
+      stores = Seq(ZorderOrdersLayout)),
 
     // ---- Salted join (manual skew mitigation) --------------------------
     // A hot l_suppkey's rows spread across 8 reducers instead of one;

@@ -60,14 +60,14 @@ object AnalyticsQueries {
           .filter(pmod(col("l_orderkey"), lit(10)) =!= 7),
         "l_orderkey", "l_partkey"))
 
-  /** One-time content-addressed layout builds (see
-    * [[SimQueries.prepares]] for the rationale). */
-  def prepares: Seq[(String,
-      (org.apache.spark.sql.SparkSession, String) => Unit)] = Seq(
-    "copurchase_edges" -> ((s, d) => { copurchaseEdges(s, d); () }),
-    "purchase_graph_edges" -> ((s, d) => { purchaseGraphEdges(s, d); () }),
-    "copurchase_edges_stored90" -> ((s, d) => { storedEdges90(s, d); () }),
-    "pref_score_store" -> ((s, d) => { prefScoreTables(s, d); () }))
+  /** One-time content-addressed layout builds, run untimed
+    * ([[Registry.prepares]]). */
+  val CopurchaseEdges = Prepare("copurchase_edges", copurchaseEdges(_, _))
+  val PurchaseGraphEdges =
+    Prepare("purchase_graph_edges", purchaseGraphEdges(_, _))
+  val CopurchaseEdgesStored90 =
+    Prepare("copurchase_edges_stored90", storedEdges90(_, _))
+  val PrefScoreStore = Prepare("pref_score_store", prefScoreTables(_, _))
 
   /** Lineitem self-join aliased `a`/`b`: supplier pairs of one order
     * in strict key order whose quantities differ — every duel stream
@@ -125,15 +125,6 @@ object AnalyticsQueries {
   private lazy val btOracle =
     BradleyTerry.oracleSql(quantityDuelsSql, iters = 5)
 
-  /** The stored preference artifacts the grading gates consume: the
-    * quantity-duel stream plus BOTH aggregators' fitted score vectors,
-    * content-keyed on the lineitem fixture. At deployment these are
-    * refreshed once per preference-corpus drop and then read by every
-    * eval — the fit gates (`q_pref_bradley_terry`,
-    * `q_pref_rank_centrality`) still run their fits end-to-end, so
-    * fit cost stays measured; the store only keeps DOWNSTREAM evals
-    * from re-paying it. Returns (duelsTable, btTable, rcTable,
-    * pairs90Table). */
   /** The stored duel stream WITH its prompt key — the oracle-side
     * replay of [[prefScoreTables]]' duels table for the per-prompt
     * exports (KTO labels, best-of-n). The score chain's pair CTEs
@@ -143,6 +134,15 @@ object AnalyticsQueries {
       |    a.l_quantity > b.l_quantity AS awin
       |$duelJoinSql""".stripMargin
 
+  /** The stored preference artifacts the grading gates consume: the
+    * quantity-duel stream plus BOTH aggregators' fitted score vectors,
+    * content-keyed on the lineitem fixture. At deployment these are
+    * refreshed once per preference-corpus drop and then read by every
+    * eval — the fit gates (`q_pref_bradley_terry`,
+    * `q_pref_rank_centrality`) still run their fits end-to-end, so
+    * fit cost stays measured; the store only keeps DOWNSTREAM evals
+    * from re-paying it. Returns (duelsTable, btTable, rcTable,
+    * pairs90Table). */
   private def prefScoreTables(s: org.apache.spark.sql.SparkSession,
       d: String): (String, String, String, String) = {
     val key = Sinks.contentKey(d, "lineitem.parquet", "prefscores|v2")
@@ -410,7 +410,8 @@ object AnalyticsQueries {
           |SELECT s2 AS src, c AS dst FROM (SELECT DISTINCT o_custkey
           |    AS c, 1000000 + l_suppkey AS s2 FROM orders
           |  JOIN lineitem ON o_orderkey = l_orderkey)""".stripMargin,
-        iters = 5))),
+        iters = 5)),
+      stores = Seq(PurchaseGraphEdges)),
 
     // ---- Bradley-Terry preference aggregation (5 MM iterations) -----
     // The RLHF scoring stage: pairwise duels -> one strength score per
@@ -470,7 +471,8 @@ object AnalyticsQueries {
         |    AS n_entities
         |FROM da JOIN db ON da.id = db.id
         |GROUP BY 1, 2 ORDER BY 1, 2
-        |""".stripMargin.trim)),
+        |""".stripMargin.trim),
+      stores = Seq(PrefScoreStore)),
 
     // ---- incremental preference refresh (pair-matrix merge) ----------
     // A new tranche of judgments (ok % 10 == 0, the held-out 10%)
@@ -489,7 +491,8 @@ object AnalyticsQueries {
             BradleyTerry.pairStats(delta)),
           iters = 5).orderBy("id")
       },
-      Some(btOracle)),
+      Some(btOracle),
+      stores = Seq(PrefScoreStore)),
 
     // ---- streaming preference ingest (pair-matrix fold) --------------
     // The online face of q_incr_pref_refresh: duels arrive in
@@ -512,7 +515,8 @@ object AnalyticsQueries {
           graft.streaming.StreamingOps.streamingPairStats(duelStream),
           iters = 5).orderBy("id")
       },
-      Some(btOracle)),
+      Some(btOracle),
+      stores = Seq(PrefScoreStore)),
 
     // ---- reward-model calibration (reliability diagram) --------------
     // Bucket every duel by the fitted-score GAP between its sides and
@@ -576,7 +580,8 @@ object AnalyticsQueries {
         BradleyTerry.ktoLabels(s.table(dt), s.table(bt))
           .orderBy("prompt", "id")
       },
-      Some(BradleyTerry.ktoOracleSql(duelsWithPromptSql, iters = 5))),
+      Some(BradleyTerry.ktoOracleSql(duelsWithPromptSql, iters = 5)),
+      stores = Seq(PrefScoreStore)),
 
     // ---- best-of-n selection export ------------------------------------
     // Per prompt: the argmax-scored response with its margin over the
@@ -590,7 +595,8 @@ object AnalyticsQueries {
         BradleyTerry.bestOfN(s.table(dt), s.table(bt))
           .orderBy("prompt")
       },
-      Some(BradleyTerry.bestOfNOracleSql(duelsWithPromptSql, iters = 5))),
+      Some(BradleyTerry.bestOfNOracleSql(duelsWithPromptSql, iters = 5)),
+      stores = Seq(PrefScoreStore)),
 
     // ---- preference-data confound audit ------------------------------
     // The RLHF "length bias" check: does a covariate (response length;
@@ -967,7 +973,8 @@ object AnalyticsQueries {
           |  FROM lineitem a JOIN lineitem b
           |    ON a.l_orderkey = b.l_orderkey
           |    AND a.l_partkey < b.l_partkey""".stripMargin,
-        k = 80, rounds = 6))),
+        k = 80, rounds = 6)),
+      stores = Seq(CopurchaseEdges)),
 
     // ---- per-node triangle counts over the co-purchase graph --------
     // Degree-oriented exact triangle counting (Triangles scaladoc: hub
@@ -1004,7 +1011,8 @@ object AnalyticsQueries {
         |  UNION ALL SELECT v FROM tri UNION ALL SELECT w FROM tri)
         |SELECT node, CAST(count(*) AS BIGINT) AS triangles
         |FROM corners GROUP BY node ORDER BY node
-        |""".stripMargin.trim)),
+        |""".stripMargin.trim),
+      stores = Seq(CopurchaseEdges)),
 
     // ---- incremental edge-layout maintenance --------------------------
     // The shared support table maintained as an aggregate MV: deltas
@@ -1032,7 +1040,8 @@ object AnalyticsQueries {
         |  ON a.l_orderkey = b.l_orderkey
         |  AND a.l_partkey < b.l_partkey
         |GROUP BY 1, 2 ORDER BY 1, 2
-        |""".stripMargin.trim)),
+        |""".stripMargin.trim),
+      stores = Seq(CopurchaseEdgesStored90)),
 
     // ---- item-to-item recommendations off the shared layout -----------
     // Fourth consumer of the stored edge table (after triangles, LPA,
@@ -1068,7 +1077,8 @@ object AnalyticsQueries {
         |  FROM sym)
         |SELECT item, rank, rec, support FROM r WHERE rank <= 3
         |ORDER BY item, rank
-        |""".stripMargin.trim)),
+        |""".stripMargin.trim),
+      stores = Seq(CopurchaseEdges)),
 
     // ---- label-propagation communities -------------------------------
     // Third graph op beside PageRank and triangles: deterministic
@@ -1095,5 +1105,6 @@ object AnalyticsQueries {
           |    AND a.l_partkey < b.l_partkey
           |  GROUP BY 1, 2
           |  HAVING count(DISTINCT a.l_orderkey) >= 2""".stripMargin,
-        iters = 3))))
+        iters = 3)),
+      stores = Seq(CopurchaseEdges)))
 }

@@ -157,10 +157,6 @@ object ClusterQueries {
     |    FROM qq q, embeddings e WHERE e.vec_id <> q.q_id)
     |  WHERE rn <= 10)""".stripMargin.trim
 
-  /** The shared PQ pipeline (train → encode → ADC shortlist 40 →
-    * exact re-rank): q_ann_pq_topk returns its top-10, q_ann_pq_recall
-    * compares that top-10 against the exact brute-force answer.
-    * Output columns (q_id, rank, vec_id, cos_milli), rank <= 10. */
   /** Per-dataset memo of the trained per-subspace codebooks (two
     * gates share one training; KB-sized driver state keyed on source
     * content — the stored-codebook discipline without a table). */
@@ -186,6 +182,10 @@ object ClusterQueries {
             .map { case (cid, cv) => cid.toInt -> cv }
         })
 
+  /** The shared PQ pipeline (train → encode → ADC shortlist 40 →
+    * exact re-rank): q_ann_pq_topk returns its top-10, q_ann_pq_recall
+    * compares that top-10 against the exact brute-force answer.
+    * Output columns (q_id, rank, vec_id, cos_milli), rank <= 10. */
   private def pqTopK(s: SparkSession, d: String): DataFrame = {
     val base = embeddings(s, d).select(col("vec_id"), col("embedding"))
       .withColumn("qv", Clustering.quantizeMilli(col("embedding")))
@@ -262,10 +262,6 @@ object ClusterQueries {
        |      ORDER BY cos_milli DESC, vec_id) AS rank FROM scored)""".stripMargin
   }
 
-  /** One-time trained-artifact builds (see [[SimQueries.prepares]]):
-    * the per-subspace PQ codebook training is a corpus-refresh cost,
-    * not a query cost — without this the alphabetically-first PQ gate
-    * pays all 8 k-means runs inside its timed window. */
   /** Content-keyed IVF-PQ index store — the at-rest layout of a
     * billion-scale ANN index (Faiss IVFPQ): every vector's coarse cell
     * (nearest of the 8 data-seeded centroids, exact cosine, ties to
@@ -326,10 +322,9 @@ object ClusterQueries {
     tbl
   }
 
-  def prepares: Seq[(String, (SparkSession, String) => Unit)] = Seq(
-    "pq_codebooks" -> ((s, d) => { pqTopK(s, d); () }),
-    "ivfpq_codes_store" -> ((s, d) => { ivfPqCodesTable(s, d); () }),
-    "semdedup_ivf_store" -> ((s, d) => { semAnnIvfTable(s, d); () }))
+  val PqCodebooks = Prepare("pq_codebooks", pqTopK(_, _))
+  val IvfpqCodesStore = Prepare("ivfpq_codes_store", ivfPqCodesTable(_, _))
+  val SemdedupIvfStore = Prepare("semdedup_ivf_store", semAnnIvfTable(_, _))
 
   /** The IVF-PQ probe both gates share: nprobe=2 coarse cells per
     * query (exact cosine vs the 8 centroids), candidates = the probed
@@ -567,7 +562,8 @@ object ClusterQueries {
         |      * sum(CASE WHEN e = a THEN 1 ELSE 0 END)
         |      / count(*) + 0.5) AS BIGINT) AS agree_milli
         |FROM fl
-        |""".stripMargin.trim)),
+        |""".stripMargin.trim),
+      stores = Seq(SemdedupIvfStore)),
 
     // ---- product-quantization ANN top-k (TRAINED codebook) ------------
     // The COMPRESSION ANN family beside brute/IVF/LSH: encode every
@@ -590,7 +586,8 @@ object ClusterQueries {
         |WITH $pqCtes
         |SELECT q_id, rank, vec_id, cos_milli FROM ranked
         |WHERE rank <= 10 ORDER BY q_id, rank
-        |""".stripMargin.trim)),
+        |""".stripMargin.trim),
+      stores = Seq(PqCodebooks)),
 
     // ---- PQ recall vs exact brute-force -------------------------------
     // The companion gate that MEASURES the trained quantizer: per
@@ -610,7 +607,8 @@ object ClusterQueries {
         |SELECT q.q_id, CAST(coalesce(h.hits10, 0) AS BIGINT) AS hits10
         |FROM qq q LEFT JOIN hits h ON h.q_id = q.q_id
         |ORDER BY q.q_id
-        |""".stripMargin.trim)),
+        |""".stripMargin.trim),
+      stores = Seq(PqCodebooks)),
 
     // ---- cluster-balanced diversity sample ----------------------------
     // Curation subsample that preserves SEMANTIC coverage: k-means
@@ -661,7 +659,8 @@ object ClusterQueries {
         |$ivfPqCtes
         |SELECT q_id, rank, vec_id, cos_milli FROM ipq_ranked
         |WHERE rank <= 10 ORDER BY q_id, rank
-        |""".stripMargin.trim)),
+        |""".stripMargin.trim),
+      stores = Seq(IvfpqCodesStore)),
 
     // ---- IVF-PQ recall vs the exact answer ---------------------------
     // hits@10 against brute-force exact cosine per query — the recall
@@ -680,7 +679,8 @@ object ClusterQueries {
         |  JOIN ipq_ex x ON x.q_id = a.q_id AND x.vec_id = a.vec_id
         |  GROUP BY a.q_id) h ON h.q_id = q.q_id
         |ORDER BY q.q_id
-        |""".stripMargin.trim)),
+        |""".stripMargin.trim),
+      stores = Seq(IvfpqCodesStore)),
 
     // ---- streaming classifier scoring (train offline, score online) --
     // The deployment shape of the centroid classifier: the model is

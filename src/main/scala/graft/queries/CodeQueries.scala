@@ -175,8 +175,7 @@ object CodeQueries {
     tbl
   }
 
-  def prepares: Seq[(String, (SparkSession, String) => Unit)] = Seq(
-    "winnow_store" -> ((s, d) => { winnowStore(s, d); () }))
+  val WinnowStore = Prepare("winnow_store", winnowStore(_, _))
 
   /** The winnowing detection pipeline over the stored fingerprint
     * table: fingerprint equi-join proposes (clone, base) candidates,
@@ -317,7 +316,8 @@ object CodeQueries {
         |  GROUP BY w.id, w.pos, w.m)
         |SELECT DISTINCT id AS doc_id, fpos AS pos, fp FROM sel
         |ORDER BY doc_id, pos
-        |""".stripMargin.trim)),
+        |""".stripMargin.trim),
+      stores = Seq(WinnowStore)),
 
     // ---- rename-robust near-dup via winnowing --------------------------
     // The operator the extraction gate exists for: renamed clones vs
@@ -347,7 +347,8 @@ object CodeQueries {
         |    ON c.id >= 1000000 AND b.id < 1000000)
         |WHERE containment_milli >= 700
         |ORDER BY id_clone, id_base
-        |""".stripMargin.trim)),
+        |""".stripMargin.trim),
+      stores = Seq(WinnowStore)),
 
     // ---- repo-level fork detection --------------------------------------
     // File matches say two FILES are clones; what a code-corpus dedup
@@ -405,7 +406,8 @@ object CodeQueries {
         |  FROM m JOIN sz ON m.repo_b = sz.repo_b)
         |WHERE match_frac_milli >= 300
         |ORDER BY repo_a, repo_b
-        |""".stripMargin.trim)),
+        |""".stripMargin.trim),
+      stores = Seq(WinnowStore)),
 
     // ---- routed quality cutoff: code vs prose (r13 verdict item 7) ----
     // The composed curation decision the two signal gates feed: docs

@@ -238,15 +238,15 @@ object CorpusQueries {
     (fpT, packT, evalT)
   }
 
-  /** One-time content-addressed store builds (see
-    * [[SimQueries.prepares]] for the rationale). */
-  def prepares: Seq[(String,
-      (org.apache.spark.sql.SparkSession, String) => Unit)] = Seq(
-    "inverted_index" -> ((s, d) => { incrIndexTable(s, d); () }),
-    "takedown_index" -> ((s, d) => { takedownIndexTable(s, d); () }),
-    "cross_takedown_stores" -> ((s, d) => { crossTdStores(s, d); () }),
-    "conv_prefix_index" -> ((s, d) => { convPrefixIndexTable(s, d); () }),
-    "curation_capstone_stores" -> ((s, d) => { capstoneStores(s, d); () }))
+  /** One-time content-addressed store builds, run untimed
+    * ([[Registry.prepares]]). */
+  val InvertedIndex = Prepare("inverted_index", incrIndexTable(_, _))
+  val TakedownIndex = Prepare("takedown_index", takedownIndexTable(_, _))
+  val CrossTakedownStores =
+    Prepare("cross_takedown_stores", crossTdStores(_, _))
+  val ConvPrefixIndex = Prepare("conv_prefix_index", convPrefixIndexTable(_, _))
+  val CurationCapstoneStores =
+    Prepare("curation_capstone_stores", capstoneStores(_, _))
 
   def all: Seq[Q] = Seq(
 
@@ -747,7 +747,8 @@ object CorpusQueries {
         |FROM bfp JOIN bwc USING (p, fp)
         |LEFT JOIN spi USING (p, fp)
         |GROUP BY 1, 2 ORDER BY conv_id
-        |""".stripMargin.trim)),
+        |""".stripMargin.trim),
+      stores = Seq(ConvPrefixIndex)),
 
     // ---- streaming conversation-prefix ingest --------------------------
     // The online face of the conversation dedup triad: conversations
@@ -974,7 +975,8 @@ object CorpusQueries {
     Q("q_incr_index_maintain",
       (s, d) => graft.ops.InvertedIndexStore
         .assemble(s, incrIndexTable(s, d)).orderBy("term"),
-      Some(invertedIndexOracle)),
+      Some(invertedIndexOracle),
+      stores = Seq(InvertedIndex)),
 
     // ---- index compaction: assembly invariant, files bounded ----------
     // The maintenance pass of the append-maintained store: after the
@@ -990,7 +992,8 @@ object CorpusQueries {
         graft.ops.Compaction.compactPartitionedTable(s, tbl)
         graft.ops.InvertedIndexStore.assemble(s, tbl).orderBy("term")
       },
-      Some(invertedIndexOracle)),
+      Some(invertedIndexOracle),
+      stores = Seq(InvertedIndex)),
 
     // ---- BM25 answered from the persisted store only ------------------
     // The sufficient-statistics contract of the stored index: tf rides
@@ -1006,7 +1009,8 @@ object CorpusQueries {
           s, incrIndexTable(s, d),
           queryTerms = Seq("batch", "join", "filter"), k = 20)
         .orderBy("rank"),
-      Some(bm25TopkOracle)),
+      Some(bm25TopkOracle),
+      stores = Seq(InvertedIndex)),
 
     // ---- takedown sweep: the store must FORGET, cheaply --------------
     // The deletion path (takedown / consent revocation): the removal
@@ -1027,7 +1031,8 @@ object CorpusQueries {
       Some(bm25Top20(s"""
         |rd AS (SELECT doc_id, text FROM documents
         |  WHERE doc_id % 37 <> 0),
-        |${bm25Ctes("rd")}""".stripMargin.trim))),
+        |${bm25Ctes("rd")}""".stripMargin.trim)),
+      stores = Seq(TakedownIndex)),
 
     // ---- CROSS-store takedown propagation audit ----------------------
     // The sweep a real DMCA request triggers (r11 verdict item 6): ONE
@@ -1125,7 +1130,8 @@ object CorpusQueries {
         |      THEN doc_id END), 0) AS BIGINT)
         |  FROM documents)
         |SELECT * FROM surf ORDER BY family, surface
-        |""".stripMargin.trim)),
+        |""".stripMargin.trim),
+      stores = Seq(CrossTakedownStores)),
 
     // ---- BM25 top-20 for a fixed term query ---------------------------
     // Rational (ln-free) BM25, k1=1.2 b=0.75 — every double op is
@@ -1482,7 +1488,8 @@ object CorpusQueries {
         |LEFT JOIN cap_scon sc ON sc.id = b.id
         |LEFT JOIN cap_sbin sb ON sb.id = b.id
         |ORDER BY doc_id
-        |""".stripMargin.trim)),
+        |""".stripMargin.trim),
+      stores = Seq(CurationCapstoneStores, EvalArtifacts.DecontaminationEval)),
 
     // ---- release-to-release diff audit ---------------------------------
     // The other half of the provenance story (q_provenance_conservation

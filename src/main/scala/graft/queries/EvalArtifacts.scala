@@ -57,7 +57,10 @@ object EvalArtifacts {
       .select("doc_id", "text").unionByName(planted)
   }
 
-  /** One-time artifact build (see [[SimQueries.prepares]]). */
-  def prepares: Seq[(String, (SparkSession, String) => Unit)] = Seq(
-    "decontamination_eval" -> ((s, d) => { bloomSketch(s, d); () }))
+  /** One-time artifact build, run untimed ([[Registry.prepares]]). The
+    * table is built first because the sketch is a JVM memo: a warm memo
+    * alone would not rebuild a dropped table. */
+  val DecontaminationEval = Prepare("decontamination_eval", (s, d) => {
+    evalShingleTable(s, d); bloomSketch(s, d); ()
+  })
 }

@@ -262,7 +262,8 @@ object JobQueries {
             org.apache.spark.sql.streaming.OutputMode.Append())
           .orderBy("url")
       },
-      Some(scrapeExtractOracle)),
+      Some(scrapeExtractOracle),
+      stores = Seq(PropnexPages)),
 
     // ---- the crawl-ARCHIVE path: WARC members → parse → fields ------
     // How a 100 TB crawl actually arrives: pages framed as WARC/1.0
@@ -279,7 +280,8 @@ object JobQueries {
           .select(col("uri").as("url"), col("content").as("html"))
         propnexFields(pages).orderBy("url")
       },
-      Some(scrapeExtractOracle)),
+      Some(scrapeExtractOracle),
+      stores = Seq(PropnexPagesWarc)),
 
     // ---- S7, srx spider: stored pages → the 31-field dict ------------
     // Same render→parse→recompute round trip as q_scrape_extract, over
@@ -493,9 +495,8 @@ object JobQueries {
   /** One-time content-keyed builds, run untimed by the bench like the
     * other stores: the rendered page layout feeding the streaming
     * scrape gate, and its WARC-archived twin. */
-  def prepares: Seq[(String, (SparkSession, String) => Unit)] = Seq(
-    "propnex_pages" -> ((s, d) => { propnexPagesDir(s, d); () }),
-    "propnex_pages_warc" -> ((s, d) => { propnexWarcDir(s, d); () }))
+  val PropnexPages = Prepare("propnex_pages", propnexPagesDir(_, _))
+  val PropnexPagesWarc = Prepare("propnex_pages_warc", propnexWarcDir(_, _))
 
   /** Serve the catalog fixture over loopback and ingest it through
     * [[graft.sources.RestIngest]]; content-addressed on the nation

@@ -86,11 +86,9 @@ object MergeQueries {
         dir)
     }
 
-  def prepares: Seq[(String,
-      (org.apache.spark.sql.SparkSession, String) => Unit)] = Seq(
-    "orc_orders_store" -> ((s, d) => { orcOrdersTable(s, d); () }),
-    "xml_orders_store" -> ((s, d) => { xmlOrdersDir(s, d); () }),
-    "warc_store" -> ((s, d) => { warcDir(s, d); () }))
+  val OrcOrdersStore = Prepare("orc_orders_store", orcOrdersTable(_, _))
+  val XmlOrdersStore = Prepare("xml_orders_store", xmlOrdersDir(_, _))
+  val WarcStore = Prepare("warc_store", warcDir(_, _))
 
   def all: Seq[Q] = Seq(
 
@@ -298,7 +296,8 @@ object MergeQueries {
     // (long keys, strings, cent-quantized money).
     Q("q_orc_roundtrip",
       (s, d) => priorityCents(s.table(orcOrdersTable(s, d))),
-      Some(priorityCentsSql)),
+      Some(priorityCentsSql),
+      stores = Seq(OrcOrdersStore)),
 
     // ---- XML round-trip through Spark 4's NATIVE XML source -----------
     // Same value-fidelity pin as the ORC twin, through the one
@@ -316,7 +315,8 @@ object MergeQueries {
           StructField("o_orderpriority", StringType),
           StructField("price_c", LongType))))
         .load(xmlOrdersDir(s, d))),
-      Some(priorityCentsSql)),
+      Some(priorityCentsSql),
+      stores = Seq(XmlOrdersStore)),
 
     // ---- WARC ingestion round-trip (DataSourceV2) --------------------
     // The web-archive front door: the corpus written as WARC/1.0
@@ -338,7 +338,8 @@ object MergeQueries {
       Some("""
         |SELECT doc_id, length(text) AS n_bytes, text AS content
         |FROM documents ORDER BY doc_id
-        |""".stripMargin.trim)),
+        |""".stripMargin.trim),
+      stores = Seq(WarcStore)),
 
     // ---- WARC header-only scan (pruned: payloads never read) ---------
     // The archive-inventory query: only header-derived columns are
@@ -356,7 +357,8 @@ object MergeQueries {
         |SELECT count(*) AS n_docs,
         |  CAST(sum(length(text)) AS BIGINT) AS total_bytes
         |FROM documents
-        |""".stripMargin.trim)),
+        |""".stripMargin.trim),
+      stores = Seq(WarcStore)),
 
     // ---- SCD2 point-in-time join (the native as-of exec's natural
     // use): enrich each click with the purchase-value VERSION valid at

@@ -162,7 +162,7 @@ object RefQueries {
 
     // ---- P1/P2/P3: select-reorder + batch rename + drop ---------------
     Q("q_rename_project",
-      (s, d) => Cleaning.renameColumns(nation(s, d),
+      (s, d) => nation(s, d).withColumnsRenamed(
           Map("n_name" -> "nation_name", "n_regionkey" -> "region_id"))
         .drop("region_id")
         .select("nation_name", "n_nationkey")
@@ -174,7 +174,7 @@ object RefQueries {
 
     // ---- P5: typed cast loop ------------------------------------------
     Q("q_cast_loop",
-      (s, d) => Cleaning.castColumns(
+      (s, d) => Cleaning.castColumnsLenient(
           lineitem(s, d).select("l_orderkey", "l_linenumber", "l_quantity",
             "l_shipdate"),
           Map("l_quantity" -> IntegerType, "l_orderkey" -> StringType,

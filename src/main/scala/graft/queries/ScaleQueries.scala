@@ -175,7 +175,8 @@ object ScaleQueries {
           .select("doc_id").distinct()
           .orderBy("doc_id")
       },
-      Some(OracleSql.decontaminated)),
+      Some(OracleSql.decontaminated),
+      stores = Seq(EvalArtifacts.DecontaminationEval)),
 
     // ---- rolling distinct users from MERGED daily sketches ----------
     // Distinct counts don't sum, but their SKETCHES merge: one daily

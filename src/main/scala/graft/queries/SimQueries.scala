@@ -201,11 +201,6 @@ object SimQueries {
     (tokT, freqT, shT)
   }
 
-  /** One-time content-addressed store builds the gates above consume —
-    * run untimed by the bench harness ([[Registry.prepares]]): in a
-    * metastore-backed deployment these are paid once per corpus
-    * refresh, so charging them to whichever query runs first would
-    * misprice every steady-state read. */
   /** Dedicated sign-LSH index for the ANN takedown gate (own store:
     * the tombstone lifecycle must not touch the shared index), full
     * corpus banded, vec_id % 13 == 0 tombstoned at build. */
@@ -224,25 +219,15 @@ object SimQueries {
     tbl
   }
 
-  def prepares: Seq[(String, (SparkSession, String) => Unit)] = Seq(
-    "shingle_corpus" -> ((s, d) => { corpusShingleTable(s, d); () }),
-    "ann_takedown_index" -> ((s, d) => { annTdIndexTable(s, d); () }),
-    "neardup_components" -> ((s, d) => { neardupComponents(s, d); () }),
-    "simhash_detected" -> ((s, d) => { simhashDetected(s, d); () }),
-    "ann_lsh_index" -> ((s, d) => { lshIndexTable(s, d); () }),
-    "ann_ivf_index" -> ((s, d) => { ivfIndexTable(s, d); () }),
-    "lsh_corpus_store" -> ((s, d) => { corpusLshTables(s, d); () }),
-    "containment_store" -> ((s, d) => { containmentTables(s, d); () }))
+  val ShingleCorpus = Prepare("shingle_corpus", corpusShingleTable(_, _))
+  val AnnTakedownIndex = Prepare("ann_takedown_index", annTdIndexTable(_, _))
+  val NeardupComponents = Prepare("neardup_components", neardupComponents(_, _))
+  val SimhashDetected = Prepare("simhash_detected", simhashDetected(_, _))
+  val AnnLshIndex = Prepare("ann_lsh_index", lshIndexTable(_, _))
+  val AnnIvfIndex = Prepare("ann_ivf_index", ivfIndexTable(_, _))
+  val LshCorpusStore = Prepare("lsh_corpus_store", corpusLshTables(_, _))
+  val ContainmentStore = Prepare("containment_store", containmentTables(_, _))
 
-  /** Brute-force ground-truth Jaccard pairs over the corpus — the ONE
-    * oracle both q_neardup_minhash_lsh and q_setsim_prefix_join
-    * compare against, which is what pins the probabilistic and exact
-    * methods equal to each other: a change to this recipe changes
-    * both gates together. */
-  /** Half-up jaccard-milli over two shingle-list expressions — the ONE
-    * rounding convention every exact-verify oracle in this file
-    * shares (six call sites; a drifted copy silently diverges an
-    * oracle — the Spark twin is functions.JaccardMilli). */
   /** Brute-force cross-side ground truth shared by the daily
     * (`q_incr_neardup`) and streaming (`q_stream_neardup`) faces of
     * the incremental near-dup path — one oracle, two dataflows. */
@@ -283,11 +268,20 @@ object SimQueries {
     |  UNION
     |  SELECT s.src, r.r FROM sym s JOIN reach r ON s.dst = r.id)""".stripMargin
 
+  /** Half-up jaccard-milli over two shingle-list expressions — the ONE
+    * rounding convention every exact-verify oracle in this file
+    * shares (six call sites; a drifted copy silently diverges an
+    * oracle — the Spark twin is functions.JaccardMilli). */
   private def jaccardMilliSql(a: String, b: String): String =
     s"CAST(floor(1000.0 * len(list_intersect($a, $b)) / " +
       s"(len($a) + len($b) - len(list_intersect($a, $b))) + 0.5)" +
       " AS BIGINT)"
 
+  /** Brute-force ground-truth Jaccard pairs over the corpus — the ONE
+    * oracle both q_neardup_minhash_lsh and q_setsim_prefix_join
+    * compare against, which is what pins the probabilistic and exact
+    * methods equal to each other: a change to this recipe changes
+    * both gates together. */
   private val bruteForcePairsSql = s"""
     |WITH $corpusSql,
     |pairs AS (SELECT DISTINCT a.id AS id_a, b.id AS id_b
@@ -612,7 +606,8 @@ object SimQueries {
             thresholdMilli = 800)
           .orderBy("id_a", "id_b")
       },
-      Some(bruteForcePairsSql)),
+      Some(bruteForcePairsSql),
+      stores = Seq(ShingleCorpus)),
 
     // ---- EXACT set-similarity join (prefix filtering) -----------------
     // The deterministic complement of the LSH path: the prefix lemma
@@ -626,7 +621,8 @@ object SimQueries {
         Similarity.setSimilarityPairsExact(docs, thresholdMilli = 800)
           .orderBy("id_a", "id_b")
       },
-      Some(bruteForcePairsSql)),
+      Some(bruteForcePairsSql),
+      stores = Seq(ShingleCorpus)),
 
     // ---- EXACT containment join (asymmetric near-dup) -----------------
     // Pairs where the smaller shingle set is ≥90% contained in the
@@ -656,7 +652,8 @@ object SimQueries {
         |             JOIN sh sb ON sb.id = pairs.id_b)
         |SELECT id_a, id_b, containment_milli FROM c
         |WHERE containment_milli >= 900 ORDER BY id_a, id_b
-        |""".stripMargin.trim)),
+        |""".stripMargin.trim),
+      stores = Seq(ShingleCorpus)),
 
     // ---- incremental containment against the stored token index -------
     // The daily path: incoming batch docs checked for containment in
@@ -690,7 +687,8 @@ object SimQueries {
         |          JOIN sh sb ON sb.id = p0.id_corpus)
         |SELECT id_new, id_corpus, containment_milli FROM c
         |WHERE containment_milli >= 900 ORDER BY id_new, id_corpus
-        |""".stripMargin.trim)),
+        |""".stripMargin.trim),
+      stores = Seq(ShingleCorpus, LshCorpusStore, ContainmentStore)),
 
     // ---- near-dup clusters: pairs → connected components --------------
     // The stage after pair detection that an actual dedup needs: pairs
@@ -705,7 +703,8 @@ object SimQueries {
         |WITH RECURSIVE $neardupReachCtes
         |SELECT id, min(r) AS component FROM reach
         |GROUP BY id ORDER BY id
-        |""".stripMargin.trim)),
+        |""".stripMargin.trim),
+      stores = Seq(ShingleCorpus, NeardupComponents)),
 
     // ---- near-dup keep-best: one representative per cluster -----------
     // The stage that turns detected clusters back into a deduplicated
@@ -732,7 +731,8 @@ object SimQueries {
         |  count(*) AS members
         |FROM comp c JOIN scored s ON s.id = c.id
         |GROUP BY component ORDER BY component
-        |""".stripMargin.trim)),
+        |""".stripMargin.trim),
+      stores = Seq(ShingleCorpus, NeardupComponents)),
 
     // ---- chunk-level dedup: CDC chunks shared across documents --------
     // Over the corpus (originals ∪ tail-mutated copies): a mutated doc
@@ -780,7 +780,8 @@ object SimQueries {
     // ---- SimHash near-dup (hash-defined: driver rows-only check) ------
     Q("q_simhash_neardup",
       (s, d) => simhashDetected(s, d).orderBy("id_a"),
-      None),
+      None,
+      stores = Seq(SimhashDetected)),
 
     // ---- SimHash companion: hash-checked detected-id set --------------
     // The hamming values are engine-specific (xxhash64-defined), but
@@ -796,7 +797,8 @@ object SimQueries {
         |SELECT doc_id AS id_a FROM documents
         |WHERE len(string_split_regex(trim(text), '[ \t\n\r\f]+')) >= 10
         |ORDER BY id_a
-        |""".stripMargin.trim)),
+        |""".stripMargin.trim),
+      stores = Seq(SimhashDetected)),
 
     // ---- incremental exact dedup (daily-ingest shape) ------------------
     // Corpus = docs < 400; batch = docs >= 400 plus PLANTED copies of
@@ -852,7 +854,8 @@ object SimQueries {
             k = 32, bands = 16, thresholdMilli = 800)
           .orderBy("id_new", "id_corpus")
       },
-      Some(incrNeardupOracle)),
+      Some(incrNeardupOracle),
+      stores = Seq(ShingleCorpus, LshCorpusStore)),
 
     // ---- streaming near-dup (online ingest against the stored corpus) --
     // The online face of the gate above: the SAME mutated-copy batch
@@ -888,7 +891,8 @@ object SimQueries {
             bT, shT, k = 32, bands = 16, thresholdMilli = 800)
           .orderBy("id_new", "id_corpus")
       },
-      Some(incrNeardupOracle)),
+      Some(incrNeardupOracle),
+      stores = Seq(ShingleCorpus, LshCorpusStore)),
 
     // ---- threshold operating curve for the near-dup detector ---------
     // The tuning artifact a dedup rollout reads before picking its
@@ -930,7 +934,8 @@ object SimQueries {
         |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
         |    AS BIGINT) AS n_at_or_above
         |FROM tc_b ORDER BY bucket
-        |""".stripMargin.trim)),
+        |""".stripMargin.trim),
+      stores = Seq(ShingleCorpus)),
 
     // ---- the daily increment END-TO-END: exact -> near -> quality ----
     // One composed pipeline for an arriving batch, every stage on its
@@ -1054,7 +1059,8 @@ object SimQueries {
         |LEFT JOIN icp_near nr ON nr.id = b.id
         |LEFT JOIN icp_adm ad ON ad.id = b.id
         |ORDER BY doc_id
-        |""".stripMargin.trim)),
+        |""".stripMargin.trim),
+      stores = Seq(ShingleCorpus, LshCorpusStore)),
 
     // ---- provenance conservation audit --------------------------------
     // The audit a 100 TB pipeline publishes with every release (the
@@ -1193,7 +1199,8 @@ object SimQueries {
         |    CAST(sum(id) AS BIGINT) AS id_sum
         |  FROM pc_batch GROUP BY 1
         |ORDER BY src_file, fate
-        |""".stripMargin.trim)),
+        |""".stripMargin.trim),
+      stores = Seq(ShingleCorpus, LshCorpusStore)),
 
     // ---- split-leakage audit ------------------------------------------
     // The reason dedup must precede splitting: every detected near-dup
@@ -1233,7 +1240,8 @@ object SimQueries {
         |  CAST(sum(CASE WHEN split_a <> split_b THEN 1 ELSE 0 END)
         |    AS BIGINT) AS n_leaked
         |FROM sp
-        |""".stripMargin.trim)),
+        |""".stripMargin.trim),
+      stores = Seq(SimhashDetected)),
 
     // ---- leak-PROOF split: assign by cluster representative ------------
     // The fix q_split_leakage motivates: hash the SPLIT KEY from the
@@ -1260,7 +1268,8 @@ object SimQueries {
         |SELECT count(*) AS n_pairs, CAST(0 AS BIGINT) AS n_leaked
         |FROM documents
         |WHERE len(string_split_regex(trim(text), '[ \t\n\r\f]+')) >= 10
-        |""".stripMargin.trim)),
+        |""".stripMargin.trim),
+      stores = Seq(SimhashDetected)),
 
     // ---- brute-force cosine top-k (ANN baseline) ----------------------
     Q("q_ann_cosine_topk",
@@ -1574,7 +1583,8 @@ object SimQueries {
           .select("q_id", "rank", "vec_id", "cos_milli")
           .orderBy("q_id", "rank")
       },
-      Some(ivfTopkOracle)),
+      Some(ivfTopkOracle),
+      stores = Seq(AnnIvfIndex)),
 
     // ---- IVF recall vs exact brute-force ------------------------------
     // The companion that MEASURES the nprobe=2-of-8 pruning (the PQ
@@ -1625,7 +1635,8 @@ object SimQueries {
         |SELECT q.q_id, CAST(coalesce(h.hits5, 0) AS BIGINT) AS hits5
         |FROM q LEFT JOIN hits h ON h.q_id = q.q_id
         |ORDER BY q.q_id
-        |""".stripMargin.trim)),
+        |""".stripMargin.trim),
+      stores = Seq(AnnIvfIndex)),
 
     // ---- LSH-bucketed ANN top-k (the training-free scale path) --------
     // Sign-LSH complement to q_ann_ivf_topk: no codebook to train —
@@ -1676,7 +1687,8 @@ object SimQueries {
     // stored path must be bit-identical to the in-memory one.
     Q("q_ann_lsh_persisted",
       (s, d) => annLshProbe(s, d, lshIndexTable(s, d)),
-      Some(annLshOracle())),
+      Some(annLshOracle()),
+      stores = Seq(AnnLshIndex)),
 
     // ---- takedown against the persisted ANN index --------------------
     // The index-family twin of q_takedown_sweep (same Tombstones
@@ -1689,7 +1701,8 @@ object SimQueries {
     // otherwise identical.
     Q("q_ann_takedown",
       (s, d) => annLshProbe(s, d, annTdIndexTable(s, d), retracted = true),
-      Some(annLshOracle(retracted = true))),
+      Some(annLshOracle(retracted = true)),
+      stores = Seq(AnnTakedownIndex)),
 
     // ---- multiprobe over the persisted LSH index ----------------------
     // The recall knob that needs NO index growth: each band probes its
@@ -1700,7 +1713,8 @@ object SimQueries {
     // candidate set and re-ranking are hash-checked bit-for-bit.
     Q("q_ann_lsh_multiprobe",
       (s, d) => annLshProbe(s, d, lshIndexTable(s, d), multiprobe = 2),
-      Some(annLshOracle(multiprobe = 2))),
+      Some(annLshOracle(multiprobe = 2)),
+      stores = Seq(AnnLshIndex)),
 
     // ---- sorted-neighborhood blocking dedup --------------------------
     // The record-linkage classic beside hash blocking (PassJoin) and

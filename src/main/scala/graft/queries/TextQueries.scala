@@ -229,10 +229,8 @@ object TextQueries {
     tbl
   }
 
-  def prepares: Seq[(String,
-      (org.apache.spark.sql.SparkSession, String) => Unit)] = Seq(
-    "warc_html_store" -> ((s, d) => { warcHtmlDir(s, d); () }),
-    "bpe_vocab_store" -> ((s, d) => { bpeVocabTable(s, d); () }))
+  val WarcHtmlStore = Prepare("warc_html_store", warcHtmlDir(_, _))
+  val BpeVocabStore = Prepare("bpe_vocab_store", bpeVocabTable(_, _))
 
   def all: Seq[Q] = Seq(
 
@@ -302,7 +300,8 @@ object TextQueries {
         |SELECT min(doc_id) AS doc_id, min(n_tokens) AS n_tokens,
         |  count(*) AS copies
         |FROM f GROUP BY clean ORDER BY doc_id
-        |""".stripMargin.trim)),
+        |""".stripMargin.trim),
+      stores = Seq(WarcHtmlStore)),
 
     // ---- greedy subword tokenization (WordPiece/BPE-apply shape) ------
     // Tokenizer-grade token counting: at each position take the longest
@@ -1005,7 +1004,8 @@ object TextQueries {
           .select("doc_id").distinct()
           .orderBy("doc_id")
       },
-      Some(OracleSql.decontaminated)),
+      Some(OracleSql.decontaminated),
+      stores = Seq(EvalArtifacts.DecontaminationEval)),
 
     // ---- bigram LM coherence scoring ---------------------------------
     // The KenLM-style fluency filter kept exact: per-doc mean bigram
@@ -1274,7 +1274,8 @@ object TextQueries {
         |    AS n_subwords
         |FROM bpe_docw w JOIN bpe_s$BpeRounds v USING (word)
         |GROUP BY w.doc_id ORDER BY w.doc_id
-        |""".stripMargin.trim)),
+        |""".stripMargin.trim),
+      stores = Seq(BpeVocabStore)),
 
     // ---- n-gram overlap eval metric (BLEU-style clipped precision) ----
     // The eval-harness scorer: modified unigram/bigram precision of a
@@ -1392,7 +1393,8 @@ object TextQueries {
         |    AS chars_per_sub_milli
         |FROM bpc_w w JOIN bpe_s$BpeRounds v USING (word)
         |GROUP BY w.lang ORDER BY w.lang
-        |""".stripMargin.trim)),
+        |""".stripMargin.trim),
+      stores = Seq(BpeVocabStore)),
 
     // ---- tokenize with the TRAINED vocabulary through the native
     // kernel — the capstone of the tokenizer loop: the stored BPE
@@ -1437,7 +1439,8 @@ object TextQueries {
         |FROM swtok t JOIN swdocs d ON d.doc_id = t.doc_id
         |WHERE t.pos = length(d.text) + 1
         |ORDER BY t.doc_id
-        |""".stripMargin.trim)),
+        |""".stripMargin.trim),
+      stores = Seq(BpeVocabStore)),
 
     // ---- URL canonicalization ----------------------------------------
     // The crawl-frontier normalizer: case-fold scheme/authority, drop

@@ -2,9 +2,10 @@ package graft.tools
 
 /** The single-JVM A/B and profiling tool: in the bench session
   * ([[graft.Harness]]) it pays the untimed store-prepare pass ONCE,
-  * then times each named gate `reps` times through the bench's own
-  * gate runner ([[graft.Harness.runGate]]: noop sink, gate-local blocks
-  * freed after each rep) and prints per-rep seconds plus the median,
+  * building only the stores the named gates declare, then times each
+  * named gate `reps` times through the bench's own gate runner
+  * ([[graft.Harness.runGate]]: noop sink, gate-local blocks freed
+  * after each rep) and prints per-rep seconds plus the median,
   * and jobs / tasks / task-seconds / GC / shuffle bytes for the last
   * rep. A failing rep prints `[ab] <gate> FAILED: <message>` and is left
   * out of the median; the other gates still run.
@@ -26,9 +27,10 @@ object GateAB {
       .getOrElse(Seq("q_dedup_flagship"))
     val reps = args.lift(2).flatMap(_.toIntOption).getOrElse(3)
     val spark = graft.Harness.session(logLevel = "ERROR")
-    // same untimed warm-up + store-prepare + store warm pass as Bench
+    // same untimed warm-up + store-prepare + store warm pass as Bench,
+    // scoped to the named gates' stores
     val setupErrors = graft.Harness.warmFixtures(spark, sfDir) ++
-      graft.Harness.prepareStores(spark, sfDir)._2 ++
+      graft.Harness.prepareStores(spark, sfDir, gates)._2 ++
       graft.Harness.warmStores(spark)
     setupErrors.foreach(f =>
       println(s"[ab-setup] ${f.name} FAILED: ${f.message}"))

@@ -118,6 +118,24 @@ class HarnessSpec extends SparkSpec {
     } finally deleteTree(empty)
   }
 
+  test("a gate selection naming an unknown gate fails before any " +
+      "session, naming each unknown gate") {
+    val err = intercept[IllegalArgumentException](
+      Harness.selectGates(Some("q_dedup_flagship,q_no_such,q_typo")))
+    assert(err.getMessage.contains("q_no_such, q_typo"), err.getMessage)
+    assert(!err.getMessage.contains("q_dedup_flagship"))
+    assert(Harness.selectGates(Some("q_triangle_count,q_dedup_flagship")) ===
+      Seq("q_dedup_flagship", "q_triangle_count"))
+    assert(Harness.selectGates(None) === SparkEntry.queries.keys.toSeq.sorted)
+    // Verify rejects the selection before building (or stopping) a
+    // session
+    val out = SparkSpec.tempDir("graft-verify-typo")
+    val verifyErr = intercept[IllegalArgumentException](
+      Verify.main(Array("/nonexistent", out.toString, "q_typo")))
+    assert(verifyErr.getMessage.contains("q_typo"))
+    assert(!spark.sparkContext.isStopped)
+  }
+
   test("the gate watchdog fails a gate stuck past its timeout well " +
       "before the gate would finish, and the session runs the next gate") {
     val sleepy = org.apache.spark.sql.functions.udf { (x: Long) =>

@@ -21,33 +21,51 @@ import scala.jdk.CollectionConverters._
   * `minByObj(` / `maxByObj(` call outside their definitions in
   * functions/ is in [[graft.ops.Dedup]] (its `firstPerKey` is the one
   * keep-one-row-per-key builder), the content fingerprint
-  * `sha2(to_json(struct(` is spelled once, and the set of
-  * `SPARK_GRAFT_*` environment knobs is pinned. */
+  * `sha2(to_json(struct(` is spelled once, no doc comment is stacked
+  * on another (only the last would document the definition), and the
+  * set of `SPARK_GRAFT_*` environment knobs is pinned. */
 class SourceSweepSpec extends org.scalatest.funsuite.AnyFunSuite {
   private val root = Paths.get("src/main/scala/graft")
 
-  /** Each main source's lines outside comments, with their 1-based
-    * line numbers, keyed by its path relative to the source root. */
-  private lazy val codeLines: Map[String, Vector[(String, Int)]] = {
+  /** Each main source's lines, keyed by its path relative to the
+    * source root. */
+  private lazy val sources: Map[String, Vector[String]] = {
     val s = Files.walk(root)
     val files = try s.iterator().asScala
       .filter(_.toString.endsWith(".scala")).toVector
       finally s.close()
     files.map { p =>
       root.relativize(p).toString ->
-        new String(Files.readAllBytes(p), "UTF-8").linesIterator
-          .zip(Iterator.from(1)).filter { case (l, _) =>
-            val t = l.trim
-            !(t.startsWith("*") || t.startsWith("//") || t.startsWith("/*"))
-          }.toVector
+        new String(Files.readAllBytes(p), "UTF-8").linesIterator.toVector
     }.toMap
   }
+
+  /** Each main source's lines outside comments, with their 1-based
+    * line numbers. */
+  private lazy val codeLines: Map[String, Vector[(String, Int)]] =
+    sources.map { case (f, ls) =>
+      f -> ls.zip(Iterator.from(1)).filter { case (l, _) =>
+        val t = l.trim
+        !(t.startsWith("*") || t.startsWith("//") || t.startsWith("/*"))
+      }
+    }
 
   /** Main sources containing `needle` outside comment lines. */
   private def filesContaining(needle: String): Set[String] =
     codeLines.collect {
       case (f, ls) if ls.exists(_._1.contains(needle)) => f
     }.toSet
+
+  test("no doc comment sits on top of another: Scala attaches only the " +
+      "last one to the definition") {
+    val stacked = sources.toSeq.flatMap { case (f, ls) =>
+      ls.indices.filter { i =>
+        ls(i).trim.endsWith("*/") &&
+          ls.drop(i + 1).find(_.trim.nonEmpty).exists(_.trim.startsWith("/**"))
+      }.map(i => s"$f:${i + 1}")
+    }
+    assert(stacked.sorted === Seq.empty)
+  }
 
   test("SparkSession.builder() appears only in Harness and the " +
       "product CLI (jobs/Pipeline)") {
@@ -85,7 +103,7 @@ class SourceSweepSpec extends org.scalatest.funsuite.AnyFunSuite {
         needle)
   }
 
-  test("the SPARK_GRAFT_* knobs are exactly the eleven kept, and only " +
+  test("the SPARK_GRAFT_* knobs are exactly the ten kept, and only " +
       "Harness sets a job group") {
     val knobs = codeLines.values.flatten
       .flatMap(l => "SPARK_GRAFT_[A-Z0-9_]+".r.findAllIn(l._1)).toSet
@@ -93,7 +111,7 @@ class SourceSweepSpec extends org.scalatest.funsuite.AnyFunSuite {
       "SPARK_GRAFT_BENCH_BANDS", "SPARK_GRAFT_BENCH_BASELINE",
       "SPARK_GRAFT_BENCH_OUT", "SPARK_GRAFT_BENCH_PROGRESS",
       "SPARK_GRAFT_CPUS", "SPARK_GRAFT_GATE_TIMEOUT_SEC", "SPARK_GRAFT_ONLY",
-      "SPARK_GRAFT_SF_DIR", "SPARK_GRAFT_SKIP_SETUP"))
+      "SPARK_GRAFT_SF_DIR"))
     assert(filesContaining("setJobGroup(") === Set("Harness.scala"))
   }
 

@@ -44,20 +44,25 @@ class CleaningSpec extends SparkSpec {
     assert(out == 550000)
   }
 
-  test("castColumns applies the dtype map in one projection") {
-    val df = Seq(("1", "2.5")).toDF("a", "b")
-    val out = Cleaning.castColumns(df,
+  test("castColumnsLenient casts in one projection, malformed values " +
+      "to NULL") {
+    val df = Seq(("1", "2.5"), ("x", "2.5")).toDF("a", "b")
+    val out = Cleaning.castColumnsLenient(df,
       Map("a" -> IntegerType, "b" -> DoubleType))
     assert(out.schema("a").dataType == IntegerType)
     assert(out.schema("b").dataType == DoubleType)
-    val r = out.collect().head
-    assert(r.getInt(0) == 1 && r.getDouble(1) == 2.5)
+    val rs = out.collect()
+    assert(rs(0).getInt(0) == 1 && rs(0).getDouble(1) == 2.5)
+    assert(rs(1).isNullAt(0) && rs(1).getDouble(1) == 2.5)
   }
 
   test("monthToDate assembles first-of-month date") {
     val out = Seq("2017-03").toDF("v")
       .select(Cleaning.monthToDate(col("v"))).collect().head.getDate(0)
     assert(out.toString == "2017-03-01")
+    // a malformed month is NULL (pre-ANSI), not an ANSI parse error
+    assert(Seq("2017-1x").toDF("v").select(Cleaning.monthToDate(col("v")))
+      .collect().head.isNullAt(0))
   }
 
   test("remainingLease = 99 - (saleYear - top)") {
